@@ -18,18 +18,21 @@ the engine-side fix is to normalize every data-derived constant to
 infinities) is unchanged by ``+ 0.0``. No query result can change;
 only the codegen trigger is removed.
 
-Every channel that embeds data-derived floats as plan literals routes
-through these helpers: the centroid argmin (``operators/assign.py``),
-``sqdist_to_const`` (``functions/distance.py``, which also serves the
-semantic-dedup argmin in ``operators/dedup.py``), PQ / IVFADC
-codebooks (``operators/pq.py``), farthest-point / k-means|| init
-(``plans/kmeans_nd.py``), and the SSE projection
+Every channel that turns data-derived floats into plan constants
+routes through these helpers: the 3-D centroid row that ``assign``
+broadcasts and the literal argmin that streaming assignment uses
+(both via ``sql_double``, ``operators/assign.py``), ``sqdist_to_const``
+(``functions/distance.py``, which also serves the semantic-dedup
+argmin in ``operators/dedup.py``), PQ / IVFADC codebooks
+(``operators/pq.py``), farthest-point / k-means|| init
+(``plans/kmeans_nd.py``) and 3-D farthest-point init
 (``plans/kmeans.py``). Documented in SCALE.md ("Spark 4.1.2 -0.0
 whole-stage-codegen note").
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column
@@ -53,3 +56,12 @@ def norm_lit(v) -> Column:
 def const_vec(vals: Sequence[float]) -> Column:
     """Literal ``array<double>`` from a Python sequence, ``-0.0``-safe."""
     return F.array(*[norm_lit(x) for x in vals])
+
+
+def sql_double(v) -> str:
+    """SQL text of a data-derived double constant, exact and
+    ``-0.0``-safe: ``repr`` is the shortest round-tripping decimal and
+    the ``D`` suffix parses it as a double, not a decimal. NaN and the
+    infinities have no literal form and go through a string cast."""
+    f = norm_float(v)
+    return f"{f!r}D" if math.isfinite(f) else f"CAST('{f}' AS DOUBLE)"

@@ -24,13 +24,15 @@ from pyspark.sql import functions as F
 
 def update_centroids(assigned: DataFrame) -> DataFrame:
     """assigned(cluster,x,y,z) -> centroids(id, x, y, z), unweighted
-    arithmetic mean per cluster (Task1.java:85-97), ordered by id for
-    positional parity with the reference's shuffle-sorted output
-    (SURVEY §1.3.5)."""
-    return (
-        assigned.groupBy(F.col("cluster").alias("id"))
-        .agg(F.avg("x").alias("x"), F.avg("y").alias("y"), F.avg("z").alias("z"))
-        .orderBy("id")
+    arithmetic mean per cluster (Task1.java:85-97).
+
+    Rows come back in no particular order: a sort of K rows would add a
+    range-partitioning job and an exchange to every Lloyd step, so the
+    callers that collect the K rows sort them by id on the driver
+    (positional parity with the reference's shuffle-sorted output,
+    SURVEY §1.3.5)."""
+    return assigned.groupBy(F.col("cluster").alias("id")).agg(
+        F.avg("x").alias("x"), F.avg("y").alias("y"), F.avg("z").alias("z")
     )
 
 

@@ -6,19 +6,28 @@ linear scan over K centroids, strict ``<`` comparison — on an exact
 distance tie the LOWEST-INDEX centroid wins. A naive unordered argmin
 (or MLlib's ``KMeansModel.transform``) does not pin that.
 
-Spark-first design: the centroid list is tiny (K rows), so it is
-inlined as *literal* struct constants into one column expression:
+Spark-first design: one argmin expression over K candidates,
 
-    array_min(array(struct(dist_0, 0), ..., struct(dist_{K-1}, K-1)))["id"]
+    array_min(array(named_struct('dist', dist_0, 'id', id_0), ...)).id
 
 Struct comparison is lexicographic (dist first, then id), so
-``array_min`` is exactly "min distance, ties to lowest id". The whole
-thing is a scalar projection: no join, no shuffle, fully inside
-whole-stage codegen, and the broadcast cost is literally zero bytes —
-the constants travel inside the serialized plan. This is the idiomatic
-replacement for the reference's side-file-in-mapper-setup channel
+``array_min`` is exactly "min distance, ties to lowest id". Distances
+are ``sqrt(((dx*dx + dy*dy) + dz*dz))``, the same arithmetic order as
+the SQL oracles.
+
+``assign`` ships the centroid coordinates as DATA: one 1-row
+``LocalRelation`` holding all K×(x, y, z) values, cross-joined to the
+points under a broadcast hint (BroadcastNestedLoopJoin with no
+condition, no shuffle). Only the K centroid ids are plan literals, so
+the generated code of a Lloyd step depends on K and the ids alone and
+whole-stage codegen compiles once per fit instead of once per step.
+The per-step broadcast is one 1-task job of a few hundred bytes. This
+replaces the reference's side-file-in-mapper-setup channel
 (Task1.java:20-23): at 100 TB the assignment stage stays an
 embarrassingly-parallel scan.
+
+``assignment_expr`` renders the same argmin with the coordinates as
+literals, for callers without a join (streaming micro-batches).
 
 ``assign_join`` is the dynamic-K variant (broadcast-hash-join +
 min_by) for when centroids are a DataFrame, e.g. produced upstream.
@@ -31,42 +40,53 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_kmeans_clustering_spark.functions.distance import euclidean, euclidean_sq
-from mapreduce_kmeans_clustering_spark.functions.literals import norm_lit
+from mapreduce_kmeans_clustering_spark.functions.distance import euclidean
+from mapreduce_kmeans_clustering_spark.functions.literals import sql_double
 from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid
+
+
+def _argmin_sql(
+    ids: Sequence[int], coords: Sequence[str], axes: Sequence[str], use_sqrt: bool
+) -> str:
+    """SQL text of the lowest-id argmin over K candidates. ``coords``
+    holds 3K SQL terms, the (x, y, z) of each centroid in ``ids``
+    order; ``axes`` names the point columns."""
+    if not ids:
+        raise ValueError("empty centroid list")
+
+    def dist(i: int) -> str:
+        d = [f"(`{col}` - {coords[3 * i + a]})" for a, col in enumerate(axes)]
+        sq = f"(({d[0]} * {d[0]} + {d[1]} * {d[1]}) + {d[2]} * {d[2]})"
+        return f"sqrt({sq})" if use_sqrt else sq
+
+    cands = ", ".join(
+        f"named_struct('dist', {dist(i)}, 'id', {int(cid)})" for i, cid in enumerate(ids)
+    )
+    return f"array_min(array({cands})).id"
+
+
+def _coord_literals(centroids: Sequence[Centroid]) -> list[str]:
+    return [sql_double(v) for c in centroids for v in (c.x, c.y, c.z)]
 
 
 def assignment_expr(
     centroids: Sequence[Centroid],
-    x: Column | str = "x",
-    y: Column | str = "y",
-    z: Column | str = "z",
+    x: str = "x",
+    y: str = "y",
+    z: str = "z",
     use_sqrt: bool = True,
 ) -> Column:
     """Column expression: cluster id of the nearest centroid,
-    first-index-wins on ties (Task1.java:46-49).
+    first-index-wins on ties (Task1.java:46-49), with the coordinates
+    as ``-0.0``-safe literals.
 
     ``use_sqrt=False`` uses squared distance — same argmin (sqrt is
     monotonic) and same tie behavior, one fewer sqrt per (row,
     centroid). Kept as an option; defaults to the reference's exact
     arithmetic.
     """
-    if not centroids:
-        raise ValueError("empty centroid list")
-    cx, cy, cz = (F.col(c) if isinstance(c, str) else c for c in (x, y, z))
-    dist = euclidean if use_sqrt else euclidean_sq
-    candidates = F.array(
-        *[
-            F.struct(
-                dist(cx, cy, cz, norm_lit(c.x), norm_lit(c.y), norm_lit(c.z)).alias(
-                    "dist"
-                ),
-                F.lit(int(c.id)).alias("id"),
-            )
-            for c in centroids
-        ]
-    )
-    return F.array_min(candidates)["id"]
+    ids = [c.id for c in centroids]
+    return F.expr(_argmin_sql(ids, _coord_literals(centroids), (x, y, z), use_sqrt))
 
 
 def assign(
@@ -77,13 +97,17 @@ def assign(
 ) -> DataFrame:
     """points(x,y,z,...) -> assigned(cluster, x, y, z[, extras]).
 
-    Mirrors the map phase Task1.java:26-34 as a pure projection.
+    Mirrors the map phase Task1.java:26-34: the points cross-joined
+    with the broadcast 1-row centroid relation, then one projection.
     """
     keep = list(keep_cols) if keep_cols is not None else list(points.columns)
-    return points.select(
-        assignment_expr(centroids, use_sqrt=use_sqrt).alias("cluster"),
-        *[F.col(c) for c in keep],
+    names = [f"__c{i}_{a}" for i in range(len(centroids)) for a in "xyz"]
+    argmin = _argmin_sql([c.id for c in centroids], names, ("x", "y", "z"), use_sqrt)
+    row = points.sparkSession.sql(
+        f"SELECT /*+ BROADCAST(c) */ * FROM VALUES ({', '.join(_coord_literals(centroids))})"
+        f" AS c({', '.join(names)})"
     )
+    return points.crossJoin(row).selectExpr(f"{argmin} AS cluster", *[f"`{c}`" for c in keep])
 
 
 def assign_join(points: DataFrame, seeds: DataFrame) -> DataFrame:

@@ -3,9 +3,14 @@
 The reference chains one Hadoop job per iteration, crossing the
 filesystem twice per step (seed file read by every map task, output
 read back by the driver — Task5A.java:154-209). Here an iteration is
-one job: ``assign`` (scan-local projection) + ``update_centroids``
-(partial-agg groupBy) + a K-row ``collect``. State between iterations
-is the K-row centroid list on the driver; no filesystem round-trip.
+``assign`` (the points cross-joined with a broadcast 1-row centroid
+relation) + ``update_centroids`` (partial-agg groupBy) + a K-row
+``collect``, sorted by id on the driver: a 1-task broadcast job plus
+the two jobs of the aggregate (map stage, then the K-row result).
+State between iterations is the K-row centroid list on the driver; no
+filesystem round-trip. Since the centroid values travel as data, a
+step's generated code depends only on K and the centroid ids, so every
+step after a fit's first is a codegen-cache hit until K shrinks.
 
 Scale notes (100 TB target):
 - per iteration the points relation is scanned once; the only shuffle
@@ -58,14 +63,15 @@ def displacement(prev: list[Centroid], curr: list[Centroid], strict: bool = True
 
 
 def lloyd_iteration(points: DataFrame, centroids: list[Centroid]) -> list[Centroid]:
-    """One Lloyd step: assign + per-cluster mean, K rows collected.
+    """One Lloyd step: assign + per-cluster mean, K rows collected and
+    returned sorted by id.
 
     Empty clusters drop out (no groupBy key), shrinking K exactly like
     the reference (SURVEY §1.3.4).
     """
     assigned = assign(points, centroids, keep_cols=["x", "y", "z"])
     rows = update_centroids(assigned).collect()
-    return [Centroid(int(r["id"]), r["x"], r["y"], r["z"]) for r in rows]
+    return sorted(Centroid(int(r["id"]), r["x"], r["y"], r["z"]) for r in rows)
 
 
 @dataclass

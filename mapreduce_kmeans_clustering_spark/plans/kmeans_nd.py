@@ -240,9 +240,10 @@ def init_kmeans_parallel_nd(
         picked = (
             d2.where(u < F.lit(float(l)) * F.col("d2") / F.lit(float(phi)))
             .select(id_col, vec_col)
-            .orderBy(id_col)
             .collect()
         )
+        # ~l rows: sorted by id on the driver, not by a range-partitioned sort
+        picked.sort(key=lambda row: row[0])
         centers.extend([float(x) for x in row[1]] for row in picked)
 
     # weight candidates by how many points they win, then reduce to k
@@ -321,12 +322,16 @@ def update_centroids_nd(
 ) -> list[tuple[int, list[float]]]:
     """Per-cluster per-dimension mean via one hash aggregate (dim avg
     columns, partial+final); returns (cluster_id, centroid) sorted by
-    id. Empty clusters are absent — K shrinks like the reference."""
+    id on the driver (K rows; no range-partitioned sort job). Empty
+    clusters are absent — K shrinks like the reference."""
     aggs = [
         F.avg(F.element_at(F.col(vec_col), i + 1)).alias(f"_d{i}") for i in range(dim)
     ]
-    rows = assigned.groupBy("cluster").agg(*aggs).orderBy("cluster").collect()
-    return [(int(r["cluster"]), [float(r[f"_d{i}"]) for i in range(dim)]) for r in rows]
+    rows = assigned.groupBy("cluster").agg(*aggs).collect()
+    return sorted(
+        ((int(r["cluster"]), [float(r[f"_d{i}"]) for i in range(dim)]) for r in rows),
+        key=lambda cv: cv[0],
+    )
 
 
 def fit_nd(

@@ -180,7 +180,7 @@ def chain_centroids(spark: SparkSession, sf_dir: str, r: int) -> list[Centroid]:
             )
             .collect()
         )
-        cents = [Centroid(int(w["id"]), w["x"], w["y"], w["z"]) for w in rows]
+        cents = sorted(Centroid(int(w["id"]), w["x"], w["y"], w["z"]) for w in rows)
         _CHAIN_CACHE[(app, sf_dir, step + 1)] = cents
     return cents
 

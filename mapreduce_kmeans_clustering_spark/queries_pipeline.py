@@ -194,11 +194,13 @@ _ANN_UNROLL_MIN_BYTES = int(
 
 
 def _ann_vec_dim(sf_dir: str, dim: int = 64) -> int | None:
-    try:
-        size = os.path.getsize(f"{sf_dir}/embeddings.parquet")
-    except OSError:  # directory input (real deployment): corpus-scale
+    path = f"{sf_dir}/embeddings.parquet"
+    # getsize on a directory returns the dirent size instead of raising,
+    # so only a single file is sized; a directory input (real
+    # deployment) or a missing path counts as corpus-scale
+    if not os.path.isfile(path):
         return dim
-    return dim if size >= _ANN_UNROLL_MIN_BYTES else None
+    return dim if os.path.getsize(path) >= _ANN_UNROLL_MIN_BYTES else None
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,13 +1,18 @@
 """Unit tests for assignment semantics (O4/O5): tie-breaking,
-empty-cluster drop, join-variant parity (SURVEY §5.3)."""
+empty-cluster drop, join-variant parity (SURVEY §5.3), and bit-exact
+agreement of the data-form ``assign`` with a numpy argmin."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from mapreduce_kmeans_clustering_spark import schemas
-from mapreduce_kmeans_clustering_spark.operators.aggregate import update_centroids
-from mapreduce_kmeans_clustering_spark.operators.assign import assign, assign_join
+from mapreduce_kmeans_clustering_spark.operators.assign import (
+    assign,
+    assign_join,
+    assignment_expr,
+)
 from mapreduce_kmeans_clustering_spark.plans.kmeans import displacement, lloyd_iteration
 from mapreduce_kmeans_clustering_spark.sources.points import with_rid
 from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid, seeds_df
@@ -15,6 +20,30 @@ from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid, seeds_df
 
 def make_points(spark, rows):
     return spark.createDataFrame(rows, schema=schemas.POINTS)
+
+
+@pytest.fixture(scope="module")
+def blobs(spark):
+    """Seeded synthetic 3-D points (five integer-coordinate blobs, like
+    the reference dataset) and five seeds drawn from them."""
+    rng = np.random.default_rng(20)
+    centers = rng.integers(0, 1000, size=(5, 3))
+    pts = np.vstack([c + rng.integers(-60, 61, size=(400, 3)) for c in centers]).astype(float)
+    seeds = [Centroid(i, *map(float, pts[j])) for i, j in enumerate(range(0, 2000, 400))]
+    return make_points(spark, [tuple(map(float, p)) for p in pts]).cache(), seeds
+
+
+def _numpy_assign(pts: np.ndarray, cents) -> np.ndarray:
+    """Reference argmin: centroids scanned in id order with a strict
+    ``<`` over sqrt(((dx*dx + dy*dy) + dz*dz))."""
+    best = np.full(len(pts), np.inf)
+    lab = np.full(len(pts), -1)
+    for cid, cx, cy, cz in sorted(cents):
+        dx, dy, dz = pts[:, 0] - cx, pts[:, 1] - cy, pts[:, 2] - cz
+        d = np.sqrt((dx * dx + dy * dy) + dz * dz)
+        win = d < best
+        best[win], lab[win] = d[win], cid
+    return lab
 
 
 def test_tie_breaks_to_lowest_index(spark):
@@ -40,14 +69,10 @@ def test_tie_break_three_way(spark):
     assert row["cluster"] == 0
 
 
-def test_sq_distance_same_argmin(spark, ref_points, ref_seeds):
-    a = assign(ref_points, ref_seeds).groupBy("cluster").count().orderBy("cluster")
-    b = (
-        assign(ref_points, ref_seeds, use_sqrt=False)
-        .groupBy("cluster")
-        .count()
-        .orderBy("cluster")
-    )
+def test_sq_distance_same_argmin(spark, blobs):
+    pts, seeds = blobs
+    a = assign(pts, seeds).groupBy("cluster").count().orderBy("cluster")
+    b = assign(pts, seeds, use_sqrt=False).groupBy("cluster").count().orderBy("cluster")
     assert a.collect() == b.collect()
 
 
@@ -69,23 +94,76 @@ def test_empty_cluster_drops(spark):
     assert displacement(seeds, out, strict=False) > 0
 
 
-def test_assign_join_matches_literal_assign(spark, ref_points, ref_seeds):
-    pts = with_rid(ref_points)
-    via_join = assign_join(pts, seeds_df(spark, ref_seeds))
-    via_lit = assign(pts, ref_seeds, keep_cols=["rid"])
+def test_assign_join_matches_assign(spark, blobs):
+    pts, seeds = blobs
+    pts = with_rid(pts)
+    via_join = assign_join(pts, seeds_df(spark, seeds))
+    via_row = assign(pts, seeds, keep_cols=["rid"])
     mism = (
         via_join.select("rid", "cluster")
-        .join(via_lit.select("rid", "cluster"), "rid")
-        .where(via_join["cluster"] != via_lit["cluster"])
+        .join(via_row.select("rid", "cluster"), "rid")
+        .where(via_join["cluster"] != via_row["cluster"])
         .count()
     )
     assert mism == 0
 
 
-def test_cluster_ids_stable_and_sorted(spark, ref_points, ref_seeds):
-    out = update_centroids(assign(ref_points, ref_seeds, keep_cols=["x", "y", "z"]))
-    ids = [r["id"] for r in out.collect()]
+def test_cluster_ids_stable_and_sorted(spark, blobs):
+    """The id order is ``lloyd_iteration``'s contract:
+    ``update_centroids`` returns its K rows unordered."""
+    pts, seeds = blobs
+    ids = [c.id for c in lloyd_iteration(pts, seeds)]
     assert ids == sorted(ids) == [0, 1, 2, 3, 4]
+    ids = [c.id for c in lloyd_iteration(pts, seeds[::-1])]
+    assert ids == [0, 1, 2, 3, 4]
+
+
+def test_assign_matches_numpy_argmin_bit_for_bit(spark):
+    """The broadcast-row ``assign`` and the literal ``assignment_expr``
+    against a numpy strict-``<`` argmin on seeded points: an integer
+    lattice (exact ties between lattice centroids), full
+    17-significant-digit doubles, ``-0.0`` in points and centroids, and
+    diagonal points (t, t, t) equidistant from three coordinate-rotated
+    centroids, whose float distances differ only in summation order.
+    A change in the tie rule or in the ((dx*dx + dy*dy) + dz*dz) order
+    flips labels."""
+    rng = np.random.default_rng(33)
+    lattice = rng.integers(-3, 4, size=(1500, 3)).astype(float)
+    fine = rng.uniform(-4.0, 4.0, size=(1500, 3))
+    diagonal = np.repeat(rng.uniform(9.0, 11.0, size=(1000, 1)), 3, axis=1)
+    pts = np.vstack([lattice, fine])
+    pts[rng.random(pts.shape) < 0.05] = -0.0
+    pts = np.vstack([pts, diagonal])
+    p, q, r = map(float, rng.uniform(9.0, 11.0, size=3))
+    cents = [
+        Centroid(3, 1.0, 0.0, 0.0),
+        Centroid(0, -1.0, -0.0, 0.0),
+        Centroid(4, 0.0, 1.0, -0.0),
+        Centroid(1, -0.0, -1.0, 0.0),
+        Centroid(2, *map(float, rng.uniform(-4.0, 4.0, size=3))),
+        Centroid(5, 0.1 + 0.2, -1.0 / 3.0, 2.0 ** 0.5),
+        Centroid(8, p, q, r),
+        Centroid(6, q, r, p),
+        Centroid(7, r, p, q),
+    ]
+    want = _numpy_assign(pts, cents)
+    d = np.stack(
+        [np.sqrt(((pts - c[1:]) ** 2).sum(axis=1)) for c in sorted(cents)], axis=1
+    )
+    assert ((d == d.min(axis=1, keepdims=True)).sum(axis=1) > 1).sum() > 100  # real ties
+
+    df = spark.createDataFrame(
+        [(i, *map(float, p)) for i, p in enumerate(pts)],
+        "rid long, x double, y double, z double",
+    )
+    got = {r["rid"]: r["cluster"] for r in assign(df, cents, keep_cols=["rid"]).collect()}
+    lit = {
+        r["rid"]: r["cluster"]
+        for r in df.select("rid", assignment_expr(cents).alias("cluster")).collect()
+    }
+    labels = np.array([got[i] for i in range(len(pts))])
+    assert np.array_equal(labels, want)
+    assert lit == got
 
 
 def test_negative_zero_seed_regression(spark):

@@ -30,10 +30,41 @@ def test_assign_is_scan_local_no_shuffle(spark):
     )
     cents = [Centroid(0, 0.0, 0.0, 0.0), Centroid(1, 1.0, 1.0, 1.0)]
     labeled = assign(pts, cents, keep_cols=["x", "y", "z"])
-    # centroids are literals: no Exchange, no join anywhere in the plan
+    # centroids are one broadcast local row: no shuffle, and the points
+    # meet it in a condition-free nested-loop join
     p = _plan(labeled)
-    assert "Join" not in p
-    assert "Exchange" not in p
+    assert [ln for ln in p.splitlines() if "Exchange" in ln and "BroadcastExchange" not in ln] == []
+    assert p.count("BroadcastExchange") == 1
+    bcast = p.split("BroadcastExchange")[1].split("\n")[1]
+    assert "LocalTableScan" in bcast
+    [bnlj] = [ln for ln in p.splitlines() if "BroadcastNestedLoopJoin" in ln]
+    assert bnlj.strip().endswith(("Cross", "Inner")), bnlj
+
+
+def test_lloyd_step_compiles_once_per_fit(spark):
+    """Centroid values travel as data, so a second step with new values
+    generates the same code: zero new codegen compiles."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_kmeans_clustering_spark.plans.kmeans import lloyd_iteration
+
+    pts = (
+        spark.range(2000)
+        .select(
+            (F.col("id") % 97).cast("double").alias("x"),
+            (F.col("id") % 89).cast("double").alias("y"),
+            (F.col("id") % 83).cast("double").alias("z"),
+        )
+        .cache()
+    )
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount
+    first = lloyd_iteration(pts, [Centroid(i, 10.0 * i, 7.0 * i, 5.0 * i) for i in range(5)])
+    before = compiles()
+    second = lloyd_iteration(pts, [Centroid(i, 9.5 * i + 0.25, 7.0, 3.0 * i) for i in range(5)])
+    assert compiles() - before == 0
+    assert [c.id for c in first] == [c.id for c in second] == [0, 1, 2, 3, 4]
+    pts.unpersist()
 
 
 def test_pricing_summary_partial_final_agg_and_pruned_scan(spark):

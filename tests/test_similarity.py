@@ -695,3 +695,21 @@ def test_ivf_extend_index_requires_centroids(spark, tmp_path):
         fh.write("not parquet")
     with _pytest.raises(AnalysisException):
         ivf_extend_index(spark, corrupt, emb.where("vec_id >= 50"))
+
+
+def test_ann_vec_dim_sizes_only_a_single_file(tmp_path):
+    """``os.path.getsize`` on a directory returns the dirent
+    size instead of raising, so a directory-shaped embeddings.parquet
+    (a real multi-file table) used to read as micro-scale and pick the
+    HOF form. A directory or a missing path is corpus-scale; only a
+    single file is sized against the gate."""
+    from mapreduce_kmeans_clustering_spark.queries_pipeline import _ann_vec_dim
+
+    table = tmp_path / "dir" / "embeddings.parquet"
+    table.mkdir(parents=True)
+    (table / "part-00000.parquet").write_bytes(b"\0" * 64)
+    assert _ann_vec_dim(str(tmp_path / "dir")) == 64
+    (tmp_path / "file").mkdir()
+    (tmp_path / "file" / "embeddings.parquet").write_bytes(b"\0" * 64)
+    assert _ann_vec_dim(str(tmp_path / "file")) is None
+    assert _ann_vec_dim(str(tmp_path / "missing")) == 64
