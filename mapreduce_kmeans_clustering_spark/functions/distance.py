@@ -151,14 +151,3 @@ def sqdist_to_const(v: Column, cvec: list[float]) -> Column:
         F.lit(0.0),
         lambda acc, d: acc + d,
     )
-
-
-def cosine_unrolled(a: Column, b: Column, dim: int, na: Column | None = None, nb: Column | None = None) -> Column:
-    """Fixed-dimension cosine; pass precomputed norms (na/nb) to hoist
-    the norm work out of a pairwise join — dot/(na*nb) is the same
-    arithmetic whether the norms are computed per pair or per side."""
-    if na is None:
-        na = norm_unrolled(a, dim)
-    if nb is None:
-        nb = norm_unrolled(b, dim)
-    return dot_unrolled(a, b, dim) / (na * nb)

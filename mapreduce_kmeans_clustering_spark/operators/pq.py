@@ -253,27 +253,6 @@ def pq_decode_expr(codes: Column, codebooks: list[list[list[float]]]) -> Column:
     return F.concat(*parts)
 
 
-def pq_adc_dist_expr(
-    qv: Column, codes: Column, codebooks: list[list[list[float]]]
-) -> Column:
-    """ADC distance: sqdist between the EXACT query vector and the
-    decoded database vector — mathematically d(q, decode(x)), one HOF
-    aggregate over the 64 concatenated elements (index-ascending,
-    left-associated: the same doubles as DuckDB's
-    list_sum(list_transform(range(1, dim+1), ...)) over the
-    concatenated codeword slices). Prefer computing decode ONCE per
-    database row (scan-local) and passing the decoded column here —
-    see pq_adc_topk; per-pair decode re-selects codewords
-    |queries| times over."""
-    return F.aggregate(
-        F.zip_with(
-            qv, pq_decode_expr(codes, codebooks), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-
-
 def pq_adc_topk(
     vectors: DataFrame,
     codebooks: list[list[list[float]]],

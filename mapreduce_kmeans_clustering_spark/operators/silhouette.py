@@ -18,9 +18,12 @@ Reference semantics (SilhouetteEvaluation.java:91-141):
 
 Physical shape: the reference buffers the WHOLE dataset in one reducer
 JVM (O16, SilhouetteEvaluation.java:72-142, implicit single reduce
-task). Here both all-pairs sums come from ONE distributed cross join
-with a same-cluster flag split inside the aggregate (_pair_sums).
-The work is inherently O(n^2) — that is the reference's defined
+task). Here the evaluation is ONE aggregate over the pair space
+(_pair_sums): the streamed side is round-robin spread over the
+session's default parallelism, each row meets a broadcast copy of the
+evaluation set, and the per-cluster sums, the same-cluster pair count
+(hence n_C) and, over the K result rows, k all come out of that one
+pass. The work is inherently O(n^2) — that is the reference's defined
 semantics, not an implementation accident — so for large inputs pass
 ``limit_rids`` to evaluate on a deterministic subset, or use
 ``silhouette_standard`` (MLlib, O(n*k)) when reference parity is not
@@ -29,15 +32,15 @@ required.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreduce_kmeans_clustering_spark.functions.distance import euclidean
 
 
 def _pair_sums(assigned: DataFrame) -> DataFrame:
-    """ONE all-pairs pass producing both silhouette sums per cluster:
-    (cluster, intra_sum, inter_sum).
+    """ONE all-pairs pass producing everything the silhouette needs per
+    cluster: (cluster, intra_sum, inter_sum, same_pairs).
 
     A single unconditioned cross join replaces two theta joins —
     measured 2-3x faster: the distance is computed once per pair in a
@@ -47,17 +50,28 @@ def _pair_sums(assigned: DataFrame) -> DataFrame:
     flag column. The a=b diagonal contributes d(a,a)=0 to the intra
     sum, so it needs no filter and the sums are unchanged.
 
+    ``same_pairs`` counts the same-cluster ordered pairs, diagonal
+    included: exactly n_C**2, so the cluster size needs no separate
+    aggregate or join. It counts rows, so it holds for duplicate points
+    and repeated rids alike.
+
     The b side is broadcast explicitly (round-12, guide §3.1): without
     the hint Catalyst cannot size the filtered/cached input and plans
     CartesianProduct — measured at sf0.1 as a 32×32 = 1024-task stage
     with 60.6 s executor time / 11.3 s GC for a 2064-row evaluation
-    set. With the broadcast it is one 32-task
-    BroadcastNestedLoopJoin stage. The evaluation set is bounded by
+    set. The a side is round-robin repartitioned to the default
+    parallelism, always: a small evaluation set is often one input
+    split (the reference's 5,000-row CSV is), which would otherwise run
+    all n^2 pairs as ONE task. Shuffling n rows is free next to n^2
+    pairs, and the sort Spark runs before a round-robin exchange keeps
+    row placement deterministic. The evaluation set is bounded by
     construction (silhouette_ref's O(n^2) contract + the limit_rids
     hatch), so the broadcast side is always the bounded subset, never
     an unbounded corpus."""
-    a = assigned.select("cluster", "x", "y", "z").alias("a")
-    b = F.broadcast(assigned.select("cluster", "x", "y", "z").alias("b"))
+    cols = ("cluster", "x", "y", "z")
+    parallelism = assigned.sparkSession.sparkContext.defaultParallelism
+    a = assigned.select(*cols).repartition(parallelism).alias("a")
+    b = F.broadcast(assigned.select(*cols).alias("b"))
     dist = euclidean(
         F.col("a.x"), F.col("a.y"), F.col("a.z"), F.col("b.x"), F.col("b.y"), F.col("b.z")
     )
@@ -73,6 +87,7 @@ def _pair_sums(assigned: DataFrame) -> DataFrame:
             F.sum(F.when(~F.col("same"), F.col("dist")).otherwise(F.lit(0.0))).alias(
                 "inter_sum"
             ),
+            F.count_if(F.col("same")).alias("same_pairs"),
         )
     )
 
@@ -96,22 +111,23 @@ def silhouette_ref(
     if limit_rids is not None:
         assigned = assigned.where(F.col("rid") < limit_rids)
 
-    sizes = assigned.groupBy("cluster").agg(F.count("*").alias("n"))
-    k = sizes.select(F.count("*").alias("k"))
-
-    stats = sizes.join(_pair_sums(assigned), "cluster", "left").crossJoin(
-        F.broadcast(k)
+    # n_C = sqrt(n_C**2) is exact while n_C**2 < 2**53, far past any
+    # evaluation set an O(n^2) pass can hold. k is the number of
+    # aggregate rows, counted over those K rows.
+    stats = _pair_sums(assigned).select(
+        "cluster",
+        "intra_sum",
+        "inter_sum",
+        F.round(F.sqrt("same_pairs")).cast("long").alias("n"),
+        F.count("*").over(Window.partitionBy()).alias("k"),
     )
     # Singleton cluster: no intra pairs -> 0/0, which Java evaluates to
     # NaN (SilhouetteEvaluation.java:111); Spark's double division
     # yields NULL, so NaN is emitted explicitly for parity.
     avg_intra = F.when(
-        F.col("n") > 1,
-        F.coalesce(F.col("intra_sum"), F.lit(0.0)) / (F.col("n") * (F.col("n") - 1)),
+        F.col("n") > 1, F.col("intra_sum") / (F.col("n") * (F.col("n") - 1))
     ).otherwise(F.lit(float("nan")))
-    avg_inter = F.coalesce(F.col("inter_sum"), F.lit(0.0)) / (
-        F.col("n") * (F.col("k") - 1)
-    )
+    avg_inter = F.col("inter_sum") / (F.col("n") * (F.col("k") - 1))
     out = stats.select(
         "cluster",
         avg_intra.alias("avg_intra"),

@@ -1,10 +1,10 @@
 """SparkSession factory.
 
 Replaces the reference's per-job Hadoop ``Configuration`` wiring
-(e.g. Task1.java:104-118) with one shared session. Defaults are tuned
-for the local[32] test harness but every knob scales: AQE re-plans
-shuffles at runtime (skew joins, partition coalescing), shuffle
-partitions default to the core count, Arrow is on for the few
+(e.g. Task1.java:104-118) with one shared session. Local parallelism
+defaults to the CPUs this process may run on, and every knob scales:
+AQE re-plans shuffles at runtime (skew joins, partition coalescing),
+shuffle partitions default to the core count, Arrow is on for the few
 Pandas-UDF operators, and the session timezone is pinned to UTC so
 results hash-match a DuckDB oracle.
 """
@@ -26,6 +26,19 @@ _DEFAULTS = {
 }
 
 
+def default_cpus() -> int:
+    """Local parallelism: ``SPARK_GRAFT_CPUS`` when set, else the CPUs
+    this process may run on (its affinity mask, which a container's
+    cpuset narrows), else the machine's CPU count."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "mrkc-spark",
     master: str | None = None,
@@ -38,7 +51,7 @@ def get_spark(
     pass ``master`` / rely on spark-submit and the same code runs
     unchanged — nothing here assumes single-node.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     builder = SparkSession.builder.appName(app_name).master(
         master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     )

@@ -49,8 +49,16 @@ def spark():
     yield s
 
 
+def require_reference() -> None:
+    """Skip the calling test or fixture when the reference's committed
+    inputs and outputs are not on this host."""
+    if not os.path.isdir(REF):
+        pytest.skip(f"reference data absent: {REF} not found")
+
+
 @pytest.fixture(scope="session")
 def ref_points(spark):
+    require_reference()
     from mapreduce_kmeans_clustering_spark.sources.points import read_points_csv
 
     return read_points_csv(spark, REF_POINTS_CSV).cache()
@@ -58,6 +66,7 @@ def ref_points(spark):
 
 @pytest.fixture(scope="session")
 def ref_seeds():
+    require_reference()
     from mapreduce_kmeans_clustering_spark.sources.seeds import load_seeds
 
     return load_seeds(REF_SEEDS_CSV)

@@ -20,7 +20,7 @@ from mapreduce_kmeans_clustering_spark.plans.kmeans import displacement, fit, ll
 from mapreduce_kmeans_clustering_spark.sinks.text_kv import read_centroids_kv
 from mapreduce_kmeans_clustering_spark.sources.points import with_rid
 
-from tests.conftest import REF
+from tests.conftest import REF, require_reference
 
 TOL = 1e-9
 
@@ -149,6 +149,7 @@ def test_java_double_str_layout_and_golden_roundtrip():
     ]
     for v, want in cases:
         assert j(v) == want, (v, want, j(v))
+    require_reference()
     pat = re.compile(r"-?\d+\.\d+(?:[eE]-?\d+)?")
     n = 0
     for f in glob.glob(f"{REF}/output/**/part-*", recursive=True):

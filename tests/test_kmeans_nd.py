@@ -99,7 +99,10 @@ def test_mllib_backend_clusters_reference_data(spark):
     )
     from mapreduce_kmeans_clustering_spark.sources.points import read_points_csv
 
-    pts = read_points_csv(spark, "/root/reference/3d_points_dataset.csv")
+    from tests.conftest import REF_POINTS_CSV, require_reference
+
+    require_reference()
+    pts = read_points_csv(spark, REF_POINTS_CSV)
     res = fit_mllib(pts, k=5, max_iter=10, seed=7)
     assert len(res.centroids) == 5 and res.cost > 0
     labeled = label_mllib(pts, res)

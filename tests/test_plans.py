@@ -67,6 +67,34 @@ def test_lloyd_step_compiles_once_per_fit(spark):
     pts.unpersist()
 
 
+def test_silhouette_pair_stage_spread_and_single_aggregate(spark):
+    """The O(n^2) pair stage streams a round-robin spread of the
+    evaluation set (one split in, defaultParallelism tasks out) against
+    one broadcast copy, and n and k come out of the pair aggregate: no
+    CartesianProduct, and no join above the pair join."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_kmeans_clustering_spark.operators.silhouette import silhouette_ref
+
+    pts = spark.range(300, numPartitions=1).select(
+        F.col("id").alias("rid"),
+        (F.col("id") % 4).cast("int").alias("cluster"),
+        (F.col("id") % 17).cast("double").alias("x"),
+        (F.col("id") % 13).cast("double").alias("y"),
+        (F.col("id") % 11).cast("double").alias("z"),
+    )
+    p = _plan(silhouette_ref(pts))
+    assert "CartesianProduct" not in p
+    lines = p.splitlines()
+    [i] = [j for j, ln in enumerate(lines) if "BroadcastNestedLoopJoin" in ln]
+    assert not any("Join" in ln for ln in lines[:i])
+    col = lines[i].index("BroadcastNestedLoopJoin")
+    children = [ln[col:] for ln in lines[i + 1:] if ln[col:col + 3] in (":- ", "+- ")]
+    n = spark.sparkContext.defaultParallelism
+    assert children[0].startswith(f":- Exchange RoundRobinPartitioning({n})"), children
+    assert children[1].startswith("+- BroadcastExchange"), children
+
+
 def test_pricing_summary_partial_final_agg_and_pruned_scan(spark):
     from mapreduce_kmeans_clustering_spark.queries_pipeline import q_pricing_summary
 
