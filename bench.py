@@ -62,6 +62,7 @@ def main() -> None:
     from mapreduce_kmeans_clustering_spark.plans.kmeans import fit
     from mapreduce_kmeans_clustering_spark.queries import (
         ALL_QUERIES,
+        WARMUPS,
         scale_points,
         scale_seeds,
     )
@@ -102,78 +103,12 @@ def main() -> None:
     spark.sparkContext.setJobDescription(None)
     timings["cpu_scaling_probe"] = round(time.perf_counter() - t0, 3)
 
-    # The chain family (q_chain2/5/cap/converge, q_disp, q_label, ...)
-    # shares the per-application iteration cache (chain_centroids), so
-    # without an explicit warmup each member's number depends on which
-    # one happens to run FIRST — and alphabetical position shifts as
-    # the registry grows (r3's new q_chain_cap silently absorbed the
-    # cost q_chain_converge paid in r1, inflating apparent drift).
-    # Warm the deepest prefix once as its own timed entry; family
-    # members then measure only their terminal work, reproducibly.
-    from mapreduce_kmeans_clustering_spark.queries import (
-        CONVERGE_CAP,
-        chain_centroids,
-    )
-
-    t0 = time.perf_counter()
-    chain_centroids(spark, sf_dir, CONVERGE_CAP)
-    timings["chain_warmup"] = round(time.perf_counter() - t0, 3)
-
-    # Same attribution rule for the ANN family (VERDICT r7 item 2):
-    # the exact-top-k BASELINE the recall gates compare against is
-    # memoized per application (_EXACT_TOPK_CACHE), so its build cost
-    # used to land on whichever gate ran first alphabetically
-    # (q_ann_dim_recall absorbed it in r7: 1.74→2.67 s). Build it as an
-    # explicit timed warm-up line; the gates then measure only their
-    # own work.
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        _dup_groups_df,
-        _exact_topk,
-    )
-
-    t0 = time.perf_counter()
-    _exact_topk(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # ... and EXECUTE the memoized IVF assignment once (VERDICT r8
-    # item 2): _IVF_ASSIGN_CACHE memoizes the DataFrame (the plan),
-    # not a result, and the literal-seed rewrite carries nlist×64
-    # literal doubles whose one-time codegen/plan-build (~3.4 s at
-    # sf0.1) previously landed on q_ann_ivf's single in-suite run —
-    # at >1.5 s first-run, best-of-2 never fired, so the recorded
-    # number was the compile, not the query (4.29 s driver r8 vs
-    # 0.86 s warm standalone).
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        IVF_NLIST,
-        _ivf_assigned,
-    )
-
-    _ivf_assigned(spark, sf_dir, IVF_NLIST).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    timings["ann_baseline_warmup"] = round(time.perf_counter() - t0, 3)
-
-    # ... and for the dedup-groups memo (_GROUPS_CACHE): the iterative
-    # label propagation behind q_dedup_groups/q_dedup_cluster_sizes is
-    # ~8 s cold / 0.15 s warm at sf0.1, and alphabetical order billed
-    # all of it to q_dedup_cluster_sizes (its apparent r7 "regression",
-    # 3.44→4.12 s, was this build under load — VERDICT r7 item 5).
-    t0 = time.perf_counter()
-    _dup_groups_df(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    timings["dedup_groups_warmup"] = round(time.perf_counter() - t0, 3)
-
-    # ... and for the silhouette memo (_SIL_CACHE — VERDICT r11 item 3):
-    # the ~4.5 s all-pairs stats build behind q_intra/q_inter/q_sil was
-    # the ONE shared memo without a warmup line, so q_inter's recorded
-    # number silently flipped from cold (4.58 s, r10) to warm (0.29 s,
-    # r11) the first time the ≥1.3×-prev rule triggered a rerun that
-    # hit the warm memo. Billing the build here makes the three
-    # projections report steady-state consistently. Methodology note:
-    # pre-r12 q_inter values mix cold and warm and are NOT comparable
-    # across rounds; from r12 on, sil_warmup carries the build.
-    from mapreduce_kmeans_clustering_spark.queries import _sil_stats
-
-    t0 = time.perf_counter()
-    _sil_stats(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    timings["sil_warmup"] = round(time.perf_counter() - t0, 3)
+    # the shared memo builds, each as its own timed line (the reasons
+    # are declared with queries.WARMUPS)
+    for name, warm in WARMUPS.items():
+        t0 = time.perf_counter()
+        warm(spark, sf_dir)
+        timings[name] = round(time.perf_counter() - t0, 3)
 
     # Noise control (VERDICT r5 item 5 / r6 item 6): sandbox load
     # swings suite totals ±30%, and the distortion concentrates in
@@ -184,10 +119,10 @@ def main() -> None:
     # The sidecar also records 1-min loadavg at start/end so a loaded
     # round is identifiable without per-query forensics.
     #
-    # Memoized queries (the _EXACT_TOPK_CACHE / _IVF_ASSIGN_CACHE /
-    # _IVFPQ_CACHE / _emb users) report STEADY-STATE probe-only time
-    # under the re-run: run 1 may populate a memo, run 2 reuses it, and
-    # MIN takes the warm number. That is deliberate and now consistent
+    # Memoized queries (the _exact_topk / _ivf_assigned / _ivfpq_top
+    # users) report STEADY-STATE probe-only time under the re-run: run
+    # 1 may populate a memo, run 2 reuses it, and MIN takes the warm
+    # number. That is deliberate and now consistent
     # — the shared builds are timed as their own *_warmup lines above,
     # so no query's number depends on alphabetical order (ADVICE r7;
     # tools/scale_sweep.py clears the memos instead because it measures
@@ -239,7 +174,7 @@ def main() -> None:
     # Round-13 (VERDICT r12 item 3): back to the RAW single-file read.
     # Round-12 split this input 8 ways through queries_pipeline._t on a
     # U-curve measured under load; the idle interleaved re-measurement
-    # (tools/fitnd_ab.py, min-of-3, 10 iterations) reads 1 partition
+    # (OPTIMIZATION_r13.md, min-of-3, 10 iterations) reads 1 partition
     # 5.67 s / 4 -> 6.39 / 8 -> 7.18 / 16 -> 8.18: at 2 000 vectors the
     # per-iteration Python-worker round trip scales with the task count
     # and dominates, which also matches the driver's inverted 8-core

@@ -25,6 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_kmeans_clustering_spark.memo import memo
 from mapreduce_kmeans_clustering_spark.operators.aggregate import members, update_centroids
 from mapreduce_kmeans_clustering_spark.operators.assign import assign
 from mapreduce_kmeans_clustering_spark.operators.silhouette import silhouette_ref
@@ -107,38 +108,25 @@ SQL_PRELUDE = f"WITH {SQL_PTS},{SQL_SEEDS},{_sql_assign('pts', 'seeds', 'asg1')}
 # ---------------------------------------------------------------------------
 
 
-_POINTS_CACHE: dict[tuple, DataFrame] = {}
-
-
+@memo
 def scale_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The lineitem-derived points relation, persisted per application
-    (buffer-pool caching of a hot derived table: the rid window costs a
-    full shuffle, and most registered queries start from this exact
+    """The lineitem-derived points relation, persisted (buffer-pool
+    caching of a hot derived table: the rid window costs a full
+    shuffle, and most registered queries start from this exact
     relation). MEMORY_AND_DISK, so larger SFs degrade gracefully."""
     from pyspark.storagelevel import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _POINTS_CACHE:
-        _POINTS_CACHE[key] = points_from_lineitem(spark, sf_dir).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    return _POINTS_CACHE[key]
+    return points_from_lineitem(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 # Collected seed lists / iteration chains are tiny (K rows) but cost a
-# full points-scan job to derive; several registered queries share them,
-# so memoize per (application, sf_dir). Values are plain Python lists —
-# caching them changes job count, never results.
-_SEEDS_CACHE: dict[tuple, list[Centroid]] = {}
-_CHAIN_CACHE: dict[tuple, list[Centroid]] = {}
-
-
-def scale_seeds(spark: SparkSession, sf_dir: str, k: int = K) -> list[Centroid]:
-    """First k distinct coordinate triples by min((rid%997)*1e12+rid).
-    One tiny aggregation job; collects exactly k rows."""
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    if key in _SEEDS_CACHE:
-        return _SEEDS_CACHE[key]
+# full points-scan job to derive and several registered queries share
+# them. Values are plain Python lists: memoizing them changes job
+# count, never results.
+@memo
+def scale_seeds(spark: SparkSession, sf_dir: str) -> list[Centroid]:
+    """First K distinct coordinate triples by min((rid%997)*1e12+rid).
+    One tiny aggregation job; collects exactly K rows."""
     pts = scale_points(spark, sf_dir)
     mk = (F.col("rid") % 997) * F.lit(1_000_000_000_000) + F.col("rid")
     rows = (
@@ -146,43 +134,37 @@ def scale_seeds(spark: SparkSession, sf_dir: str, k: int = K) -> list[Centroid]:
         .groupBy("x", "y", "z")
         .agg(F.min("mk").alias("mk"))
         .orderBy("mk")
-        .limit(k)
+        .limit(K)
         .collect()
     )
-    out = [Centroid(i, r["x"], r["y"], r["z"]) for i, r in enumerate(rows)]
-    _SEEDS_CACHE[key] = out
-    return out
+    return [Centroid(i, r["x"], r["y"], r["z"]) for i, r in enumerate(rows)]
 
 
+@memo
 def chain_centroids(spark: SparkSession, sf_dir: str, r: int) -> list[Centroid]:
-    """r Lloyd iterations with 6-decimal centroid rounding between
-    steps (the rounding is part of the declared query so Spark and the
-    SQL oracle stay on bit-identical centroids). Resumes from the
-    deepest memoized prefix chain (iteration i+1 is a pure function of
-    iteration i, so prefix reuse is exact)."""
-    app = spark.sparkContext.applicationId
-    pts = scale_points(spark, sf_dir)
-    done = 0
-    cents = scale_seeds(spark, sf_dir)
-    for cached_r in range(r, 0, -1):
-        if (app, sf_dir, cached_r) in _CHAIN_CACHE:
-            done, cents = cached_r, _CHAIN_CACHE[(app, sf_dir, cached_r)]
-            break
-    for step in range(done, r):
-        assigned = assign(pts, cents, keep_cols=["x", "y", "z"])
-        rows = (
-            update_centroids(assigned)
-            .select(
-                "id",
-                F.round("x", 6).alias("x"),
-                F.round("y", 6).alias("y"),
-                F.round("z", 6).alias("z"),
-            )
-            .collect()
+    """r Lloyd iterations from the seeds with 6-decimal centroid
+    rounding between steps (the rounding is part of the declared query
+    so Spark and the SQL oracle stay on bit-identical centroids). One
+    step on top of the memoized r-1 chain: iteration i+1 is a pure
+    function of iteration i, so prefix reuse is exact."""
+    if r == 0:
+        return scale_seeds(spark, sf_dir)
+    assigned = assign(
+        scale_points(spark, sf_dir),
+        chain_centroids(spark, sf_dir, r - 1),
+        keep_cols=["x", "y", "z"],
+    )
+    rows = (
+        update_centroids(assigned)
+        .select(
+            "id",
+            F.round("x", 6).alias("x"),
+            F.round("y", 6).alias("y"),
+            F.round("z", 6).alias("z"),
         )
-        cents = sorted(Centroid(int(w["id"]), w["x"], w["y"], w["z"]) for w in rows)
-        _CHAIN_CACHE[(app, sf_dir, step + 1)] = cents
-    return cents
+        .collect()
+    )
+    return sorted(Centroid(int(w["id"]), w["x"], w["y"], w["z"]) for w in rows)
 
 
 def _assigned1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -313,20 +295,14 @@ def q_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SIL_CACHE: dict[tuple, tuple] = {}
-
-
+@memo
 def _sil_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-row silhouette stats table; q_intra/q_inter/q_sil are three
     projections of it, so the collected rows are memoized like the seed
     lists (materialized-view reuse — K rows, never the data)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIL_CACHE:
-        sub = _assigned1(spark, sf_dir).where(F.col("rid") < SIL_RID_LIMIT)
-        stats = silhouette_ref(sub, singleton="skip")
-        _SIL_CACHE[key] = (stats.collect(), stats.schema)
-    rows, schema = _SIL_CACHE[key]
-    return spark.createDataFrame(rows, schema=schema)
+    sub = _assigned1(spark, sf_dir).where(F.col("rid") < SIL_RID_LIMIT)
+    stats = silhouette_ref(sub, singleton="skip")
+    return spark.createDataFrame(stats.collect(), schema=stats.schema)
 
 
 def q_intra(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -510,6 +486,9 @@ FROM seeds s JOIN c1 c USING (id)""",
 from mapreduce_kmeans_clustering_spark.queries_pipeline import (  # noqa: E402
     PIPELINE_ORACLES,
     PIPELINE_QUERIES,
+    _dup_groups_df,
+    _exact_topk,
+    _ivf_assigned,
 )
 
 # The external correctness driver records only the FIRST 50 keys of
@@ -575,3 +554,40 @@ ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     **PIPELINE_QUERIES,
 }
 ALL_ORACLES: dict[str, str] = {**KMEANS_ORACLES, **PIPELINE_ORACLES}
+
+
+def _noop(df: DataFrame) -> None:
+    df.write.mode("overwrite").format("noop").save()
+
+
+def _ann_baseline_warmup(spark: SparkSession, sf_dir: str) -> None:
+    _noop(_exact_topk(spark, sf_dir))
+    _noop(_ivf_assigned(spark, sf_dir))
+
+
+# Shared memo builds, each timed as its own line before the registered
+# queries (bench.py, tools/opt_bench.py) so its cost never lands on
+# whichever consumer happens to run first in alphabetical order.
+WARMUPS: dict[str, Callable[[SparkSession, str], None]] = {
+    # The chain family (q_chain2/5/cap/converge, q_disp, q_label, ...)
+    # shares chain_centroids: warm the deepest prefix, and each member
+    # measures only its terminal work (r3's new q_chain_cap silently
+    # absorbed the cost q_chain_converge paid in r1).
+    "chain_warmup": lambda spark, sf_dir: chain_centroids(spark, sf_dir, CONVERGE_CAP),
+    # The exact-top-k baseline the recall gates compare against
+    # (q_ann_dim_recall absorbed it in r7: 1.74→2.67 s), and one
+    # EXECUTION of the IVF assignment: its memo holds a plan whose
+    # nlist×64 literal doubles cost ~3.4 s of one-time codegen at
+    # sf0.1, which used to be q_ann_ivf's recorded number (VERDICT r8
+    # item 2).
+    "ann_baseline_warmup": _ann_baseline_warmup,
+    # The iterative label propagation behind q_dedup_groups /
+    # q_dedup_cluster_sizes: ~8 s cold / 0.15 s warm at sf0.1, all of it
+    # once billed to q_dedup_cluster_sizes (VERDICT r7 item 5).
+    "dedup_groups_warmup": lambda spark, sf_dir: _noop(_dup_groups_df(spark, sf_dir)),
+    # The all-pairs stats build behind q_intra/q_inter/q_sil: without
+    # it q_inter flipped from cold (4.58 s, r10) to warm (0.29 s, r11)
+    # when a rerun hit the memo; pre-r12 q_inter values mix the two and
+    # are not comparable across rounds (VERDICT r11 item 3).
+    "sil_warmup": lambda spark, sf_dir: _noop(_sil_stats(spark, sf_dir)),
+}

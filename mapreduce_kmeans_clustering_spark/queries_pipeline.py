@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce_kmeans_clustering_spark.memo import memo
 from mapreduce_kmeans_clustering_spark.operators import cdc as CDC
 from mapreduce_kmeans_clustering_spark.operators import curation as CU
 from mapreduce_kmeans_clustering_spark.operators import incremental as INC
@@ -131,7 +132,7 @@ _SCAN_BYTES_PER_SPLIT: dict[str, int] = {"embeddings": 96 * 1024}
 # shingle/md5/HOF families on the text and vector tables. Join/agg
 # -first consumers get their parallelism from their own first shuffle,
 # so for them the split is a pure full-data Exchange tax. Idle
-# interleaved A/B at sf0.1 (tools/split_ab.py, alternating arm order,
+# interleaved A/B at sf0.1 (OPTIMIZATION_r13.md, alternating arm order,
 # min-of-4): q_pricing_summary 1.93 s split vs 0.57 nosplit,
 # q_sales_cube 1.77 vs 0.80, q_top_orders 2.98 vs 1.40,
 # q_brand_revenue 1.88 vs 1.18, q_copurchase_triangles 6.37 vs 5.79 —
@@ -213,41 +214,31 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (vec_id, v, list_id) assignment; localCheckpoint(eager=False)
 # materializes it once per session on first action instead of
 # re-running the broadcast-fanout cosine argmin per query.
-_IVF_ASSIGN_CACHE: dict[tuple, DataFrame] = {}
+@memo
+def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return SIM.ivf_assign(
+        _emb(spark, sf_dir),
+        IVF_NLIST,
+        unroll=_ann_vec_dim(sf_dir) is not None,
+    ).localCheckpoint(eager=False)
 
 
-def _ivf_assigned(spark: SparkSession, sf_dir: str, nlist: int) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, nlist)
-    if key not in _IVF_ASSIGN_CACHE:
-        _IVF_ASSIGN_CACHE[key] = SIM.ivf_assign(
-            _emb(spark, sf_dir),
-            nlist,
-            unroll=_ann_vec_dim(sf_dir) is not None,
-        ).localCheckpoint(eager=False)
-    return _IVF_ASSIGN_CACHE[key]
-
-
-# Buffer-pool cache for the events relation, keyed per application ×
-# sf_dir like queries.scale_points: ~20 registered queries start from
-# this exact (scan + ts-normalization) relation, and without the pin
-# each re-reads the parquet and re-derives ts. MEMORY_AND_DISK so a
-# larger SF degrades to spill instead of OOM; at true fact-table scale
-# a caller would skip the persist (one-shot queries) or pin only the
-# hot projection — the helper is the single choke point to change.
-_EVENTS_CACHE: dict[tuple, DataFrame] = {}
-
-
+# Buffer-pool memo for the events relation, like queries.scale_points:
+# ~20 registered queries start from this exact (scan +
+# ts-normalization) relation, and without the pin each re-reads the
+# parquet and re-derives ts. MEMORY_AND_DISK so a larger SF degrades
+# to spill instead of OOM; at true fact-table scale a caller would skip
+# the persist (one-shot queries) or pin only the hot projection — the
+# helper is the single choke point to change.
+@memo
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Load the events table with a microsecond ``ts`` TIMESTAMP,
-    persisted per (application, sf_dir).
+    persisted.
 
     Handles both generator encodings seen across driver rounds:
     TIMESTAMP(NANOS) (which the Spark reader only accepts as long via
     the legacy flag — truncated to micros, same as the oracle's
     ts::TIMESTAMP cast) and native TIMESTAMP(MICROS)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _EVENTS_CACHE:
-        return _EVENTS_CACHE[key]
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     e = _t(spark, sf_dir, "events")
     if dict(e.dtypes)["ts"] == "bigint":
@@ -257,11 +248,9 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (session tz pinned UTC) and what unix_micros/window() expect.
     from pyspark.storagelevel import StorageLevel
 
-    e = e.withColumn("ts", F.col("ts").cast("timestamp")).persist(
+    return e.withColumn("ts", F.col("ts").cast("timestamp")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    _EVENTS_CACHE[key] = e
-    return e
 
 
 # ---------------------------------------------------------------------------
@@ -447,20 +436,15 @@ def q_dedup_pipeline(spark, sf_dir):
     return D.dedup_pipeline(_docs(spark, sf_dir), verify_threshold=VERIFY_THRESHOLD)
 
 
-_GROUPS_CACHE: dict[tuple, DataFrame] = {}
-
-
+@memo
 def _dup_groups_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive near-dup groups, memoized per (application, sf_dir):
-    the iterative label propagation is the most expensive derived
-    relation in the dedup family and two registered queries
-    (q_dedup_groups, q_dedup_cluster_sizes) start from it — the same
-    buffer-pool pattern as queries.scale_points."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _GROUPS_CACHE:
-        p = D.jaccard_pairs(_docs(spark, sf_dir), threshold=JACCARD_THRESHOLD)
-        _GROUPS_CACHE[key] = D.dup_groups(p).localCheckpoint(eager=False)
-    return _GROUPS_CACHE[key]
+    """Transitive near-dup groups, memoized: the iterative label
+    propagation is the most expensive derived relation in the dedup
+    family and two registered queries (q_dedup_groups,
+    q_dedup_cluster_sizes) start from it — the same buffer-pool
+    pattern as queries.scale_points."""
+    p = D.jaccard_pairs(_docs(spark, sf_dir), threshold=JACCARD_THRESHOLD)
+    return D.dup_groups(p).localCheckpoint(eager=False)
 
 
 def q_dedup_groups(spark, sf_dir):
@@ -601,19 +585,14 @@ def q_ann_lsh(spark, sf_dir):
 # once per (application, sf_dir) instead of per gate (the standing
 # SCALE.md §4.22 efficiency note). q_ann_topk deliberately does NOT
 # use it — that query IS the brute-force operator measurement.
-_EXACT_TOPK_CACHE: dict[tuple, DataFrame] = {}
-
-
+@memo
 def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EXACT_TOPK_CACHE:
-        _EXACT_TOPK_CACHE[key] = SIM.cosine_topk(
-            _emb(spark, sf_dir),
-            ANN_QUERY_IDS,
-            k=ANN_K,
-            vec_dim=_ann_vec_dim(sf_dir),
-        ).localCheckpoint(eager=False)
-    return _EXACT_TOPK_CACHE[key]
+    return SIM.cosine_topk(
+        _emb(spark, sf_dir),
+        ANN_QUERY_IDS,
+        k=ANN_K,
+        vec_dim=_ann_vec_dim(sf_dir),
+    ).localCheckpoint(eager=False)
 
 
 def q_ann_recall(spark, sf_dir):
@@ -633,7 +612,7 @@ def q_ann_recall(spark, sf_dir):
         k=ANN_K,
         nlist=IVF_NLIST,
         nprobe=IVF_NPROBE,
-        assigned=_ivf_assigned(spark, sf_dir, IVF_NLIST),
+        assigned=_ivf_assigned(spark, sf_dir),
     )
     return SIM.recall_vs_exact(exact, lsh, "lsh").unionByName(
         SIM.recall_vs_exact(exact, ivf, "ivf")
@@ -699,23 +678,18 @@ def q_pq_adc(spark, sf_dir):
 # pin pattern): q_ann_ivfpq and q_ann_ivfpq_recall consume the same
 # two-level index search; localCheckpoint(eager=False) materializes it
 # once per session instead of re-running the coarse-probe + ADC scan.
-_IVFPQ_CACHE: dict[tuple, DataFrame] = {}
-
-
+@memo
 def _ivfpq_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_kmeans_clustering_spark.operators.pq import ivfpq_topk
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVFPQ_CACHE:
-        _IVFPQ_CACHE[key] = ivfpq_topk(
-            _emb(spark, sf_dir),
-            ANN_QUERY_IDS,
-            k=ANN_K,
-            nlist=IVF_NLIST,
-            nprobe=IVF_NPROBE,
-            assigned=_ivf_assigned(spark, sf_dir, IVF_NLIST),
-        ).localCheckpoint(eager=False)
-    return _IVFPQ_CACHE[key]
+    return ivfpq_topk(
+        _emb(spark, sf_dir),
+        ANN_QUERY_IDS,
+        k=ANN_K,
+        nlist=IVF_NLIST,
+        nprobe=IVF_NPROBE,
+        assigned=_ivf_assigned(spark, sf_dir),
+    ).localCheckpoint(eager=False)
 
 
 def q_ann_ivfpq(spark, sf_dir):
@@ -867,7 +841,7 @@ def q_ann_ivf(spark, sf_dir):
         k=ANN_K,
         nlist=IVF_NLIST,
         nprobe=IVF_NPROBE,
-        assigned=_ivf_assigned(spark, sf_dir, IVF_NLIST),
+        assigned=_ivf_assigned(spark, sf_dir),
     )
     return t.select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos"))
 
@@ -2709,7 +2683,7 @@ def q_embed_diverse(spark, sf_dir):
     labeling, expressed as one aggregate over the assigned corpus."""
     emb = _t(spark, sf_dir, "embeddings")
     return SIM.ivf_representatives(
-        emb, nlist=IVF_NLIST, assigned=_ivf_assigned(spark, sf_dir, IVF_NLIST)
+        emb, nlist=IVF_NLIST, assigned=_ivf_assigned(spark, sf_dir)
     )
 
 
@@ -9434,7 +9408,7 @@ def q_retrieval_metrics(spark, sf_dir):
         k=ANN_K,
         nlist=IVF_NLIST,
         nprobe=IVF_NPROBE,
-        assigned=_ivf_assigned(spark, sf_dir, IVF_NLIST),
+        assigned=_ivf_assigned(spark, sf_dir),
     )
     return SIM.ranking_metrics(exact, lsh, "lsh", ANN_K).unionByName(
         SIM.ranking_metrics(exact, ivf, "ivf", ANN_K)

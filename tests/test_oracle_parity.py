@@ -150,7 +150,6 @@ def assert_dtype_classes(name, sdf, rel):
 ALL = sorted(entry_mod.queries().keys())
 
 
-@pytest.mark.slow  # >=12 s in the idle full run (r13)
 @pytest.mark.parametrize("name", ALL)
 def test_query_matches_oracle(spark, ddb, name):
     q = entry_mod.queries()[name]

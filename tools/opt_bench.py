@@ -35,7 +35,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from mapreduce_kmeans_clustering_spark import get_spark
-    from mapreduce_kmeans_clustering_spark.queries import ALL_QUERIES, scale_points
+    from mapreduce_kmeans_clustering_spark.queries import ALL_QUERIES, WARMUPS, scale_points
 
     spark = get_spark(app_name="mrkc-opt-bench")
     sf_dir = args.sf_dir
@@ -46,31 +46,10 @@ def main() -> None:
     out: dict[str, list[float]] = {}
 
     if args.warmups:
-        from mapreduce_kmeans_clustering_spark.queries import (
-            CONVERGE_CAP,
-            _sil_stats,
-            chain_centroids,
-        )
-        from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-            IVF_NLIST,
-            _dup_groups_df,
-            _exact_topk,
-            _ivf_assigned,
-        )
-
-        t0 = time.perf_counter()
-        chain_centroids(spark, sf_dir, CONVERGE_CAP)
-        out["chain_warmup"] = [round(time.perf_counter() - t0, 3)]
-        t0 = time.perf_counter()
-        _exact_topk(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        _ivf_assigned(spark, sf_dir, IVF_NLIST).write.mode("overwrite").format("noop").save()
-        out["ann_baseline_warmup"] = [round(time.perf_counter() - t0, 3)]
-        t0 = time.perf_counter()
-        _dup_groups_df(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        out["dedup_groups_warmup"] = [round(time.perf_counter() - t0, 3)]
-        t0 = time.perf_counter()
-        _sil_stats(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        out["sil_warmup"] = [round(time.perf_counter() - t0, 3)]
+        for name, warm in WARMUPS.items():
+            t0 = time.perf_counter()
+            warm(spark, sf_dir)
+            out[name] = [round(time.perf_counter() - t0, 3)]
 
     for name in args.names:
         fn = ALL_QUERIES[name]

@@ -450,21 +450,16 @@ def _embed_near_dup_auto():
 
 def _fit_converge():
     """Convergent K-Means fit over the lineitem-derived points — the
-    reference workload itself at ×10/×100. Clears the per-application
-    points/seeds memos so each timed run pays the FULL build (scan +
-    derive + persist + iterate + label), the number a cluster operator
-    actually budgets."""
+    reference workload itself at ×10/×100. time_query clears the memos
+    so each timed run pays the FULL build (scan + derive + persist +
+    iterate + label), the number a cluster operator actually
+    budgets."""
     from pyspark.sql import functions as F
 
     from mapreduce_kmeans_clustering_spark import queries as Q
     from mapreduce_kmeans_clustering_spark.plans.kmeans import fit, label
 
     def run(spark, sf_dir):
-        for cache in (Q._POINTS_CACHE, Q._SEEDS_CACHE, Q._CHAIN_CACHE):
-            for v in list(cache.values()):
-                if hasattr(v, "unpersist"):
-                    v.unpersist()
-            cache.clear()
         pts = Q.scale_points(spark, sf_dir)
         res = fit(pts, Q.scale_seeds(spark, sf_dir), max_iter=30, threshold=5.0)
         return label(pts, res.centroids).groupBy("cluster").agg(
@@ -538,7 +533,7 @@ def _hard_negatives_auto():
 
 
 def time_query(fn, spark, sf_dir: str) -> float:
-    from mapreduce_kmeans_clustering_spark import queries_pipeline as QP
+    from mapreduce_kmeans_clustering_spark.memo import clear_memos
 
     best = float("inf")
     for run in range(2):
@@ -551,16 +546,10 @@ def time_query(fn, spark, sf_dir: str) -> float:
         # genuinely huge first run (>300 s) skips the repeat.
         if run and best > 300:
             break
-        # the derived-relation memos (IVF assignment, IVFPQ index, dup
-        # groups) would otherwise make run 2 — and every later scale —
-        # probe-only; clear them so each timed run pays the full
-        # build+probe cost at its own scale. _EVENTS_CACHE stays: the
-        # events pin is the documented buffer-pool pattern and applies
-        # identically at both scales.
-        QP._IVF_ASSIGN_CACHE.clear()
-        QP._IVFPQ_CACHE.clear()
-        QP._GROUPS_CACHE.clear()
-        QP._EXACT_TOPK_CACHE.clear()
+        # the derived-relation memos would otherwise make run 2 — and
+        # every later scale — probe-only; release them so each timed
+        # run pays the full build+probe cost at its own scale
+        clear_memos()
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         best = min(best, time.perf_counter() - t0)
