@@ -25,7 +25,10 @@ def entry(spark: SparkSession) -> DataFrame:
     relation, returning the labeled dataset (SURVEY §2.3 Q-label over
     the fitted centroids)."""
     from mapreduce_kmeans_clustering_spark.plans.kmeans import fit, label
-    from mapreduce_kmeans_clustering_spark.queries import scale_points, scale_seeds
+    from mapreduce_kmeans_clustering_spark.queries.kmeans import (
+        scale_points,
+        scale_seeds,
+    )
 
     sf_dir = "/root/testdata/sf0.001"
     pts = scale_points(spark, sf_dir).cache()

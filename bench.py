@@ -60,9 +60,8 @@ def main() -> None:
 
     from mapreduce_kmeans_clustering_spark import get_spark
     from mapreduce_kmeans_clustering_spark.plans.kmeans import fit
-    from mapreduce_kmeans_clustering_spark.queries import (
-        ALL_QUERIES,
-        WARMUPS,
+    from mapreduce_kmeans_clustering_spark.queries import ALL_QUERIES, WARMUPS
+    from mapreduce_kmeans_clustering_spark.queries.kmeans import (
         scale_points,
         scale_seeds,
     )
@@ -172,7 +171,7 @@ def main() -> None:
     from mapreduce_kmeans_clustering_spark.plans.kmeans_nd import fit_nd
 
     # Round-13 (VERDICT r12 item 3): back to the RAW single-file read.
-    # Round-12 split this input 8 ways through queries_pipeline._t on a
+    # Round-12 split this input 8 ways through queries._shared._t on a
     # U-curve measured under load; the idle interleaved re-measurement
     # (OPTIMIZATION_r13.md, min-of-3, 10 iterations) reads 1 partition
     # 5.67 s / 4 -> 6.39 / 8 -> 7.18 / 16 -> 8.18: at 2 000 vectors the

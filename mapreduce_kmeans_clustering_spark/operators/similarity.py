@@ -124,7 +124,7 @@ def cosine_topk(
     one-time wide-expression codegen dominates and HOF wins (0.53 vs
     1.42 s warm, 1.1 vs 5.1 s cold); past that the ~10-30x per-pair
     codegen advantage wins — callers gate on corpus size
-    (queries_pipeline._ann_vec_dim)."""
+    (queries.vector._ann_vec_dim)."""
     from mapreduce_kmeans_clustering_spark.functions.distance import (
         dot_hof,
         dot_unrolled,
@@ -353,7 +353,7 @@ def _ivf_assign_with_seeds(
     switches dot/norm to the fixed-dim unrolled codegen forms (same
     doubles — the documented dot contract); the janino cost of the
     nlist×dim-term tree only pays off once per-row volume dominates,
-    so callers gate it on corpus size (queries_pipeline._ann_vec_dim)."""
+    so callers gate it on corpus size (queries.vector._ann_vec_dim)."""
     import math
 
     from mapreduce_kmeans_clustering_spark.functions.distance import (
@@ -513,7 +513,7 @@ def ivf_topk(
 
     ``assigned=`` accepts a precomputed (memoized) ivf_assign relation
     — several registered queries share the coarse assignment, and the
-    buffer-pool memo in queries_pipeline derives it once per session
+    buffer-pool memo in queries.vector derives it once per session
     (the _events pin pattern)."""
     if assigned is None:
         assigned = ivf_assign(embeddings, nlist, id_col, vec_col)

@@ -15,7 +15,7 @@ from pyspark.sql import types as T
 
 # File-source schema: ts as TimestampType (streams written by this
 # engine use micros; see tests). For raw driver testdata with
-# TIMESTAMP(NANOS) use the batch reader in queries_pipeline.
+# TIMESTAMP(NANOS) use the batch reader in queries._shared (_events).
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),

@@ -186,7 +186,7 @@ def test_linkage_scores_hand_check(spark, tmp_path):
     u-estimates: u_nat = u_seg = 4/12 (two values, twice each)."""
     import math
 
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_linkage_scores
+    from mapreduce_kmeans_clustering_spark.queries.relational import q_linkage_scores
 
     rows = [
         (1, "acme corp", 10, "AUTO"),

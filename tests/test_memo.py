@@ -12,15 +12,13 @@ import pyarrow.parquet as pq
 import pytest
 
 from mapreduce_kmeans_clustering_spark.memo import clear_memos
-from mapreduce_kmeans_clustering_spark.queries import (
+from mapreduce_kmeans_clustering_spark.queries.kmeans import (
     chain_centroids,
     scale_points,
     scale_seeds,
 )
-from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-    _dup_groups_df,
-    _ivf_assigned,
-)
+from mapreduce_kmeans_clustering_spark.queries.text import _dup_groups_df
+from mapreduce_kmeans_clustering_spark.queries.vector import _ivf_assigned
 
 from tests.conftest import TESTDATA
 

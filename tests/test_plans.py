@@ -96,7 +96,7 @@ def test_silhouette_pair_stage_spread_and_single_aggregate(spark):
 
 
 def test_pricing_summary_partial_final_agg_and_pruned_scan(spark):
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_pricing_summary
+    from mapreduce_kmeans_clustering_spark.queries.relational import q_pricing_summary
 
     p = _plan(q_pricing_summary(spark, SF))
     assert "partial_sum" in p  # map-side combine
@@ -106,7 +106,7 @@ def test_pricing_summary_partial_final_agg_and_pruned_scan(spark):
 
 
 def test_brand_revenue_pushes_date_filter_to_scan(spark):
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_brand_revenue
+    from mapreduce_kmeans_clustering_spark.queries.relational import q_brand_revenue
 
     p = _plan(q_brand_revenue(spark, SF))
     pushed = p.split("PushedFilters: [")[1].split("]")[0]
@@ -114,7 +114,7 @@ def test_brand_revenue_pushes_date_filter_to_scan(spark):
 
 
 def test_top_orders_uses_broadcast_joins_and_topk(spark):
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_top_orders
+    from mapreduce_kmeans_clustering_spark.queries.relational import q_top_orders
 
     p = _plan(q_top_orders(spark, SF))
     assert "BroadcastHashJoin" in p
@@ -122,7 +122,7 @@ def test_top_orders_uses_broadcast_joins_and_topk(spark):
 
 
 def test_dedup_candidate_joins_are_equi_not_nested_loop(spark):
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.text import (
         q_dedup_jaccard,
         q_dedup_minhash,
     )
@@ -136,9 +136,7 @@ def test_dedup_candidate_joins_are_equi_not_nested_loop(spark):
 def test_simhash_banded_pairs_plan_is_equi_join(spark):
     """The banded SimHash pair generator must plan as an equi-join on
     (seg, val) — never the brute BNLJ the a<b-only join produces."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_dedup_simhash_pairs,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.text import q_dedup_simhash_pairs
 
     p = _plan(q_dedup_simhash_pairs(spark, SF))
     assert "BroadcastNestedLoopJoin" not in p
@@ -150,7 +148,7 @@ def test_embedding_near_dup_plan_is_bucket_equi_join(spark):
     bucket (hash-joinable), exact cosine applied as a post-join filter —
     never a nested-loop over all pairs, and no driver-side collect in
     the operator (the plan is a pure DataFrame composition)."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_dedup_embed
+    from mapreduce_kmeans_clustering_spark.queries.vector import q_dedup_embed
 
     p = _plan(q_dedup_embed(spark, SF))
     assert "BroadcastNestedLoopJoin" not in p
@@ -158,7 +156,7 @@ def test_embedding_near_dup_plan_is_bucket_equi_join(spark):
 
 
 def test_parts_anti_join_is_broadcast(spark):
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_parts_no_discount
+    from mapreduce_kmeans_clustering_spark.queries.relational import q_parts_no_discount
 
     p = _plan(q_parts_no_discount(spark, SF))
     assert "LeftAnti" in p
@@ -208,7 +206,7 @@ def test_asof_join_is_single_exchange_no_range_join(spark):
     """The as-of join must plan as one hash exchange on the key plus a
     window — never a BroadcastNestedLoopJoin/CartesianProduct from a
     range predicate."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_events_attrib
+    from mapreduce_kmeans_clustering_spark.queries.events import q_events_attrib
 
     p = _plan(q_events_attrib(spark, SF))
     assert "BroadcastNestedLoopJoin" not in p
@@ -220,7 +218,7 @@ def test_asof_join_is_single_exchange_no_range_join(spark):
 def test_interval_join_is_bucket_equi_join(spark):
     """Bucketing turns the interval predicate into a BroadcastHashJoin
     on the bucket id; the raw BETWEEN would be a nested-loop plan."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_events_campaign
+    from mapreduce_kmeans_clustering_spark.queries.events import q_events_campaign
 
     p = _plan(q_events_campaign(spark, SF))
     assert "BroadcastNestedLoopJoin" not in p
@@ -252,10 +250,10 @@ def test_curation_queries_no_pairwise_no_python(spark):
     Cartesian, no unbounded nested loop (the 1-row scalar anchor of
     bigram_lm_scores is the ONLY BNLJ shape allowed), no Python row
     UDFs."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.text import q_text_perplexity
+    from mapreduce_kmeans_clustering_spark.queries.web import (
         q_curation_pipeline,
         q_decontam,
-        q_text_perplexity,
     )
 
     for q in (q_decontam, q_text_perplexity, q_curation_pipeline):
@@ -268,13 +266,13 @@ def test_curation_queries_no_pairwise_no_python(spark):
 def test_new_relational_queries_topk_and_equi_joins(spark):
     """Round-2 additions: top-k stays TakeOrderedAndProject (never a
     global sort), joins stay hash-joinable, no Python row UDFs."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.relational import (
         q_customer_order_gaps,
         q_large_orders,
         q_promo_share,
-        q_sample_weighted,
         q_top_supplier,
     )
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_sample_weighted
 
     for q in (q_large_orders, q_sample_weighted):
         p = _plan(q(spark, SF))
@@ -301,7 +299,7 @@ def test_profile_is_single_scan(spark):
 def test_tfidf_is_single_scan(spark):
     """Document frequency comes from a window over the tf table, not a
     groupBy+self-join — one pass over the corpus (SCALE.md §4.9)."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_tfidf_terms
+    from mapreduce_kmeans_clustering_spark.queries.text import q_tfidf_terms
 
     p = _plan(q_tfidf_terms(spark, SF))
     assert p.count("FileScan parquet") == 1
@@ -311,9 +309,7 @@ def test_tfidf_is_single_scan(spark):
 def test_latest_event_uses_window_group_limit(spark):
     """CDC compaction: the rn=1 filter must push into the window sort
     (WindowGroupLimit) so non-latest rows drop before the full sort."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_latest_event_per_user,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.events import q_latest_event_per_user
 
     p = _plan(q_latest_event_per_user(spark, SF))
     assert "WindowGroupLimit" in p
@@ -322,9 +318,7 @@ def test_latest_event_uses_window_group_limit(spark):
 def test_dense_hours_grid_joins_broadcast(spark):
     """Densification: the hour grid is dim-sized and broadcast; the
     events relation is never nested-looped."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_events_dense_hours,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.events import q_events_dense_hours
 
     p = _plan(q_events_dense_hours(spark, SF))
     assert "CartesianProduct" not in p
@@ -333,9 +327,7 @@ def test_dense_hours_grid_joins_broadcast(spark):
 def test_forecast_revenue_pushes_all_predicates(spark):
     """Q6 shape: the query is scan-bound, so discount/quantity bounds
     must reach the parquet reader as pushed filters."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_forecast_revenue,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_forecast_revenue
 
     p = _plan(q_forecast_revenue(spark, SF))
     # toString truncates the filter list; assert on what survives
@@ -348,9 +340,7 @@ def test_forecast_revenue_pushes_all_predicates(spark):
 def test_shipping_modes_single_join_with_residual_or(spark):
     """Q19 shape: ONE hash join carries the OR-of-ANDs as a residual —
     never a join per branch, never a nested loop."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_shipping_modes,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.relational import q_shipping_modes
 
     p = _plan(q_shipping_modes(spark, SF))
     assert p.count("Join") <= 2  # one join node (+ possible reuse line)
@@ -363,7 +353,7 @@ def test_tpch_shape_queries_plan_clean(spark):
     Q21 pair plans as semi+anti equi-joins, the Q2 argmin stays one
     aggregate (no window sort over the fact), and the Q22 anti join
     is an anti — never a per-row subquery."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.relational import (
         q_custdist,
         q_idle_rich_customers,
         q_min_cost_supplier,
@@ -394,7 +384,7 @@ def test_tpch_completion_queries_plan_clean(spark):
     TakeOrderedAndProject (never a global sort of the aggregate), the
     Q16 supplier exclusion is a broadcast anti join, and the Q20
     majority chain ends in a semi join."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.relational import (
         q_local_supplier_volume,
         q_market_share,
         q_part_supplier_variety,
@@ -468,7 +458,7 @@ def test_token_pmi_and_bpe_plans_are_bounded(spark):
     deliberate 1-row corpus-total broadcast. q_bpe_merge_pairs: one
     token aggregate + generator over the distinct vocabulary; no
     nested-loop joins at all."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.text import (
         q_bpe_merge_pairs,
         q_token_pmi,
     )
@@ -487,10 +477,8 @@ def test_knn_graph_and_vocab_coverage_plans(spark):
     union mirror doubles edges, not joins). q_vocab_coverage: the
     ranked head must be TakeOrderedAndProject-bounded; the only BNLJs
     are the 1-3-row cutoff/total broadcasts."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_knn_graph,
-        q_vocab_coverage,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.text import q_vocab_coverage
+    from mapreduce_kmeans_clustering_spark.queries.vector import q_knn_graph
 
     p = _plan(q_knn_graph(spark, SF))
     assert "BroadcastNestedLoopJoin" not in p
@@ -508,12 +496,12 @@ def test_pq_adc_and_round4_query_plans(spark):
     q_cdc_user_state: keep-last must plan as WindowGroupLimit so
     non-latest rows die before the sort. q_user_state_periods: pure
     key-partitioned windows — no nested loop at all."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.events import (
         q_cdc_user_state,
-        q_length_buckets,
-        q_pq_adc,
         q_user_state_periods,
     )
+    from mapreduce_kmeans_clustering_spark.queries.text import q_length_buckets
+    from mapreduce_kmeans_clustering_spark.queries.vector import q_pq_adc
 
     p = _plan(q_pq_adc(spark, SF))
     assert p.count("BroadcastNestedLoopJoin") == 1  # 10-row query side
@@ -537,9 +525,11 @@ def test_round4_curation_query_plans(spark):
     nested loop). q_embed_outliers: centroid broadcast hash join.
     q_incremental_join_view: partial->final aggregate (map-side
     combine) on both part-summaries."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_embed_outliers,
+    from mapreduce_kmeans_clustering_spark.queries.relational import (
         q_incremental_join_view,
+    )
+    from mapreduce_kmeans_clustering_spark.queries.vector import (
+        q_embed_outliers,
         q_semantic_decontam,
     )
 
@@ -562,10 +552,12 @@ def test_round4_late_query_plans(spark):
     q_basket_pairs top-k is TakeOrderedAndProject; q_events_ffill is
     windows over a grid whose only BNLJ is the 1-row bounds
     broadcast."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.events import q_events_ffill
+    from mapreduce_kmeans_clustering_spark.queries.relational import (
         q_basket_pairs,
-        q_events_ffill,
         q_fuzzy_suppliers,
+    )
+    from mapreduce_kmeans_clustering_spark.queries.text import (
         q_lang_confusion,
         q_minhash_accuracy,
     )
@@ -589,7 +581,7 @@ def test_round5_additions_plan_shapes(spark):
     """Round-5 registry additions stay in the house plan shapes: equi
     joins hash/sort-merge, scalar anchors as the only nested loops, no
     Python in any hot path."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.text import (
         q_length_buckets_approx,
         q_length_ks,
         q_minhash_pr,
@@ -629,24 +621,30 @@ def test_round5_extension_query_plans(spark):
     """The round-5 extension surface stays in the house plan shapes:
     equi joins hash/sort-merge, scalar anchors the only nested loops,
     nothing cartesian, no Python in any registered query."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_balance_gini,
-        q_basket_rules,
-        q_basket_triples,
-        q_benford,
-        q_bm25_search,
-        q_bpe_train,
-        q_copurchase_triangles,
+    from mapreduce_kmeans_clustering_spark.queries.events import (
         q_events_cusum,
         q_events_seasonal,
         q_events_trending,
-        q_fd_profile,
         q_hll_distinct,
+        q_session_paths,
+    )
+    from mapreduce_kmeans_clustering_spark.queries.relational import (
+        q_basket_rules,
+        q_basket_triples,
+        q_copurchase_triangles,
         q_linkage_scores,
+        q_zorder_locality,
+    )
+    from mapreduce_kmeans_clustering_spark.queries.stats import (
+        q_balance_gini,
+        q_benford,
+        q_fd_profile,
         q_psi_drift,
         q_sample_neyman,
-        q_session_paths,
-        q_zorder_locality,
+    )
+    from mapreduce_kmeans_clustering_spark.queries.text import (
+        q_bm25_search,
+        q_bpe_train,
     )
 
     no_anchor = [
@@ -690,15 +688,15 @@ def test_round5_batch2_query_plans(spark):
     windows over one aggregate (no join at all), FIFO is an equi join
     with a range residual (never nested-loop), the diff is a key
     equi full-outer plus 1-row anchors, and nothing touches Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_ab_lift,
+    from mapreduce_kmeans_clustering_spark.queries.relational import (
         q_budget_allocation,
-        q_embed_cov,
         q_fifo_match,
-        q_quantile_normalize,
         q_skyline_parts,
         q_snapshot_diff,
     )
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_ab_lift
+    from mapreduce_kmeans_clustering_spark.queries.text import q_quantile_normalize
+    from mapreduce_kmeans_clustering_spark.queries.vector import q_embed_cov
 
     # pure window/aggregate plans: no join of any kind
     for q in (q_skyline_parts, q_ab_lift, q_embed_cov):
@@ -732,11 +730,9 @@ def test_round5_batch3_query_plans(spark):
     RRF rides the BM25 inverted-index join with its 1-row stats
     anchor; grouped OLS is equi joins + one aggregate. No cartesian,
     no Python anywhere."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_hybrid_rrf,
-        q_nation_hops,
-        q_revenue_trend,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.relational import q_nation_hops
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_revenue_trend
+    from mapreduce_kmeans_clustering_spark.queries.vector import q_hybrid_rrf
 
     for q in (q_nation_hops, q_revenue_trend):
         p = _plan(q(spark, SF))
@@ -754,7 +750,7 @@ def test_round5_batch4_query_plans(spark):
     """KMV set ops: k-row windows + 1-row anchors, no cartesian, no
     Python. Isotonic: the FlatMapGroupsInPandas IS the deliberate
     Arrow path (asserted present), everything else equi."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.stats import (
         q_conversion_isotonic,
         q_kmv_setops,
     )
@@ -774,10 +770,8 @@ def test_round5_batch4_query_plans(spark):
 def test_round5_batch5_query_plans(spark):
     """Streaks and cohort LTV: windows + aggregates + one broadcast
     each — no nested loops, no Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_cohort_ltv,
-        q_user_streaks,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.events import q_user_streaks
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_cohort_ltv
 
     for q in (q_user_streaks, q_cohort_ltv):
         p = _plan(q(spark, SF))
@@ -789,9 +783,7 @@ def test_round5_batch5_query_plans(spark):
 def test_round5_batch6_query_plan(spark):
     """Theil-Sen/Mann-Kendall: the pair space is an equi join on
     nation with the x< residual; no cartesian, no BNLJ, no Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_trend_robust,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_trend_robust
 
     p = _plan(q_trend_robust(spark, SF))
     assert "CartesianProduct" not in p
@@ -803,9 +795,7 @@ def test_round5_batch7_query_plan(spark):
     """Sliding-HLL: the bucket grid is a scan-local explode (no
     BNLJ), the merge a RANGE window, the exact twin an explode +
     equi join. No cartesian, no Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_uniques_sliding,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.events import q_uniques_sliding
 
     p = _plan(q_uniques_sliding(spark, SF))
     assert "CartesianProduct" not in p
@@ -816,7 +806,7 @@ def test_round5_batch7_query_plan(spark):
 def test_round5_batch8_query_plan(spark):
     """DiD: one equi join + one conditional aggregate — no window,
     no nested loop, no Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_did
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_did
 
     p = _plan(q_did(spark, SF))
     assert "CartesianProduct" not in p
@@ -828,9 +818,7 @@ def test_round5_batch8b_query_plan(spark):
     """Log-rank: aggregates + densified grid (1-row anchor + explode)
     + ordered cumulative windows. The only nested loop is the two
     1-row anchors (max-date ref, tmax)."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_survival_logrank,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_survival_logrank
 
     p = _plan(q_survival_logrank(spark, SF))
     assert "CartesianProduct" not in p
@@ -843,9 +831,7 @@ def test_hard_negatives_is_bucket_equi_join(spark):
     bucket equi-join (hash join against the broadcast anchor set) —
     the different-label constraint is a post-join filter, never a
     reason to fall back to an all-pairs loop."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_hard_negatives,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.vector import q_hard_negatives
 
     p = _plan(q_hard_negatives(spark, SF))
     assert "BroadcastNestedLoopJoin" not in p
@@ -859,9 +845,7 @@ def test_class_balance_anchor_only_and_broadcast_quota(spark):
     anchor BNLJ; the per-label quota joins back BROADCAST (label
     cardinality is profile-sized); exactly one shuffle for the
     row_number window on the label key."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_class_balance,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.vector import q_class_balance
 
     p = _plan(q_class_balance(spark, SF))
     assert "CartesianProduct" not in p
@@ -876,9 +860,7 @@ def test_retrieval_metrics_hit_join_is_hash_shaped(spark):
     nested loops allowed are the deliberate broadcast of the bounded
     query set (the exact baseline's documented brute-force arm) and
     the 1-row n_queries anchor. No Python UDFs anywhere."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_retrieval_metrics,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.vector import q_retrieval_metrics
 
     p = _plan(q_retrieval_metrics(spark, SF))
     assert "CartesianProduct" not in p
@@ -890,9 +872,7 @@ def test_woe_binning_anchor_only_partial_agg_pruned_scan(spark):
     """WOE/IV: one partial+final hash aggregate on the bin key, class
     totals via the 1-row anchor BNLJ, and the lineitem scan pruned to
     the two columns the scorecard reads."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_woe_binning,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_woe_binning
 
     p = _plan(q_woe_binning(spark, SF))
     assert "CartesianProduct" not in p
@@ -908,7 +888,7 @@ def test_bpe_encode_doc_side_is_scan_local(spark):
     no Python, and no Exchange introduced by the doc-side projections
     (the only shuffles in the plan belong to the vocabulary-sized
     train chain)."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_bpe_encode
+    from mapreduce_kmeans_clustering_spark.queries.text import q_bpe_encode
 
     p = _plan(q_bpe_encode(spark, SF))
     assert "CartesianProduct" not in p
@@ -920,7 +900,7 @@ def test_events_ccf_single_pass_window_no_cartesian(spark):
     plan shows a single Window node for the lead/lag family), the
     date grid from the 1-row span anchor, nothing cartesian beyond
     it, and no Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_events_ccf
+    from mapreduce_kmeans_clustering_spark.queries.events import q_events_ccf
 
     p = _plan(q_events_ccf(spark, SF))
     assert "CartesianProduct" not in p
@@ -963,9 +943,7 @@ def test_quality_ensemble_anchor_only_no_python_no_sort(spark):
     percentile_approx anchor (the only BNLJ shape allowed) — never a
     global sort/rank of the corpus; signal stitching is hash equi-
     joins; everything JVM-side."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_quality_ensemble,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_quality_ensemble
 
     p = _plan(q_quality_ensemble(spark, SF))
     assert "CartesianProduct" not in p
@@ -986,9 +964,7 @@ def test_contamination_sources_shingle_join_no_pairwise(spark):
     the shingle equi-join of the per-doc report (never doc×doc), the
     source attach is a doc_id equi-join, the rollup a partial+final
     hash aggregate; no Python, nothing nested-loop."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_contamination_sources,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_contamination_sources
 
     p = _plan(q_contamination_sources(spark, SF))
     assert "CartesianProduct" not in p
@@ -1003,9 +979,7 @@ def test_quality_auc_bounded_window_no_python(spark):
     q_length_ks bounded-domain exception to the no-global-window
     rule), one 1-row final aggregate. No Python, nothing cartesian,
     partial aggregation before every exchange."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_quality_auc,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_quality_auc
 
     p = _plan(q_quality_auc(spark, SF))
     assert "CartesianProduct" not in p
@@ -1018,9 +992,7 @@ def test_quality_calibration_scan_local_bins(spark):
     projection (no data-dependent cutpoint beyond the ensemble's own
     1-row anchors), one hash aggregate on the bin key; no Python,
     nothing cartesian beyond the anchor BNLJs."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_quality_calibration,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_quality_calibration
 
     p = _plan(q_quality_calibration(spark, SF))
     assert "CartesianProduct" not in p
@@ -1033,9 +1005,7 @@ def test_linkage_entities_blocking_equi_join_no_python(spark):
     deletion-neighborhood equi-join (+ boolean agreement filter), and
     the min-label propagation's joins must stay hash-shaped — never a
     pairwise nested loop, no Python anywhere."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_linkage_entities,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.relational import q_linkage_entities
 
     p = _plan(q_linkage_entities(spark, SF))
     assert "CartesianProduct" not in p
@@ -1047,9 +1017,7 @@ def test_dup_fraction_shingle_join_partial_agg(spark):
     """Corpus dup-fraction: shingle-keyed equi-joins only (the dedup
     family shape), partial aggregation before the shuffles, no
     Python, nothing nested-loop."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_dup_fraction,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_dup_fraction
 
     p = _plan(q_dup_fraction(spark, SF))
     assert "CartesianProduct" not in p
@@ -1065,9 +1033,7 @@ def test_semantic_decontam_best_match_is_hash_aggregated(spark):
     40-minute stage at a 200k-vector corpus in the round-8 sweep,
     vs streaming hash aggregation). No sort may touch the pair
     stream."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_semantic_decontam,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.vector import q_semantic_decontam
 
     p = _plan(q_semantic_decontam(spark, SF))
     assert "SortAggregate" not in p, p
@@ -1080,9 +1046,7 @@ def test_dedup_keep_best_no_python_no_pairwise(spark):
     """Keep-longest representative selection: one group-keyed hash
     aggregate + equi-joins over the memoized dup-group relation;
     nothing cartesian, no Python, partial agg before the shuffle."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_dedup_keep_best,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_dedup_keep_best
 
     p = _plan(q_dedup_keep_best(spark, SF))
     assert "CartesianProduct" not in p
@@ -1115,9 +1079,7 @@ def test_dedup_index_delta_band_equi_join_no_python(spark):
     shingle equi-join on candidate participants only; the best-match
     argmax is hash-aggregated (no struct-min SortAggregate over the
     pair stream); no Python anywhere."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_dedup_index_delta,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_dedup_index_delta
 
     p = _plan(q_dedup_index_delta(spark, SF))
     assert "CartesianProduct" not in p
@@ -1138,9 +1100,7 @@ def test_source_quality_drift_bounded_window_no_python(spark):
     only nested-loop shape allowed; the lag window runs over the
     (source, shard) grain — PARTITIONED, never global; aggregation is
     partial+final hash."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_source_quality_drift,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_source_quality_drift
 
     p = _plan(q_source_quality_drift(spark, SF))
     assert "CartesianProduct" not in p
@@ -1157,9 +1117,7 @@ def test_leakage_safe_split_scan_local_buckets_no_python(spark):
     """Group-aware split: over the memoized dup-group relation the
     only new work is a doc_id equi-join plus a scan-local md5-bucket
     projection — no window, no Python, nothing nested-loop."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_leakage_safe_split,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_leakage_safe_split
 
     p = _plan(q_leakage_safe_split(spark, SF))
     assert "CartesianProduct" not in p
@@ -1175,7 +1133,7 @@ def test_url_family_plans(spark):
     (map-side combine before the single URL-keyed exchange), the
     domain cap is one window (no cartesian, no Python), and nothing in
     the family evaluates Python per row."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.web import (
         q_domain_quality_caps,
         q_domain_stats,
         q_url_dedup,
@@ -1199,9 +1157,7 @@ def test_url_family_plans(spark):
     assert "partial_count" in p or "partial_sum" in p
     assert "CartesianProduct" not in p and "BatchEvalPython" not in p
 
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_web_curation,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_web_curation
 
     p = _plan(q_web_curation(spark, SF))
     assert "partial_min" in p        # url winner stays combiner-friendly
@@ -1220,9 +1176,7 @@ def test_multi_bench_decontam_plan(spark, monkeypatch):
     semantic_decontam gates accept; here the broadcast is the point)."""
     import pyspark.sql.classic.dataframe as _cdf
 
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_multi_bench_decontam,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.vector import q_multi_bench_decontam
 
     monkeypatch.setattr(
         _cdf.DataFrame, "localCheckpoint", lambda self, eager=True: self
@@ -1239,9 +1193,7 @@ def test_decontam_spans_plan(spark):
     (hash or broadcast-hash — never a cartesian product), the
     gaps-and-islands merge is window passes (no per-row Python), and
     aggregates hash (the span/doc groupings are primitive-typed)."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_decontam_spans,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_decontam_spans
 
     p = _plan(q_decontam_spans(spark, SF))
     assert "CartesianProduct" not in p
@@ -1279,9 +1231,7 @@ def test_dedup_source_flow_plan(spark):
     """Source-flow rollup: candidates come from the banded equi-join
     (hash join, never cartesian), the source attaches are equi-joins,
     and the rollup hash-aggregates; no per-row Python anywhere."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_dedup_source_flow,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_dedup_source_flow
 
     p = _plan(q_dedup_source_flow(spark, SF))
     assert "CartesianProduct" not in p
@@ -1294,9 +1244,7 @@ def test_decontam_scrub_plan(spark):
     (doc, pos) — a BETWEEN range join would plan a nested loop; no
     cartesian, no per-row Python; the rebuild is an object hash
     aggregate over (pos, tok) structs."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_decontam_scrub,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_decontam_scrub
 
     p = _plan(q_decontam_scrub(spark, SF))
     assert "CartesianProduct" not in p
@@ -1316,9 +1264,7 @@ def test_boilerplate_scrub_plan(spark):
     line counts are two-phase hash aggregates, and the rebuild is the
     sorted-collect object hash aggregate — no cartesian, no per-row
     Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_boilerplate_scrub,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_boilerplate_scrub
 
     p = _plan(q_boilerplate_scrub(spark, SF))
     assert "CartesianProduct" not in p
@@ -1334,9 +1280,7 @@ def test_dsir_weights_plan(spark):
     aggregates, and the per-doc micro-unit sum is a primitive hash
     aggregate — no sort aggregate anywhere on the pair-explosive
     stream (SCALE.md's SortAggregate lesson)."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_dsir_weights,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_dsir_weights
 
     p = _plan(q_dsir_weights(spark, SF))
     assert "CartesianProduct" not in p
@@ -1349,9 +1293,7 @@ def test_ngram_diversity_plan(spark):
     """Distinct-n: three scan-local gram projections, each a
     two-phase (group, gram) distinct hash aggregate; union only —
     no joins at all, no per-row Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_ngram_diversity,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_ngram_diversity
 
     p = _plan(q_ngram_diversity(spark, SF))
     assert "CartesianProduct" not in p
@@ -1364,9 +1306,7 @@ def test_dsir_select_plan(spark):
     """Gumbel-top-k selection: the global top-k must plan as
     TakeOrderedAndProject (per-partition local top-k, driver merges k
     rows), never a global Sort + Window over the corpus."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_dsir_select,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_dsir_select
 
     p = _plan(q_dsir_select(spark, SF))
     assert "TakeOrderedAndProject" in p
@@ -1385,9 +1325,7 @@ def test_web_pipeline_plan(spark):
     test_boilerplate_scrub_plan, test_decontam_scrub_plan,
     test_dsir_weights_plan). No cartesian, no per-row Python, and the
     assembly's survivor joins are equi-joins."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_web_pipeline,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_web_pipeline
 
     p = _plan(q_web_pipeline(spark, SF))
     assert "CartesianProduct" not in p
@@ -1400,9 +1338,7 @@ def test_mix_epochs_plan(spark):
     (map-side partial count+sum per language); every mixture column
     is unpartitioned-window arithmetic over the G language rows only.
     No joins, no cartesian, no per-row Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_mix_epochs,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_mix_epochs
 
     p = _plan(q_mix_epochs(spark, SF))
     assert "CartesianProduct" not in p
@@ -1416,9 +1352,7 @@ def test_dedup_bloom_plan(spark):
     word with NO broadcast hint (the filter grows with the corpus —
     ~bits_per_key x n / 63 rows — so AQE decides); verdict is one
     doc-keyed aggregate. No cartesian, no per-row Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_dedup_bloom,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_dedup_bloom
 
     p = _plan(q_dedup_bloom(spark, SF))
     assert "CartesianProduct" not in p
@@ -1432,9 +1366,7 @@ def test_bpe_fertility_plan(spark):
     additions are a doc-keyed equi-join to the lang/char projection
     and one G-row hash aggregate. No cartesian beyond the 1-row
     anchor crossJoins, no per-row Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_bpe_fertility,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.text import q_bpe_fertility
 
     p = _plan(q_bpe_fertility(spark, SF))
     assert "BatchEvalPython" not in p
@@ -1447,9 +1379,7 @@ def test_url_blocklist_plan(spark):
     segment with the alignment comparison as a residual predicate on
     the HASH join — never a nested-loop theta join over docs x rules.
     No cartesian, no per-row Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_url_blocklist,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_url_blocklist
 
     p = _plan(q_url_blocklist(spark, SF))
     assert "CartesianProduct" not in p
@@ -1461,9 +1391,7 @@ def test_bloom_fill_plan(spark):
     """Fill dashboard: one aggregate over the filter relation
     (bit_count per word summed map-side) — no joins beyond the build,
     no cartesian, no per-row Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_bloom_fill,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_bloom_fill
 
     p = _plan(q_bloom_fill(spark, SF))
     assert "CartesianProduct" not in p
@@ -1478,9 +1406,7 @@ def test_passage_scrub_plan(spark):
     AQE decides); the (doc, pos) anti-join and sorted-collect rebuild
     follow decontam_scrub's pinned shapes; no cartesian, no range
     join, no per-row Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_passage_scrub,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_passage_scrub
 
     p = _plan(q_passage_scrub(spark, SF))
     assert "CartesianProduct" not in p
@@ -1495,9 +1421,7 @@ def test_split_leakage_plan(spark):
     shingle stream as a hash join (train side is corpus-sized —
     deliberately not broadcast-hinted, AQE decides); no cartesian,
     no per-row Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_split_leakage,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_split_leakage
 
     p = _plan(q_split_leakage(spark, SF))
     assert "CartesianProduct" not in p
@@ -1511,9 +1435,7 @@ def test_cluster_mix_plan(spark):
     no join, no Exchange for it); source attaches via one hash join;
     the share window runs over the k×S aggregated table. No
     cartesian, no per-row Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_cluster_mix,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.vector import q_cluster_mix
 
     p = _plan(q_cluster_mix(spark, SF))
     assert "CartesianProduct" not in p
@@ -1526,9 +1448,7 @@ def test_lsh_occupancy_plan(spark):
     """Occupancy dashboard: two stacked hash aggregates (the bucket
     count combines map-side — the hot buckets it measures never skew
     the dashboard itself); no joins at all, no per-row Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_lsh_occupancy,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.text import q_lsh_occupancy
 
     p = _plan(q_lsh_occupancy(spark, SF))
     assert "CartesianProduct" not in p
@@ -1541,9 +1461,7 @@ def test_passage_hotlist_plan(spark):
     re-scan as a BROADCAST hash join (gram text never shuffles for
     cold hashes); phase-1 stats ride TakeOrderedAndProject, never a
     global sort; no cartesian, no per-row Python."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_passage_hotlist,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.web import q_passage_hotlist
 
     p = _plan(q_passage_hotlist(spark, SF))
     assert "CartesianProduct" not in p

@@ -219,9 +219,7 @@ def test_trending_recency_beats_volume(spark, tmp_path):
     counts events at their decayed weight exactly."""
     from datetime import datetime
 
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_events_trending,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.events import q_events_trending
 
     rows = []
     # 'old' user: 30 events of value 10, 70 days before the reference
@@ -260,7 +258,7 @@ def test_psi_zero_when_halves_match_and_positive_under_shift(spark, tmp_path):
     bins carrying the contributions."""
     from datetime import datetime
 
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_psi_drift
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_psi_drift
 
     rows = []
     eid = 0
@@ -306,9 +304,7 @@ def test_seasonal_recovers_pure_weekly_pattern(spark, tmp_path):
     seasonal = the pattern's deviation from its mean, residual = 0."""
     from datetime import datetime
 
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_events_seasonal,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.events import q_events_seasonal
 
     pattern = [10.0, 20.0, 30.0, 40.0, 50.0, 60.0, 70.0]  # by weekday idx
     rows = []
@@ -342,7 +338,7 @@ def test_session_paths_order_truncation_and_gap(spark, tmp_path):
     path)."""
     from datetime import datetime, timedelta
 
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_session_paths
+    from mapreduce_kmeans_clustering_spark.queries.events import q_session_paths
 
     t0 = datetime(2024, 5, 1, 10, 0, 0)
     rows = []
@@ -376,7 +372,7 @@ def test_session_paths_order_truncation_and_gap(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_fd_profile_counts_violations_exactly(spark, tmp_path):
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_fd_profile
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_fd_profile
 
     orders = spark.createDataFrame(
         [
@@ -410,7 +406,7 @@ def test_fd_profile_counts_violations_exactly(spark, tmp_path):
 def test_gini_bounds(spark, tmp_path):
     """All-equal balances -> G = 0; a single holder among n -> the
     textbook maximum (n-1)/n."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_balance_gini
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_balance_gini
 
     rows = [(i, 0, 50.0) for i in range(10)]  # nation 0: all equal
     rows += [(100, 1, 1000.0)] + [
@@ -431,7 +427,7 @@ def test_benford_uniform_digits_fail_the_law(spark, tmp_path):
     """Totals crafted so every first digit 1..9 appears equally: the
     observed share is flat 1/9 and the chi-square total equals the
     sum of its printed per-digit terms."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_benford
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_benford
 
     rows = [(d * 100 + k, float(d)) for d in range(1, 10) for k in range(20)]
     df = spark.createDataFrame(rows, "o_orderkey LONG, o_totalprice DOUBLE")
@@ -450,7 +446,7 @@ def test_basket_rules_confidence_and_lift_hand_check(spark, tmp_path):
     """Orders built so A,B always co-occur while A,C co-occur half the
     time: conf(A->B)=1, lift > 1; asymmetric conf when item counts
     differ."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_basket_rules
+    from mapreduce_kmeans_clustering_spark.queries.relational import q_basket_rules
 
     rows = []
     # 6 orders with A+B, 3 with A+C, 3 with C alone  (N = 12 orders)
@@ -488,7 +484,7 @@ def test_survival_km_hand_curve(spark, tmp_path):
     mass)."""
     from datetime import date, timedelta
 
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_survival_km
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_survival_km
 
     D = date(2024, 12, 31)
     churn_last = date(2024, 6, 1)      # 213 days before D -> churned
@@ -615,9 +611,7 @@ def test_binary_auc_u2_overflow_cast_mirrors_across_engines(spark):
     from pyspark.sql import functions as F
     from pyspark.errors.exceptions.captured import ArithmeticException
 
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        PIPELINE_ORACLES,
-    )
+    from mapreduce_kmeans_clustering_spark.queries import ALL_ORACLES
 
     big = 2**70  # past int64, well inside DECIMAL(38,0)/HUGEINT
     dec = spark.createDataFrame([(str(big),)], "s STRING").select(
@@ -636,7 +630,7 @@ def test_binary_auc_u2_overflow_cast_mirrors_across_engines(spark):
     with _pt.raises((duckdb.ConversionException, duckdb.OutOfRangeException)):
         con.sql(f"SELECT {big}::HUGEINT::BIGINT").fetchall()
     # and the committed texts use the safe forms
-    assert "TRY_CAST(u2h AS BIGINT)" in PIPELINE_ORACLES["q_quality_auc"]
+    assert "TRY_CAST(u2h AS BIGINT)" in ALL_ORACLES["q_quality_auc"]
     import inspect
 
     from mapreduce_kmeans_clustering_spark.operators.profile import (

@@ -123,7 +123,7 @@ def test_ann_recall_floors(spark):
     measured 0.767, IVF nlist=16/nprobe=4 measured 0.967 at sf0.001;
     single-bucket 8-plane probing measured 0.03 and is NOT an
     acceptable registered config)."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import q_ann_recall
+    from mapreduce_kmeans_clustering_spark.queries.vector import q_ann_recall
 
     rec = {r["method"]: r["recall"] for r in q_ann_recall(spark, "/root/testdata/sf0.001").collect()}
     assert rec["lsh"] >= 0.6, rec
@@ -240,7 +240,7 @@ def test_ivfpq_recall_floor(spark):
     uncompressed paths. The assertion pins both facts: the index must
     beat chance by >=10x, and the registered config must not regress
     below the measured floor."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.vector import (
         ANN_K,
         ANN_QUERY_IDS,
         q_ann_ivfpq_recall,
@@ -518,10 +518,7 @@ def test_hard_negatives_oracle_mirrors_undefined_cos_exclusion(spark, tmp_path):
     from mapreduce_kmeans_clustering_spark.operators.similarity import (
         hyperplanes,
     )
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        PIPELINE_ORACLES,
-        PIPELINE_QUERIES,
-    )
+    from mapreduce_kmeans_clustering_spark.queries import ALL_ORACLES, ALL_QUERIES
 
     hp = hyperplanes(64, 4)
     # anchor A: all 4 plane dots < 0 -> bucket 0 (shared with the zero
@@ -543,7 +540,7 @@ def test_hard_negatives_oracle_mirrors_undefined_cos_exclusion(spark, tmp_path):
 
     eng = sorted(
         tuple(r)
-        for r in PIPELINE_QUERIES["q_hard_negatives"](spark, str(tmp_path))
+        for r in ALL_QUERIES["q_hard_negatives"](spark, str(tmp_path))
         .collect()
     )
     con = duckdb.connect()
@@ -551,7 +548,7 @@ def test_hard_negatives_oracle_mirrors_undefined_cos_exclusion(spark, tmp_path):
         "CREATE VIEW embeddings AS SELECT * FROM "
         f"'{tmp_path}/embeddings.parquet/*.parquet'"
     )
-    new_sql = PIPELINE_ORACLES["q_hard_negatives"]
+    new_sql = ALL_ORACLES["q_hard_negatives"]
     got = sorted(map(tuple, con.sql(new_sql).fetchall()))
     assert eng == got
     # real candidates mined, degenerate ones excluded, on both sides
@@ -703,7 +700,7 @@ def test_ann_vec_dim_sizes_only_a_single_file(tmp_path):
     (a real multi-file table) used to read as micro-scale and pick the
     HOF form. A directory or a missing path is corpus-scale; only a
     single file is sized against the gate."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import _ann_vec_dim
+    from mapreduce_kmeans_clustering_spark.queries.vector import _ann_vec_dim
 
     table = tmp_path / "dir" / "embeddings.parquet"
     table.mkdir(parents=True)

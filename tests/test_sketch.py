@@ -57,7 +57,7 @@ def test_histogram_quantiles_within_bucket_width_of_exact(spark):
     from mapreduce_kmeans_clustering_spark.functions.sketch import (
         histogram_quantiles,
     )
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import _events
+    from mapreduce_kmeans_clustering_spark.queries._shared import _events
 
     ev = _events(spark, "/root/testdata/sf0.001")
     got = {

@@ -23,7 +23,7 @@ def events_dir(spark, tmp_path_factory):
     """Batch-convert the nanosecond testdata events to a streamable
     micros-timestamp parquet directory (several files => several
     micro-batches under maxFilesPerTrigger)."""
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import _events
+    from mapreduce_kmeans_clustering_spark.queries._shared import _events
 
     out = str(tmp_path_factory.mktemp("events_stream"))
     e = _events(spark, "/root/testdata/sf0.001")

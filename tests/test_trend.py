@@ -16,9 +16,7 @@ SF = f"{TESTDATA}/sf0.001"
 
 
 def test_trend_matches_numpy_polyfit(spark):
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_revenue_trend,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_revenue_trend
 
     got = {r["nationkey"]: r for r in q_revenue_trend(spark, SF).collect()}
     assert len(got) >= 20
@@ -55,9 +53,7 @@ def test_trend_robust_known_series(spark):
 
     import duckdb
 
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        q_trend_robust,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.stats import q_trend_robust
 
     sf = SF
     rows = duckdb.sql(
@@ -115,7 +111,7 @@ def test_survival_logrank_matches_python_replay(spark):
 
     import duckdb
 
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.stats import (
         KM_CHURN_DAYS,
         KM_MONTH_DAYS,
         LOGRANK_SEGMENT,
@@ -164,7 +160,7 @@ def test_events_ccf_perfect_shift_pin(spark, tmp_path):
     lag-0 arm must use the full dense grid (n_days = span)."""
     import datetime as dt
 
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.events import (
         CCF_MAX_LAG,
         q_events_ccf,
     )

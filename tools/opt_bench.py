@@ -35,7 +35,8 @@ def main() -> None:
     args = ap.parse_args()
 
     from mapreduce_kmeans_clustering_spark import get_spark
-    from mapreduce_kmeans_clustering_spark.queries import ALL_QUERIES, WARMUPS, scale_points
+    from mapreduce_kmeans_clustering_spark.queries import ALL_QUERIES, WARMUPS
+    from mapreduce_kmeans_clustering_spark.queries.kmeans import scale_points
 
     spark = get_spark(app_name="mrkc-opt-bench")
     sf_dir = args.sf_dir

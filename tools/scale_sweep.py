@@ -408,9 +408,7 @@ def _semantic_decontam_planed(planes: int):
     from pyspark.sql import functions as F
 
     from mapreduce_kmeans_clustering_spark.operators import curation as CU
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        SEM_DECON_THRESHOLD,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.vector import SEM_DECON_THRESHOLD
 
     def run(spark, sf_dir):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -435,9 +433,7 @@ def _embed_near_dup_auto():
     same way (the fixed planes=8 pin is retired), so this row IS the
     registered key's scale evidence."""
     from mapreduce_kmeans_clustering_spark.operators import dedup as D
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        EMBED_DUP_THRESHOLD,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.vector import EMBED_DUP_THRESHOLD
 
     def run(spark, sf_dir):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -456,7 +452,7 @@ def _fit_converge():
     budgets."""
     from pyspark.sql import functions as F
 
-    from mapreduce_kmeans_clustering_spark import queries as Q
+    from mapreduce_kmeans_clustering_spark.queries import kmeans as Q
     from mapreduce_kmeans_clustering_spark.plans.kmeans import fit, label
 
     def run(spark, sf_dir):
@@ -479,7 +475,7 @@ def _knn_graph_auto():
     from mapreduce_kmeans_clustering_spark.operators import (
         similarity as SIM,
     )
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import KNN_K
+    from mapreduce_kmeans_clustering_spark.queries.vector import KNN_K
 
     def run(spark, sf_dir):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -500,9 +496,7 @@ def _semantic_dedup_auto_k():
     from pyspark.sql import functions as F
 
     from mapreduce_kmeans_clustering_spark.operators import dedup as D
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
-        SEMDEDUP_THRESHOLD,
-    )
+    from mapreduce_kmeans_clustering_spark.queries.vector import SEMDEDUP_THRESHOLD
 
     def run(spark, sf_dir):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -520,7 +514,7 @@ def _hard_negatives_auto():
     from mapreduce_kmeans_clustering_spark.operators import (
         similarity as SIM,
     )
-    from mapreduce_kmeans_clustering_spark.queries_pipeline import (
+    from mapreduce_kmeans_clustering_spark.queries.vector import (
         ANN_QUERY_IDS,
         HARDNEG_K,
     )
