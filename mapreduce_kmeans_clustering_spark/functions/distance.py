@@ -11,8 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mapreduce_kmeans_clustering_spark.functions.literals import const_vec
-
 
 def euclidean_sq(ax: Column, ay: Column, az: Column, bx, by, bz) -> Column:
     """Squared 3-D Euclidean distance (monotonic proxy for argmin)."""
@@ -137,17 +135,15 @@ def norm_hof(a: Column) -> Column:
     return F.sqrt(dot_hof(a, a))
 
 
-def sqdist_to_const(v: Column, cvec: list[float]) -> Column:
-    """Squared Euclidean distance from an array column to a CONSTANT
-    vector, via zip_with against a literal array — the scan-local
-    zero-shuffle centroid channel (constants travel in the serialized
-    plan), with the same index-ascending left-associated sum as
-    ``sqdist_unrolled``. O(1) expression size in dim, so a k-centroid
-    argmin stays compile-cheap (the unrolled form costs ~2 s of janino
-    per k=8 x dim=64 plan)."""
-    c = const_vec(cvec)
+def sqdist_hof(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance via zip_with + aggregate: the same
+    index-ascending left-associated sum as ``sqdist_unrolled`` in a
+    constant-size expression, so a centroid argmin that runs it inside
+    a lambda over a broadcast array of centroids stays compile-cheap
+    for any k and dim (the unrolled form costs ~2 s of janino per
+    k=8 x dim=64 plan)."""
     return F.aggregate(
-        F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda acc, d: acc + d,
     )

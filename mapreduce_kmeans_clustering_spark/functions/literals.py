@@ -1,61 +1,50 @@
-"""Constant-vector literal channel with IEEE ``-0.0`` normalization.
+"""The one constant channel: data-derived constants as a 1-row relation.
 
-Spark 4.1.2's whole-stage codegen, under common-subexpression
-elimination across sibling distance expressions, miscomputes
-``(col - (-0.0))^2``-style terms: a plan embedding a ``-0.0`` literal
-can return 0.0 for a distance that is exactly 1.0. Reproduction
-(pinned in tests/test_assign.py::test_negative_zero_seed_regression):
-points/seeds containing the coordinate ``-0.0`` make ``assignment_expr``
-misroute a point that sits exactly ON another seed. With
-``spark.sql.codegen.wholeStage=false`` the same plan is correct, and a
-standalone single-distance expression is also correct — an upstream
-codegen/CSE defect, not an arithmetic one.
+Every operator that needs driver-side constants derived from the data
+(centroids, chosen seeds, codebooks, seed norms) gets them from
+``const_row``: a 1-row ``LocalRelation`` built by one ``spark.sql``
+statement and read as ordinary columns. This is the engine's form of
+the reference's side file loaded in each mapper's ``setup()``
+(Task2.java:52-93). The plan text is the row's schema, not its values,
+so a channel whose constants are one array column plans identically
+for any k, and whole-stage codegen compiles once however often the
+values change. This module is the only place a data double is turned
+into plan text.
 
-Since ``-0.0 == 0.0`` and Euclidean geometry cannot distinguish them,
-the engine-side fix is to normalize every data-derived constant to
-``+0.0`` at literal-construction time: IEEE 754 guarantees
-``-0.0 + 0.0 == +0.0`` while every other double (including NaN and the
-infinities) is unchanged by ``+ 0.0``. No query result can change;
-only the codegen trigger is removed.
+Two reads of the row. ``operators/assign.assign`` (the 3-D Lloyd step)
+cross-joins it under a broadcast hint: a condition-free
+BroadcastNestedLoopJoin, one 1-task broadcast job per use. Every other
+channel goes through ``with_consts``, which projects each constant as
+an uncorrelated scalar subquery of the row: no join and no job (the
+driver reads the local row), and the data side's size estimate is
+kept. Without CBO Spark estimates a cross join as the product of its
+sides' sizes, and the row is at least 16 bytes, so a cross-joined
+channel's output is estimated at least 16 times its data; the
+semantic-dedup and IVF assignments are checkpointed and joined later,
+and at sf0.1 that estimate turned four of those joins from broadcast
+into sort-merge.
 
-Every channel that turns data-derived floats into plan constants
-routes through these helpers: the 3-D centroid row that ``assign``
-broadcasts and the literal argmin that streaming assignment uses
-(both via ``sql_double``, ``operators/assign.py``), ``sqdist_to_const``
-(``functions/distance.py``, which also serves the semantic-dedup
-argmin in ``operators/dedup.py``), PQ / IVFADC codebooks
-(``operators/pq.py``), farthest-point / k-means|| init
-(``plans/kmeans_nd.py``) and 3-D farthest-point init
-(``plans/kmeans.py``). Documented in SCALE.md ("Spark 4.1.2 -0.0
-whole-stage-codegen note").
+IEEE ``-0.0``: Spark 4.1.2's whole-stage codegen, under
+common-subexpression elimination across sibling distance expressions,
+miscomputes ``(col - (-0.0))^2``-style terms: a plan embedding a
+``-0.0`` constant can return 0.0 for a distance that is exactly 1.0.
+Reproduction (pinned in tests/test_assign.py::
+test_negative_zero_seed_regression): a seed with the coordinate
+``-0.0`` misroutes the point (0,0,1) that sits exactly ON another
+seed. With ``spark.sql.codegen.wholeStage=false`` the same plan is
+correct — an upstream codegen/CSE defect, not an arithmetic one.
+Since ``-0.0 == 0.0`` and Euclidean geometry cannot tell them apart,
+``sql_double`` renders every constant as ``v + 0.0``: IEEE 754
+guarantees ``-0.0 + 0.0 == +0.0`` while every other double (NaN and
+the infinities included) is unchanged. No result can change; only the
+codegen trigger is removed. Documented in SCALE.md §7.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def norm_float(v) -> float:
-    """``float(v)`` with IEEE ``-0.0`` mapped to ``+0.0``.
-
-    ``x + 0.0`` is the identity for every other double, including NaN
-    and the infinities, so this is safe to apply unconditionally.
-    """
-    return float(v) + 0.0
-
-
-def norm_lit(v) -> Column:
-    """``F.lit`` for a data-derived double constant, ``-0.0``-safe."""
-    return F.lit(norm_float(v))
-
-
-def const_vec(vals: Sequence[float]) -> Column:
-    """Literal ``array<double>`` from a Python sequence, ``-0.0``-safe."""
-    return F.array(*[norm_lit(x) for x in vals])
+from pyspark.sql import DataFrame, SparkSession
 
 
 def sql_double(v) -> str:
@@ -63,5 +52,40 @@ def sql_double(v) -> str:
     ``-0.0``-safe: ``repr`` is the shortest round-tripping decimal and
     the ``D`` suffix parses it as a double, not a decimal. NaN and the
     infinities have no literal form and go through a string cast."""
-    f = norm_float(v)
+    f = float(v) + 0.0
     return f"{f!r}D" if math.isfinite(f) else f"CAST('{f}' AS DOUBLE)"
+
+
+def _sql_value(v) -> str:
+    if isinstance(v, (list, tuple)):
+        return f"array({', '.join(_sql_value(x) for x in v)})"
+    if isinstance(v, int):
+        return f"{v}L"
+    return sql_double(v)
+
+
+def const_row(spark: SparkSession, **cols) -> DataFrame:
+    """The 1-row broadcast relation holding ``cols`` (name -> value).
+
+    A float becomes a ``double`` (via ``sql_double``), an int a
+    ``bigint``, and a list or tuple an ``array`` of its rendered
+    elements, nested to any depth. One ``spark.sql`` statement builds
+    the row, so constructing it costs one parse, not a py4j call per
+    constant. ``assign`` ``crossJoin``s it; other callers use
+    ``with_consts``. Pick names that cannot collide with the data's
+    columns.
+    """
+    values = ", ".join(_sql_value(v) for v in cols.values())
+    return spark.sql(
+        f"SELECT /*+ BROADCAST(c) */ * FROM VALUES ({values}) AS c({', '.join(cols)})"
+    )
+
+
+def with_consts(df: DataFrame, **cols) -> DataFrame:
+    """``df`` plus the constants ``cols`` as columns (see ``const_row``
+    for the value types), each an uncorrelated scalar subquery of one
+    ``const_row``: no join, and the data side's size estimate. Spark
+    rejects a subquery inside a lambda, so read the columns in a later
+    ``select``, not in the one that adds them."""
+    row = const_row(df.sparkSession, **cols)
+    return df.select("*", *[row.select(c).scalar().alias(c) for c in cols])

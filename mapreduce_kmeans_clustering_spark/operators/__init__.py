@@ -1,8 +1,4 @@
-from mapreduce_kmeans_clustering_spark.operators.assign import (
-    assign,
-    assign_join,
-    assignment_expr,
-)
+from mapreduce_kmeans_clustering_spark.operators.assign import assign
 from mapreduce_kmeans_clustering_spark.operators.aggregate import (
     members,
     update_centroids,
@@ -10,8 +6,6 @@ from mapreduce_kmeans_clustering_spark.operators.aggregate import (
 
 __all__ = [
     "assign",
-    "assign_join",
-    "assignment_expr",
     "update_centroids",
     "members",
 ]

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce_kmeans_clustering_spark.functions.distance import sqdist_hof
+from mapreduce_kmeans_clustering_spark.functions.literals import with_consts
 from mapreduce_kmeans_clustering_spark.operators.text import tokens, word_shingles
 
 
@@ -1641,10 +1643,17 @@ def _passage_scrub_delta_core(
     return excise_spans(batch_docs, spans, text_col, id_col)
 
 
-# Above this k, the literal-argmin expression (k*dim terms) stops
-# being a sensible plan and assignment routes through the broadcast
-# BLAS path (plans/kmeans_nd.assign_nd) instead.
-SEMANTIC_LITERAL_K_MAX = 64
+# Up to this k, assignment is the HOF sum((x - c)^2) argmin
+# (semantic_assign), which the DuckDB oracle replays bit for bit;
+# above it, the broadcast numpy path (plans/kmeans_nd.assign_nd),
+# whose ||c||^2 - 2 a.c form can break near-ties differently. The
+# cutoff is an exactness boundary, not a speed crossover: on dim-64
+# vectors (4 cores) the BLAS path took 0.29-0.32 s at n=100k for every
+# k in 8..128, the HOF path 0.80 s at k=8 and 6.8 s at k=64; at n=2000
+# the HOF path is faster up to k=16 and the two are even at k=45-64.
+# The value 64 is inherited: it keeps suggested_semantic_k, and so
+# q_dedup_semantic, exact for corpora up to n=4160.
+SEMANTIC_EXACT_K_MAX = 64
 
 
 def suggested_semantic_k(n_vectors: int) -> int:
@@ -1657,58 +1666,22 @@ def suggested_semantic_k(n_vectors: int) -> int:
     return max(8, int(round(float(max(n_vectors, 0)) ** 0.5)))
 
 
-def semantic_assign_expr(cvecs: list[list[float]], vec: str = "_v"):
-    """Scan-local nearest-centroid expression over a literal centroid
-    list: ``array_min(array(struct(sqdist_to_const, cid), ...))["cid"]``
-    — the n-dim twin of operators/assign.assignment_expr. No join, no
-    Exchange, no aggregate; ties break to the lowest cid via struct
-    ordering. Each per-centroid sqdist is the HOF form
-    (functions/distance.sqdist_to_const): the EXPRESSION-NODE count is
-    O(k) (one zip_with/aggregate pair per centroid, vs O(k * dim)
-    arithmetic nodes unrolled — the janino-compile cost that motivated
-    the switch), while the serialized plan still carries the k * dim
-    centroid literals themselves.
-
-    CONSTRUCTION is one ``F.expr`` over a Python-built SQL string, not
-    k·dim Column compositions: the per-element ``F.lit`` path costs a
-    py4j round trip per literal (measured 2.3 s of pure driver time at
-    k=45 × dim=64 — the round-9 'idle regression' of q_dedup_semantic,
-    adjudicated round 11), while one SQL parse of the same tree is
-    ~60 ms. Literals are ``norm_float``-normalized before formatting
-    (the -0.0 plan-literal CSE bug, SCALE.md §7) and rendered with
-    ``repr`` + the ``D`` double suffix — repr round-trips doubles, so
-    the parsed plan carries bit-identical constants. Non-finite
-    components (can't be spelled as SQL double literals) fall back to
-    the Column path."""
-    import math
-
-    from mapreduce_kmeans_clustering_spark.functions.literals import (
-        norm_float,
+def semantic_assign(base: DataFrame, cvecs: list[list[float]]) -> DataFrame:
+    """``base`` (with its vectors in ``_v``) plus ``cluster``: the
+    nearest of the centroids ``cvecs`` by squared distance. The
+    centroids are one ``array<array<double>>`` constant column
+    (functions/literals.with_consts) and the argmin is one HOF over it,
+    ``array_min(transform(C, (c, cid) -> struct(sqdist_hof(v, c), cid))).cid``
+    — struct ordering breaks ties to the lowest cid. No join, no
+    Exchange and no aggregate, and the expression is the same size for
+    every k."""
+    cands = F.transform(
+        F.col("_cvecs"),
+        lambda c, cid: F.struct(sqdist_hof(F.col("_v"), c).alias("d"), cid.alias("cid")),
     )
-
-    if all(math.isfinite(x) for c in cvecs for x in c):
-        cands = ", ".join(
-            "named_struct('d', aggregate(zip_with(`%s`, array(%s), "
-            "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, d) -> acc + d), "
-            "'cid', %d)"
-            % (
-                vec,
-                ", ".join(f"{norm_float(x)!r}D" for x in c),
-                cid,
-            )
-            for cid, c in enumerate(cvecs)
-        )
-        return F.expr(f"array_min(array({cands}))")["cid"]
-    from mapreduce_kmeans_clustering_spark.functions.distance import sqdist_to_const
-
-    cands = [
-        F.struct(
-            sqdist_to_const(F.col(vec), cvec).alias("d"),
-            F.lit(int(cid)).alias("cid"),
-        )
-        for cid, cvec in enumerate(cvecs)
-    ]
-    return F.array_min(F.array(*cands))["cid"]
+    return with_consts(base, _cvecs=cvecs).select(
+        *base.columns, F.array_min(cands)["cid"].alias("cluster")
+    )
 
 
 def _semantic_asg(
@@ -1721,8 +1694,9 @@ def _semantic_asg(
     with_norm: bool = True,
 ) -> DataFrame:
     """Shared cluster-assignment stage for semantic_dedup and its BLAS
-    twin: (_id, cluster, _v[, _n]), scan-local (literal argmin for
-    small k, broadcast BLAS argmin above SEMANTIC_LITERAL_K_MAX),
+    twin: (_id, cluster, _v[, _n]), scan-local (constant-row HOF
+    argmin for small k, broadcast BLAS argmin above
+    SEMANTIC_EXACT_K_MAX),
     deferred localCheckpoint so both pair-stage consumers reuse one
     materialization. Vectors (and explicit centroids) are truncated to
     the first ``dim`` coordinates — the same dim-prefix semantics the
@@ -1755,12 +1729,8 @@ def _semantic_asg(
         cvecs = [list(map(float, c))[:dim] for c in centroids]
         if not cvecs:
             raise ValueError("semantic_dedup: empty centroid list")
-    if len(cvecs) <= SEMANTIC_LITERAL_K_MAX:
-        asg = base.select(
-            "_id",
-            semantic_assign_expr(cvecs).alias("cluster"),
-            "_v",
-        )
+    if len(cvecs) <= SEMANTIC_EXACT_K_MAX:
+        asg = semantic_assign(base, cvecs).select("_id", "cluster", "_v")
     else:
         from mapreduce_kmeans_clustering_spark.plans.kmeans_nd import assign_nd
 
@@ -1790,7 +1760,7 @@ def semantic_clusters(
     (k lowest-id seed vectors, argmin ties to the lowest cid,
     ``k=None`` → ``suggested_semantic_k`` ~ √n) so a verdict from
     ``semantic_dedup`` and a mix table from here can never disagree
-    on the blocking. Scan-local literal/BLAS argmin — no join, no
+    on the blocking. Scan-local HOF/BLAS argmin — no shuffle join, no
     Exchange, no pair stage."""
     asg = _semantic_asg(
         embeddings, k, dim, id_col, vec_col, centroids, with_norm=False
@@ -1816,13 +1786,11 @@ def semantic_dedup(
     Scale shape — the whole point of SemDeDup: the O(n^2) pair space
     collapses to per-cluster blocks, expressed as a hash equi-join on
     the cluster id (never a cross join). Cluster ASSIGNMENT is
-    scan-local: for k <= SEMANTIC_LITERAL_K_MAX the centroids are
-    inlined as literal constants into one
-    ``array_min(array(struct(dist, cid), ...))`` projection — the same
-    zero-shuffle pattern as operators/assign.assignment_expr (the
-    constants travel inside the serialized plan; no join, no Exchange,
-    whole-stage codegen). For larger k (the paper's 50k-cluster
-    regime) assignment routes through plans/kmeans_nd.assign_nd — a
+    scan-local: for k <= SEMANTIC_EXACT_K_MAX the centroids are one
+    constant-row column and one ``array_min(transform(C, (c, cid) ->
+    struct(dist, cid)))`` projection picks the cluster
+    (``semantic_assign``; no join, no Exchange). For larger k (the
+    paper's 50k-cluster regime) assignment routes through plans/kmeans_nd.assign_nd — a
     broadcast numpy argmin over Arrow batches, still scan-local. Use
     ``suggested_semantic_k(n)`` (~sqrt(n)) to keep blocks bounded as
     the corpus grows, and pass ``centroids=fit_nd(...).centroids`` to

@@ -19,16 +19,16 @@ Task1.java:31-60 assign / Task2 mean update), so `train_codebooks`
 simply runs plans/kmeans_nd.fit_nd on each slice.
 
 Physical design:
-- ENCODE is scan-local: the m codebooks are inlined as literal arrays
-  (constants travel in the serialized plan — the same zero-shuffle
-  centroid channel as operators/assign.py:57 and semantic_assign_expr)
-  and each subspace argmin is ``array_min(transform(codebook_literal,
-  (cw, i) -> struct(sqdist, i)))`` — ONE transform per subspace, the
+- ENCODE is scan-local: the m codebooks are one constant column
+  (functions/literals.with_consts — the same centroid channel as
+  dedup.semantic_assign) and
+  each subspace argmin is ``array_min(transform(books[s], (cw, i) ->
+  struct(sqdist, i)))`` — ONE transform per subspace, the
   measured-fastest expression packaging (SCALE.md §4.17). No join, no
   Exchange, no Python.
 - ADC pairs each query against every encoded vector through a
   broadcast of the (bounded) query set; each database row is DECODED
-  once scan-local (element_at over the literal codebooks) and the
+  once scan-local (element_at over the constant codebooks) and the
   per-pair distance is one 64-element sqdist aggregate —
   element-ascending, left-associated, bit-identical to the DuckDB
   oracle's list_sum(list_transform(...)) over concatenated codeword
@@ -42,11 +42,12 @@ Physical design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mapreduce_kmeans_clustering_spark.functions.literals import const_vec
+from mapreduce_kmeans_clustering_spark.functions.distance import sqdist_hof
+from mapreduce_kmeans_clustering_spark.functions.literals import with_consts
 
 DEFAULT_DIM = 64
 DEFAULT_M = 8
@@ -134,11 +135,11 @@ def pq_encode(
     """Encode every vector to ``codes`` (array<int>, one per subspace)
     plus ``recon_sqdist`` (summed chosen sub-distances — the squared
     reconstruction error, free from the argmin). Scan-local: codebooks
-    ride the plan as literals, ties break to the lowest code via
-    struct ordering (array_min over struct(d, code)).
+    are one constant column, ties break to the lowest code via struct
+    ordering (array_min over struct(d, code)).
 
     Expression shape (measured A/B at sf0.1, 5k x 64, local[32]): the
-    per-subspace argmin is ONE ``transform`` over the literal codebook
+    per-subspace argmin is ONE ``transform`` over the codebook
     with the (codeword, index) lambda computing the slice sqdist —
     4.2-7.2 s as m*ksub separate HOF aggregates, 8-9 s fully unrolled
     (the ~3k-node janino compile dominates at this ksub), 1.9 s as
@@ -151,25 +152,18 @@ def pq_encode(
     v = F.col(vec_col).cast("array<double>")
     bests = []
     for s in range(m):
-        off = s * sub
-        lit = F.array(*[const_vec(cw) for cw in codebooks[s]])
-        sl = F.slice(v, off + 1, sub)
+        sl = F.slice(v, s * sub + 1, sub)
         cands = F.transform(
-            lit,
+            F.col("_pq_books")[s],
             lambda cw, i: F.struct(
-                F.aggregate(
-                    F.zip_with(sl, cw, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, d: acc + d,
-                ).alias("d"),
-                i.cast("int").alias("code"),
+                sqdist_hof(sl, cw).alias("d"), i.cast("int").alias("code")
             ),
         )
         bests.append(F.array_min(cands))
     recon = bests[0]["d"]
     for b in bests[1:]:
         recon = recon + b["d"]
-    return vectors.select(
+    return with_consts(vectors, _pq_books=codebooks).select(
         F.col(id_col),
         *[F.col(c) for c in keep_cols],
         F.array(*[b["code"] for b in bests]).alias("codes"),
@@ -242,15 +236,20 @@ def pq_encode_blas(
     ).mapInPandas(enc, schema=_ENC_SCHEMA)
 
 
-def pq_decode_expr(codes: Column, codebooks: list[list[list[float]]]) -> Column:
-    """Reconstructed vector: concat of each subspace's selected
-    codeword, indexed out of literal nested arrays (element_at is
-    1-based)."""
-    parts = []
-    for s, book in enumerate(codebooks):
-        lit = F.array(*[const_vec(cw) for cw in book])
-        parts.append(F.element_at(lit, F.element_at(codes, s + 1) + F.lit(1)))
-    return F.concat(*parts)
+def pq_decode(encoded: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
+    """``encoded`` plus ``_dec``, the reconstructed vector: the concat of
+    each subspace's selected codeword, indexed out of the constant
+    codebooks column by its ``codes`` entry."""
+    parts = [
+        F.element_at(
+            F.element_at(F.col("_pq_books"), s + 1),
+            F.element_at(F.col("codes"), s + 1) + F.lit(1),
+        )
+        for s in range(len(codebooks))
+    ]
+    return with_consts(encoded, _pq_books=codebooks).select(
+        *encoded.columns, F.concat(*parts).alias("_dec")
+    )
 
 
 def pq_adc_topk(
@@ -266,8 +265,9 @@ def pq_adc_topk(
     (the oracle-gated twin of `pq_adc_topk_lut`).
 
     Plan: encode the corpus and DECODE it once per row (both
-    scan-local — codes select codewords out of plan literals, so the
-    decoded array costs 8 element_ats per database row, not per pair),
+    scan-local — codes select codewords out of the constant
+    codebook column, so the decoded array costs 8 element_ats per
+    database row, not per pair),
     broadcast the bounded query set (len(query_ids) rows) through a
     crossJoin — a BroadcastNestedLoopJoin against a K-row side, the
     engine's blessed bounded-fanout shape (SCALE.md §4.10) — score
@@ -276,9 +276,8 @@ def pq_adc_topk(
     per-pair 8-aggregate subspace form ran 3.0-3.6 s, decode-once +
     single aggregate 2.7-2.8 s."""
     enc = encoded if encoded is not None else pq_encode(vectors, codebooks, id_col, vec_col)
-    dec = enc.select(
-        F.col(id_col).alias("neighbor_id"),
-        pq_decode_expr(F.col("codes"), codebooks).alias("_dec"),
+    dec = pq_decode(enc, codebooks).select(
+        F.col(id_col).alias("neighbor_id"), "_dec"
     )
     queries = (
         vectors.where(F.col(id_col).isin([int(q) for q in query_ids]))
@@ -485,10 +484,8 @@ def ivfpq_topk(
     # list_id rides through the encode projection, so the decoded
     # relation needs no join back to res (scan-local end to end)
     enc = pq_encode(res, books, id_col=id_col, vec_col="r", keep_cols=("list_id",))
-    dec = enc.select(
-        F.col(id_col).alias("neighbor_id"),
-        "list_id",
-        pq_decode_expr(F.col("codes"), books).alias("_dec"),
+    dec = pq_decode(enc, books).select(
+        F.col(id_col).alias("neighbor_id"), "list_id", "_dec"
     )
 
     from pyspark.sql import Window

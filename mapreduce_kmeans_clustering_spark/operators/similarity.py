@@ -270,7 +270,6 @@ def ivf_assign(
     nlist: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    unroll: bool = False,
 ) -> DataFrame:
     """Assign every corpus vector to its inverted list: the nearest (by
     cosine, ties to the lowest list id) of ``nlist`` deterministic seed
@@ -279,21 +278,21 @@ def ivf_assign(
     follow-up, see plans/kmeans.py for the 3-D driver pattern).
 
     Returns (id, v, list_id). Physical shape: the nlist seed vectors
-    ride the plan as LITERAL arrays (one K-row driver collect — the
-    operators/assign.py O3/O5 pattern) and the assignment is a
+    are constant columns (one K-row driver collect, then
+    functions/literals.with_consts) and the assignment is a
     scan-local ``array_min(struct(-cos_i, list_id_i))`` projection:
-    no join, no shuffle, and no aggregate at all. The previous
+    no join, no shuffle and no aggregate at all. The previous
     crossJoin + ``min(struct(...))`` form shuffled the nlist-fold
     fanout AND planned the struct-min as SortAggregate — sorting
     n·nlist rows keyed by (id, 64-double array), the round-8
     SortAggregate lesson (SCALE.md §8). Per-seed cosines reuse the
     identical ``cosine_similarity`` expression, so results are
     bit-compatible with the previous form and the SQL oracles; seed
-    literals route through ``const_vec`` (the ``-0.0`` codegen
-    guard, SCALE.md §7). At scale the output is written
+    constants render through ``functions/literals`` (the ``-0.0``
+    codegen guard, SCALE.md §7). At scale the output is written
     ``partitionBy(list_id)`` so probes prune entire files."""
     seeds = _ivf_seed_list(embeddings, nlist, id_col, vec_col)
-    return _ivf_assign_with_seeds(embeddings, seeds, id_col, vec_col, unroll)
+    return _ivf_assign_with_seeds(embeddings, seeds, id_col, vec_col)
 
 
 def _ivf_seed_list(
@@ -301,14 +300,15 @@ def _ivf_seed_list(
 ) -> list[tuple[int, list[float]]]:
     """Collect the coarse-quantizer seeds (the first nlist vectors by
     id) as (list_id, vector) pairs — ONE filtered, pushed-down scan."""
-    # Literal-form ceiling: the plan carries nlist×dim literal doubles
-    # through codegen — fine to a few hundred lists (nlist=256, dim=64
-    # is ~16k constants, well under janino's 64 KB method limit after
-    # expression splitting), but a caller wanting thousands of coarse
-    # cells should pre-cluster with plans/kmeans_nd and join instead.
+    # Seed-row ceiling: every row scans all nlist seeds in an
+    # interpreted HOF and the driver renders nlist×dim doubles into
+    # the row's SQL text — fine to a few hundred lists (nlist=256,
+    # dim=64 is ~16k constants), but a caller wanting thousands of
+    # coarse cells should pre-cluster with plans/kmeans_nd and join
+    # instead.
     if nlist > 1024:
         raise ValueError(
-            f"ivf_assign literal-seed form caps nlist at 1024 "
+            f"ivf_assign seed-row form caps nlist at 1024 "
             f"(got {nlist}); use a precomputed centroid join for more"
         )
     seed_rows = (
@@ -334,43 +334,35 @@ def _ivf_assign_with_seeds(
     seeds: list[tuple[int, list[float]]],
     id_col: str,
     vec_col: str,
-    unroll: bool = False,
 ) -> DataFrame:
-    """The scan-local literal-argmin assignment against given seeds —
-    shared by ivf_assign (seeds from the corpus) and ivf_extend_index
-    (seeds from the stored ``_centroids``).
+    """The scan-local argmin assignment against given seeds — shared
+    by ivf_assign (seeds from the corpus) and ivf_extend_index (seeds
+    from the stored ``_centroids``). The seeds, their norms and their
+    list ids are three constant columns (functions/literals.with_consts);
+    ``array_min(transform(S, (s, i) -> struct(-cos_i, lid_i)))`` picks
+    the list, ties to the lowest list id, in an expression whose size
+    does not depend on nlist.
 
-    Round-13 norm hoisting: the previous form spelled each seed's
-    score as ``cosine_similarity(v, const_vec(sv))``, which evaluates
-    ``sqrt(Σ v²)`` once PER SEED per row and ``sqrt(Σ sv²)`` — an
-    interpreted HOF over a literal array that ConstantFolding cannot
-    fold through the lambda — ALSO per seed per row: 3×nlist
-    interpreted 64-element aggregates per row where nlist+1 suffice.
-    Now the row norm is computed once per row and each seed's norm
-    once at PLAN time in Python (same left-associated index-ascending
-    IEEE-double sum + sqrt, so the value is bit-identical); per-seed
-    work drops to one dot + one guarded divide. ``unroll=True``
-    switches dot/norm to the fixed-dim unrolled codegen forms (same
-    doubles — the documented dot contract); the janino cost of the
-    nlist×dim-term tree only pays off once per-row volume dominates,
-    so callers gate it on corpus size (queries.vector._ann_vec_dim)."""
+    Norm hoisting (round 13): the row norm is computed once per row
+    and each seed's norm once at PLAN time in Python (same
+    left-associated index-ascending IEEE-double sum + sqrt, so the
+    value is bit-identical to ``norm_hof``); per-seed work is one dot
+    + one guarded divide. Both are the HOF forms: the per-seed dot runs
+    inside the lambda, where every form is interpreted and the
+    unrolled tree is ~3.3x slower (functions/distance.dot_hof), and an
+    unrolled row norm bought nothing measurable (n=100k, dim 64, 16
+    lists, 4 cores: 1.42-1.48 s against 1.39-1.41 s)."""
     import math
 
     from mapreduce_kmeans_clustering_spark.functions.distance import (
         dot_hof,
-        dot_unrolled,
         norm_hof,
-        norm_unrolled,
         safe_cosine,
     )
-    from mapreduce_kmeans_clustering_spark.functions.literals import const_vec
+    from mapreduce_kmeans_clustering_spark.functions.literals import with_consts
 
-    dim = len(seeds[0][1])
     vecs = embeddings.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    norm = (
-        norm_unrolled(F.col("v"), dim) if unroll else norm_hof(F.col("v"))
-    )
-    vecs = vecs.select(F.col(id_col), "v", norm.alias("_na"))
+    vecs = vecs.select(F.col(id_col), "v", norm_hof(F.col("v")).alias("_na"))
 
     def seed_norm(sv: list[float]) -> float:
         s = 0.0
@@ -378,26 +370,23 @@ def _ivf_assign_with_seeds(
             s += x * x
         return math.sqrt(s)
 
-    entries = []
-    for lid, sv in seeds:
-        c = const_vec(sv)
-        dot = (
-            dot_unrolled(F.col("v"), c, dim)
-            if unroll
-            else dot_hof(F.col("v"), c)
+    def entry(sv, i):
+        cos = safe_cosine(dot_hof(F.col("v"), sv), F.col("_na"), F.col("_ivf_norms")[i])
+        return F.struct(
+            (-cos).alias("nc"),
+            F.col("_ivf_lids")[i].alias("lid"),
         )
-        entries.append(
-            F.struct(
-                (-safe_cosine(dot, F.col("_na"), F.lit(seed_norm(sv)))).alias(
-                    "nc"
-                ),
-                F.lit(lid).cast("long").alias("lid"),
-            )
-        )
+
+    vecs = with_consts(
+        vecs,
+        _ivf_seeds=[sv for _, sv in seeds],
+        _ivf_norms=[seed_norm(sv) for _, sv in seeds],
+        _ivf_lids=[int(lid) for lid, _ in seeds],
+    )
     return vecs.select(
         F.col(id_col),
         "v",
-        F.array_min(F.array(*entries))["lid"].alias("list_id"),
+        F.array_min(F.transform(F.col("_ivf_seeds"), entry))["lid"].alias("list_id"),
     )
 
 
@@ -599,7 +588,7 @@ def ivf_extend_index(
     STORED coarse centroids (read from ``path/_centroids`` — never
     recomputed, so existing list membership and probe routing stay
     stable) and append them into the same hive layout. Daily cost is
-    O(batch): the assignment is the scan-local literal-argmin
+    O(batch): the assignment is the scan-local constant-column argmin
     projection over the batch only, and ``mode('append')`` adds new
     files to the touched ``list_id=`` directories without rewriting
     any existing file.

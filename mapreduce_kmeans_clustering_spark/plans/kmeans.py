@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
+from mapreduce_kmeans_clustering_spark.functions.literals import with_consts
 from mapreduce_kmeans_clustering_spark.operators.aggregate import update_centroids
 from mapreduce_kmeans_clustering_spark.operators.assign import assign
 from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid
@@ -143,10 +144,6 @@ def init_farthest(
     ``start`` defaults to the minimum (x, y, z) row — any fixed rule
     works; this one needs no extra pass.
     """
-    from pyspark.sql import functions as F
-
-    from mapreduce_kmeans_clustering_spark.functions.literals import norm_lit
-
     if k < 1:
         raise ValueError("k must be >= 1")
     first = (
@@ -162,22 +159,35 @@ def init_farthest(
     )
     chosen: list[Centroid] = [Centroid(0, float(sx), float(sy), float(sz))]
     for i in range(1, k):
-        d2 = None
-        for c in chosen:
-            expr = (
-                (F.col("x") - norm_lit(c.x)) ** 2
-                + (F.col("y") - norm_lit(c.y)) ** 2
-                + (F.col("z") - norm_lit(c.z)) ** 2
-            )
-            d2 = expr if d2 is None else F.least(d2, expr)
-        far = (
-            points.select("x", "y", "z", d2.alias("d2"))
-            .orderBy(F.col("d2").desc(), "x", "y", "z")
-            .limit(1)
-            .collect()[0]
-        )
+        far = _farthest_round(points, chosen).collect()[0]
         chosen.append(Centroid(i, far["x"], far["y"], far["z"]))
     return chosen
+
+
+def _farthest_round(points: DataFrame, chosen: list[Centroid]) -> DataFrame:
+    """One ``init_farthest`` round: the point farthest from its nearest
+    ``chosen`` centroid, ties to the smallest (x, y, z), as a 1-row
+    DataFrame. The chosen centroids are one ``array<array<double>>``
+    constant column (functions/literals.with_consts) and a HOF folds
+    them left to right with ``least``, so the plan is the same for
+    every round."""
+    from pyspark.sql import functions as F
+
+    d2 = F.aggregate(
+        F.col("_chosen"),
+        F.lit(None).cast("double"),
+        lambda m, c: F.least(
+            m,
+            (F.col("x") - c[0]) ** 2 + (F.col("y") - c[1]) ** 2 + (F.col("z") - c[2]) ** 2,
+        ),
+    )
+    chosen_xyz = [[float(c.x), float(c.y), float(c.z)] for c in chosen]
+    return (
+        with_consts(points, _chosen=chosen_xyz)
+        .select("x", "y", "z", d2.alias("d2"))
+        .orderBy(F.col("d2").desc(), "x", "y", "z")
+        .limit(1)
+    )
 
 
 def label(points: DataFrame, centroids: list[Centroid]) -> DataFrame:

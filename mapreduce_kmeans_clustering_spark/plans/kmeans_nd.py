@@ -28,7 +28,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_kmeans_clustering_spark.functions.literals import const_vec
+from mapreduce_kmeans_clustering_spark.functions.distance import sqdist_hof
+from mapreduce_kmeans_clustering_spark.functions.literals import with_consts
 
 DEFAULT_MAX_ITER = 20
 DEFAULT_THRESHOLD = 1e-4
@@ -70,8 +71,8 @@ def init_farthest_nd(
     lowest id. RNG-free, so re-runs and engines agree.
 
     Cost: k driver rounds; each round is a scan-local ``zip_with``
-    distance projection against the chosen seeds (a broadcast-sized
-    literal array) + a 1-row ``max(struct)`` aggregate. O(k·n·dim)
+    distance projection against the chosen seeds (one constant
+    array column) + a 1-row ``max(struct)`` aggregate. O(k·n·dim)
     work, no shuffle beyond the 1-row agg, O(k·dim) driver state —
     the spread-out-seed quality of k-means++ without its RNG.
     """
@@ -116,24 +117,21 @@ def _farthest_round_df(
     vec_col: str,
 ) -> DataFrame:
     """One farthest-first round as a 1-row DataFrame: for every vector
-    the min squared distance to the chosen ``seeds`` (scan-local
-    ``zip_with``/``least`` projection over broadcast-sized literal
-    arrays — no join, no shuffle on the data side), then a single
-    global ``max(struct(d2, -id, vec))`` aggregate (partial per
-    partition, one-row final). Factored out so the plan gate
-    (tests/test_plans.py) can assert the per-round shape the
-    farthest_trace_nd docstring promises."""
+    the min squared distance to the chosen ``seeds`` (one
+    ``array<array<double>>`` constant column; a nested HOF folds the seeds left to
+    right with ``least``, each distance the ``sqdist_hof`` sum — no
+    shuffle on the data side, and a plan that is the same for any
+    number of seeds), then a single global ``max(struct(d2, -id,
+    vec))`` aggregate (partial per partition, one-row final). Factored
+    out so the plan gate (tests/test_plans.py) can assert the
+    per-round shape the farthest_trace_nd docstring promises."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    d2 = None
-    for c in seeds:
-        lit = const_vec(c)
-        expr = F.aggregate(
-            F.zip_with(v, lit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        d2 = expr if d2 is None else F.least(d2, expr)
-    return vectors.select(
+    d2 = F.aggregate(
+        F.col("_seeds"),
+        F.lit(None).cast("double"),
+        lambda m, s: F.least(m, sqdist_hof(v, s)),
+    )
+    return with_consts(vectors, _seeds=seeds).select(
         F.col(id_col).alias("i"), v.alias("vv"), d2.alias("d2")
     ).agg(
         F.max(

@@ -145,10 +145,10 @@ WARMUPS: dict[str, Callable[[SparkSession, str], None]] = {
     "chain_warmup": lambda spark, sf_dir: chain_centroids(spark, sf_dir, CONVERGE_CAP),
     # The exact-top-k baseline the recall gates compare against
     # (q_ann_dim_recall absorbed it in r7: 1.74→2.67 s), and one
-    # EXECUTION of the IVF assignment: its memo holds a plan whose
-    # nlist×64 literal doubles cost ~3.4 s of one-time codegen at
-    # sf0.1, which used to be q_ann_ivf's recorded number (VERDICT r8
-    # item 2).
+    # EXECUTION of the IVF assignment: its memo holds the assigned
+    # relation, whose one-time build (~3.4 s of codegen at sf0.1 when
+    # the seeds were plan literals) used to be q_ann_ivf's recorded
+    # number (VERDICT r8 item 2).
     "ann_baseline_warmup": _ann_baseline_warmup,
     # The iterative label propagation behind q_dedup_groups /
     # q_dedup_cluster_sizes: ~8 s cold / 0.15 s warm at sf0.1, all of it

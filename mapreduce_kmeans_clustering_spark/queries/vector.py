@@ -105,11 +105,7 @@ def _ann_vec_dim(sf_dir: str, dim: int = 64) -> int | None:
 # re-running the broadcast-fanout cosine argmin per query.
 @memo
 def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return SIM.ivf_assign(
-        _emb(spark, sf_dir),
-        IVF_NLIST,
-        unroll=_ann_vec_dim(sf_dir) is not None,
-    ).localCheckpoint(eager=False)
+    return SIM.ivf_assign(_emb(spark, sf_dir), IVF_NLIST).localCheckpoint(eager=False)
 
 
 _COS = (
@@ -457,7 +453,7 @@ def q_pq_encode(spark, sf_dir):
     """Product-quantize every embedding: 8 subspace codes (4-bit
     domain) + squared-reconstruction MSE — the 128x-compressed
     representation ADC search scans. Encode is scan-local (codebooks
-    ride the plan as literals; no join, no Exchange)."""
+    are one constant column; no join, no Exchange)."""
     from mapreduce_kmeans_clustering_spark.operators.pq import pq_encode
 
     enc = pq_encode(_emb(spark, sf_dir), _pq_books(spark, sf_dir))
@@ -1475,7 +1471,7 @@ def q_cluster_mix(spark, sf_dir):
     argmin ties), rolled up to a (cluster, source) composition matrix
     with each cell's share of its source — the read-out that shows a
     feed collapsing onto one topic before any quality score does.
-    Scan-local literal argmin (no join for assignment), one id-keyed
+    Scan-local broadcast-row argmin (no shuffle for assignment), one id-keyed
     equi-join to attach source, one k×S hash aggregate, one window
     over the aggregated (bounded) table."""
     from pyspark.sql.window import Window

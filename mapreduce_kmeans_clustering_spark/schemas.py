@@ -26,16 +26,6 @@ POINTS_RID = T.StructType(
     [T.StructField("rid", T.LongType(), nullable=False)] + list(POINTS.fields)
 )
 
-# Centroids / seeds: id = seed-file line index (Task2.java:52-93).
-SEEDS = T.StructType(
-    [
-        T.StructField("id", T.IntegerType(), nullable=False),
-        T.StructField("x", T.DoubleType(), nullable=False),
-        T.StructField("y", T.DoubleType(), nullable=False),
-        T.StructField("z", T.DoubleType(), nullable=False),
-    ]
-)
-
 # Assignment output: the reference's shuffle KV (IntWritable -> "x,y,z",
 # Task1.java:32-33) becomes a typed relation.
 ASSIGNED = T.StructType(

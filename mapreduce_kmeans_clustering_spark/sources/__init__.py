@@ -4,21 +4,17 @@ from mapreduce_kmeans_clustering_spark.sources.documents import (
     read_documents_csv,
     read_documents_jsonl,
     read_documents_orc,
-    read_documents_parquet,
     write_documents_jsonl_sharded,
     write_documents_orc,
 )
 from mapreduce_kmeans_clustering_spark.sources.points import (
     points_from_lineitem,
     read_points_csv,
-    read_points_parquet,
     with_rid,
 )
 from mapreduce_kmeans_clustering_spark.sources.seeds import (
     Centroid,
     load_seeds,
-    seeds_df,
-    seeds_from_points,
 )
 
 __all__ = [
@@ -28,14 +24,10 @@ __all__ = [
     "read_documents_csv",
     "read_documents_jsonl",
     "read_documents_orc",
-    "read_documents_parquet",
     "write_documents_jsonl_sharded",
     "write_documents_orc",
     "load_seeds",
-    "seeds_df",
-    "seeds_from_points",
     "points_from_lineitem",
     "read_points_csv",
-    "read_points_parquet",
     "with_rid",
 ]

@@ -1,5 +1,5 @@
 """Documents-relation sources: the ingest formats a training-data
-pipeline actually receives — JSONL (one JSON object per line), parquet,
+pipeline actually receives — JSONL (one JSON object per line), ORC
 and CSV — all landing on the canonical schemas.DOCUMENTS shape so every
 text/dedup operator runs unchanged on any of them.
 
@@ -71,10 +71,6 @@ def clean_documents(docs: DataFrame) -> DataFrame:
     if CORRUPT_COL in docs.columns:
         docs = docs.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     return docs
-
-
-def read_documents_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def read_documents_csv(spark: SparkSession, path: str) -> DataFrame:

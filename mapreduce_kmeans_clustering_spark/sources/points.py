@@ -5,7 +5,7 @@ The reference reads headerless ``x,y,z`` CSV through Hadoop
 crashes on malformed data rows (no guard around ``parseDouble``).
 Here: an explicit-schema CSV reader in FAILFAST mode (same
 crash-on-bad-data semantics, but declarative so Catalyst prunes
-columns), plus parquet and a lineitem-derived variant for scale runs.
+columns), plus a lineitem-derived variant for scale runs.
 """
 
 from __future__ import annotations
@@ -20,13 +20,6 @@ def read_points_csv(spark: SparkSession, path: str) -> DataFrame:
     """Headerless x,y,z CSV -> points DataFrame (FAILFAST like the
     reference's unguarded ``Double.parseDouble``)."""
     return spark.read.schema(schemas.POINTS).option("mode", "FAILFAST").csv(path)
-
-
-def read_points_parquet(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    return df.select(
-        F.col("x").cast("double"), F.col("y").cast("double"), F.col("z").cast("double")
-    )
 
 
 def points_from_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,5 +1,4 @@
-"""Centroid/seed side-file source (reference operator O2) and seed
-derivation for scale runs.
+"""Centroid/seed side-file source (reference operator O2).
 
 The reference loads the centroid list whole into each mapper's memory
 in ``setup()`` and accepts two encodings (Task2.java:52-93): initial
@@ -9,7 +8,7 @@ warning (Task2.java:84-89). SilhouetteEvaluation2.java:65 additionally
 strips a ``"; point; point; ..."`` member-list suffix.
 
 K is tiny (the centroid relation is K rows), so the idiomatic Spark
-shape is driver-side parse + literal/broadcast — the distribution role
+shape is driver-side parse + a broadcast row — the distribution role
 of Hadoop's side-file channel is played by Spark's broadcast (O3).
 """
 
@@ -17,11 +16,6 @@ from __future__ import annotations
 
 import sys
 from typing import NamedTuple
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from mapreduce_kmeans_clustering_spark import schemas
 
 
 class Centroid(NamedTuple):
@@ -67,39 +61,4 @@ def load_seeds(path: str) -> list[Centroid]:
             c = _parse_line(raw, len(out))
             if c is not None:
                 out.append(c)
-    return out
-
-
-def seeds_df(spark: SparkSession, centroids: list[Centroid]) -> DataFrame:
-    """K-row centroid DataFrame (for join-based operators / oracles)."""
-    return spark.createDataFrame(
-        [(int(c.id), float(c.x), float(c.y), float(c.z)) for c in centroids],
-        schema=schemas.SEEDS,
-    )
-
-
-def seeds_from_points(points: DataFrame, k: int) -> list[Centroid]:
-    """Deterministic K seeds from a points relation (scale runs,
-    FIXTURES.md §5): order rows by ``(rid % 997, rid)`` — a fixed
-    pseudo-spread that needs no RNG — and take the first K distinct
-    coordinate triples. Collects exactly K rows to the driver.
-    """
-    rows = (
-        points.select("rid", "x", "y", "z")
-        .orderBy((F.col("rid") % 997).asc(), F.col("rid").asc())
-        .limit(k * 4)  # small over-fetch in case of duplicate coords
-        .collect()
-    )
-    seen: set[tuple[float, float, float]] = set()
-    out: list[Centroid] = []
-    for r in rows:
-        key = (r["x"], r["y"], r["z"])
-        if key in seen:
-            continue
-        seen.add(key)
-        out.append(Centroid(len(out), r["x"], r["y"], r["z"]))
-        if len(out) == k:
-            break
-    if len(out) < k:
-        raise ValueError(f"could not find {k} distinct seed points")
     return out

@@ -1,8 +1,8 @@
 """Streaming K-Means surface: the assignment operator (O4/O5) is a
-pure stateless projection, so it lifts to Structured Streaming
-unchanged — the same tie-break-exact expression classifies an
-unbounded stream of points against a fixed (broadcast-literal)
-centroid set.
+stateless cross join with a broadcast 1-row centroid relation, so it
+lifts to Structured Streaming unchanged — ``assign`` on a stream is a
+stream-static join, and the same tie-break-exact argmin classifies an
+unbounded stream of points against a fixed centroid set.
 
 Online re-training is intentionally NOT hidden inside the stream:
 Lloyd iterations need global aggregation over a closed dataset. The
@@ -17,14 +17,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_kmeans_clustering_spark.operators.assign import assignment_expr
+from mapreduce_kmeans_clustering_spark.operators.assign import assign
 from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid
 
 
 def stream_assign(points_stream: DataFrame, centroids: list[Centroid]) -> DataFrame:
-    """Label a streaming points relation — identical semantics to the
-    batch assign (lowest-index tie-break), no state, no shuffle."""
-    return points_stream.withColumn("cluster", assignment_expr(centroids))
+    """Label a streaming points relation — the batch ``assign`` as a
+    stream-static join (lowest-index tie-break), no state, no shuffle.
+    Output layout is ``withColumn("cluster", …)``'s: the input columns
+    in order, with an existing ``cluster`` column replaced in place and
+    otherwise ``cluster`` appended last."""
+    cols = points_stream.columns
+    keep = [c for c in cols if c != "cluster"]
+    out = assign(points_stream, centroids, keep_cols=keep)
+    return out.select(*(cols if "cluster" in cols else [*cols, "cluster"]))
 
 
 def stream_assign_with_refresh(
@@ -40,12 +46,12 @@ def stream_assign_with_refresh(
     stream; ``write_batch(labeled_df, epoch_id)`` is the caller's sink.
 
     Returns the DataStreamWriter (caller applies options and
-    ``.start()``). Assignment inside each batch is the same stateless
-    tie-break-exact expression — distributed, no extra state."""
+    ``.start()``). Assignment inside each batch is ``stream_assign``
+    (the batch ``assign``, same output layout) — distributed, no extra
+    state."""
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        cents = get_centroids()
-        write_batch(batch_df.withColumn("cluster", assignment_expr(cents)), epoch_id)
+        write_batch(stream_assign(batch_df, get_centroids()), epoch_id)
 
     return points_stream.writeStream.foreachBatch(_process)
 

@@ -1,6 +1,7 @@
 """Unit tests for assignment semantics (O4/O5): tie-breaking,
-empty-cluster drop, join-variant parity (SURVEY §5.3), and bit-exact
-agreement of the data-form ``assign`` with a numpy argmin."""
+empty-cluster drop, bit-exact agreement of ``assign`` (batch and
+streaming) with a numpy argmin, and the ``-0.0`` pins of every
+constant channel."""
 
 from __future__ import annotations
 
@@ -8,14 +9,9 @@ import numpy as np
 import pytest
 
 from mapreduce_kmeans_clustering_spark import schemas
-from mapreduce_kmeans_clustering_spark.operators.assign import (
-    assign,
-    assign_join,
-    assignment_expr,
-)
+from mapreduce_kmeans_clustering_spark.operators.assign import assign
 from mapreduce_kmeans_clustering_spark.plans.kmeans import displacement, lloyd_iteration
-from mapreduce_kmeans_clustering_spark.sources.points import with_rid
-from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid, seeds_df
+from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid
 
 
 def make_points(spark, rows):
@@ -69,13 +65,6 @@ def test_tie_break_three_way(spark):
     assert row["cluster"] == 0
 
 
-def test_sq_distance_same_argmin(spark, blobs):
-    pts, seeds = blobs
-    a = assign(pts, seeds).groupBy("cluster").count().orderBy("cluster")
-    b = assign(pts, seeds, use_sqrt=False).groupBy("cluster").count().orderBy("cluster")
-    assert a.collect() == b.collect()
-
-
 def test_empty_cluster_drops(spark):
     # centroid 2 is far outside the bounding box -> attracts nothing ->
     # absent from the update output (K shrinks, SURVEY §1.3.4)
@@ -94,20 +83,6 @@ def test_empty_cluster_drops(spark):
     assert displacement(seeds, out, strict=False) > 0
 
 
-def test_assign_join_matches_assign(spark, blobs):
-    pts, seeds = blobs
-    pts = with_rid(pts)
-    via_join = assign_join(pts, seeds_df(spark, seeds))
-    via_row = assign(pts, seeds, keep_cols=["rid"])
-    mism = (
-        via_join.select("rid", "cluster")
-        .join(via_row.select("rid", "cluster"), "rid")
-        .where(via_join["cluster"] != via_row["cluster"])
-        .count()
-    )
-    assert mism == 0
-
-
 def test_cluster_ids_stable_and_sorted(spark, blobs):
     """The id order is ``lloyd_iteration``'s contract:
     ``update_centroids`` returns its K rows unordered."""
@@ -118,9 +93,9 @@ def test_cluster_ids_stable_and_sorted(spark, blobs):
     assert ids == [0, 1, 2, 3, 4]
 
 
-def test_assign_matches_numpy_argmin_bit_for_bit(spark):
-    """The broadcast-row ``assign`` and the literal ``assignment_expr``
-    against a numpy strict-``<`` argmin on seeded points: an integer
+def test_assign_matches_numpy_argmin_bit_for_bit(spark, tmp_path):
+    """The broadcast-row ``assign``, batch and on a file stream, against
+    a numpy strict-``<`` argmin on seeded points: an integer
     lattice (exact ties between lattice centroids), full
     17-significant-digit doubles, ``-0.0`` in points and centroids, and
     diagonal points (t, t, t) equidistant from three coordinate-rotated
@@ -157,13 +132,21 @@ def test_assign_matches_numpy_argmin_bit_for_bit(spark):
         "rid long, x double, y double, z double",
     )
     got = {r["rid"]: r["cluster"] for r in assign(df, cents, keep_cols=["rid"]).collect()}
-    lit = {
-        r["rid"]: r["cluster"]
-        for r in df.select("rid", assignment_expr(cents).alias("cluster")).collect()
-    }
     labels = np.array([got[i] for i in range(len(pts))])
     assert np.array_equal(labels, want)
-    assert lit == got
+
+    from mapreduce_kmeans_clustering_spark.streaming import stream_assign
+
+    src = str(tmp_path / "pts")
+    df.write.parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    q = stream_assign(stream, cents).writeStream.format("memory").queryName("assign_lattice").start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    streamed = {r["rid"]: r["cluster"] for r in spark.sql("SELECT rid, cluster FROM assign_lattice").collect()}
+    assert streamed == got
 
 
 def test_negative_zero_seed_regression(spark):
@@ -172,8 +155,8 @@ def test_negative_zero_seed_regression(spark):
     CSE miscompute in the literal-distance projection — the point
     (0,0,1), which sits exactly ON seed 2, computed distance 0.0 to
     seed 0 (true distance 1.0) and was misassigned to cluster 0.
-    functions/literals.norm_lit normalizes every data-derived constant
-    to +0.0 at F.lit time; this test must fail again if any constant
+    functions/literals.sql_double normalizes every data-derived constant
+    to +0.0 as it renders it; this test must fail again if any constant
     channel bypasses it."""
     seeds = [
         Centroid(0, 0.0, 0.0, -0.0),
@@ -207,15 +190,46 @@ def test_negative_zero_seed_regression(spark):
 
 
 def test_negative_zero_nd_channels(spark):
-    """The n-dim constant channels (sqdist_to_const -> semantic argmin,
-    PQ codebooks) share the same -0.0 exposure; pin the HOF form too."""
+    """The n-dim constant channels share the same -0.0 exposure: the
+    falsifier point (0,0,1) against constants that contain -0.0, run
+    through const_row itself and through each n-dim channel."""
+    import math
+
     from pyspark.sql import functions as F
 
-    from mapreduce_kmeans_clustering_spark.functions.distance import sqdist_to_const
+    from mapreduce_kmeans_clustering_spark.functions.distance import sqdist_hof
+    from mapreduce_kmeans_clustering_spark.functions.literals import const_row
+    from mapreduce_kmeans_clustering_spark.operators import dedup, pq, similarity
+    from mapreduce_kmeans_clustering_spark.plans.kmeans_nd import _farthest_round_df
 
-    df = spark.createDataFrame([([0.0, 0.0, 1.0],)], "v array<double>")
-    sib0 = sqdist_to_const(F.col("v"), [0.0, 0.0, -0.0])
-    sib1 = sqdist_to_const(F.col("v"), [0.0, 1.0, 0.0])
-    [row] = df.select(sib0.alias("d0"), sib1.alias("d1")).collect()
-    assert row["d0"] == 1.0
-    assert row["d1"] == 2.0
+    neg = [0.0, 0.0, -0.0]
+    cents = [neg, [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
+    df = spark.createDataFrame([(7, [0.0, 0.0, 1.0])], "vec_id long, v array<double>")
+
+    [row] = (
+        df.crossJoin(const_row(spark, c0=neg, c1=cents[1]))
+        .select(
+            "c0",
+            sqdist_hof(F.col("v"), F.col("c0")).alias("d0"),
+            sqdist_hof(F.col("v"), F.col("c1")).alias("d1"),
+        )
+        .collect()
+    )
+    assert math.copysign(1.0, row["c0"][2]) == 1.0  # rendered as +0.0
+    assert (row["d0"], row["d1"]) == (1.0, 2.0)
+
+    [far] = _farthest_round_df(df, cents[:2], "vec_id", "v").collect()
+    assert far["b"]["d2"] == 1.0
+
+    base = df.select(F.col("vec_id").alias("_id"), F.col("v").alias("_v"))
+    [asg] = dedup.semantic_assign(base, cents).collect()
+    assert asg["cluster"] == 2  # the point sits on centroid 2
+
+    [enc] = pq.pq_encode(df, [cents], vec_col="v").collect()
+    assert (list(enc["codes"]), enc["recon_sqdist"]) == ([2], 0.0)
+    [dec] = pq.pq_decode(df.select(F.array(F.lit(0)).alias("codes")), [cents]).collect()
+    assert [math.copysign(1.0, x) for x in dec["_dec"]] == [1.0, 1.0, 1.0]
+
+    seeds = [(0, [1.0, 0.0, -0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 0.0, 1.0])]
+    [ivf] = similarity._ivf_assign_with_seeds(df, seeds, "vec_id", "v").collect()
+    assert ivf["list_id"] == 2

@@ -305,15 +305,15 @@ def test_semantic_dedup_sparse_ids_and_fitted_centroids(spark):
 
 @pytest.mark.slow  # >=12 s in the idle full run (r13)
 def test_semantic_dedup_large_k_blas_path(spark):
-    """k > SEMANTIC_LITERAL_K_MAX routes assignment through the
+    """k > SEMANTIC_EXACT_K_MAX routes assignment through the
     broadcast BLAS argmin (plans/kmeans_nd.assign_nd) — same verdicts,
     no literal expression blow-up."""
     from mapreduce_kmeans_clustering_spark.operators.dedup import (
-        SEMANTIC_LITERAL_K_MAX,
+        SEMANTIC_EXACT_K_MAX,
         semantic_dedup,
     )
 
-    k = SEMANTIC_LITERAL_K_MAX + 2
+    k = SEMANTIC_EXACT_K_MAX + 2
     # two real clusters + (k-2) far-away decoy centroids nothing maps to
     cents = [[1.0, 0.0], [0.0, 1.0]] + [
         [100.0 + 10.0 * i, 100.0] for i in range(k - 2)
@@ -867,8 +867,8 @@ def test_fixture_k_stays_in_literal_argmin_regime():
     """TRIPWIRE for q_dedup_semantic oracle parity (code-review r11).
 
     The registered query derives k = suggested_semantic_k(n) from the
-    embeddings fixture. For k <= SEMANTIC_LITERAL_K_MAX assignment is
-    the literal HOF sum((x-c)^2) argmin, which the DuckDB oracle
+    embeddings fixture. For k <= SEMANTIC_EXACT_K_MAX assignment is
+    the HOF sum((x-c)^2) argmin, which the DuckDB oracle
     replays bit-for-bit; above it, assignment routes through the
     numpy/BLAS path (plans/kmeans_nd.assign_nd, ||c||^2 - 2*a.c form),
     whose different FP rounding can flip a near-equidistant vector to
@@ -880,7 +880,7 @@ def test_fixture_k_stays_in_literal_argmin_regime():
     import pyarrow.parquet as pq
 
     from mapreduce_kmeans_clustering_spark.operators.dedup import (
-        SEMANTIC_LITERAL_K_MAX,
+        SEMANTIC_EXACT_K_MAX,
         suggested_semantic_k,
     )
 
@@ -889,10 +889,10 @@ def test_fixture_k_stays_in_literal_argmin_regime():
             f"/root/testdata/{sf}/embeddings.parquet"
         ).metadata.num_rows
         k = suggested_semantic_k(n)
-        assert k <= SEMANTIC_LITERAL_K_MAX, (
+        assert k <= SEMANTIC_EXACT_K_MAX, (
             f"{sf}: embeddings fixture has n={n} rows -> "
-            f"suggested_semantic_k={k} > SEMANTIC_LITERAL_K_MAX="
-            f"{SEMANTIC_LITERAL_K_MAX}: q_dedup_semantic would route "
+            f"suggested_semantic_k={k} > SEMANTIC_EXACT_K_MAX="
+            f"{SEMANTIC_EXACT_K_MAX}: q_dedup_semantic would route "
             "through the BLAS assign path whose FP rounding differs "
             "from the DuckDB oracle. Either cap k in the REGISTERED "
             "query (and document the pin) or extend the oracle to "

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_kmeans_clustering_spark.operators import pq
+from tests.conftest import strip_const_rows
 
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
 
@@ -67,11 +68,11 @@ def test_decode_matches_recon_sqdist(emb, books):
     grouping: per-subspace sums vs one 64-term sum)."""
     from mapreduce_kmeans_clustering_spark.functions.distance import dot_hof
 
-    enc = pq.pq_encode(emb, books)
+    enc = pq.pq_decode(pq.pq_encode(emb, books), books)
     j = enc.join(emb, "vec_id").select(
         "vec_id",
         "recon_sqdist",
-        pq.pq_decode_expr(F.col("codes"), books).alias("dec"),
+        F.col("_dec").alias("dec"),
         F.col("embedding").cast("array<double>").alias("v"),
     )
     diff = j.select(
@@ -149,9 +150,13 @@ def test_adc_recall_beats_chance(emb, books):
 
 
 def test_encode_plan_is_scan_local(emb, books):
-    """Encode must not shuffle: codebooks are plan literals, so the
-    physical plan has no Exchange and no join."""
-    plan = pq.pq_encode(emb, books)._jdf.queryExecution().executedPlan().toString()
+    """Encode must not shuffle: codebooks are one constant column
+    (functions/literals.with_consts), so the physical plan has no
+    Exchange and no join."""
+    plan, joins = strip_const_rows(
+        pq.pq_encode(emb, books)._jdf.queryExecution().executedPlan().toString()
+    )
+    assert joins == 0 and "Subquery" in plan
     assert "Exchange" not in plan
     assert "Join" not in plan
 
@@ -270,8 +275,8 @@ def test_encode_decode_encode_is_a_fixpoint(emb, books):
     codeword per subspace is itself — same codes, recon_sqdist
     exactly 0. Pins decode/encode consistency."""
     enc1 = pq.pq_encode(emb, books)
-    dec = enc1.join(emb, "vec_id").select(
-        "vec_id", pq.pq_decode_expr(F.col("codes"), books).alias("embedding")
+    dec = pq.pq_decode(enc1.join(emb, "vec_id"), books).select(
+        "vec_id", F.col("_dec").alias("embedding")
     )
     enc2 = pq.pq_encode(dec, books)
     a = {r["vec_id"]: list(r["codes"]) for r in enc1.collect()}

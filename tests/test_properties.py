@@ -103,7 +103,7 @@ def test_centroids_inside_member_bounding_box(spark, pts):
 # triggered a Spark 4.1.2 whole-stage-codegen CSE miscompute in the
 # literal-centroid distance projection — point (0,0,1), sitting ON
 # seed 2, was assigned to cluster 0 and SSE jumped 0 -> 0.75. Fixed by
-# functions/literals.norm_lit (+0.0 normalization); this example pins
+# functions/literals.sql_double (+0.0 normalization); this example pins
 # the fix forever.
 _NEG_ZERO_PTS = [
     (0.0, 0.0, -0.0),
@@ -236,7 +236,7 @@ def test_sample_weighted_matches_python_property(spark, rows, k):
 @settings(max_examples=8, deadline=None)
 def test_hof_distance_forms_bit_equal_unrolled(spark, vecs):
     """functions/distance claims the HOF forms (dot_hof, norm_hof,
-    sqdist_to_const) produce BIT-identical doubles to the unrolled
+    sqdist_hof) produce BIT-identical doubles to the unrolled
     forms — same index-ascending left-associated summation — which is
     what licenses swapping them inside oracle-gated operators
     (semantic_dedup round 4). Pin it: exact equality, no tolerance."""
@@ -247,7 +247,7 @@ def test_hof_distance_forms_bit_equal_unrolled(spark, vecs):
         dot_unrolled,
         norm_hof,
         norm_unrolled,
-        sqdist_to_const,
+        sqdist_hof,
         sqdist_unrolled,
     )
 
@@ -260,7 +260,7 @@ def test_hof_distance_forms_bit_equal_unrolled(spark, vecs):
     got = df.select(
         (dot_hof(F.col("v"), F.col("v")) == dot_unrolled(F.col("v"), F.col("v"), dim)).alias("dot_eq"),
         (norm_hof(F.col("v")) == norm_unrolled(F.col("v"), dim)).alias("norm_eq"),
-        (sqdist_to_const(F.col("v"), const) == sqdist_unrolled(F.col("v"), c, dim)).alias("sq_eq"),
+        (sqdist_hof(F.col("v"), c) == sqdist_unrolled(F.col("v"), c, dim)).alias("sq_eq"),
     ).collect()
     for r in got:
         assert r["dot_eq"] and r["norm_eq"] and r["sq_eq"]

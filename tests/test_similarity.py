@@ -91,29 +91,14 @@ def test_multiprobe_expands_candidates_and_keeps_exact_scores(emb):
 def test_dot_form_gate_is_value_invariant(emb):
     """Round-13 (_ann_vec_dim gate): the unrolled-codegen and HOF dot
     forms — and the hoisted per-side norms both now use — must return
-    BIT-identical rows from cosine_topk/lsh_topk, and ivf_assign's
-    hoisted Python-literal seed norms + unroll switch must not move a
-    single assignment. The size gate makes the form data-dependent, so
-    both paths stay pinned equal here."""
+    BIT-identical rows from cosine_topk/lsh_topk. The size gate makes
+    the form data-dependent, so both paths stay pinned equal here."""
     a = sorted(map(tuple, cosine_topk(emb, query_ids=[0, 7], k=5, vec_dim=4).collect()))
     b = sorted(map(tuple, cosine_topk(emb, query_ids=[0, 7], k=5, vec_dim=None).collect()))
     assert a == b and a
     la = sorted(map(tuple, lsh_topk(emb, query_ids=[0, 7], k=5, dim=4, vec_dim=4).collect()))
     lb = sorted(map(tuple, lsh_topk(emb, query_ids=[0, 7], k=5, dim=4, vec_dim=None).collect()))
     assert la == lb and la
-    from mapreduce_kmeans_clustering_spark.operators.similarity import (
-        ivf_assign,
-    )
-
-    ia = sorted(
-        (r["vec_id"], r["list_id"])
-        for r in ivf_assign(emb, nlist=4, unroll=True).collect()
-    )
-    ib = sorted(
-        (r["vec_id"], r["list_id"])
-        for r in ivf_assign(emb, nlist=4, unroll=False).collect()
-    )
-    assert ia == ib and ia
 
 
 def test_ann_recall_floors(spark):

@@ -95,6 +95,21 @@ def test_stream_assign_matches_batch(spark, events_dir):
     }
 
 
+def test_stream_assign_keeps_with_column_layout(spark):
+    """stream_assign keeps the layout of ``withColumn("cluster", …)``:
+    the input columns in order, ``cluster`` appended last, or replaced
+    in place when the input already has one (no duplicate column)."""
+    cents = [Centroid(0, 0.0, 0.0, 0.0), Centroid(1, 200.0, 0.0, 0.0)]
+    df = spark.createDataFrame(
+        [(1, 150.0, 0.0, 0.0), (2, 10.0, 0.0, 0.0)], "rid long, x double, y double, z double"
+    )
+    out = stream_assign(df, cents)
+    assert out.columns == ["rid", "x", "y", "z", "cluster"]
+    relabel = stream_assign(out.select(F.lit(9).alias("cluster"), "rid", "x", "y", "z"), cents)
+    assert relabel.columns == ["cluster", "rid", "x", "y", "z"]
+    assert sorted(map(tuple, relabel.collect())) == [(0, 2, 10.0, 0.0, 0.0), (1, 1, 150.0, 0.0, 0.0)]
+
+
 def test_running_user_totals_final_state_matches_batch(spark, events_dir):
     """applyInPandasWithState: the last emitted row per user (largest
     n_events — the count only grows) must equal the batch per-user
