@@ -15,7 +15,7 @@ Scale design (the point of each):
 - embedding near-dup: candidates from hyperplane-LSH bucket equi-join
   (similarity.py's deterministic planes), exact cosine within the
   bucket — expression form for the oracle, per-bucket BLAS gram blocks
-  (applyInPandas) for production, brute all-pairs only as the test
+  (applyInArrow) for production, brute all-pairs only as the test
   baseline / recall denominator.
 
 Everything is Column-expression-only (md5 as the portable hash family)
@@ -1077,9 +1077,10 @@ def embedding_near_dup_blas(
 ) -> DataFrame:
     """Production twin of embedding_near_dup_pairs: same LSH bucketing,
     but each bucket's pairs are scored as ONE BLAS gram-matrix block
-    (M @ M.T / outer(norms)) inside a grouped applyInPandas — Arrow
-    batches executor-side, nothing on the driver, no broadcast. Dense
-    linear algebra is the one hot path where vectorized Pandas beats
+    (M @ M.T / outer(norms)) inside a grouped applyInArrow — Arrow
+    batches executor-side, nothing on the driver, no broadcast. Like
+    the expression form, only the first ``dim`` coordinates count. Dense
+    linear algebra is the one hot path where vectorized numpy beats
     the interpreted higher-order-function cosine by ~15x (SCALE.md §4).
 
     Memory is O(bucket_size * dim + bucket_size^2) per task — bounded
@@ -1090,8 +1091,9 @@ def embedding_near_dup_blas(
     gram blocks make fixed planes doubly dangerous here (quadratic
     candidate work AND quadratic per-task memory)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
+    from mapreduce_kmeans_clustering_spark.functions.arrow import _vectors
     from mapreduce_kmeans_clustering_spark.operators.similarity import (
         auto_planes,
         lsh_bucket_expr,
@@ -1102,23 +1104,23 @@ def embedding_near_dup_blas(
 
     thr = float(threshold)
 
-    def score(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        ids = pdf["_id"].to_numpy(dtype=np.int64)
-        mat = np.array([np.asarray(x, dtype=np.float64) for x in pdf["_v"]])
+    def score(tbl: "pa.Table") -> "pa.Table":
+        ids = tbl.column("_id").to_numpy().astype(np.int64)
+        mat = _vectors(tbl, "_v", dim)
         norms = np.sqrt((mat * mat).sum(axis=1))
         norms[norms == 0.0] = np.nan  # zero vectors: cos undefined -> excluded
         sims = (mat @ mat.T) / np.outer(norms, norms)
         with np.errstate(invalid="ignore"):
             i, j = np.nonzero((sims >= thr) & (ids[:, None] < ids[None, :]))
-        return pd.DataFrame({"a": ids[i], "b": ids[j], "cos": sims[i, j]})
+        return pa.table({"a": ids[i], "b": ids[j], "cos": sims[i, j]})
 
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.slice(F.transform(F.col(vec_col), lambda x: x.cast("double")), 1, dim)
     vb = embeddings.select(
         F.col(id_col).alias("_id"),
         v.alias("_v"),
         lsh_bucket_expr(F.col(vec_col), dim, planes).alias("_bucket"),
     )
-    return vb.groupBy("_bucket").applyInPandas(score, "a long, b long, cos double")
+    return vb.groupBy("_bucket").applyInArrow(score, "a long, b long, cos double")
 
 
 def embedding_near_dup_brute(
@@ -1882,9 +1884,9 @@ def semantic_dedup_blas(
     (shared _semantic_asg stage — same centroids, same argmin, same
     block boundaries), but each cluster's pair stage runs as ONE BLAS
     gram block (``M @ M.T / outer(norms)``) inside a grouped
-    applyInPandas, emitting verdicts directly — no self-join, no
+    applyInArrow, emitting verdicts directly — no self-join, no
     per-pair expression evaluation. Dense linear algebra is the hot
-    path where vectorized Pandas beats the JVM expression engine by an
+    path where vectorized numpy beats the JVM expression engine by an
     order of magnitude (SCALE.md §4 finding 2); the same reasoning as
     embedding_near_dup_blas.
 
@@ -1904,14 +1906,16 @@ def semantic_dedup_blas(
     expression twin (and is likewise ignored when explicit
     ``centroids`` define the blocking)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from mapreduce_kmeans_clustering_spark.functions.arrow import _vectors
 
     thr = float(threshold)
 
-    def verdicts(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("_id")
-        ids = pdf["_id"].to_numpy(dtype=np.int64)
-        mat = np.array([np.asarray(x, dtype=np.float64) for x in pdf["_v"]])
+    def verdicts(tbl: "pa.Table") -> "pa.Table":
+        tbl = tbl.sort_by("_id")
+        ids = tbl.column("_id").to_numpy().astype(np.int64)
+        mat = _vectors(tbl, "_v", dim)
         norms = np.sqrt((mat * mat).sum(axis=1))
         # zero vectors: cosine undefined -> NaN -> numpy comparison
         # false -> never a near-dup, matching the expression form's
@@ -1920,10 +1924,10 @@ def semantic_dedup_blas(
         with np.errstate(invalid="ignore"):
             sims = (mat @ mat.T) / np.outer(norms, norms)
             hit = (sims >= thr) & (ids[:, None] < ids[None, :])
-        return pd.DataFrame(
+        return pa.table(
             {
                 id_col: ids,
-                "cluster": pdf["cluster"].to_numpy(),
+                "cluster": tbl.column("cluster").cast(pa.int32()),
                 "status": np.where(hit.any(axis=0), "prune", "keep"),
             }
         )
@@ -1931,7 +1935,7 @@ def semantic_dedup_blas(
     asg = _semantic_asg(
         embeddings, k, dim, id_col, vec_col, centroids, with_norm=False
     )
-    return asg.groupBy("cluster").applyInPandas(
+    return asg.groupBy("cluster").applyInArrow(
         verdicts, f"{id_col} long, cluster int, status string"
     )
 

@@ -4,15 +4,17 @@ whitening (reference has no analog; this is part of the engine's
 LLM-data extension surface, same family as operators/similarity.py).
 
 Physical shape (the only one that works at 100 TB):
-- MOMENTS: one Arrow/BLAS pass computes per-batch partial moments
-  (count, sum vector, Gram matrix X^T X) packed into a single array
-  column; posexplode + one hash aggregate sums them — the shuffle
-  carries (1 + dim + dim^2) keys per partition, never rows. For
-  dim=64 that is 4,161 doubles per map task.
+- MOMENTS: one ``mapInArrow``/BLAS pass keeps each partition's
+  moments (count, sum vector, Gram matrix X^T X) across its batches
+  and packs them into a single array row; posexplode + one hash
+  aggregate sums them — the shuffle carries (1 + dim + dim^2) keys per
+  partition, never rows. For dim=64 that is 4,161 doubles per map
+  task; a dim^2 partial per partition is too wide to collect on the
+  driver, so this keeps its shuffle where the Lloyd step does not.
 - DRIVER: covariance = G/n - mu mu^T is dim x dim (driver-tiny);
   np.linalg.eigh gives components. Eigen-decomposition of a 64x64
   matrix is microseconds — distributing it would be theater.
-- PROJECT: scan-local mapInPandas, (A - mu) @ W^T per Arrow batch.
+- PROJECT: scan-local mapInArrow, (A - mu) @ W^T per Arrow batch.
 
 Numerical note: the moments pass sums doubles in partition order, so
 low bits of the covariance can differ between partitionings — tests
@@ -40,27 +42,23 @@ class PcaModel:
 def moments_nd(
     vectors: DataFrame, dim: int, vec_col: str = "embedding"
 ) -> tuple[int, "object", "object"]:
-    """(n, sum[dim], gram[dim, dim]) in one pass: per-batch BLAS
+    """(n, sum[dim], gram[dim, dim]) in one pass: per-partition BLAS
     partials packed as one (1 + dim + dim^2) array, summed by a single
     position-keyed hash aggregate (partial->final map-side combine)."""
     import numpy as np
-    import pandas as pd
+
+    from mapreduce_kmeans_clustering_spark.functions.arrow import _batch, _vectors
 
     width = 1 + dim + dim * dim
 
     def gen(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            A = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            packed = np.concatenate(
-                ([float(len(A))], A.sum(axis=0), (A.T @ A).ravel())
-            )
-            yield pd.DataFrame({"m": [list(packed)]})
+        n, s, g = 0, np.zeros(dim), np.zeros((dim, dim))
+        for batch in batches:
+            A = _vectors(batch, vec_col, dim)
+            n, s, g = n + len(A), s + A.sum(axis=0), g + A.T @ A
+        yield _batch(m=np.concatenate(([float(n)], s, g.ravel()))[None, :])
 
-    parts = vectors.select(vec_col).mapInPandas(gen, "m array<double>")
+    parts = vectors.select(vec_col).mapInArrow(gen, "m array<double>")
     summed = (
         parts.select(F.posexplode("m").alias("pos", "val"))
         .groupBy("pos")
@@ -116,25 +114,19 @@ def project_nd(
     """Scan-local projection onto the fitted components:
     (A - mean) @ W^T per Arrow batch. Output dim = len(components)."""
     import numpy as np
-    import pandas as pd
 
-    spark = vectors.sparkSession
+    from mapreduce_kmeans_clustering_spark.functions.arrow import _batch, _vectors
+
     W = np.asarray(model.components, dtype=np.float64)
     mu = np.asarray(model.mean, dtype=np.float64)
-    bc = spark.sparkContext.broadcast((W, mu))
+    bc = vectors.sparkSession.sparkContext.broadcast((W, mu))
 
     def gen(batches):
         Wb, mub = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            A = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            P = (A - mub) @ Wb.T
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), out_col: list(P)}
-            )
+        for batch in batches:
+            P = (_vectors(batch, vec_col, len(mub)) - mub) @ Wb.T
+            ids = np.asarray(batch.column(id_col), np.int64)
+            yield _batch(**{id_col: ids, out_col: P})
 
     schema = f"{id_col} long, {out_col} array<double>"
-    return vectors.select(id_col, vec_col).mapInPandas(gen, schema)
+    return vectors.select(id_col, vec_col).mapInArrow(gen, schema)

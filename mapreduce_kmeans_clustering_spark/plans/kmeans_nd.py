@@ -7,17 +7,16 @@ Semantics mirror the 3-D driver exactly: strict nearest-centroid with
 lowest-index tie-break, unweighted per-cluster mean update, empty
 clusters drop out, summed-Euclidean-displacement early stop.
 
-Physical design per iteration:
-- ASSIGN: Arrow-batched mapInPandas against a broadcast centroid
-  matrix — one BLAS distance block per batch, argmin row-wise
-  (np.argmin takes the FIRST minimum, preserving the lowest-index
-  tie-break). Scan-local: no shuffle, scales with scan bandwidth.
-  At dim=3, k=5 the column-expression path in plans/kmeans.py is
-  faster (no Python boundary); at dim>=32 BLAS wins by an order of
-  magnitude (see SCALE.md §4).
-- UPDATE: one hash aggregate keyed on cluster computing dim avg()
-  columns (partial->final, shuffle moves K rows per partition), then a
-  K-row collect. Centroid state is O(K * dim) on the driver.
+Physical design per iteration (``lloyd_partials_nd``): one mapInArrow
+job, no shuffle. Each partition reads its batches' vectors from the
+Arrow value buffer (functions/arrow.py) and assigns them against a
+broadcast centroid matrix — one BLAS block per batch, np.argmin takes
+the FIRST minimum, preserving the lowest-index tie-break — keeping one
+(k, dim) sum and k counts across all its batches (the O8 combiner, in
+the mapper). The driver adds the <= P*k partial rows (P = partitions)
+and divides: O(K * dim) state. At dim=3, k=5 the column-expression
+path in plans/kmeans.py is faster (no Python boundary); at dim>=32
+BLAS wins by an order of magnitude (see SCALE.md §4).
 """
 
 from __future__ import annotations
@@ -151,32 +150,25 @@ def _min_dist2_nd(
     value (assign_nd drops the per-row ||a||^2 term because argmin
     doesn't need it; the k-means|| sampler does)."""
     import numpy as np
-    import pandas as pd
 
-    spark = vectors.sparkSession
+    from mapreduce_kmeans_clustering_spark.functions.arrow import _passthrough, _vectors
+
     cmat = np.asarray(centers, dtype=np.float64)
-    bc = spark.sparkContext.broadcast(cmat)
+    dim = cmat.shape[1]
+    bc = vectors.sparkSession.sparkContext.broadcast(cmat)
 
     def gen(batches):
         C = bc.value
         c_sq = (C * C).sum(axis=1)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            A = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        for batch in batches:
+            A = _vectors(batch, vec_col, dim)
             a_sq = (A * A).sum(axis=1)
             d = a_sq[:, None] - 2.0 * (A @ C.T) + c_sq[None, :]
             d2 = np.maximum(d.min(axis=1), 0.0)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    vec_col: list(pdf[vec_col]),
-                    "d2": d2,
-                }
-            )
+            yield _passthrough(batch, id_col, vec_col, d2=d2)
 
     schema = f"{id_col} long, {vec_col} array<double>, d2 double"
-    return vectors.select(id_col, vec_col).mapInPandas(gen, schema)
+    return vectors.select(id_col, vec_col).mapInArrow(gen, schema)
 
 
 def init_kmeans_parallel_nd(
@@ -287,32 +279,26 @@ def assign_nd(
     (monotonic in the Euclidean metric the displacement uses), ties to
     the lowest centroid index via np.argmin's first-minimum rule."""
     import numpy as np
-    import pandas as pd
 
-    spark = vectors.sparkSession
+    from mapreduce_kmeans_clustering_spark.functions.arrow import _passthrough, _vectors
+
     cmat = np.asarray(centroids, dtype=np.float64)
-    bc = spark.sparkContext.broadcast(cmat)
+    dim = cmat.shape[1]
+    bc = vectors.sparkSession.sparkContext.broadcast(cmat)
 
     def gen(batches):
         C = bc.value
         c_sq = (C * C).sum(axis=1)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            A = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        for batch in batches:
+            A = _vectors(batch, vec_col, dim)
             # ||a-c||^2 = ||a||^2 - 2 a.c + ||c||^2; ||a||^2 constant per row
-            d = c_sq[None, :] - 2.0 * (A @ C.T)
-            cluster = d.argmin(axis=1).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    vec_col: list(pdf[vec_col]),
-                    "cluster": cluster,
-                }
+            cluster = (c_sq[None, :] - 2.0 * (A @ C.T)).argmin(axis=1)
+            yield _passthrough(
+                batch, id_col, vec_col, cluster=cluster.astype(np.int32)
             )
 
     schema = f"{id_col} long, {vec_col} array<double>, cluster int"
-    return vectors.select(id_col, vec_col).mapInPandas(gen, schema)
+    return vectors.select(id_col, vec_col).mapInArrow(gen, schema)
 
 
 def update_centroids_nd(
@@ -346,15 +332,12 @@ def fit_nd(
     ``seeds`` overrides the default first-k-by-id seeding (pass
     ``init_farthest_nd(...)`` for spread-out deterministic seeds)."""
     curr = seeds if seeds is not None else seed_centroids_nd(vectors, k, id_col, vec_col)
-    dim = len(curr[0])
     result = NdFitResult(centroids=curr, iterations=0, converged=False)
     for _ in range(max_iter):
-        # fused assign+partial-sum step (lloyd_partials_nd): the Arrow
-        # boundary moves k rows per batch instead of n vectors —
-        # measured 0.8 s -> 0.3 s per iteration over 5k x 64 at sf0.1.
-        # updated cluster ids index `curr`; compare positionally against
-        # it, then re-index (a dropped cluster shrinks K, like the
-        # reference's vanishing reducer keys).
+        # one fused assign+partial-sum job (lloyd_partials_nd). Updated
+        # cluster ids index `curr`; compare positionally against it, then
+        # re-index (a dropped cluster shrinks K, like the reference's
+        # vanishing reducer keys).
         updated = lloyd_partials_nd(vectors, curr, vec_col)
         result.iterations += 1
         d = sum(
@@ -376,69 +359,47 @@ def lloyd_partials_nd(
     centroids: list[list[float]],
     vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
-    """One fused Lloyd step: assignment AND per-cluster (sum, count)
-    partials computed inside the same Arrow batch, so the Python
-    boundary moves k rows per batch instead of n vectors. The partials
-    then reduce through a tiny (cluster, dim) hash aggregate — the
-    combiner pattern (O8) applied to the BLAS path.
-
-    Returns the same (cluster_id, centroid) list as
-    assign_nd→update_centroids_nd (numpy batch sums differ from
-    Spark's avg only in summation order; tests pin equality at 1e-9).
-    """
+    """One Lloyd step as one ``mapInArrow`` job with no shuffle: each
+    partition assigns its vectors and keeps per-cluster (sum, count)
+    across all its batches; the driver collects those <= P*k rows
+    (P = input partitions), adds them in collect order and divides, so
+    repeated calls agree bit for bit. Returns ``(cluster_id, centroid)``
+    sorted by id, present clusters only (K shrinks like the reference);
+    equal to assign_nd -> update_centroids_nd up to summation order
+    (tests pin 1e-9)."""
     import numpy as np
-    import pandas as pd
 
-    spark = vectors.sparkSession
+    from mapreduce_kmeans_clustering_spark.functions.arrow import _batch, _vectors
+
     cmat = np.asarray(centroids, dtype=np.float64)
     k, dim = cmat.shape
-    bc = spark.sparkContext.broadcast(cmat)
+    bc = vectors.sparkSession.sparkContext.broadcast(cmat)
 
     def gen(batches):
         C = bc.value
         c_sq = (C * C).sum(axis=1)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            A = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            d = c_sq[None, :] - 2.0 * (A @ C.T)
-            a = d.argmin(axis=1)
-            present = np.unique(a)
-            sums = np.zeros((len(present), dim))
-            counts = np.zeros(len(present), dtype=np.int64)
-            for i, c in enumerate(present):
+        sums = np.zeros((k, dim))
+        counts = np.zeros(k, dtype=np.int64)
+        for batch in batches:
+            A = _vectors(batch, vec_col, dim)
+            a = (c_sq[None, :] - 2.0 * (A @ C.T)).argmin(axis=1)
+            for c in np.unique(a):
                 m = a == c
-                sums[i] = A[m].sum(axis=0)
-                counts[i] = int(m.sum())
-            yield pd.DataFrame(
-                {
-                    "cluster": present.astype("int32"),
-                    "n": counts,
-                    "s": list(sums),
-                }
-            )
+                sums[c] += A[m].sum(axis=0)
+                counts[c] += int(m.sum())
+        p = np.flatnonzero(counts)
+        yield _batch(cluster=p.astype(np.int32), n=counts[p], s=sums[p])
 
-    parts = vectors.select(vec_col).mapInPandas(
+    parts = vectors.select(vec_col).mapInArrow(
         gen, "cluster int, n long, s array<double>"
     )
-    exploded = parts.select(
-        "cluster", "n", F.posexplode("s").alias("dim", "v")
-    )
-    rows = (
-        exploded.groupBy("cluster", "dim")
-        .agg(
-            F.sum("v").alias("sv"),
-            F.sum(F.when(F.col("dim") == 0, F.col("n")).otherwise(0)).alias("nn"),
-        )
-        .collect()
-    )
-    sums: dict[int, list[float]] = {}
-    counts: dict[int, int] = {}
+    try:
+        rows = parts.collect()
+    finally:
+        bc.destroy()
+    sums = np.zeros((k, dim))
+    counts = np.zeros(k, dtype=np.int64)
     for r in rows:
-        c = int(r["cluster"])
-        sums.setdefault(c, [0.0] * dim)[int(r["dim"])] = float(r["sv"])
-        if int(r["dim"]) == 0:
-            counts[c] = int(r["nn"])
-    return [
-        (c, [x / counts[c] for x in sums[c]]) for c in sorted(sums)
-    ]
+        sums[r["cluster"]] += r["s"]
+        counts[r["cluster"]] += r["n"]
+    return [(int(c), (sums[c] / counts[c]).tolist()) for c in np.flatnonzero(counts)]

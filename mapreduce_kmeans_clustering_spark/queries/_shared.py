@@ -75,7 +75,7 @@ _SCAN_SPLIT_MIN_BYTES = int(
 )
 
 # Per-table bytes-per-split override. The embeddings table feeds the
-# Arrow/mapInPandas operators (kmeans_nd, PCA, PQ), where each task
+# Arrow operators (kmeans_nd, PCA, PQ), where each task
 # pays a Python-worker round trip — splitting 2 000 rows to 32 tasks
 # MULTIPLIES that fixed cost instead of amortizing it (measured U-curve
 # at sf0.1: fit_nd 15.1 s at 1 partition, 8.6 s at 8, 20.5 s at 32).

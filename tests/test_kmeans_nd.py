@@ -6,14 +6,18 @@ data)."""
 from __future__ import annotations
 
 import math
+import os
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from mapreduce_kmeans_clustering_spark.functions.arrow import _vectors
 from mapreduce_kmeans_clustering_spark.plans.kmeans_nd import (
     assign_nd,
     fit_nd,
+    lloyd_partials_nd,
     seed_centroids_nd,
     update_centroids_nd,
 )
@@ -44,7 +48,6 @@ def X():
     )
 
 
-@pytest.mark.slow  # >=12 s in the idle full run (r13)
 def test_fit_nd_matches_numpy_lloyd(spark, X):
     k, iters = 4, 3
     df = _vectors_df(spark, X)
@@ -133,3 +136,88 @@ def test_fused_partials_equal_two_phase_update(spark):
     assert [c for c, _ in a] == [c for c, _ in b]
     for (_, va), (_, vb) in zip(a, b):
         assert max(abs(x - y) for x, y in zip(va, vb)) < 1e-9
+
+
+def test_vectors_reads_a_sliced_batch():
+    arr = pa.array([[float(i), i + 0.5] for i in range(6)], pa.list_(pa.float64()))
+    batch = pa.RecordBatch.from_arrays([arr], names=["v"]).slice(2, 3)
+    assert batch.column(0).offset == 2
+    got = _vectors(batch, "v", 2)
+    assert got.dtype == np.float64
+    np.testing.assert_array_equal(got, [[2.0, 2.5], [3.0, 3.5], [4.0, 4.5]])
+    assert _vectors(batch.slice(3), "v", 2).shape == (0, 2)
+
+
+def test_vectors_widens_float32_bit_for_bit():
+    rows = np.random.default_rng(7).standard_normal((50, 8)).astype(np.float32)
+    rows[0, :4] = [np.float32(1 / 3), -0.0, 1e-40, 3.4e38]  # subnormal, extremes
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(list(rows), pa.list_(pa.float32()))], names=["emb"]
+    )
+    got = _vectors(batch, "emb", 8)
+    want = np.array([np.asarray(v, np.float64) for v in rows])
+    assert got.dtype == np.float64 and got.tobytes() == want.tobytes()
+
+
+@pytest.mark.parametrize(
+    "rows", [[[1.0, 2.0], None], [[1.0, 2.0], [1.0]]], ids=["null", "ragged"]
+)
+def test_vectors_rejects_null_and_ragged_vectors(rows):
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(rows, pa.list_(pa.float64()))], names=["emb"]
+    )
+    with pytest.raises(ValueError, match="emb"):
+        _vectors(batch, "emb", 2)
+
+
+@pytest.fixture(scope="module")
+def three_parts(spark, X):
+    """X over 3 input partitions, the middle one empty."""
+    rows = [(i, [float(x) for x in r]) for i, r in enumerate(X)]
+    half = len(rows) // 2
+    rdd = spark.sparkContext.parallelize([rows[:half], [], rows[half:]], 3)
+    return spark.createDataFrame(
+        rdd.flatMap(lambda part: part), "vec_id LONG, embedding ARRAY<DOUBLE>"
+    )
+
+
+def _numpy_step(X, C):
+    C = np.asarray(C, dtype=np.float64)
+    lab = ((C * C).sum(axis=1)[None, :] - 2.0 * (X @ C.T)).argmin(axis=1)
+    return [(int(c), X[lab == c].mean(axis=0)) for c in np.unique(lab)]
+
+
+def test_lloyd_step_is_one_job_and_a_numpy_step(spark, three_parts, X):
+    """One step on 3 partitions (one empty) is one Spark job, equals a
+    numpy Lloyd step to 1e-9, drops a far-away centroid (K shrinks) and
+    returns bit-identical centroids when repeated."""
+    sizes = three_parts.rdd.glom().map(len).collect()
+    assert sizes[1] == 0 and sum(sizes) == len(X)
+    cents = [list(map(float, X[0])), list(map(float, X[1])), [1e9] * X.shape[1]]
+    sc = spark.sparkContext
+    sc.setJobGroup("nd-step", "nd-step")
+    try:
+        got = lloyd_partials_nd(three_parts, cents)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("nd-step")) == 1
+    want = _numpy_step(X, cents)
+    assert [c for c, _ in got] == [c for c, _ in want] == [0, 1]
+    for (_, g), (_, w) in zip(got, want):
+        np.testing.assert_allclose(g, w, rtol=1e-9, atol=1e-9)
+    assert lloyd_partials_nd(three_parts, cents) == got
+
+
+def test_lloyd_step_destroys_its_broadcast(spark, three_parts, X, monkeypatch):
+    sc = spark.sparkContext
+    made = []
+    real = sc.broadcast
+
+    def recording(value):
+        made.append(real(value))
+        return made[-1]
+
+    monkeypatch.setattr(sc, "broadcast", recording)
+    lloyd_partials_nd(three_parts, [list(map(float, X[0])), list(map(float, X[1]))])
+    assert made
+    assert [b._path for b in made if os.path.exists(b._path)] == []
