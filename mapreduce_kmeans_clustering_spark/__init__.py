@@ -15,7 +15,15 @@ n-gram Jaccard / embedding-cosine), similarity search, text analysis,
 multimodal binary columns, and structured-streaming variants.
 """
 
+from pyspark import TaskContext
+
 from mapreduce_kmeans_clustering_spark.session import get_spark
+
+if TaskContext.get() is not None:
+    # imported inside a task: this is a Spark Python worker (worker.py)
+    from mapreduce_kmeans_clustering_spark.worker import install
+
+    install()
 
 __all__ = ["get_spark"]
 __version__ = "0.1.0"

@@ -117,14 +117,13 @@ def project_nd(
 
     from mapreduce_kmeans_clustering_spark.functions.arrow import _batch, _vectors
 
+    # W and mu ride the closure: a lazy frame could never destroy a broadcast
     W = np.asarray(model.components, dtype=np.float64)
     mu = np.asarray(model.mean, dtype=np.float64)
-    bc = vectors.sparkSession.sparkContext.broadcast((W, mu))
 
     def gen(batches):
-        Wb, mub = bc.value
         for batch in batches:
-            P = (_vectors(batch, vec_col, len(mub)) - mub) @ Wb.T
+            P = (_vectors(batch, vec_col, len(mu)) - mu) @ W.T
             ids = np.asarray(batch.column(id_col), np.int64)
             yield _batch(**{id_col: ids, out_col: P})
 

@@ -34,9 +34,10 @@ Physical design:
   oracle's list_sum(list_transform(...)) over concatenated codeword
   slices.
 - The production twin `pq_adc_topk_lut` builds the classic per-query
-  lookup table (m x ksub sqdists) once in numpy and scans codes via
-  Arrow-batched mapInPandas — O(1) float ops per (query, vector,
-  subspace) instead of O(sub_dim), the shape a vector engine ships.
+  lookup table (m x ksub sqdists) once in numpy and scans the codes'
+  Arrow value buffer in mapInArrow — O(1) float ops per (query,
+  vector, subspace) instead of O(sub_dim), the shape a vector engine
+  ships.
   Pinned equal to the expression form in tests/test_pq.py.
 """
 
@@ -186,10 +187,11 @@ def pq_encode_blas(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Production encode twin: Arrow-batched mapInPandas computing all
-    m argmins per batch with one numpy distance block per subspace
+    """Production encode twin: a mapInArrow pass computing all m
+    argmins per batch with one numpy distance block per subspace
     ((N, ksub) sqdists via the expansion |x|^2 - 2xC^T + |c|^2 —
-    O(N*ksub*sub) BLAS flops, no per-row interpretation). np.argmin
+    O(N*ksub*sub) BLAS flops, no per-row interpretation; the vectors
+    read from the Arrow value buffer, functions/arrow.py). np.argmin
     takes the FIRST minimum, preserving the lowest-code tie-break.
     Same verdicts as `pq_encode` on real data (pinned in
     tests/test_pq.py); float-sum ORDER differs (pairwise numpy
@@ -199,20 +201,19 @@ def pq_encode_blas(
     (plans/kmeans_nd.py, dedup.semantic_dedup_blas)."""
     import numpy as np
 
+    from mapreduce_kmeans_clustering_spark.functions.arrow import _batch, _vectors
+
     m = len(codebooks)
     sub = len(codebooks[0][0])
     books = np.array(codebooks, dtype=np.float64)  # (m, ksub, sub)
     bnorm = (books**2).sum(axis=2)  # (m, ksub)
 
     def enc(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            ids = pdf["_id"].to_numpy()
-            x = np.stack(pdf["_v"].to_numpy()).astype(np.float64)  # (N, dim)
-            xs = x.reshape(len(ids), m, sub)  # (N, m, sub)
+            ids = np.asarray(batch.column("_id"), np.int64)
+            xs = _vectors(batch, "_v", m * sub).reshape(-1, m, sub)  # (N, m, sub)
             codes = np.empty((len(ids), m), dtype=np.int32)
             recon = np.zeros(len(ids), dtype=np.float64)
             for s in range(m):
@@ -226,14 +227,11 @@ def pq_encode_blas(
                 # exact chosen sub-distance (the expansion form can go
                 # slightly negative on near-zero distances)
                 recon += ((xs[:, s, :] - books[s][c]) ** 2).sum(axis=1)
-            yield pd.DataFrame(
-                {"vec_id": ids, "codes": list(codes), "recon_sqdist": recon}
-            )
+            yield _batch(vec_id=ids, codes=codes, recon_sqdist=recon)
 
     return vectors.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    ).mapInPandas(enc, schema=_ENC_SCHEMA)
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
+    ).mapInArrow(enc, schema=_ENC_SCHEMA)
 
 
 def pq_decode(encoded: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
@@ -327,13 +325,15 @@ def pq_adc_topk_lut(
 ) -> DataFrame:
     """Production ADC: per-query distance lookup tables (m x ksub
     sqdists, built once in numpy from the collected K query vectors)
-    broadcast to an Arrow-batched mapInPandas scan over the CODES
-    table — each (query, vector) distance is m table lookups + adds,
-    independent of sub_dim, and the scan never touches the original
-    vectors. Per-partition top-k partials (heap via np.argpartition)
-    then one final rank window over candidates <= parts * k rows.
-    Verdict-pinned equal to pq_adc_topk in tests/test_pq.py."""
+    shipped to a mapInArrow scan over the CODES table (read from the
+    Arrow value buffer) — each (query, vector) distance is m table
+    lookups + adds, independent of sub_dim, and the scan never touches
+    the original vectors. Per-batch top-k partials (by lexsort) then
+    one final rank window over the candidates. Verdict-pinned equal to
+    pq_adc_topk in tests/test_pq.py."""
     import numpy as np
+
+    from mapreduce_kmeans_clustering_spark.functions.arrow import _batch, _vectors
 
     enc = encoded if encoded is not None else pq_encode(vectors, codebooks, id_col, vec_col)
     qrows = (
@@ -353,42 +353,30 @@ def pq_adc_topk_lut(
     kk = int(k)
 
     def scan(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            codes = np.stack(pdf["codes"].to_numpy())  # (N, m)
-            nids = pdf["_nid"].to_numpy()
+            codes = _vectors(batch, "codes", m).astype(np.int64)  # (N, m)
+            nids = batch.column("_nid").to_numpy()
             out = []
             for qi, qid in enumerate(qids):
                 # dist[n] = sum_s LUT[qi, s, codes[n, s]]
                 d = luts[qi, np.arange(m)[None, :], codes].sum(axis=1)
                 mask = nids != qid
                 dm, nm = d[mask], nids[mask]
-                if not len(dm):
-                    continue
-                take = min(kk, len(dm))
                 # partial top-k must respect the SAME (adist, neighbor_id)
                 # total order as the final rank window and the expression
                 # twin pq_adc_topk: with tied distances (duplicate
                 # embeddings are common in dedup corpora) a distance-only
                 # argpartition could drop the tied neighbor with the
                 # lowest id from a batch. lexsort: last key is primary.
-                idx = np.lexsort((nm, dm))[:take]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": nm[idx],
-                            "adist": dm[idx],
-                        }
-                    )
-                )
+                idx = np.lexsort((nm, dm))[:kk]
+                out.append((np.full(len(idx), qid), nm[idx], dm[idx]))
             if out:
-                yield pd.concat(out, ignore_index=True)
+                q, n, d = map(np.concatenate, zip(*out))
+                yield _batch(query_id=q, neighbor_id=n, adist=d)
 
-    cand = enc.select(F.col(id_col).alias("_nid"), "codes").mapInPandas(
+    cand = enc.select(F.col(id_col).cast("long").alias("_nid"), "codes").mapInArrow(
         scan, schema=_ADC_SCHEMA
     )
     from pyspark.sql import Window

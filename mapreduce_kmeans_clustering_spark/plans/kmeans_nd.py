@@ -17,6 +17,18 @@ the mapper). The driver adds the <= P*k partial rows (P = partitions)
 and divides: O(K * dim) state. At dim=3, k=5 the column-expression
 path in plans/kmeans.py is faster (no Python boundary); at dim>=32
 BLAS wins by an order of magnitude (see SCALE.md §4).
+
+The step is at the job floor. perfbench ``embed_nd`` (100k x 64
+float32, k=16, local[4], 4-core host): 273 ms median per step, ~190 ms
+of it stage time for ~265 ms of executor CPU over 4 tasks, while a
+no-op mapInArrow job over 4 rows took 270-360 ms median on the same
+host. That floor was 550-670 ms, and the step 513 ms, while each Python
+task re-read every zip archive on its path (worker.py).
+
+``assign_nd`` and ``_min_dist2_nd`` return lazy frames, so their
+centroid matrix rides the pickled UDF closure: a broadcast they made
+could never be destroyed (PySpark broadcasts a command over 1 MB by
+itself). The step collects inside the call and destroys its own.
 """
 
 from __future__ import annotations
@@ -69,11 +81,12 @@ def init_farthest_nd(
     squared Euclidean distance to its nearest chosen seed, ties to the
     lowest id. RNG-free, so re-runs and engines agree.
 
-    Cost: k driver rounds; each round is a scan-local ``zip_with``
-    distance projection against the chosen seeds (one constant
-    array column) + a 1-row ``max(struct)`` aggregate. O(k·n·dim)
-    work, no shuffle beyond the 1-row agg, O(k·dim) driver state —
-    the spread-out-seed quality of k-means++ without its RNG.
+    Cost: k jobs, the first-by-id pick and one per round; each round
+    is a scan-local ``zip_with`` distance projection against the
+    chosen seeds (one constant array column) + a per-partition top-1
+    merged on the driver. O(k·n·dim) work, no shuffle, O(k·dim)
+    driver state — the spread-out-seed quality of k-means++ without
+    its RNG.
     """
     return [vec for _, _, _, vec in farthest_trace_nd(vectors, k, id_col, vec_col)]
 
@@ -90,7 +103,7 @@ def farthest_trace_nd(
     that made the point win round ``rank`` (None for the rank-0 start
     seed — there is no previous set). The trace is what an oracle can
     replay stage-by-stage; same cost/shape as the plain init (k driver
-    rounds, each a scan-local projection + 1-row max(struct) agg)."""
+    rounds, each a scan-local projection + a top-1 take)."""
     if k < 1:
         raise ValueError("k must be >= 1")
     first = (
@@ -100,12 +113,10 @@ def farthest_trace_nd(
         (0, int(first[0]), None, [float(x) for x in first[1]])
     ]
     for r in range(1, k):
-        far = _farthest_round_df(
+        [far] = _farthest_round_df(
             vectors, [c for _, _, _, c in trace], id_col, vec_col
-        ).collect()[0]["b"]
-        trace.append(
-            (r, int(-far["ni"]), float(far["d2"]), [float(x) for x in far["vv"]])
-        )
+        ).collect()
+        trace.append((r, int(far["i"]), float(far["d2"]), [float(x) for x in far["vv"]]))
     return trace
 
 
@@ -115,27 +126,28 @@ def _farthest_round_df(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """One farthest-first round as a 1-row DataFrame: for every vector
-    the min squared distance to the chosen ``seeds`` (one
-    ``array<array<double>>`` constant column; a nested HOF folds the seeds left to
-    right with ``least``, each distance the ``sqdist_hof`` sum — no
-    shuffle on the data side, and a plan that is the same for any
-    number of seeds), then a single global ``max(struct(d2, -id,
-    vec))`` aggregate (partial per partition, one-row final). Factored
-    out so the plan gate (tests/test_plans.py) can assert the
-    per-round shape the farthest_trace_nd docstring promises."""
+    """One farthest-first round as a 1-row ``(i, vv, d2)`` DataFrame:
+    for every vector the min squared distance to the chosen ``seeds``
+    (one ``array<array<double>>`` constant column; a nested HOF folds
+    the seeds left to right with ``least``, each distance the
+    ``sqdist_hof`` sum, so the plan is the same for any number of
+    seeds), then the row with the largest ``d2``, ties to the lowest
+    id: ``orderBy(d2 desc, id).limit(1)``, a TakeOrderedAndProject
+    that keeps the best row per partition and merges them on the
+    driver, one job with no Exchange (the 3-D ``kmeans._farthest_round``
+    form). Factored out so the plan gate (tests/test_plans.py) can
+    assert the per-round shape."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     d2 = F.aggregate(
         F.col("_seeds"),
         F.lit(None).cast("double"),
         lambda m, s: F.least(m, sqdist_hof(v, s)),
     )
-    return with_consts(vectors, _seeds=seeds).select(
-        F.col(id_col).alias("i"), v.alias("vv"), d2.alias("d2")
-    ).agg(
-        F.max(
-            F.struct(F.col("d2"), (-F.col("i")).alias("ni"), F.col("vv"))
-        ).alias("b")
+    return (
+        with_consts(vectors, _seeds=seeds)
+        .select(F.col(id_col).alias("i"), v.alias("vv"), d2.alias("d2"))
+        .orderBy(F.col("d2").desc(), "i")
+        .limit(1)
     )
 
 
@@ -153,13 +165,11 @@ def _min_dist2_nd(
 
     from mapreduce_kmeans_clustering_spark.functions.arrow import _passthrough, _vectors
 
-    cmat = np.asarray(centers, dtype=np.float64)
-    dim = cmat.shape[1]
-    bc = vectors.sparkSession.sparkContext.broadcast(cmat)
+    C = np.asarray(centers, dtype=np.float64)  # rides the closure
+    dim = C.shape[1]
+    c_sq = (C * C).sum(axis=1)
 
     def gen(batches):
-        C = bc.value
-        c_sq = (C * C).sum(axis=1)
         for batch in batches:
             A = _vectors(batch, vec_col, dim)
             a_sq = (A * A).sum(axis=1)
@@ -282,13 +292,11 @@ def assign_nd(
 
     from mapreduce_kmeans_clustering_spark.functions.arrow import _passthrough, _vectors
 
-    cmat = np.asarray(centroids, dtype=np.float64)
-    dim = cmat.shape[1]
-    bc = vectors.sparkSession.sparkContext.broadcast(cmat)
+    C = np.asarray(centroids, dtype=np.float64)  # rides the closure
+    dim = C.shape[1]
+    c_sq = (C * C).sum(axis=1)
 
     def gen(batches):
-        C = bc.value
-        c_sq = (C * C).sum(axis=1)
         for batch in batches:
             A = _vectors(batch, vec_col, dim)
             # ||a-c||^2 = ||a||^2 - 2 a.c + ||c||^2; ||a||^2 constant per row

@@ -1191,8 +1191,8 @@ def q_kcenter_seeds(spark, sf_dir):
     Euclidean) from its nearest chosen seed, ties to the lowest id.
     The RNG-free seeding the library offers when no seed file exists
     (the reference can only read seeds from a side file — SURVEY §2.1
-    O2); k driver rounds of scan-local distance projection + one-row
-    max(struct) aggregate, O(k·dim) driver state. The oracle replays
+    O2); k driver rounds of scan-local distance projection + a top-1
+    take, O(k·dim) driver state. The oracle replays
     the identical stage chain in SQL, so this is a full VALUE check of
     an iterative algorithm (the isotonic-PAV precedent). d2 snapped
     half-up to the 1e-6 grid; rank 0 has no previous set, so its d2 is

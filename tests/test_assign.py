@@ -219,7 +219,7 @@ def test_negative_zero_nd_channels(spark):
     assert (row["d0"], row["d1"]) == (1.0, 2.0)
 
     [far] = _farthest_round_df(df, cents[:2], "vec_id", "v").collect()
-    assert far["b"]["d2"] == 1.0
+    assert far["d2"] == 1.0
 
     base = df.select(F.col("vec_id").alias("_id"), F.col("v").alias("_v"))
     [asg] = dedup.semantic_assign(base, cents).collect()

@@ -208,7 +208,9 @@ def test_lloyd_step_is_one_job_and_a_numpy_step(spark, three_parts, X):
     assert lloyd_partials_nd(three_parts, cents) == got
 
 
-def test_lloyd_step_destroys_its_broadcast(spark, three_parts, X, monkeypatch):
+@pytest.fixture
+def broadcasts(spark, monkeypatch):
+    """Every broadcast the test makes through the session's context."""
     sc = spark.sparkContext
     made = []
     real = sc.broadcast
@@ -218,6 +220,26 @@ def test_lloyd_step_destroys_its_broadcast(spark, three_parts, X, monkeypatch):
         return made[-1]
 
     monkeypatch.setattr(sc, "broadcast", recording)
+    return made
+
+
+def test_lloyd_step_destroys_its_broadcast(three_parts, X, broadcasts):
     lloyd_partials_nd(three_parts, [list(map(float, X[0])), list(map(float, X[1]))])
-    assert made
-    assert [b._path for b in made if os.path.exists(b._path)] == []
+    assert broadcasts
+    assert [b._path for b in broadcasts if os.path.exists(b._path)] == []
+
+
+def test_lazy_vector_frames_leave_no_broadcast(three_parts, X, broadcasts):
+    """assign_nd, _min_dist2_nd and project_nd return lazy frames, which
+    could never destroy a broadcast of their own: their small constant
+    matrices ride the UDF closure, and no broadcast file is left."""
+    from mapreduce_kmeans_clustering_spark.operators.pca import pca_nd, project_nd
+    from mapreduce_kmeans_clustering_spark.plans.kmeans_nd import _min_dist2_nd
+
+    model = pca_nd(three_parts, X.shape[1], 2)
+    cents = [list(map(float, X[0])), list(map(float, X[1]))]
+    counts = assign_nd(three_parts, cents).groupBy("cluster").count().collect()
+    assert sum(r["count"] for r in counts) == len(X)
+    assert len(_min_dist2_nd(three_parts, cents, "vec_id", "embedding").collect()) == len(X)
+    assert len(project_nd(three_parts, model).collect()) == len(X)
+    assert [b._path for b in broadcasts if os.path.exists(b._path)] == []
