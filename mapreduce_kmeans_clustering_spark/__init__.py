@@ -11,8 +11,8 @@ distance expressions, partial+final hash aggregation, AQE.
 
 Beyond reference parity it ships the operators a large-scale
 training-data pipeline needs: dedup (exact / MinHash-LSH / SimHash /
-n-gram Jaccard / embedding-cosine), similarity search, text analysis,
-multimodal binary columns, and structured-streaming variants.
+n-gram Jaccard / embedding-cosine), similarity search, text analysis
+and multimodal binary columns.
 """
 
 from pyspark import TaskContext

@@ -1,5 +1,5 @@
 """Vector columns to and from Arrow buffers, for the BLAS operators
-(plans/kmeans_nd.py, operators/pca.py, the dedup gram blocks). Reading
+(plans/kmeans_nd.py, the dedup gram blocks). Reading
 a list column's flat value buffer builds no per-row Python object: a
 10k×64 float32 batch took 0.54 ms, where the pandas conversion plus a
 row-by-row copy took 4.8 + 14.7 ms (one core of a busy 4-core host).

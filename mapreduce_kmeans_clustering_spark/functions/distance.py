@@ -94,19 +94,6 @@ def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
     return s
 
 
-def sqdist_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Fixed-dimension squared Euclidean distance, unrolled like
-    dot_unrolled (index-ascending left-associated sum — the same
-    doubles as DuckDB's list_sum(list_transform(...)) form, so argmin
-    assignments agree bit-for-bit with the SQL oracles)."""
-    d = F.element_at(a, 1) - F.element_at(b, 1)
-    s = d * d
-    for i in range(2, dim + 1):
-        d = F.element_at(a, i) - F.element_at(b, i)
-        s = s + d * d
-    return s
-
-
 def norm_unrolled(a: Column, dim: int) -> Column:
     """Fixed-dimension L2 norm via the unrolled dot product."""
     return F.sqrt(dot_unrolled(a, a, dim))
@@ -137,7 +124,7 @@ def norm_hof(a: Column) -> Column:
 
 def sqdist_hof(a: Column, b: Column) -> Column:
     """Squared Euclidean distance via zip_with + aggregate: the same
-    index-ascending left-associated sum as ``sqdist_unrolled`` in a
+    index-ascending left-associated sum as an unrolled form, in a
     constant-size expression, so a centroid argmin that runs it inside
     a lambda over a broadcast array of centroids stays compile-cheap
     for any k and dim (the unrolled form costs ~2 s of janino per

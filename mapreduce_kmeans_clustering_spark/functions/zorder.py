@@ -8,7 +8,7 @@ min/max statistics prune multi-column predicates that a linear
 Everything here is a pure column expression — ~6 codegen nodes per
 bit, whole-stage compiled, engine-portable (the DuckDB oracle runs the
 identical shift/mask arithmetic). Writing is one range partition +
-local sort, the same shape as ``sampling.write_shuffled``.
+local sort.
 
 At 100 TB this is a WRITE-side investment: one extra sort at ingest
 buys every subsequent multi-dimensional range scan file-level pruning.

@@ -53,38 +53,3 @@ def members(assigned: DataFrame, sort_members: bool = True) -> DataFrame:
         (F.array_sort(pts) if sort_members else pts).alias("points"),
     )
     return out.orderBy("cluster")
-
-
-def members_capped(assigned: DataFrame, limit_per_cluster: int) -> DataFrame:
-    """The corpus-scale variant of ``members`` — NON-PARITY, labeled:
-    the reference's O12 collects every member into one list, which is
-    inherently unbounded (a hot cluster at 100 TB is billions of rows
-    in a single aggregation buffer / output cell). This caps the array
-    at ``limit_per_cluster`` representatives chosen deterministically
-    (lowest (x, y, z) after sort — same tiebreak as the sorted exact
-    array), while cx/cy/cz/n stay exact over ALL members.
-
-    Plan shape: a rank window partitioned by cluster bounds the rows
-    entering collect_list; the exact mean/count aggregate runs over the
-    unfiltered relation; one join of K rows reconciles them. The
-    window's per-partition state is a counter, not a buffer, so no
-    executor ever materializes an unbounded member set. The exact
-    ``members`` stays the oracle-checked default."""
-    if limit_per_cluster <= 0:
-        raise ValueError(f"limit_per_cluster must be positive, got {limit_per_cluster}")
-    from pyspark.sql import Window
-
-    stats = assigned.groupBy("cluster").agg(
-        F.avg("x").alias("cx"),
-        F.avg("y").alias("cy"),
-        F.avg("z").alias("cz"),
-        F.count("*").cast("long").alias("n"),
-    )
-    w = Window.partitionBy("cluster").orderBy("x", "y", "z")
-    capped = (
-        assigned.withColumn("__r", F.row_number().over(w))
-        .where(F.col("__r") <= limit_per_cluster)
-        .groupBy("cluster")
-        .agg(F.array_sort(F.collect_list(F.struct("x", "y", "z"))).alias("points"))
-    )
-    return stats.join(capped, "cluster").orderBy("cluster")

@@ -25,8 +25,7 @@ per fit instead of once per step. The per-step broadcast is one 1-task
 job of a few hundred bytes. This replaces the reference's
 side-file-in-mapper-setup channel (Task1.java:20-23): at 100 TB the
 assignment stage stays an embarrassingly-parallel scan. A streaming
-relation takes the same path as a stream-static cross join
-(``streaming/kmeans_stream.py``).
+relation takes the same path as a stream-static cross join.
 """
 
 from __future__ import annotations

@@ -49,7 +49,6 @@ from mapreduce_kmeans_clustering_spark.operators.dedup import (
     positioned_shingles,
 )
 from mapreduce_kmeans_clustering_spark.operators.sampling import (
-    BUCKETS,
     cap_per_key,
     hash_bucket,
 )
@@ -310,8 +309,8 @@ def scrub_contaminated_spans(
     the joined seam can itself form a NEW benchmark n-gram ("a b
     [SPAN] c d" → "a b c d", which may match). ExactSubstr-style
     removal shares this property. Each pass strictly shrinks affected
-    docs, so iterating converges — use ``scrub_until_clean`` when the
-    output must be guaranteed match-free.
+    docs, so iterating the scrub converges when the output must be
+    guaranteed match-free.
 
     Plan shape: the shared ``_matched_spans`` core (shingle equi-join
     + gaps-and-islands, never pairwise), spans exploded to covered
@@ -339,85 +338,6 @@ def scrub_contaminated_spans(
     # fully-covered or token-free doc still emits a row
     train, spans = _matched_spans(docs, bench_pred, n, text_col, id_col)
     return excise_spans(train, spans, text_col, id_col)
-
-
-def scrub_until_clean(
-    docs: DataFrame,
-    bench_pred: Column,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_passes: int = 5,
-) -> DataFrame:
-    """Iterate ``scrub_contaminated_spans`` until the training side
-    contains NO benchmark n-gram — the guaranteed-clean form (the
-    single pass can leave seam-created matches; see the scrub's SEAM
-    CAVEAT). Returns (id, text) for EVERY training doc, text always
-    the clean token stream (uniform normalization — never a mix of
-    raw and rebuilt text).
-
-    Semantics hardened by the round-11 review:
-
-    - ``bench_pred`` is evaluated ONCE, against the original ``docs``
-      with all their columns; membership is carried by a literal flag
-      from then on — so predicates over any column work, and a
-      text-dependent predicate can never silently reclassify a
-      scrubbed doc into the benchmark (document loss).
-    - Pass k+1 re-scrubs ONLY the docs pass k changed: an unchanged
-      doc was screened against the full benchmark set and is proven
-      clean; at corpus scale the seam tail is a vanishing fraction,
-      so each extra pass costs O(changed docs), not O(corpus).
-    - ``max_passes`` spends ALL its budget on cleaning: after the
-      last pass the (tiny) still-changed set gets one cheap
-      spans-existence probe; if clean, it is returned — exhaustion
-      raises ONLY when matches genuinely remain unverified-clean
-      (the dup-groups max_iter pattern), never when the final pass
-      just happened to finish the job.
-
-    Convergence is structural: a pass that removes anything strictly
-    shrinks those docs' token streams, so the loop terminates; in
-    practice seams are rare and 2 passes suffice."""
-    flag = "_is_bench"
-    bench = (
-        docs.where(bench_pred)
-        .select(F.col(id_col), F.col(text_col))
-        .withColumn(flag, F.lit(True))
-    )
-    pending = docs.where(~bench_pred).select(F.col(id_col), F.col(text_col))
-    clean_parts: list[DataFrame] = []
-    for _ in range(max_passes):
-        frame = bench.unionByName(pending.withColumn(flag, F.lit(False)))
-        out = scrub_contaminated_spans(
-            frame, F.col(flag), n, text_col, id_col
-        ).localCheckpoint(eager=False)
-        clean_parts.append(
-            out.where(F.col("n_removed") == 0).select(
-                F.col(id_col), F.col("scrubbed_text").alias(text_col)
-            )
-        )
-        pending = out.where(F.col("n_removed") > 0).select(
-            F.col(id_col), F.col("scrubbed_text").alias(text_col)
-        )
-        if pending.limit(1).count() == 0:
-            break
-    else:
-        # budget exhausted with docs still changing in the last pass:
-        # one spans-existence probe decides clean vs raise — the last
-        # pass may well have finished the job
-        frame = bench.unionByName(pending.withColumn(flag, F.lit(False)))
-        _, spans = _matched_spans(frame, F.col(flag), n, text_col, id_col)
-        if spans.limit(1).count() > 0:
-            raise ValueError(
-                f"scrub_until_clean: matches remain after {max_passes} "
-                "passes — raise max_passes (seam chains longer than "
-                "expected) or inspect the benchmark set for degenerate "
-                "(near-universal) n-grams"
-            )
-        clean_parts.append(pending)
-    result = clean_parts[0]
-    for part in clean_parts[1:]:
-        result = result.unionByName(part)
-    return result
 
 
 # ---------------------------------------------------------------------------

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_kmeans_clustering_spark.functions.distance import sqdist_hof
 from mapreduce_kmeans_clustering_spark.functions.literals import with_consts
-from mapreduce_kmeans_clustering_spark.operators.text import tokens, word_shingles
+from mapreduce_kmeans_clustering_spark.operators.text import tokens
 
 
 # -- exact ------------------------------------------------------------------
@@ -62,16 +62,6 @@ def exact_dup_drops(docs: DataFrame, text_col: str = "text", id_col: str = "doc_
 
 
 # -- shingles / MinHash -----------------------------------------------------
-
-
-def shingle_sets(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, shingles array<string> DISTINCT); docs with < n tokens drop
-    out (no shingles -> undefined signature, same as the oracle)."""
-    sh = F.array_distinct(word_shingles(tokens(F.col(text_col)), n))
-    return (
-        docs.select(F.col(id_col), sh.alias("shingles"))
-        .where(F.size("shingles") > 0)
-    )
 
 
 def positioned_shingles(
@@ -111,8 +101,7 @@ def positioned_shingles(
 
 
 def exploded_shingles(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, sh): DISTINCT word-n-gram rows per doc — the exploded twin
-    of shingle_sets (same set of (id, shingle) pairs; docs with < n
+    """(id, sh): DISTINCT word-n-gram rows per doc (docs with < n
     tokens contribute nothing). Positions come from
     ``positioned_shingles`` (the shared core); this adds the drop +
     distinct."""
@@ -409,79 +398,6 @@ def jaccard_pairs(
         .groupBy(
             F.col(f"a.{id_col}").alias("a"), F.col(f"b.{id_col}").alias("b")
         )
-        .agg(F.count("*").alias("c"))
-    )
-    sa = sizes.select(F.col(id_col).alias("a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("b"), F.col("n_sh").alias("nb"))
-    jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return (
-        inter.join(sa, "a")
-        .join(sb, "b")
-        .select("a", "b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
-def jaccard_pairs_prefix(
-    docs: DataFrame,
-    threshold: float = 0.2,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """EXACT prefix-filtered set-similarity join (Chaudhuri et al.
-    ICDE'06 / Bayardo et al. WWW'07): same output as ``jaccard_pairs``
-    with a provably complete but much smaller candidate stage.
-
-    Principle: order every doc's shingles by a GLOBAL rarity order
-    (ascending document frequency, ties by shingle value); if
-    J(x, y) >= t, the pair must share a shingle within each side's
-    first ``|x| - ceil(t*|x|) + 1`` shingles (otherwise even perfect
-    overlap past the prefix cannot reach t). Candidates therefore join
-    only on PREFIX rows — the rare end of the vocabulary, which is
-    precisely where document frequency (and so join fanout) is lowest;
-    the stop-shingle heavy hitters that dominate the plain
-    inverted-index join sit at the back of every prefix and never
-    generate candidates. Unlike ``max_df`` this loses NOTHING: the
-    verify stage recounts the full intersection per candidate pair,
-    and equality with jaccard_pairs is pinned by test.
-
-    Shuffle shape: df-count agg, per-doc rank window, prefix
-    equi-join on sh, then a two-hop pair-verify join (candidates x
-    per-doc shingles) — all equi keys, no nested loop."""
-    from pyspark.sql.window import Window
-
-    ex = exploded_shingles(docs, n, text_col, id_col).localCheckpoint(eager=False)
-    sizes = ex.groupBy(id_col).agg(F.count("*").cast("int").alias("n_sh"))
-    dfreq = ex.groupBy("sh").agg(F.count("*").alias("_df"))
-    w = Window.partitionBy(id_col).orderBy("_df", "sh")
-    ranked = (
-        ex.join(dfreq, "sh")
-        .withColumn("_pos", F.row_number().over(w))
-        .join(sizes, id_col)
-    )
-    # prefix length L = n_sh - ceil(t * n_sh) + 1
-    lmax = F.col("n_sh") - F.ceil(F.lit(float(threshold)) * F.col("n_sh")) + 1
-    prefix = ranked.where(F.col("_pos") <= lmax).select(id_col, "sh")
-    pa, pb = prefix.alias("pa"), prefix.alias("pb")
-    cand = (
-        pa.join(
-            pb,
-            (F.col("pa.sh") == F.col("pb.sh"))
-            & (F.col(f"pa.{id_col}") < F.col(f"pb.{id_col}")),
-        )
-        .select(
-            F.col(f"pa.{id_col}").alias("a"), F.col(f"pb.{id_col}").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    ea = ex.select(F.col(id_col).alias("a"), F.col("sh").alias("sha"))
-    eb = ex.select(F.col(id_col).alias("_b"), F.col("sh").alias("shb"))
-    inter = (
-        cand.join(ea, "a")
-        .join(eb, (F.col("b") == F.col("_b")) & (F.col("sha") == F.col("shb")))
-        .groupBy("a", "b")
         .agg(F.count("*").alias("c"))
     )
     sa = sizes.select(F.col(id_col).alias("a"), F.col("n_sh").alias("na"))
@@ -1002,8 +918,7 @@ def embedding_near_dup_pairs(
     Scoring stays in Column expressions here so DuckDB can replay it
     bit-for-bit (unrolled codegen dot product + norms precomputed once
     per vector before the join — same doubles as the HOF/list_inner_
-    product forms); embedding_near_dup_blas is the vectorized twin for
-    production (pinned equal in tests).
+    product forms).
 
     ``planes=None`` (the default) sizes the blocking to the corpus via
     ``similarity.auto_planes`` (one count() job): fixed plane counts
@@ -1067,62 +982,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def embedding_near_dup_blas(
-    embeddings: DataFrame,
-    threshold: float = 0.5,
-    dim: int = 64,
-    planes: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Production twin of embedding_near_dup_pairs: same LSH bucketing,
-    but each bucket's pairs are scored as ONE BLAS gram-matrix block
-    (M @ M.T / outer(norms)) inside a grouped applyInArrow — Arrow
-    batches executor-side, nothing on the driver, no broadcast. Like
-    the expression form, only the first ``dim`` coordinates count. Dense
-    linear algebra is the one hot path where vectorized numpy beats
-    the interpreted higher-order-function cosine by ~15x (SCALE.md §4).
-
-    Memory is O(bucket_size * dim + bucket_size^2) per task — bounded
-    by the planes count (2^planes buckets); a pathological hot bucket
-    (e.g. many zero vectors) wants more planes, which shrinks every
-    bucket geometrically. ``planes=None`` (the default) applies the
-    ``similarity.auto_planes`` corpus-aware sizing — the O(bucket²)
-    gram blocks make fixed planes doubly dangerous here (quadratic
-    candidate work AND quadratic per-task memory)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from mapreduce_kmeans_clustering_spark.functions.arrow import _vectors
-    from mapreduce_kmeans_clustering_spark.operators.similarity import (
-        auto_planes,
-        lsh_bucket_expr,
-    )
-
-    if planes is None:
-        planes = auto_planes(embeddings.count())
-
-    thr = float(threshold)
-
-    def score(tbl: "pa.Table") -> "pa.Table":
-        ids = tbl.column("_id").to_numpy().astype(np.int64)
-        mat = _vectors(tbl, "_v", dim)
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        norms[norms == 0.0] = np.nan  # zero vectors: cos undefined -> excluded
-        sims = (mat @ mat.T) / np.outer(norms, norms)
-        with np.errstate(invalid="ignore"):
-            i, j = np.nonzero((sims >= thr) & (ids[:, None] < ids[None, :]))
-        return pa.table({"a": ids[i], "b": ids[j], "cos": sims[i, j]})
-
-    v = F.slice(F.transform(F.col(vec_col), lambda x: x.cast("double")), 1, dim)
-    vb = embeddings.select(
-        F.col(id_col).alias("_id"),
-        v.alias("_v"),
-        lsh_bucket_expr(F.col(vec_col), dim, planes).alias("_bucket"),
-    )
-    return vb.groupBy("_bucket").applyInArrow(score, "a long, b long, cos double")
-
-
 def embedding_near_dup_brute(
     embeddings: DataFrame,
     threshold: float = 0.5,
@@ -1145,33 +1004,6 @@ def embedding_near_dup_brute(
         a.join(b, F.col("a") < F.col("b"))
         .select("a", "b", cos.alias("cos"))
         .where(F.col("cos") >= threshold)
-    )
-
-
-def cosine_for_pairs(
-    embeddings: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(a, b, cos) restricted to the given candidate (a, b) pairs — the
-    verification stage when candidates come from elsewhere (MinHash over
-    text, SimHash bands, an external blocking key), mirroring
-    jaccard_for_pairs. Two hash equi-joins against the vector table;
-    work is O(|pairs|), never all-pairs."""
-    from mapreduce_kmeans_clustering_spark.functions.distance import (
-        cosine_similarity,
-    )
-
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    vecs = embeddings.select(F.col(id_col).alias("_id"), v.alias("_v"))
-    ea = vecs.select(F.col("_id").alias("a"), F.col("_v").alias("va"))
-    eb = vecs.select(F.col("_id").alias("b"), F.col("_v").alias("vb"))
-    cos = cosine_similarity(F.col("va"), F.col("vb"))
-    return (
-        pairs.join(ea, "a")
-        .join(eb, "b")
-        .select("a", "b", cos.alias("cos"))
     )
 
 
@@ -1887,8 +1719,7 @@ def semantic_dedup_blas(
     applyInArrow, emitting verdicts directly — no self-join, no
     per-pair expression evaluation. Dense linear algebra is the hot
     path where vectorized numpy beats the JVM expression engine by an
-    order of magnitude (SCALE.md §4 finding 2); the same reasoning as
-    embedding_near_dup_blas.
+    order of magnitude (SCALE.md §4 finding 2).
 
     Memory is O(block * dim + block^2) per task; blocks are ~n/k, so
     pick k with suggested_semantic_k (~sqrt(n)) — at the SemDeDup
@@ -2072,11 +1903,7 @@ def bloom_filter_words(
     order-free, so the build is one (word)-keyed hash aggregate over
     k rows per doc — map-side partial, never corpus-pairwise.
 
-    Relationship to ``functions/bloom.py``: that module is the
-    DRIVER-LITERAL twin — its filter collects to an m/64-word array
-    probed as a scan-local literal expression, the right shape for a
-    BOUNDED pre-shuffle semi-join reducer (m ~ 2^20, 128 KiB). This
-    one keeps the filter DISTRIBUTED as a (word, bits) relation so m
+    The filter stays DISTRIBUTED as a (word, bits) relation so m
     scales with the corpus (16 bits/key at 10^11 docs is ~200 GB of
     state — never a literal), merges/extends across batches, and
     persists as parquet; the probe is an equi-join instead of an

@@ -1,52 +1,22 @@
 """Multimodal columns: image/audio/video as opaque binary payloads
-with typed metadata, plus feature extraction through the Arrow-batched
-``mapInPandas`` path.
+with typed metadata, plus a deterministic feature vector per payload.
 
-Decode surface, honestly scoped to this container (no codec packages):
-``decode_media`` REALLY decodes pure-stdlib formats — binary netpbm
-(P6/P5) images, PNG (zlib inflate + full filter reconstruction,
-8-bit gray/RGB/RGBA/gray-alpha/palette, non-interlaced), 24-bit BMP,
-GIF (variable-width LZW, 4-pass deinterlace, frame counting), JPEG
-(sequential + progressive Huffman, operators/jpeg.py), and RIFF/WAVE
-PCM audio — and ``decoded_stats`` runs that decode executor-side over
-Arrow batches (``synthesize_decodable_media`` generates valid
-payloads across all five image formats plus WAV to drive it).
-Lossless WebP (VP8L) decodes for real too (operators/webp.py).
-Remaining compressed formats (MP3, lossy VP8, ...) and video raise
-NotImplementedError with the codec message; ``extract_features``
-keeps a deterministic digest-derived feature vector as the
-model-embedding stand-in. Everything Spark-side — schema, binary
-column handling, partition-parallel mapInPandas, Arrow batch shapes —
-is real and tested; widening decode to MP3/video via torchaudio/PyAV
-is a pure function replacement.
+No codec is decoded here. ``extract_features`` keeps a
+digest-derived feature vector as the model-embedding stand-in,
+computed by column expressions so the payload never leaves the JVM.
 
 Scale notes: payloads stay in executors end-to-end (no driver
-materialization); mapInPandas streams Arrow record batches, so memory
-is bounded by batch size (spark.sql.execution.arrow.maxRecordsPerBatch),
-not partition size.
+materialization); feature extraction is a scan-local projection.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 KINDS = ["image", "audio", "video"]
 
 FEATURE_DIM = 8
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("features", T.ArrayType(T.DoubleType())),
-    ]
-)
 
 
 def synthesize_media(docs: DataFrame) -> DataFrame:
@@ -72,1414 +42,30 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
     )
 
 
-_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    """PNG Paeth predictor (RFC 2083 §6.6)."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
-def decode_png(payload: bytes) -> dict:
-    """Real PNG decode with the standard library only: chunk walk,
-    zlib inflate of the IDAT stream, and full per-row filter
-    reconstruction (None/Sub/Up/Average/Paeth). Supports bit depth 8,
-    color types 0 (gray), 2 (RGB), 3 (palette -> expanded to RGB),
-    4 (gray+alpha), 6 (RGBA), interlace method 0. Returns the same
-    dict shape as the netpbm branch: (width, height, channels,
-    pixels bytes, row-major, no filter bytes)."""
-    import struct
-    import zlib
-
-    if payload[:8] != _PNG_MAGIC:
-        raise ValueError("not a PNG: bad signature")
-    i = 8
-    idat = bytearray()
-    plte: bytes | None = None
-    header = None
-    while i + 8 <= len(payload):
-        (length,) = struct.unpack(">I", payload[i : i + 4])
-        ctype = payload[i + 4 : i + 8]
-        data = payload[i + 8 : i + 8 + length]
-        i += 12 + length  # length + type + data + crc
-        if ctype == b"IHDR":
-            header = struct.unpack(">IIBBBBB", data)
-        elif ctype == b"PLTE":
-            plte = data
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-    if header is None:
-        raise ValueError("PNG missing IHDR")
-    width, height, depth, color, _comp, _filt, interlace = header
-    if depth != 8:
-        raise NotImplementedError(f"PNG bit depth {depth} not supported (8 only)")
-    if color not in _PNG_CHANNELS:
-        raise NotImplementedError(f"PNG color type {color} not supported")
-    if interlace != 0:
-        raise NotImplementedError("Adam7-interlaced PNG not supported")
-    channels = _PNG_CHANNELS[color]
-    raw = zlib.decompress(bytes(idat))
-    stride = width * channels
-    if len(raw) != height * (stride + 1):
-        raise ValueError(
-            f"PNG raster size mismatch: expected {height * (stride + 1)}"
-            f" bytes after inflate, got {len(raw)}"
-        )
-    out = bytearray()
-    prev = bytearray(stride)
-    pos = 0
-    bpp = channels  # bytes per pixel at depth 8
-    for _y in range(height):
-        ftype = raw[pos]
-        pos += 1
-        row = bytearray(raw[pos : pos + stride])
-        pos += stride
-        if ftype == 1:  # Sub
-            for x in range(bpp, stride):
-                row[x] = (row[x] + row[x - bpp]) & 0xFF
-        elif ftype == 2:  # Up
-            for x in range(stride):
-                row[x] = (row[x] + prev[x]) & 0xFF
-        elif ftype == 3:  # Average
-            for x in range(stride):
-                left = row[x - bpp] if x >= bpp else 0
-                row[x] = (row[x] + ((left + prev[x]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for x in range(stride):
-                left = row[x - bpp] if x >= bpp else 0
-                up_left = prev[x - bpp] if x >= bpp else 0
-                row[x] = (row[x] + _paeth(left, prev[x], up_left)) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"PNG filter type {ftype} invalid")
-        out += row
-        prev = row
-    if color == 3:  # palette indices -> RGB
-        if plte is None:
-            raise ValueError("palette PNG missing PLTE chunk")
-        rgb = bytearray()
-        for idx in out:
-            rgb += plte[idx * 3 : idx * 3 + 3]
-        out = rgb
-        channels = 3
-    return {
-        "width": width,
-        "height": height,
-        "channels": channels,
-        "pixels": bytes(out),
-    }
-
-
-def encode_png(width: int, height: int, seed: int, color_type: int = 2) -> bytes:
-    """Deterministic valid PNG test image (md5-chain raster, same
-    generator family as encode_ppm). Row ``y`` is written with filter
-    type ``y % 5``, so a roundtrip through decode_png exercises every
-    filter reconstruction path. Pure stdlib."""
-    import struct
-    import zlib
-
-    channels = _PNG_CHANNELS[color_type]
-    if color_type == 3:
-        raise ValueError("use color_type 0/2/4/6 for encoding")
-    need = width * height * channels
-    pix = bytearray()
-    block = hashlib.md5(f"png:{seed}".encode()).digest()
-    while len(pix) < need:
-        pix += block
-        block = hashlib.md5(block).digest()
-    pix = pix[:need]
-
-    stride = width * channels
-    bpp = channels
-    raw = bytearray()
-    prev = bytearray(stride)
-    for y in range(height):
-        row = pix[y * stride : (y + 1) * stride]
-        f = y % 5
-        raw.append(f)
-        if f == 0:
-            raw += row
-        elif f == 1:
-            raw += bytes(
-                (row[x] - (row[x - bpp] if x >= bpp else 0)) & 0xFF
-                for x in range(stride)
-            )
-        elif f == 2:
-            raw += bytes((row[x] - prev[x]) & 0xFF for x in range(stride))
-        elif f == 3:
-            raw += bytes(
-                (row[x] - (((row[x - bpp] if x >= bpp else 0) + prev[x]) >> 1)) & 0xFF
-                for x in range(stride)
-            )
-        else:
-            raw += bytes(
-                (
-                    row[x]
-                    - _paeth(
-                        row[x - bpp] if x >= bpp else 0,
-                        prev[x],
-                        prev[x - bpp] if x >= bpp else 0,
-                    )
-                )
-                & 0xFF
-                for x in range(stride)
-            )
-        prev = bytearray(row)
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-    return (
-        _PNG_MAGIC
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw), 6))
-        + chunk(b"IEND", b"")
-    )
-
-
-def decode_bmp(payload: bytes) -> dict:
-    """Real BMP decode, stdlib only: BITMAPINFOHEADER, 24-bit
-    uncompressed (BI_RGB). Handles 4-byte row padding, bottom-up and
-    top-down row order, and BGR->RGB channel swap. Returns the same
-    dict shape as the other image branches."""
-    import struct
-
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP: bad signature")
-    (off,) = struct.unpack_from("<I", payload, 10)
-    (hdr_size,) = struct.unpack_from("<I", payload, 14)
-    if hdr_size < 40:
-        raise NotImplementedError(f"BMP DIB header size {hdr_size} not supported")
-    width, height = struct.unpack_from("<ii", payload, 18)
-    (bitcount,) = struct.unpack_from("<H", payload, 28)
-    (compression,) = struct.unpack_from("<I", payload, 30)
-    if bitcount != 24 or compression != 0:
-        raise NotImplementedError(
-            f"BMP bitcount={bitcount} compression={compression} not "
-            "supported (24-bit BI_RGB only)"
-        )
-    bottom_up = height > 0
-    height = abs(height)
-    row_bytes = width * 3
-    padded = (row_bytes + 3) & ~3
-    out = bytearray()
-    rows = range(height - 1, -1, -1) if bottom_up else range(height)
-    for y in rows:
-        start = off + y * padded
-        row = payload[start : start + row_bytes]
-        if len(row) != row_bytes:
-            raise ValueError("truncated BMP raster")
-        for x in range(0, row_bytes, 3):  # BGR -> RGB
-            out += bytes((row[x + 2], row[x + 1], row[x]))
-    return {"width": width, "height": height, "channels": 3, "pixels": bytes(out)}
-
-
-def encode_bmp(width: int, height: int, seed: int) -> bytes:
-    """Deterministic valid 24-bit bottom-up BMP test image (md5-chain
-    raster, same generator family as encode_ppm/encode_png)."""
-    import struct
-
-    need = width * height * 3
-    pix = bytearray()
-    block = hashlib.md5(f"bmp:{seed}".encode()).digest()
-    while len(pix) < need:
-        pix += block
-        block = hashlib.md5(block).digest()
-    pix = pix[:need]
-    row_bytes = width * 3
-    padded = (row_bytes + 3) & ~3
-    raster = bytearray()
-    for y in range(height - 1, -1, -1):  # bottom-up storage
-        row = pix[y * row_bytes : (y + 1) * row_bytes]
-        bgr = bytearray()
-        for x in range(0, row_bytes, 3):
-            bgr += bytes((row[x + 2], row[x + 1], row[x]))
-        raster += bgr + b"\x00" * (padded - row_bytes)
-    off = 14 + 40
-    file_size = off + len(raster)
-    header = b"BM" + struct.pack("<IHHI", file_size, 0, 0, off)
-    dib = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(raster), 2835, 2835, 0, 0)
-    return header + dib + raster
-
-
-# ---------------------------------------------------------------------------
-# GIF (87a/89a): real LZW decode, first frame -> RGB
-# ---------------------------------------------------------------------------
-
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def _gif_lzw(data: bytes, min_code: int, max_pixels: int) -> bytearray:
-    """GIF-flavored LZW: variable-width codes (min_code+1 .. 12 bits),
-    LSB-first bit packing, CLEAR resets the table, the standard
-    'code == next index' self-reference case. Stops at END or once
-    ``max_pixels`` indices have been produced."""
-    clear = 1 << min_code
-    end = clear + 1
-    base = [bytes((i,)) for i in range(clear)]
-    table: list[bytes] = []
-    width = min_code + 1
-    out = bytearray()
-    pos = 0
-    total_bits = len(data) * 8
-    prev: bytes | None = None
-    while pos + width <= total_bits and len(out) < max_pixels:
-        byte_i = pos >> 3
-        chunk = int.from_bytes(data[byte_i : byte_i + 3], "little")
-        code = (chunk >> (pos & 7)) & ((1 << width) - 1)
-        pos += width
-        if code == clear:
-            table = list(base) + [b"", b""]  # literals + CLEAR + END slots
-            width = min_code + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if not table:
-            raise ValueError("GIF LZW stream did not start with CLEAR")
-        if code < len(table):
-            entry = table[code]
-            if code >= clear and not entry:
-                raise ValueError("GIF LZW references a reserved code")
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]
-        else:
-            raise ValueError("corrupt GIF LZW stream: code out of range")
-        out += entry
-        if prev is not None and len(table) < 4096:
-            table.append(prev + entry[:1])
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-    if len(out) < max_pixels:
-        raise ValueError(
-            f"truncated GIF raster: got {len(out)} of {max_pixels} indices"
-        )
-    return out[:max_pixels]
-
-
-def _gif_deinterlace(idx: bytearray, width: int, height: int) -> bytearray:
-    out = bytearray(len(idx))
-    src = 0
-    for start, step in _GIF_INTERLACE_PASSES:
-        for y in range(start, height, step):
-            out[y * width : (y + 1) * width] = idx[src : src + width]
-            src += width
-    return out
-
-
-def decode_gif(payload: bytes) -> dict:
-    """Real GIF decode with the standard library only: logical screen
-    descriptor, global/local color tables, extension-block skipping
-    (graphic control / comment / application), variable-width LZW, and
-    4-pass deinterlace. Returns the FIRST frame expanded to RGB in the
-    netpbm dict shape (width, height, channels=3, pixels) plus
-    ``n_frames`` — the full block walk runs to the trailer so frame
-    count is exact for animations. Transparency is ignored (the first
-    frame's palette bytes are returned verbatim)."""
-    import struct
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF: bad signature")
-    if len(payload) < 13:
-        raise ValueError("truncated GIF header")
-    _sw, _sh, packed, _bg, _aspect = struct.unpack("<HHBBB", payload[6:13])
-    i = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 7)
-        gct = payload[i : i + 3 * n]
-        i += 3 * n
-    frames = 0
-    first: dict | None = None
-    while i < len(payload):
-        b0 = payload[i]
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension: introducer + label + sub-blocks
-            i += 2
-            while i < len(payload) and payload[i] != 0:
-                i += 1 + payload[i]
-            i += 1
-        elif b0 == 0x2C:  # image descriptor
-            if i + 10 > len(payload):
-                raise ValueError("truncated GIF image descriptor")
-            _left, _top, iw, ih, ip = struct.unpack("<HHHHB", payload[i + 1 : i + 10])
-            i += 10
-            ct = gct
-            if ip & 0x80:
-                n = 2 << (ip & 7)
-                ct = payload[i : i + 3 * n]
-                i += 3 * n
-            if i >= len(payload):
-                raise ValueError("truncated GIF image data")
-            min_code = payload[i]
-            if not 2 <= min_code <= 11:
-                raise ValueError(f"invalid GIF LZW minimum code size {min_code}")
-            i += 1
-            data = bytearray()
-            while i < len(payload) and payload[i] != 0:
-                n = payload[i]
-                data += payload[i + 1 : i + 1 + n]
-                i += 1 + n
-            i += 1
-            frames += 1
-            if first is None:
-                if ct is None:
-                    raise ValueError("GIF image has no color table")
-                if iw == 0 or ih == 0:
-                    raise ValueError("GIF image has zero dimension")
-                idx = _gif_lzw(bytes(data), min_code, iw * ih)
-                if ip & 0x40:
-                    idx = _gif_deinterlace(idx, iw, ih)
-                n_colors = len(ct) // 3
-                px = bytearray(iw * ih * 3)
-                for j, c in enumerate(idx):
-                    if c >= n_colors:
-                        raise ValueError("GIF pixel index outside color table")
-                    px[3 * j : 3 * j + 3] = ct[3 * c : 3 * c + 3]
-                first = {
-                    "width": iw,
-                    "height": ih,
-                    "channels": 3,
-                    "pixels": bytes(px),
-                }
-        else:
-            raise ValueError(f"unknown GIF block 0x{b0:02x}")
-    if first is None:
-        raise ValueError("GIF contains no image")
-    first["n_frames"] = frames
-    return first
-
-
-def encode_gif(
-    width: int,
-    height: int,
-    seed: int,
-    interlace: bool = False,
-    n_frames: int = 1,
-) -> bytes:
-    """Deterministic valid GIF89a (md5-chain palette indices over a
-    256-entry md5-chain palette, same generator family as encode_ppm).
-    LZW payload uses the classic literal-code form: 9-bit codes with a
-    CLEAR every 254 pixels, so the table never grows past the fixed
-    width — bit-valid for ANY conformant decoder, not just ours.
-    ``interlace`` stores rows in 4-pass order; extra frames repeat the
-    same raster behind a graphic-control extension (exercises the
-    extension walk + frame counting)."""
-    import struct
-
-    pal = bytearray()
-    block = hashlib.md5(f"gifpal:{seed}".encode()).digest()
-    while len(pal) < 768:
-        pal += block
-        block = hashlib.md5(block).digest()
-    pal = pal[:768]
-
-    need = width * height
-    idx = bytearray()
-    block = hashlib.md5(f"gif:{seed}".encode()).digest()
-    while len(idx) < need:
-        idx += block
-        block = hashlib.md5(block).digest()
-    idx = idx[:need]
-
-    rows = list(range(height))
-    if interlace:
-        rows = [
-            y for start, step in _GIF_INTERLACE_PASSES for y in range(start, height, step)
-        ]
-    stored = bytearray()
-    for y in rows:
-        stored += idx[y * width : (y + 1) * width]
-
-    # 9-bit LSB-first bitstream: CLEAR, <=254 literals, ..., END.
-    clear, end = 256, 257
-    acc = 0
-    nbits = 0
-    lzw = bytearray()
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += 9
-        while nbits >= 8:
-            lzw.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    for j, c in enumerate(stored):
-        if j and j % 254 == 0:
-            emit(clear)
-        emit(c)
-    emit(end)
-    if nbits:
-        lzw.append(acc & 0xFF)
-
-    out = bytearray()
-    out += b"GIF89a"
-    out += struct.pack("<HHBBB", width, height, 0x80 | 0x07, 0, 0)  # GCT 256
-    out += pal
-    frame = bytearray()
-    frame += b"\x2c" + struct.pack(
-        "<HHHHB", 0, 0, width, height, 0x40 if interlace else 0
-    )
-    frame.append(8)  # LZW minimum code size
-    for k in range(0, len(lzw), 255):
-        chunk = lzw[k : k + 255]
-        frame.append(len(chunk))
-        frame += chunk
-    frame.append(0)  # block terminator
-    for _ in range(max(1, n_frames)):
-        # graphic control extension (89a): 4-byte block, no transparency
-        out += b"\x21\xf9\x04" + struct.pack("<BHB", 0, 4, 0) + b"\x00"
-        out += frame
-    out += b"\x3b"
-    return bytes(out)
-
-
-def decode_media(payload: bytes, kind: str) -> dict:
-    """Real decode for the formats stdlib + numpy can handle — no
-    codec package required:
-
-    - ``image``: binary netpbm (P6 RGB / P5 gray), PNG (stdlib zlib +
-      filter reconstruction, see decode_png), 24-bit BMP, GIF
-      (variable-width LZW + deinterlace, see decode_gif), or JPEG
-      (sequential AND progressive Huffman — operators/jpeg.py) →
-      dict(width, height, channels, pixels bytes).
-    - ``audio``: RIFF/WAVE PCM (via stdlib ``wave``) → dict(
-      sample_rate, n_frames, channels, sample_width, pcm bytes).
-    - ``video``: no stdlib codec exists → NotImplementedError
-      (clearly-marked gap; PyAV/PIL-sequence would slot in here).
-
-    Remaining compressed formats (MP3/...) raise NotImplementedError
-    with the codec message — honest about what this container can
-    decode rather than pretending.
-    """
-    if payload is None:
-        raise ValueError("cannot decode a NULL payload")
-    if kind == "image":
-        if payload[:8] == _PNG_MAGIC:
-            return decode_png(payload)
-        if payload[:2] == b"BM":
-            return decode_bmp(payload)
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            return decode_gif(payload)
-        if payload[:2] == b"\xff\xd8":
-            from mapreduce_kmeans_clustering_spark.operators.jpeg import decode_jpeg
-
-            return decode_jpeg(payload)
-        if payload[:4] in (_TIFF_II, _TIFF_MM):
-            return decode_tiff(payload)
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-            from mapreduce_kmeans_clustering_spark.operators.webp import (
-                decode_webp,
-            )
-
-            return decode_webp(payload)
-        if payload[:2] not in (b"P6", b"P5"):
-            raise NotImplementedError(
-                "image decode supports binary netpbm (P6/P5), PNG, "
-                "24-bit BMP, GIF, baseline/progressive JPEG, baseline "
-                "TIFF and lossless (VP8L) WebP; other compressed "
-                "formats need a codec library (PIL) not present in "
-                "this environment"
-            )
-        # header: magic, width, height, maxval — whitespace/comment
-        # separated, then a single whitespace byte before raster data
-        fields: list[bytes] = []
-        i = 2
-        while len(fields) < 3:
-            while i < len(payload) and payload[i : i + 1].isspace():
-                i += 1
-            if payload[i : i + 1] == b"#":  # comment to end of line
-                while i < len(payload) and payload[i : i + 1] != b"\n":
-                    i += 1
-                continue
-            j = i
-            while j < len(payload) and not payload[j : j + 1].isspace():
-                j += 1
-            fields.append(payload[i:j])
-            i = j
-        i += 1  # the single whitespace after maxval
-        width, height, maxval = (int(f) for f in fields)
-        if maxval > 255:
-            raise NotImplementedError("16-bit netpbm not supported")
-        channels = 3 if payload[:2] == b"P6" else 1
-        pixels = payload[i : i + width * height * channels]
-        if len(pixels) != width * height * channels:
-            raise ValueError(
-                f"truncated netpbm raster: expected {width * height * channels}"
-                f" bytes, got {len(pixels)}"
-            )
-        return {
-            "width": width,
-            "height": height,
-            "channels": channels,
-            "pixels": pixels,
-        }
-    if kind == "audio":
-        import io
-        import wave
-
-        if payload[:4] != b"RIFF":
-            raise NotImplementedError(
-                "audio decode supports RIFF/WAVE PCM only; compressed "
-                "formats need a codec library not present in this "
-                "environment"
-            )
-        with wave.open(io.BytesIO(payload), "rb") as w:
-            return {
-                "sample_rate": w.getframerate(),
-                "n_frames": w.getnframes(),
-                "channels": w.getnchannels(),
-                "sample_width": w.getsampwidth(),
-                "pcm": w.readframes(w.getnframes()),
-            }
-    if kind == "video":
-        raise NotImplementedError(
-            "no stdlib video codec exists; frame decode needs PyAV — "
-            "sample_frames covers the Spark-side plumbing with a "
-            "digest-stub frame payload"
-        )
-    raise ValueError(f"unknown media kind: {kind!r}")
-
-
-# ---------------------------------------------------------------------------
-# TIFF (baseline, rev 6.0): both byte orders, 8-bit gray/RGB, strips,
-# uncompressed + PackBits. Pure stdlib (struct) — same posture as the
-# PNG/BMP/GIF/JPEG codecs above: decode for real or raise the labeled
-# NotImplementedError, never pretend.
-# ---------------------------------------------------------------------------
-
-_TIFF_II = b"II*\x00"
-_TIFF_MM = b"MM\x00*"
-
-
-def _packbits_decode(data: bytes, expected: int) -> bytes:
-    """Apple PackBits (TIFF compression 32773): n in [0,127] copies
-    n+1 literals, n in [-127,-1] repeats the next byte 1-n times,
-    -128 is a no-op."""
-    out = bytearray()
-    i = 0
-    while i < len(data) and len(out) < expected:
-        n = data[i]
-        i += 1
-        if n < 128:
-            out += data[i : i + n + 1]
-            i += n + 1
-        elif n > 128:
-            out += bytes([data[i]]) * (257 - n)
-            i += 1
-        # n == 128: no-op
-    if len(out) < expected:
-        raise ValueError(
-            f"truncated PackBits strip: expected {expected}, got {len(out)}"
-        )
-    return bytes(out[:expected])
-
-
-def _packbits_encode(data: bytes) -> bytes:
-    """Minimal valid PackBits encoder (runs >= 3 become repeat
-    packets, the rest literal packets) for the self-encoder."""
-    out = bytearray()
-    i = 0
-    n = len(data)
-    while i < n:
-        run = 1
-        while i + run < n and run < 128 and data[i + run] == data[i]:
-            run += 1
-        if run >= 3:
-            out += bytes([257 - run, data[i]])
-            i += run
-            continue
-        j = i
-        lits = 0
-        while j < n and lits < 128:
-            r = 1
-            while j + r < n and r < 3 and data[j + r] == data[j]:
-                r += 1
-            if r >= 3:
-                break
-            j += 1
-            lits += 1
-        out += bytes([lits - 1]) + data[i : i + lits]
-        i += lits
-    return bytes(out)
-
-
-def decode_tiff(payload: bytes) -> dict:
-    """Baseline TIFF decode: II/MM byte orders, 8-bit samples, gray
-    (photometric 0/1 — WhiteIsZero inverted to the BlackIsZero
-    convention) or RGB, strip layout, compression 1 (none) or 32773
-    (PackBits). LZW/Deflate/JPEG-in-TIFF, tiles, planar=2 and non-8
-    bit depths raise the labeled NotImplementedError."""
-    import struct
-
-    if payload[:4] == _TIFF_II:
-        e = "<"
-    elif payload[:4] == _TIFF_MM:
-        e = ">"
-    else:
-        raise ValueError("not a TIFF payload")
-    (ifd_off,) = struct.unpack_from(e + "I", payload, 4)
-    (n_entries,) = struct.unpack_from(e + "H", payload, ifd_off)
-    tags: dict[int, tuple[int, int, bytes]] = {}
-    for k in range(n_entries):
-        base = ifd_off + 2 + 12 * k
-        tag, typ, cnt = struct.unpack_from(e + "HHI", payload, base)
-        tags[tag] = (typ, cnt, payload[base + 8 : base + 12])
-
-    _SZ = {1: 1, 3: 2, 4: 4}
-
-    def values(tag: int, default=None) -> list[int]:
-        if tag not in tags:
-            if default is None:
-                raise ValueError(f"TIFF missing required tag {tag}")
-            return [default]
-        typ, cnt, field = tags[tag]
-        if typ not in _SZ:
-            raise NotImplementedError(f"TIFF tag {tag} type {typ} not supported")
-        size = _SZ[typ] * cnt
-        if size <= 4:
-            raw = field[:size]
-        else:
-            (off,) = struct.unpack_from(e + "I", field, 0)
-            raw = payload[off : off + size]
-        fmt = {1: "B", 3: "H", 4: "I"}[typ]
-        return list(struct.unpack(e + fmt * cnt, raw))
-
-    width = values(256)[0]
-    height = values(257)[0]
-    spp = values(277, default=1)[0]
-    bits = values(258, default=8)
-    if any(b != 8 for b in bits):
-        raise NotImplementedError(f"TIFF bit depths {bits} not supported (8 only)")
-    comp = values(259, default=1)[0]
-    if comp not in (1, 32773):
-        raise NotImplementedError(
-            f"TIFF compression {comp} not supported (1=none, 32773=PackBits; "
-            "LZW/Deflate/JPEG-in-TIFF need a codec library)"
-        )
-    photometric = values(262)[0]
-    if photometric not in (0, 1, 2):
-        raise NotImplementedError(
-            f"TIFF photometric {photometric} not supported (gray/RGB only)"
-        )
-    if values(284, default=1)[0] != 1:
-        raise NotImplementedError("TIFF planar configuration 2 not supported")
-    if (photometric == 2) != (spp == 3):
-        raise ValueError("TIFF photometric/samples-per-pixel mismatch")
-    rows_per_strip = values(278, default=height)[0]
-    offsets = values(273)
-    counts = values(279)
-    if len(offsets) != len(counts):
-        raise ValueError("TIFF strip offsets/counts length mismatch")
-    raster = bytearray()
-    row_bytes = width * spp
-    for si, (off, cnt) in enumerate(zip(offsets, counts)):
-        strip_rows = min(rows_per_strip, height - si * rows_per_strip)
-        expected = strip_rows * row_bytes
-        chunk = payload[off : off + cnt]
-        if comp == 32773:
-            raster += _packbits_decode(chunk, expected)
-        else:
-            if len(chunk) < expected:
-                raise ValueError(
-                    f"truncated TIFF strip {si}: expected {expected}, got {len(chunk)}"
-                )
-            raster += chunk[:expected]
-    if len(raster) != width * height * spp:
-        raise ValueError(
-            f"TIFF strips cover {len(raster)} bytes, image needs "
-            f"{width * height * spp}"
-        )
-    if photometric == 0:  # WhiteIsZero -> invert to BlackIsZero
-        raster = bytearray(255 - b for b in raster)
-    return {
-        "width": width,
-        "height": height,
-        "channels": spp,
-        "pixels": bytes(raster),
-    }
-
-
-def encode_tiff(
-    width: int,
-    height: int,
-    seed: int,
-    big_endian: bool = False,
-    gray: bool = False,
-    packbits: bool = False,
-) -> bytes:
-    """Deterministic valid baseline TIFF (md5-chain raster, same
-    generator family as encode_ppm): II or MM order, gray or RGB,
-    two strips, optional PackBits — every branch decode_tiff
-    supports, so the self-encoder exercises the whole matrix."""
-    import struct
-
-    e = ">" if big_endian else "<"
-    spp = 1 if gray else 3
-    need = width * height * spp
-    out = bytearray()
-    block = hashlib.md5(f"tiff:{seed}".encode()).digest()
-    while len(out) < need:
-        out += block
-        block = hashlib.md5(block).digest()
-    raster = bytes(out[:need])
-    rows_per_strip = max(1, (height + 1) // 2)
-    row_bytes = width * spp
-    strips = []
-    r = 0
-    while r < height:
-        rows = min(rows_per_strip, height - r)
-        chunk = raster[r * row_bytes : (r + rows) * row_bytes]
-        strips.append(_packbits_encode(chunk) if packbits else chunk)
-        r += rows
-    header = struct.pack(e + "2sHI", b"MM" if big_endian else b"II", 42, 0)
-    body = bytearray(header)
-    strip_offsets = []
-    for chunk in strips:
-        strip_offsets.append(len(body))
-        body += chunk
-    if len(body) % 2:
-        body += b"\x00"
-    # out-of-line arrays (strip offsets/counts, bits-per-sample for RGB)
-    def put_longs(vals):
-        off = len(body)
-        body.extend(struct.pack(e + "I" * len(vals), *vals))
-        return off
-
-    # TIFF inlines any value that fits the 4-byte field: a count-1
-    # LONG array written out-of-line would be read as the value itself
-    # by every conforming reader (and by decode_tiff) — single-strip
-    # images must inline
-    if len(strips) == 1:
-        so_off = sc_off = None
-    else:
-        so_off = put_longs(strip_offsets)
-        sc_off = put_longs([len(c) for c in strips])
-    bps_off = None
-    if spp == 3:
-        bps_off = len(body)
-        body.extend(struct.pack(e + "HHH", 8, 8, 8))
-        if len(body) % 2:
-            body += b"\x00"
-    ifd_off = len(body)
-    struct.pack_into(e + "I", body, 4, ifd_off)
-
-    def entry(tag, typ, cnt, value_bytes):
-        return struct.pack(e + "HHI", tag, typ, cnt) + value_bytes.ljust(4, b"\x00")
-
-    def short_val(v):
-        return struct.pack(e + "H", v)
-
-    def long_val(v):
-        return struct.pack(e + "I", v)
-
-    entries = [
-        entry(256, 4, 1, long_val(width)),
-        entry(257, 4, 1, long_val(height)),
-        entry(258, 3, spp, short_val(8) if spp == 1 else long_val(bps_off)),
-        entry(259, 3, 1, short_val(32773 if packbits else 1)),
-        entry(262, 3, 1, short_val(1 if gray else 2)),
-        entry(
-            273,
-            4,
-            len(strips),
-            long_val(strip_offsets[0] if so_off is None else so_off),
-        ),
-        entry(277, 3, 1, short_val(spp)),
-        entry(278, 4, 1, long_val(rows_per_strip)),
-        entry(
-            279,
-            4,
-            len(strips),
-            long_val(len(strips[0]) if sc_off is None else sc_off),
-        ),
-    ]
-    body += struct.pack(e + "H", len(entries))
-    for en in entries:
-        body += en
-    body += struct.pack(e + "I", 0)  # next-IFD terminator
-    return bytes(body)
-
-
-def encode_ppm(width: int, height: int, seed: int) -> bytes:
-    """Deterministic valid binary-PPM (P6) test image: md5-chain
-    raster seeded by ``seed``. Pure stdlib; decodable by decode_media
-    and any netpbm reader."""
-    header = f"P6\n{width} {height}\n255\n".encode()
-    need = width * height * 3
-    out = bytearray()
-    block = hashlib.md5(f"ppm:{seed}".encode()).digest()
-    while len(out) < need:
-        out.extend(block)
-        block = hashlib.md5(block).digest()
-    return header + bytes(out[:need])
-
-
-def encode_wav(sample_rate: int, n_frames: int, seed: int) -> bytes:
-    """Deterministic valid 16-bit mono PCM WAV: integer triangle wave
-    whose period is derived from ``seed`` (exact integer arithmetic —
-    no float synthesis, so the bytes are stable across platforms)."""
-    import io
-    import struct
-    import wave
-
-    period = 20 + (seed % 50)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        frames = bytearray()
-        for i in range(n_frames):
-            pos = i % period
-            half = period // 2
-            amp = (pos if pos <= half else period - pos) * 30000 // max(half, 1) - 15000
-            frames.extend(struct.pack("<h", amp))
-        w.writeframes(bytes(frames))
-    return buf.getvalue()
-
-
-DECODABLE_MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-def synthesize_decodable_media(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """A media table whose payloads are REAL decodable bytes,
-    alternating by id: id % 2 == 1 is PCM WAV audio; even ids split
-    between P6 PPM / baseline TIFF (id % 8 == 0, alternating; TIFF
-    cycles byte order, gray/RGB and PackBits), PNG (id % 8 == 2, cycling the
-    supported color types), GIF (id % 8 == 4, alternating progressive
-    interlace) and JPEG (id % 8 == 6, alternating 4:4:4 / 4:2:0 and
-    sequential / progressive scans) — generated executor-side via
-    mapInPandas, so payload synthesis scales with partitions and
-    nothing row-scale touches the driver. Video stays out (no stdlib
-    codec), mirroring decode_media's honest surface."""
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        from mapreduce_kmeans_clustering_spark.operators.jpeg import encode_jpeg
-
-        for pdf in it:
-            ids = pdf[id_col].tolist()
-            rows = []
-            for i in ids:
-                if i % 2 == 0:
-                    if i % 8 == 0:
-                        if (i // 8) % 2 == 1:
-                            payload = encode_tiff(
-                                8 + i % 8,
-                                6 + i % 5,
-                                i,
-                                big_endian=(i // 16) % 2 == 1,
-                                gray=(i // 32) % 2 == 1,
-                                packbits=(i // 64) % 2 == 1,
-                            )
-                        else:
-                            payload = encode_ppm(8 + i % 8, 6 + i % 5, i)
-                    elif i % 8 == 4:
-                        payload = encode_gif(
-                            8 + i % 8, 6 + i % 5, i, interlace=(i // 8) % 2 == 1
-                        )
-                    elif i % 8 == 2:
-                        ct = (0, 2, 4, 6)[(i // 4) % 4]
-                        payload = encode_png(8 + i % 8, 6 + i % 5, i, color_type=ct)
-                    else:
-                        payload = encode_jpeg(
-                            8 + i % 8,
-                            6 + i % 5,
-                            i,
-                            subsampling=("444", "420")[(i // 8) % 2],
-                            progressive=(i // 16) % 2 == 1,
-                        )
-                    rows.append((i, "image", payload))
-                else:
-                    rows.append(
-                        (i, "audio", encode_wav(16000, 400 + (i % 7) * 40, i))
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
-
-    return df.select(id_col).mapInPandas(batches, schema=DECODABLE_MEDIA_SCHEMA)
-
-
-DECODED_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("mean_value", T.DoubleType()),
-    ]
-)
-
-
-def decoded_stats(media: DataFrame) -> DataFrame:
-    """The real-decode feature pass: decode each payload executor-side
-    (decode_media — actual netpbm/WAV parsing, not the digest stub)
-    and emit per-item stats: dimensions + integer-exact mean pixel
-    byte for images, sample_rate/frames + integer-exact mean |sample|
-    for audio. Same Arrow mapInPandas batch shape a real model-feature
-    pass uses; undecodable payloads fail loudly (a curation pipeline
-    would route them to a quarantine sink instead)."""
-
-    def batches(it: Iterator) -> Iterator:
-        import struct
-
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                d = decode_media(r.payload, r.kind)
-                if r.kind == "image":
-                    n = len(d["pixels"])
-                    # integer sum → one exact division: deterministic
-                    mean = sum(d["pixels"]) / n if n else 0.0
-                    rows.append(
-                        (r.media_id, r.kind, d["width"], d["height"], None, None, mean)
-                    )
-                else:
-                    pcm = d["pcm"]
-                    vals = struct.unpack(f"<{len(pcm) // 2}h", pcm)
-                    mean = (
-                        sum(abs(v) for v in vals) / len(vals) if vals else 0.0
-                    )
-                    rows.append(
-                        (
-                            r.media_id,
-                            r.kind,
-                            None,
-                            None,
-                            d["sample_rate"],
-                            d["n_frames"],
-                            mean,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "kind",
-                    "width",
-                    "height",
-                    "sample_rate",
-                    "n_samples",
-                    "mean_value",
-                ],
-            )
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        batches, schema=DECODED_STATS_SCHEMA
-    )
-
-
-def _digest_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Deterministic fake feature vector: md5 digest bytes scaled to
-    [0, 1). Stands in for a real encoder; stable across runs/engines."""
-    d = hashlib.md5(payload if payload is not None else b"").digest()
-    return [d[i % 16] / 256.0 for i in range(dim)]
-
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("sample_rate", T.IntegerType()),
-                    T.StructField("duration_ms", T.LongType()),
-                    T.StructField("codec", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
-
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("ts_ms", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-def _stub_resize_bytes(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in for a decoded+resized image: a digest
-    chain stretched to the target byte budget (width*height/256). A
-    real implementation decodes, resizes, re-encodes — same signature."""
-    if payload is None:
-        payload = b""
-    budget = max(16, (width * height) // 256)
-    out = bytearray()
-    seed = hashlib.md5(payload + f":{width}x{height}".encode()).digest()
-    while len(out) < budget:
-        out.extend(seed)
-        seed = hashlib.md5(seed).digest()
-    return bytes(out[:budget])
-
-
-def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize the image rows to (width, height); audio/video rows pass
-    through untouched. mapInPandas keeps the payloads executor-side and
-    Arrow-batched; the pixel work is the clearly-marked stub
-    (_stub_resize_bytes) — swapping in PIL is a pure function change.
-    Output schema == input schema (MEDIA_SCHEMA), so resize composes
-    with extract_features / sample_frames."""
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                meta = dict(r.meta)
-                payload = r.payload
-                if r.kind == "image":
-                    payload = _stub_resize_bytes(payload, width, height)
-                    meta["width"], meta["height"] = width, height
-                rows.append((r.media_id, r.kind, payload, meta))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "meta"]
-            )
-
-    return media.select("media_id", "kind", "payload", "meta").mapInPandas(
-        batches, schema=MEDIA_SCHEMA
-    )
-
-
-def sample_frames(
-    media: DataFrame, fps: float = 1.0, max_frames: int = 16
-) -> DataFrame:
-    """Sample frames from the video rows: one output row per sampled
-    frame at 1/fps spacing within duration_ms, capped at max_frames —
-    the decode-to-frames step of a video pipeline, with the frame
-    payload stubbed as a digest of (payload, frame_idx). A generating
-    mapInPandas: input rows fan OUT to frame rows, so the Arrow batch
-    shape (one DataFrame per yielded batch, arbitrary row count) is the
-    real contract a decoder would use. Non-video rows produce nothing."""
-    step_ms = int(1000.0 / fps)
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            out = []
-            for r in pdf.itertuples(index=False):
-                if r.kind != "video":
-                    continue
-                duration = int(r.meta["duration_ms"] or 0)
-                n = min(max_frames, max(0, duration // step_ms))
-                base = r.payload if r.payload is not None else b""
-                for i in range(n):
-                    out.append(
-                        (
-                            r.media_id,
-                            i,
-                            i * step_ms,
-                            hashlib.md5(base + f":frame:{i}".encode()).digest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_idx", "ts_ms", "payload"]
-            )
-
-    return media.select("media_id", "kind", "payload", "meta").mapInPandas(
-        batches, schema=FRAMES_SCHEMA
-    )
-
-
-def extract_features(
-    media: DataFrame, dim: int = FEATURE_DIM, engine: str = "jvm"
-) -> DataFrame:
+def extract_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
     """(media_id, kind, n_bytes, features[dim]) from the payload.
 
-    ``engine="jvm"`` (default): the digest stub is md5 math, which
-    whole-stage codegen computes without leaving the JVM — feature[i]
-    is digest byte ``i % 16`` scaled to [0,1), extracted from the md5
-    hex with substring/conv column expressions. This is the registered
-    path: paying an Arrow round-trip of every payload to compute
-    hash arithmetic was a measured 6x slowdown for zero fidelity.
-
-    ``engine="arrow"``: the mapInPandas path — Arrow-batched,
-    partition-parallel; the per-batch pandas loop is where a real
-    model's batched inference runs once codecs/weights exist. Kept
-    behind this parameter with the plan shape tested so swapping the
-    stub for real inference is a pure function change. Both engines
-    produce identical rows (pinned by test_multimodal).
+    The digest stub is md5 math, which whole-stage codegen computes
+    without leaving the JVM — feature[i] is digest byte ``i % 16``
+    scaled to [0,1), extracted from the md5 hex with substring/conv
+    column expressions. Paying an Arrow round-trip of every payload to
+    compute hash arithmetic was a measured 6x slowdown for zero
+    fidelity.
     """
-    if engine == "jvm":
-        pay = F.coalesce(F.col("payload"), F.encode(F.lit(""), "utf-8"))
-        h = F.md5(pay)
-        feats = F.array(
-            *[
-                F.conv(F.substring(h, 2 * (i % 16) + 1, 2), 16, 10).cast("int")
-                / F.lit(256.0)
-                for i in range(dim)
-            ]
-        )
-        return media.select(
-            "media_id",
-            "kind",
-            F.coalesce(F.octet_length("payload"), F.lit(0))
-            .cast("long")
-            .alias("n_bytes"),
-            feats.alias("features"),
-        )
-    if engine != "arrow":
-        raise ValueError(f"unknown engine {engine!r} (expected 'jvm' or 'arrow')")
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["payload"].map(
-                        lambda b: 0 if b is None else len(b)
-                    ),
-                    "features": pdf["payload"].map(
-                        lambda b: _digest_features(b, dim)
-                    ),
-                }
-            )
-            yield out
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        batches, schema=FEATURES_SCHEMA
+    pay = F.coalesce(F.col("payload"), F.encode(F.lit(""), "utf-8"))
+    h = F.md5(pay)
+    feats = F.array(
+        *[
+            F.conv(F.substring(h, 2 * (i % 16) + 1, 2), 16, 10).cast("int")
+            / F.lit(256.0)
+            for i in range(dim)
+        ]
     )
-
-
-DSP_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("brightness", T.DoubleType()),
-        T.StructField("contrast", T.DoubleType()),
-        T.StructField("edge_energy", T.DoubleType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("zcr", T.DoubleType()),
-        T.StructField("dominant_hz", T.DoubleType()),
-    ]
-)
-
-
-def dsp_features(media: DataFrame, fft_window: int = 4096) -> DataFrame:
-    """REAL signal features over decoded payloads (numpy, executor-side
-    over Arrow batches — payloads never reach the driver):
-
-    - image (netpbm/PNG/BMP via decode_media): ``brightness`` (mean
-      gray byte), ``contrast`` (population std), ``edge_energy``
-      (mean |horizontal gradient| of the gray plane — the blur/
-      flat-image detector a vision-data curation pass filters on).
-    - audio (WAV PCM16): ``rms`` amplitude, ``zcr`` (zero-crossing
-      rate per sample — separates tonal from noisy clips),
-      ``dominant_hz`` (argmax |rFFT| over the first ``fft_window``
-      samples, excluding DC — numpy FFT, deterministic).
-
-    This is the step beyond decoded_stats' byte means: actual DSP a
-    training-data pipeline runs to score/filter media before paying
-    for model embeddings. Video stays a labeled decode gap
-    (decode_media raises NotImplementedError)."""
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                d = decode_media(r.payload, r.kind)
-                if r.kind == "image":
-                    px = np.frombuffer(d["pixels"], dtype=np.uint8).astype(np.float64)
-                    ch = d["channels"]
-                    gray = (
-                        px.reshape(d["height"], d["width"], ch).mean(axis=2)
-                        if ch > 1
-                        else px.reshape(d["height"], d["width"])
-                    )
-                    edge = (
-                        float(np.abs(np.diff(gray, axis=1)).mean())
-                        if d["width"] > 1
-                        else 0.0
-                    )
-                    rows.append(
-                        (
-                            r.media_id,
-                            r.kind,
-                            float(gray.mean()),
-                            float(gray.std()),
-                            edge,
-                            None,
-                            None,
-                            None,
-                        )
-                    )
-                else:
-                    x = np.frombuffer(d["pcm"], dtype="<i2").astype(np.float64)
-                    if d["channels"] > 1:
-                        x = x.reshape(-1, d["channels"]).mean(axis=1)
-                    n = len(x)
-                    rms = float(np.sqrt((x**2).mean())) if n else 0.0
-                    zcr = (
-                        float((np.signbit(x[1:]) != np.signbit(x[:-1])).mean())
-                        if n > 1
-                        else 0.0
-                    )
-                    win = x[:fft_window]
-                    if len(win) > 1:
-                        mag = np.abs(np.fft.rfft(win))
-                        mag[0] = 0.0  # exclude DC
-                        k = int(mag.argmax())
-                        dom = k * d["sample_rate"] / len(win)
-                    else:
-                        dom = 0.0
-                    rows.append(
-                        (r.media_id, r.kind, None, None, None, rms, zcr, float(dom))
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in DSP_SCHEMA.fields])
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        batches, schema=DSP_SCHEMA
+    return media.select(
+        "media_id",
+        "kind",
+        F.coalesce(F.octet_length("payload"), F.lit(0))
+        .cast("long")
+        .alias("n_bytes"),
+        feats.alias("features"),
     )
-
-
-PHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("phash", T.LongType()),
-    ]
-)
-
-
-def perceptual_hash(media: DataFrame) -> DataFrame:
-    """64-bit dHash perceptual fingerprint per IMAGE row (public
-    difference-hash recipe): decode, gray-average the channels, sample
-    the plane down to an 8x9 grid (deterministic nearest-index
-    sampling — robust to arbitrary input sizes, including images
-    smaller than the grid), then one bit per horizontally-adjacent
-    cell pair (left > right). Near-duplicate images (recompressed,
-    lightly edited, slightly resized) land within a few bits; the
-    Hamming-banded `image_near_dup_pairs` turns that into a join.
-    Non-image rows are skipped (audio fingerprinting would be a
-    spectral variant of the same shape)."""
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in it:
-            for r in pdf.itertuples(index=False):
-                if r.kind != "image":
-                    continue
-                d = decode_media(r.payload, r.kind)
-                px = np.frombuffer(d["pixels"], dtype=np.uint8).astype(np.float64)
-                ch = d["channels"]
-                gray = (
-                    px.reshape(d["height"], d["width"], ch).mean(axis=2)
-                    if ch > 1
-                    else px.reshape(d["height"], d["width"])
-                )
-                h, w = gray.shape
-                ri = (np.arange(8) * h) // 8
-                ci = (np.arange(9) * w) // 9
-                g = gray[ri][:, ci]  # (8, 9)
-                bits = (g[:, :-1] > g[:, 1:]).flatten()  # 64 bits row-major
-                v = 0
-                for bit in bits:
-                    v = (v << 1) | int(bit)
-                # wrap to signed 64-bit (Spark LongType)
-                if v >= 1 << 63:
-                    v -= 1 << 64
-                rows.append((r.media_id, v))
-            if rows:
-                yield pd.DataFrame(rows, columns=["media_id", "phash"])
-                rows = []
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        batches, schema=PHASH_SCHEMA
-    )
-
-
-def image_near_dup_pairs(media: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """(a, b, hamming) pairs of near-duplicate images: dHash
-    fingerprints paired by the same EXACT pigeonhole banding as text
-    SimHash (operators/dedup.simhash_segments at bits=64 — any pair
-    within the radius shares one of max_hamming+1 exact segments),
-    verified by xor+bit_count. Value-space banding keeps candidate
-    work bounded by DISTINCT fingerprints; the expansion join back to
-    media ids is the result itself. The multimodal member of the
-    dedup family — same scale shape, different modality."""
-    from mapreduce_kmeans_clustering_spark.operators.dedup import simhash_segments
-
-    ph = perceptual_hash(media).localCheckpoint(eager=False)
-    vals = ph.select(F.col("phash").alias("simhash")).distinct()
-    segs = simhash_segments(
-        vals.withColumn("_v", F.col("simhash")), max_hamming, bits=64, id_col="_v"
-    )
-    a = segs.select(F.col("simhash").alias("va"), "seg", "val")
-    b = segs.select(F.col("simhash").alias("vb"), "seg", "val")
-    ham = F.bit_count(F.col("va").bitwiseXOR(F.col("vb")))
-    vpairs = (
-        a.join(b, ["seg", "val"])
-        .where(F.col("va") < F.col("vb"))
-        .select("va", "vb", ham.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    ia = ph.select(F.col("media_id").alias("a"), F.col("phash").alias("va"))
-    ib = ph.select(F.col("media_id").alias("b"), F.col("phash").alias("vb"))
-    cross = (
-        vpairs.join(ia, "va").join(ib, "vb").select("a", "b", "hamming")
-    )
-    # identical fingerprints (hamming 0) expand id-ordered within group
-    same = (
-        ia.join(
-            ib.withColumnRenamed("vb", "va"),
-            "va",
-        )
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", F.lit(0).alias("hamming"))
-    )
-    return cross.where(F.col("a") != F.col("b")).select(
-        F.least("a", "b").alias("a"),
-        F.greatest("a", "b").alias("b"),
-        "hamming",
-    ).unionByName(same).distinct()

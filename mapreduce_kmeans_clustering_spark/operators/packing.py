@@ -211,93 +211,3 @@ def length_buckets_approx(
         .alias("bucket"),
     )
     return _bucket_waste(b)
-
-
-def pack_bins_ffd(
-    docs: DataFrame,
-    pack_len: int = 2048,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """First-fit-decreasing bin packing per group: docs sorted by
-    (n_tokens desc, id) each land in the first bin with room — the
-    classic waste-minimizing layout (FFD uses at most 11/9·OPT+6/9
-    bins, vs pack_sequences' concatenate-then-chunk which never wastes
-    a token but splits documents across sequence boundaries). Use FFD
-    when training wants whole documents per sequence (no straddling)
-    and minimal padding; docs longer than ``pack_len`` get a bin of
-    their own (flagged ``oversize`` — a loader truncates or routes
-    them to chunking).
-
-    Not SQL-expressible (the greedy bin state is inherently
-    sequential), so this is a tested API rather than an oracle-
-    registered query; determinism comes from the total (n_tokens desc,
-    id) order. Scale shape: one shuffle on ``group_col``, then each
-    group packs independently inside one applyInPandas task — the
-    same per-shard parallelism contract as pack_sequences, and the
-    greedy loop is O(docs·bins_open) with a bisect over bin
-    capacities."""
-    import pandas as pd
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["n_tokens", id_col], ascending=[False, True]
-        ).reset_index(drop=True)
-        space: list[int] = []  # remaining capacity per open bin
-        bins = []
-        for n in pdf["n_tokens"]:
-            n = int(n)
-            placed = -1
-            for b, rem in enumerate(space):
-                if rem >= n:
-                    placed = b
-                    break
-            if placed < 0:
-                space.append(max(pack_len - n, 0))
-                placed = len(space) - 1
-            else:
-                space[placed] -= n
-            bins.append(placed)
-        out = pdf[[group_col, id_col, "n_tokens"]].copy()
-        out["bin_id"] = pd.array(bins, dtype="int64")
-        out["oversize"] = out["n_tokens"] > pack_len
-        return out
-
-    t = docs.select(
-        F.col(group_col),
-        F.col(id_col),
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"),
-    )
-    return t.groupBy(group_col).applyInPandas(
-        pack,
-        schema=f"{group_col} string, {id_col} long, n_tokens long, "
-        "bin_id long, oversize boolean",
-    )
-
-
-def packing_efficiency(
-    packed: DataFrame, pack_len: int = 2048, group_col: str = "source"
-) -> DataFrame:
-    """Per-group packing scorecard for a pack_bins_ffd result: bins
-    used, token utilization (sum tokens / bins*pack_len, counting an
-    oversize bin at its own length), and the padding waste fraction."""
-    per_bin = packed.groupBy(group_col, "bin_id").agg(
-        F.sum("n_tokens").alias("fill"),
-        F.max(
-            F.when(F.col("oversize"), F.col("n_tokens")).otherwise(
-                F.lit(int(pack_len))
-            )
-        ).alias("cap"),
-    )
-    return per_bin.groupBy(group_col).agg(
-        F.count("*").cast("long").alias("n_bins"),
-        F.sum("fill").cast("long").alias("sum_tokens"),
-        (F.sum("fill").cast("double") / F.sum("cap").cast("double")).alias(
-            "utilization"
-        ),
-        (
-            F.lit(1.0)
-            - F.sum("fill").cast("double") / F.sum("cap").cast("double")
-        ).alias("pad_waste"),
-    )

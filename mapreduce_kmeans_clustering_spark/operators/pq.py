@@ -172,68 +172,6 @@ def pq_encode(
     )
 
 
-_ENC_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("codes", T.ArrayType(T.IntegerType())),
-        T.StructField("recon_sqdist", T.DoubleType()),
-    ]
-)
-
-
-def pq_encode_blas(
-    vectors: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Production encode twin: a mapInArrow pass computing all m
-    argmins per batch with one numpy distance block per subspace
-    ((N, ksub) sqdists via the expansion |x|^2 - 2xC^T + |c|^2 —
-    O(N*ksub*sub) BLAS flops, no per-row interpretation; the vectors
-    read from the Arrow value buffer, functions/arrow.py). np.argmin
-    takes the FIRST minimum, preserving the lowest-code tie-break.
-    Same verdicts as `pq_encode` on real data (pinned in
-    tests/test_pq.py); float-sum ORDER differs (pairwise numpy
-    reduction vs left-associated HOF), so last-ulp recon drift is
-    possible — the oracle-gated registered query stays on the
-    expression form, the established BLAS-twin convention
-    (plans/kmeans_nd.py, dedup.semantic_dedup_blas)."""
-    import numpy as np
-
-    from mapreduce_kmeans_clustering_spark.functions.arrow import _batch, _vectors
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    books = np.array(codebooks, dtype=np.float64)  # (m, ksub, sub)
-    bnorm = (books**2).sum(axis=2)  # (m, ksub)
-
-    def enc(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ids = np.asarray(batch.column("_id"), np.int64)
-            xs = _vectors(batch, "_v", m * sub).reshape(-1, m, sub)  # (N, m, sub)
-            codes = np.empty((len(ids), m), dtype=np.int32)
-            recon = np.zeros(len(ids), dtype=np.float64)
-            for s in range(m):
-                d = (
-                    (xs[:, s, :] ** 2).sum(axis=1)[:, None]
-                    - 2.0 * xs[:, s, :] @ books[s].T
-                    + bnorm[s][None, :]
-                )  # (N, ksub)
-                c = d.argmin(axis=1)
-                codes[:, s] = c
-                # exact chosen sub-distance (the expansion form can go
-                # slightly negative on near-zero distances)
-                recon += ((xs[:, s, :] - books[s][c]) ** 2).sum(axis=1)
-            yield _batch(vec_id=ids, codes=codes, recon_sqdist=recon)
-
-    return vectors.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    ).mapInArrow(enc, schema=_ENC_SCHEMA)
-
-
 def pq_decode(encoded: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """``encoded`` plus ``_dec``, the reconstructed vector: the concat of
     each subspace's selected codeword, indexed out of the constant
@@ -449,8 +387,8 @@ def ivfpq_topk(
     Candidate work per query is |corpus| * nprobe / nlist pairs over
     4-byte codes; the exact vectors are touched only at scan time.
     Expression form throughout (bit-matched by the q_ann_ivfpq
-    oracle); the BLAS/LUT twins for each stage exist on the flat-PQ
-    path (pq_encode_blas / pq_adc_topk_lut) and compose the same way."""
+    oracle); the flat-PQ path's LUT twin (pq_adc_topk_lut) composes
+    the same way."""
     from mapreduce_kmeans_clustering_spark.operators.similarity import ivf_assign
 
     if assigned is None:

@@ -31,17 +31,6 @@ def quantize_expr(v: Column) -> tuple[Column, Column]:
     return scale, q
 
 
-def quantize_embeddings(
-    embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """(id, scale, q): symmetric int8 codes per vector."""
-    v = _as_double(F.col(vec_col))
-    scale, q = quantize_expr(v)
-    return embeddings.select(
-        F.col(id_col), scale.alias("scale"), q.alias("q")
-    )
-
-
 def quantization_error(
     embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:

@@ -130,39 +130,6 @@ def cap_per_key(
     )
 
 
-def shuffle_key(id_col: Column | str, salt: str = "shuf:") -> Column:
-    """Deterministic global-shuffle sort key: md5(salt || id). Sorting
-    or range-partitioning by it gives training-data order that is (a)
-    statistically random w.r.t. any data attribute, (b) identical
-    across re-runs/engines, (c) re-shuffleable by changing the salt
-    per epoch — the scale-safe replacement for random.shuffle over a
-    corpus that does not fit anywhere."""
-    c = F.col(id_col) if isinstance(id_col, str) else id_col
-    return F.md5(F.concat(F.lit(salt), c.cast("string")))
-
-
-def write_shuffled(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    num_files: int = 16,
-    salt: str = "shuf:",
-) -> None:
-    """Materialize the corpus in deterministic-shuffled order: range-
-    partition + sort on the hash key (one shuffle; balanced files via
-    sampled ranges), drop the key. Readers stream files in name order
-    and see a reproducible random permutation; vary ``salt`` per epoch
-    for a fresh order."""
-    keyed = df.withColumn("__sk", shuffle_key(id_col, salt))
-    (
-        keyed.repartitionByRange(num_files, "__sk")
-        .sortWithinPartitions("__sk")
-        .drop("__sk")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def temperature_weights(
     group_mass: DataFrame,
     mass_col: str = "mass",
@@ -346,26 +313,6 @@ def parity_copy_counts(
             .cast("int")
             .alias("n_copies"),
         )
-    )
-
-
-def oversample_to_parity(
-    df: DataFrame,
-    label_col: str = "label",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Materialized class-parity epoch: each row of ``df`` replicated
-    ``n_copies`` times (see ``parity_copy_counts``), with ``copy_idx``
-    distinguishing the replicas so downstream shuffling/sharding sees
-    distinct rows. explode(sequence(...)) keeps the replication
-    executor-side and lazy — no row ever transits the driver."""
-    plan = parity_copy_counts(df, label_col=label_col, id_col=id_col)
-    return (
-        df.join(plan.select(id_col, "n_copies"), id_col)
-        .withColumn(
-            "copy_idx", F.explode(F.sequence(F.lit(1), F.col("n_copies")))
-        )
-        .drop("n_copies")
     )
 
 

@@ -289,37 +289,6 @@ def web_curation(
     return survivors.unionByName(dups)
 
 
-def domain_stats(
-    docs: DataFrame,
-    url_col: str = "url",
-    score_col: str = "n_chars",
-    id_col: str = "doc_id",
-    extra_suffixes: tuple[str, ...] = (),
-) -> DataFrame:
-    """Per-registrable-domain aggregation — the curation dashboard
-    row: document count, distinct-host count, mean score. One hash
-    aggregate (map-side partial for count/sum; the distinct-host count
-    is the standard two-phase distinct aggregate on (domain, host) —
-    still combiner-friendly because hosts per domain are few).
-    Output: (domain, n_docs, n_hosts, avg_score). NULL-URL docs land
-    on one NULL-domain dashboard row (n_hosts 0 — countDistinct skips
-    NULL hosts), which is the right report for a crawl-health view."""
-    dom = registrable_domain_expr(F.col(url_col), extra_suffixes)
-    return (
-        docs.select(
-            dom.alias("domain"),
-            host_expr(F.col(url_col)).alias("_host"),
-            F.col(score_col).alias("_s"),
-        )
-        .groupBy("domain")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.countDistinct("_host").cast("long").alias("n_hosts"),
-            F.round(F.avg("_s"), 4).alias("avg_score"),
-        )
-    )
-
-
 def extend_url_index(index_urls: DataFrame, verdicts: DataFrame) -> DataFrame:
     """Index maintenance for the streaming URL-dedup loop — the URL
     twin of ``dedup.extend_band_index``: append a batch's KEPT

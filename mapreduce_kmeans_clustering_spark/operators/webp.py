@@ -1,6 +1,6 @@
-"""WebP lossless (VP8L) decode + encode in pure stdlib — closing the
-WebP gap in ``decode_media`` (VERDICT r5 item 6 / r6 item 9) without a
-codec library, the same posture as ``operators/jpeg.py``.
+"""WebP lossless (VP8L) decode + encode in pure stdlib, without a codec
+library. No query, runbook step or benchmark reaches this module; it
+stays only until its deletion (ROADMAP item 5).
 
 Scope (honest, test-pinned):
 
@@ -21,12 +21,6 @@ Scope (honest, test-pinned):
   coded), and a trivial meta-prefix image. Compression is
   deliberately naive; the point is spec-valid bytes whose decode is
   checked against the known source pixels.
-
-Reference parity note: the reference repo has no media path at all —
-this module exists for the multimodal-column extension surface
-(SURVEY §2 extensions; decode runs executor-side under Arrow
-``mapInPandas`` like the other codecs, payloads never touch the
-driver).
 
 Bit order: VP8L is LSB-first within bytes for ReadBits; prefix-code
 bits are consumed MSB-of-code-first while walking the canonical tree

@@ -151,134 +151,6 @@ def _farthest_round_df(
     )
 
 
-def _min_dist2_nd(
-    vectors: DataFrame,
-    centers: list[list[float]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(id, vec, d2): squared Euclidean distance to the nearest of
-    ``centers`` — the BLAS twin of assign_nd that keeps the distance
-    value (assign_nd drops the per-row ||a||^2 term because argmin
-    doesn't need it; the k-means|| sampler does)."""
-    import numpy as np
-
-    from mapreduce_kmeans_clustering_spark.functions.arrow import _passthrough, _vectors
-
-    C = np.asarray(centers, dtype=np.float64)  # rides the closure
-    dim = C.shape[1]
-    c_sq = (C * C).sum(axis=1)
-
-    def gen(batches):
-        for batch in batches:
-            A = _vectors(batch, vec_col, dim)
-            a_sq = (A * A).sum(axis=1)
-            d = a_sq[:, None] - 2.0 * (A @ C.T) + c_sq[None, :]
-            d2 = np.maximum(d.min(axis=1), 0.0)
-            yield _passthrough(batch, id_col, vec_col, d2=d2)
-
-    schema = f"{id_col} long, {vec_col} array<double>, d2 double"
-    return vectors.select(id_col, vec_col).mapInArrow(gen, schema)
-
-
-def init_kmeans_parallel_nd(
-    vectors: DataFrame,
-    k: int,
-    rounds: int = 5,
-    oversample: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    salt: str = "kpp",
-) -> list[list[float]]:
-    """Deterministic k-means|| seeding (Bahmani et al., VLDB'12 —
-    "Scalable K-Means++"): ``rounds`` passes each sampling ~``l``
-    candidates with probability l*d2/phi, then a driver-side weighted
-    Lloyd on the ~rounds*l candidates reduces them to k seeds.
-
-    The paper's coin flips are replaced by a pure hash function of
-    (salt, round, id) — u52(id) < l*d2(x)/phi — so the candidate set
-    is a deterministic function of the data: re-runs, retries, and
-    partitionings agree (same policy as operators/sampling.py).
-
-    Scale shape per round: one Arrow/BLAS pass for d2 (scan-local, no
-    shuffle), a 1-row sum for phi, and a collect of ~l sampled rows.
-    Driver state is O(rounds * l * dim); the full corpus never leaves
-    the executors — this is THE practical seeding at 100 TB, where
-    k sequential farthest-point scans (init_farthest_nd) cost k
-    passes but k-means|| costs ``rounds`` regardless of k.
-    """
-    import numpy as np
-
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    l = oversample or 2 * k
-    first = vectors.select(id_col, vec_col).orderBy(id_col).limit(1).collect()[0]
-    centers: list[list[float]] = [[float(x) for x in first[1]]]
-
-    for r in range(rounds):
-        d2 = _min_dist2_nd(vectors, centers, id_col, vec_col)
-        d2 = d2.localCheckpoint(eager=False)  # one computation, two uses
-        phi = d2.agg(F.sum("d2")).collect()[0][0]
-        if not phi or phi <= 0.0:  # all points already ON a center
-            break
-        u = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(f"{salt}:{r}:"), F.col(id_col).cast("string")
-                        )
-                    ),
-                    1,
-                    13,
-                ),
-                16,
-                10,
-            ).cast("double")
-            / F.lit(float(1 << 52))
-        )
-        picked = (
-            d2.where(u < F.lit(float(l)) * F.col("d2") / F.lit(float(phi)))
-            .select(id_col, vec_col)
-            .collect()
-        )
-        # ~l rows: sorted by id on the driver, not by a range-partitioned sort
-        picked.sort(key=lambda row: row[0])
-        centers.extend([float(x) for x in row[1]] for row in picked)
-
-    # weight candidates by how many points they win, then reduce to k
-    # seeds with a weighted Lloyd on the driver (candidate set is tiny)
-    counts = {
-        row["cluster"]: row["n"]
-        for row in assign_nd(vectors, centers, id_col, vec_col)
-        .groupBy("cluster")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    cand = np.asarray(centers, dtype=np.float64)
-    w = np.array([float(counts.get(i, 0)) for i in range(len(centers))])
-    if len(cand) <= k:
-        return [list(map(float, c)) for c in cand]
-    # deterministic init: heaviest candidates first, ties to lower index
-    order = sorted(range(len(cand)), key=lambda i: (-w[i], i))[:k]
-    seeds = cand[order].copy()
-    for _ in range(100):
-        d = ((cand[:, None, :] - seeds[None, :, :]) ** 2).sum(axis=2)
-        a = d.argmin(axis=1)
-        new = np.vstack(
-            [
-                np.average(cand[a == j], axis=0, weights=w[a == j])
-                if (w[a == j].sum() > 0)
-                else seeds[j]
-                for j in range(k)
-            ]
-        )
-        if np.array_equal(new, seeds):
-            break
-        seeds = new
-    return [list(map(float, s)) for s in seeds]
-
-
 def assign_nd(
     vectors: DataFrame,
     centroids: list[list[float]],

@@ -574,7 +574,6 @@ def q_events_seasonal(spark, sf_dir):
     ).orderBy("event_type", "day")
 
 
-TREND_HALF_LIFE_DAYS = 7
 TREND_MAX_WEEKS = 8
 TREND_TOP = 10
 
@@ -787,8 +786,7 @@ FROM r CROSS JOIN t WHERE rank <= 10""")
 def q_key_skew(spark, sf_dir):
     """Key-distribution profiler: the 10 hottest user_ids with their
     share of all events — the diagnostic that decides whether a join or
-    window needs the salting hatch (operators/joins.py,
-    functions/skew.py). One aggregate + a broadcast of the 1-row
+    window needs the salting hatch (operators/joins.py). One aggregate + a broadcast of the 1-row
     total; the ranking runs over the already-reduced per-key counts."""
     ev = _events(spark, sf_dir)
     counts = ev.groupBy("user_id").agg(F.count("*").cast("long").alias("n_events"))

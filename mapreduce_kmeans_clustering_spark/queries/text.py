@@ -744,8 +744,7 @@ SELECT doc_id, CAST(dim AS INT) AS dim, count(*) AS weight
 FROM t GROUP BY 1, 2""")
 def q_text_hashtf(spark, sf_dir):
     """Hashing-trick TF features in exploded (doc, dim, weight) form —
-    the text→vector bridge (dense twin: text.hashed_tf, pinned equal
-    in tests). md5-derived buckets so the oracle replays the hash."""
+    the text→vector bridge. md5-derived buckets so the oracle replays the hash."""
     docs = _docs(spark, sf_dir)
     t = docs.select(
         "doc_id", F.explode(TX.tokens(F.col("text"))).alias("tok")

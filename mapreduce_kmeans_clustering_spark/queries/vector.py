@@ -955,11 +955,6 @@ def q_dedup_semantic(spark, sf_dir):
     )
 
 
-_PLANE_BUCKET = " + ".join(
-    f"CASE WHEN list_inner_product(v, {lit}) > 0 THEN {1 << p} ELSE 0 END"
-    for p, lit in enumerate(SIM.sql_plane_literal())
-)
-
 COV_DIMS = 8
 
 
@@ -1010,8 +1005,7 @@ def q_embed_cov(spark, sf_dir):
     order-independent; the covariance combination rides DECIMAL(38,0)
     (n·P_ij − S_i·S_j overflows long past ~sf1) with one final
     double division chain. Single map-side-combined aggregate — no
-    explode, no join, 45 accumulator columns; the BLAS-twin for the
-    full 64-dim Gram lives in operators/pca.py moments_nd."""
+    explode, no join, 45 accumulator columns."""
     e = _emb(spark, sf_dir)
     D = COV_DIMS
     qs = [

@@ -57,9 +57,9 @@ def q_sample_mix(spark, sf_dir):
     return out.select("doc_id", "source")
 
 
-# Multimodal: the digest-stub feature math is md5-over-utf8, so even the
-# mapInPandas path has an exact DuckDB oracle (the checksum terms are
-# binary fractions i/256 — rounding is exact in both engines).
+# Multimodal: the digest-stub feature math is md5-over-utf8, so it has
+# an exact DuckDB oracle (the checksum terms are binary fractions i/256
+# — rounding is exact in both engines).
 @query(oracle="""
 WITH m AS (
   SELECT doc_id AS media_id,
@@ -1182,8 +1182,7 @@ SELECT domain, count(*)::BIGINT AS n_docs,
          AS avg_chars
 FROM g GROUP BY domain""")
 def q_domain_stats(spark, sf_dir):
-    """Per-registrable-domain curation dashboard row
-    (operators/web.domain_stats): doc count, distinct hosts, mean
+    """Per-registrable-domain curation dashboard row: doc count, distinct hosts, mean
     n_chars (half-up 4-dp so both engines agree). One hash aggregate."""
     d = _docs(spark, sf_dir).select(
         "doc_id", "n_chars", _url_col().alias("url")

@@ -22,33 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    max_records_per_file: int = 5_000_000,
-    coalesce_per_value: bool = True,
-) -> None:
-    """Write df as parquet partitioned by ``partition_by``.
-
-    ``coalesce_per_value=False`` skips the pre-shuffle and keeps the
-    upstream partitioning — use when the writer already fans out of a
-    shuffle keyed on the partition columns."""
-    out = df.repartition(*partition_by) if coalesce_per_value else df
-    (
-        out.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Plain parquet read; partition columns come back from directory
-    names, and filters on them prune at planning time."""
-    return spark.read.parquet(path)
-
-
 def upsert_partitions(
     df: DataFrame,
     path: str,

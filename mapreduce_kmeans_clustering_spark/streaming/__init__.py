@@ -1,31 +1,3 @@
-from mapreduce_kmeans_clustering_spark.streaming.events import (
-    hourly_event_counts,
-    read_events_stream,
-    running_user_totals,
-    sessionized_event_stats,
-    stream_exact_dedup,
-    stream_view_click_join,
-)
-from mapreduce_kmeans_clustering_spark.streaming.ingest import (
-    read_documents_stream,
-    stream_corpus_ingest,
-)
-from mapreduce_kmeans_clustering_spark.streaming.kmeans_stream import (
-    stream_assign,
-    stream_assign_with_refresh,
-    stream_cluster_counts,
-)
-
-__all__ = [
-    "hourly_event_counts",
-    "read_events_stream",
-    "running_user_totals",
-    "sessionized_event_stats",
-    "stream_exact_dedup",
-    "stream_view_click_join",
-    "read_documents_stream",
-    "stream_corpus_ingest",
-    "stream_assign",
-    "stream_assign_with_refresh",
-    "stream_cluster_counts",
-]
+"""Streaming legs of the batch curation indexes (``streaming.ingest``):
+each screens or scores an arriving document stream against a stored
+index, with the same per-epoch, replay-safe output layout."""

@@ -1,96 +1,31 @@
-"""Continuous corpus ingest: the streaming twin of the batch curation
-path — documents arrive as JSONL files, each micro-batch is deduped
-against the historical corpus AND within itself, split/shard-assigned
-with the same md5 buckets as the batch pipeline (a doc's split never
-depends on when it arrived), and handed off in the sharded JSONL
-layout a tokenizer/loader consumes.
+"""Continuous corpus ingest: the streaming legs of the batch curation
+indexes. Each leg screens or scores an arriving document stream
+against a STORED index (MinHash bands, normalized URLs, boilerplate
+lines, a Bloom filter, a DSIR profile, a passage gram index) and
+writes one verdict row per batch doc; the legs that maintain an index
+also write the batch's own index under an underscore-hidden side
+path, folded in between runs by the batch operator's merge.
 
 Exactly-once contract: every micro-batch writes to its own
 ``ingest_batch=<epoch>`` directory with mode=overwrite, so a replayed
 epoch (checkpoint recovery) overwrites its own output instead of
 duplicating it — the standard idempotent file-sink pattern when the
-target isn't a transactional table. Downstream reads
-``ingest_batch=*/split=*/shard=*``.
+target isn't a transactional table.
 
-Scale notes: the historical side enters the anti-join as its DISTINCT
-hash column only (never the corpus rows); in-batch first-claim is a
-window over the *batch* (bounded by maxFilesPerTrigger), not the
-stream; state on the streaming side is only the file-source log —
-dedup state lives in the corpus hash relation the caller maintains,
-which is the right place at 100 TB (a watermark cannot bound
-"ever seen before" semantics).
+Scale notes: the stored index is materialized once and reused by
+every micro-batch, so per-batch cost is O(batch) plus one equi-join
+into the index, never corpus work; state on the streaming side is only
+the file-source log — the index lives in a relation the caller
+maintains, which is the right place at 100 TB (a watermark cannot
+bound "ever seen before" semantics).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
-
-from mapreduce_kmeans_clustering_spark import schemas
-
-
-def read_documents_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 4
-) -> DataFrame:
-    """File-source JSONL document stream with the explicit canonical
-    schema (no inference pass) and bounded micro-batches."""
-    return (
-        spark.readStream.schema(schemas.DOCUMENTS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(path)
-    )
-
-
-def stream_corpus_ingest(
-    docs_stream: DataFrame,
-    corpus_hashes: DataFrame,
-    out_path: str,
-    checkpoint_dir: str,
-    n_shards: int = 8,
-) -> StreamingQuery:
-    """Start the ingest query (``availableNow`` trigger: drain what
-    exists, then stop — call again on a schedule for continuous
-    operation, or swap the trigger for processingTime).
-
-    ``corpus_hashes``: one-column DataFrame ``h`` of md5(text) hex for
-    everything already in the corpus. Per batch: drop docs whose hash
-    is in the corpus (dup_of_corpus), keep only the lowest-doc_id
-    claimant of each hash within the batch (dup_in_batch), tag
-    split/shard, write ``ingest_batch=<epoch>/split=…/shard=…``.
-    """
-    from mapreduce_kmeans_clustering_spark.operators.curation import split_assign
-    from mapreduce_kmeans_clustering_spark.sources.documents import (
-        write_documents_jsonl_sharded,
-    )
-
-    hashes = corpus_hashes.select(F.col("h")).distinct()
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        hashed = batch_df.withColumn(
-            "__h", F.md5(F.coalesce(F.col("text"), F.lit("")))
-        )
-        fresh = hashed.join(
-            hashes, hashed["__h"] == hashes["h"], "left_anti"
-        )
-        w = Window.partitionBy("__h").orderBy("doc_id")
-        first = (
-            fresh.withColumn("__r", F.row_number().over(w))
-            .where(F.col("__r") == 1)
-            .drop("__h", "__r")
-        )
-        tagged = split_assign(first, n_shards=n_shards)
-        write_documents_jsonl_sharded(
-            tagged, f"{out_path}/ingest_batch={epoch_id}"
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_near_dedup_ingest(
@@ -107,12 +42,11 @@ def stream_near_dedup_ingest(
     """NEAR-dup screening of an arriving document stream against the
     ingested corpus — the streaming composition of
     ``operators/dedup.incremental_minhash_dedup`` (VERDICT r8 item 6):
-    where ``stream_corpus_ingest`` drops only exact md5 re-arrivals,
     this query flags arriving docs that are near-COPIES of ingested
     ones, writing one verdict row per batch doc (doc_id, status
     'near_dup' | 'new', dup_of, jaccard) as parquet under
-    ``ingest_batch=<epoch>`` (idempotent overwrite — the same
-    replay-safe per-epoch layout as the exact-hash ingest).
+    ``ingest_batch=<epoch>`` (idempotent overwrite — the module's
+    replay-safe per-epoch layout).
 
     Scale shape: the corpus participates only through its banded
     MinHash table, materialized ONCE here (eager localCheckpoint) and

@@ -135,12 +135,12 @@ def test_assign_matches_numpy_argmin_bit_for_bit(spark, tmp_path):
     labels = np.array([got[i] for i in range(len(pts))])
     assert np.array_equal(labels, want)
 
-    from mapreduce_kmeans_clustering_spark.streaming import stream_assign
-
+    # the same operator over a stream is a stream-static join
     src = str(tmp_path / "pts")
     df.write.parquet(src)
     stream = spark.readStream.schema(df.schema).parquet(src)
-    q = stream_assign(stream, cents).writeStream.format("memory").queryName("assign_lattice").start()
+    labeled = assign(stream, cents, keep_cols=["rid"])
+    q = labeled.writeStream.format("memory").queryName("assign_lattice").start()
     try:
         q.processAllAvailable()
     finally:

@@ -498,17 +498,13 @@ def test_scrub_contaminated_spans_excises_exact_spans(spark):
     }
 
 
-@pytest.mark.slow  # >=12 s in the idle full run (r13)
-def test_scrub_seam_caveat_and_until_clean_convergence(spark):
+def test_scrub_seam_caveat(spark):
     """The pinned honest limit: excising a span can join its neighbors
-    into a NEW benchmark n-gram (one pass leaves it), and
-    scrub_until_clean iterates to a guaranteed-clean fixpoint."""
+    into a NEW benchmark n-gram, and one pass leaves it."""
     from pyspark.sql import functions as F
 
     from mapreduce_kmeans_clustering_spark.operators.curation import (
-        contamination_report,
         scrub_contaminated_spans,
-        scrub_until_clean,
     )
 
     # benchmark holds "x1 x2 x3" and "b c d"; the train doc's span
@@ -520,40 +516,6 @@ def test_scrub_seam_caveat_and_until_clean_convergence(spark):
     one = scrub_contaminated_spans(docs, pred).collect()[0]
     assert one["scrubbed_text"] == "a b c d"  # seam match present
 
-    clean = scrub_until_clean(docs, pred).collect()
-    assert [(r["doc_id"], r["text"]) for r in clean] == [(1, "a")]
-    # review r11: (a) the budget is fully usable — a no-seam corpus
-    # cleans in max_passes=1 (the final-probe path, not a raise);
-    # (b) predicates over columns the output doesn't carry work,
-    # because membership is evaluated once and carried by flag
-    docs2 = spark.createDataFrame(
-        [(0, "x1 x2 x3 q", "bench"), (7, "a x1 x2 x3 b", "web")],
-        "doc_id LONG, text STRING, source STRING",
-    )
-    got2 = scrub_until_clean(
-        docs2, F.col("source") == "bench", max_passes=1
-    ).collect()
-    assert [(r["doc_id"], r["text"]) for r in got2] == [(7, "a b")]
-    # (c) uniform normalization: an already-clean corpus still comes
-    # back as the token stream, not raw text
-    docs3 = spark.createDataFrame(
-        [(0, "zz zz zz zz"), (1, "Hello, World! Again")],
-        "doc_id LONG, text STRING",
-    )
-    got3 = scrub_until_clean(docs3, F.col("doc_id") == 0).collect()
-    assert [(r["doc_id"], r["text"]) for r in got3] == [(1, "hello world again")]
-    # and the result really is match-free
-    re_docs = spark.createDataFrame(
-        [(0, "x1 x2 x3 q q q b c d"), (1, "a")], "doc_id LONG, text STRING"
-    )
-    rep = contamination_report(re_docs, pred).collect()
-    assert all(not r["contaminated"] for r in rep)
-
-    # loud failure when the pass budget can't reach the fixpoint
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_passes"):
-        scrub_until_clean(docs, pred, max_passes=1)
 
 
 # ---------------------------------------------------------------------------

@@ -7,9 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_kmeans_clustering_spark.operators.dedup import (
-    cosine_for_pairs,
     dup_groups,
-    embedding_near_dup_blas,
     embedding_near_dup_brute,
     embedding_near_dup_pairs,
     exact_dup_drops,
@@ -168,28 +166,6 @@ def test_embedding_bucketed_equals_brute_on_copies(copies_emb):
         assert bucketed[k] == pytest.approx(brute[k], abs=1e-12)
     # sanity: 3 copy-pairs per direction, 4 directions
     assert len(brute) == 12
-
-
-def test_embedding_blas_equals_expression_variant(copies_emb):
-    expr = {
-        (r["a"], r["b"]): r["cos"]
-        for r in embedding_near_dup_pairs(copies_emb, threshold=0.5, dim=8).collect()
-    }
-    blas = {
-        (r["a"], r["b"]): r["cos"]
-        for r in embedding_near_dup_blas(copies_emb, threshold=0.5, dim=8).collect()
-    }
-    assert set(expr) == set(blas)
-    for k in expr:
-        assert blas[k] == pytest.approx(expr[k], abs=1e-12)
-
-
-def test_cosine_for_pairs_restricts_to_candidates(spark, copies_emb):
-    cand = spark.createDataFrame([(0, 1), (0, 3), (2, 9)], "a LONG, b LONG")
-    got = {(r["a"], r["b"]): r["cos"] for r in cosine_for_pairs(copies_emb, cand).collect()}
-    assert set(got) == {(0, 1), (0, 3), (2, 9)}
-    assert got[(0, 1)] == pytest.approx(1.0)  # scaled copy
-    assert got[(2, 9)] == pytest.approx(0.0, abs=1e-12)  # orthogonal
 
 
 def test_repeated_passages_finds_shared_block_only(spark):
@@ -454,7 +430,6 @@ def test_cosine_family_survives_zero_and_nan_vectors(spark):
     import math
 
     from mapreduce_kmeans_clustering_spark.operators.dedup import (
-        cosine_for_pairs,
         embedding_near_dup_pairs,
         semantic_dedup,
         semantic_dedup_blas,
@@ -490,12 +465,6 @@ def test_cosine_family_survives_zero_and_nan_vectors(spark):
     ranked = [(r["rank"], r["neighbor_id"]) for r in sorted(tk, key=lambda r: r["rank"])]
     assert ranked[0] == (1, 2)  # real neighbor first; undefined cos sorts last
 
-    cp = {(r["a"], r["b"]): r["cos"] for r in cosine_for_pairs(
-        emb, spark.createDataFrame([(0, 3), (0, 4), (0, 2)], "a LONG, b LONG")
-    ).collect()}
-    assert cp[(0, 3)] is None and cp[(0, 4)] is None
-    assert cp[(0, 2)] > 0.9
-
 
 def test_repeated_passages_xxhash_production_twin(spark):
     """hash_fn='xxhash64' (the production hash) finds the SAME
@@ -525,29 +494,6 @@ def test_repeated_passages_xxhash_production_twin(spark):
 
     with _pytest.raises(ValueError, match="hash_fn"):
         repeated_passages(df, hash_fn="sha1")
-
-
-@pytest.mark.slow  # >=12 s in the idle full run (r13)
-def test_jaccard_prefix_filter_is_exact(spark):
-    """Prefix filtering (Bayardo et al.) must return EXACTLY the pairs
-    of the plain inverted-index join at every threshold — completeness
-    is the whole point (unlike max_df, which trades recall)."""
-    from mapreduce_kmeans_clustering_spark.operators.dedup import (
-        jaccard_pairs,
-        jaccard_pairs_prefix,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for t in (0.2, 0.5):
-        base = {
-            (r["a"], r["b"]): round(r["jaccard"], 9)
-            for r in jaccard_pairs(docs, threshold=t).collect()
-        }
-        pref = {
-            (r["a"], r["b"]): round(r["jaccard"], 9)
-            for r in jaccard_pairs_prefix(docs, threshold=t).collect()
-        }
-        assert base == pref, (t, len(base), len(pref))
 
 
 def test_jaccard_prefix_filter_shrinks_candidates(spark):
@@ -598,9 +544,9 @@ def test_jaccard_prefix_filter_shrinks_candidates(spark):
 @pytest.mark.slow  # >=12 s in the idle full run (r13)
 def test_embedding_near_dup_auto_planes_default(copies_emb):
     """planes=None (the new default) equals the explicit auto_planes
-    count on the same corpus — for both the expression and the BLAS
-    variants (VERDICT r8 item 3: a 100 TB caller who keeps the default
-    must NOT inherit the fixed-planes quadratic cliff)."""
+    count on the same corpus (VERDICT r8 item 3: a 100 TB caller who
+    keeps the default must NOT inherit the fixed-planes quadratic
+    cliff)."""
     from mapreduce_kmeans_clustering_spark.operators.similarity import (
         auto_planes,
     )
@@ -620,13 +566,6 @@ def test_embedding_near_dup_auto_planes_default(copies_emb):
         ).collect()
     }
     assert auto == pinned
-    blas_auto = {
-        (r["a"], r["b"]): r["cos"]
-        for r in embedding_near_dup_blas(
-            copies_emb, threshold=0.5, dim=8
-        ).collect()
-    }
-    assert set(blas_auto) == set(auto)
 
 
 @pytest.mark.slow  # >=12 s in the idle full run (r13)
@@ -788,8 +727,7 @@ def test_inf_component_never_matches_any_cosine_consumer(spark):
     den = Inf pass a den-only guard while dot/den = NaN — which
     Spark's NaN-greatest semantics would rank above every real
     neighbor. The Inf vector must contribute no pair/edge in any
-    cosine consumer, and the BLAS twin must agree (numpy NaN
-    comparisons are False for free)."""
+    cosine consumer."""
     inf = float("inf")
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
@@ -805,13 +743,6 @@ def test_inf_component_never_matches_any_cosine_consumer(spark):
     }
     assert (0, 1) in pairs
     assert not any(2 in p for p in pairs)
-    blas = {
-        (r["a"], r["b"])
-        for r in embedding_near_dup_blas(
-            emb, threshold=0.5, dim=4, planes=2
-        ).collect()
-    }
-    assert pairs == blas
     from mapreduce_kmeans_clustering_spark.operators.dedup import (
         semantic_dedup,
     )

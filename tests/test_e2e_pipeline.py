@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_kmeans_clustering_spark.operators.curation import curation_pipeline
 from mapreduce_kmeans_clustering_spark.operators.packing import pack_sequences
-from mapreduce_kmeans_clustering_spark.sinks.partitioned import write_partitioned
+from mapreduce_kmeans_clustering_spark.sinks.partitioned import upsert_partitions
 
 SF = "/root/testdata/sf0.001"
 
@@ -45,7 +45,7 @@ def test_corpus_to_training_shards(spark, tmp_path):
     final = kept_docs.join(
         packed.select("doc_id", "pack_id", "offset_in_pack"), "doc_id"
     )
-    write_partitioned(final, out, ["split", "shard"])
+    upsert_partitions(final, out, ["split", "shard"])
 
     # layout: one directory per (split, shard); pruned read sees one split
     assert glob.glob(f"{out}/split=*/shard=*/*.parquet")

@@ -97,81 +97,6 @@ def test_nd_matches_brute_and_feeds_fit(spark):
     assert len(res.centroids) <= 2
 
 
-# ---------------------------------------------------------------------------
-# k-means|| (init_kmeans_parallel_nd)
-# ---------------------------------------------------------------------------
-
-
-def _kpp_fixture(spark, n=240, dim=4, spread=40.0):
-    """Three well-separated blobs + noise, deterministic."""
-    import hashlib
-
-    def h(i, j):
-        return int(hashlib.md5(f"fx:{i}:{j}".encode()).hexdigest()[:8], 16) / 16**8
-
-    rows = []
-    for i in range(n):
-        c = i % 3
-        base = [c * spread] * dim
-        rows.append((i, [base[j] + h(i, j) * 2.0 for j in range(dim)]))
-    return spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>"), rows
-
-
-@pytest.mark.slow  # >=12 s in the idle full run (r13)
-def test_kmeans_parallel_returns_k_and_is_deterministic(spark):
-    from mapreduce_kmeans_clustering_spark.plans.kmeans_nd import (
-        init_kmeans_parallel_nd,
-    )
-
-    df, _ = _kpp_fixture(spark)
-    a = init_kmeans_parallel_nd(df, k=3, rounds=3)
-    b = init_kmeans_parallel_nd(df.repartition(7), k=3, rounds=3)
-    assert len(a) == 3 and len(a[0]) == 4
-    assert a == b  # pure function of the data, not the partitioning
-
-
-def test_kmeans_parallel_finds_separated_blobs(spark):
-    """Each of the three distant blobs gets a seed (the whole point of
-    d2-weighted oversampling); naive first-k seeding provably fails
-    this fixture (ids 0,1,2 are one per blob here, so compare costs
-    instead: kpp seeds must beat the all-in-one-blob worst case)."""
-    from mapreduce_kmeans_clustering_spark.plans.kmeans_nd import (
-        init_kmeans_parallel_nd,
-    )
-
-    df, rows = _kpp_fixture(spark)
-    seeds = init_kmeans_parallel_nd(df, k=3, rounds=3)
-    blob_of_seed = sorted(round(s[0] / 40.0) for s in seeds)
-    assert blob_of_seed == [0, 1, 2]  # one seed per blob
-
-
-def test_kmeans_parallel_feeds_fit_nd(spark):
-    from mapreduce_kmeans_clustering_spark.plans.kmeans_nd import (
-        fit_nd,
-        init_kmeans_parallel_nd,
-    )
-
-    df, _ = _kpp_fixture(spark)
-    seeds = init_kmeans_parallel_nd(df, k=3, rounds=2)
-    res = fit_nd(df, k=3, seeds=seeds, max_iter=10, threshold=1e-6)
-    assert res.converged
-    assert len(res.centroids) == 3
-
-
-def test_kmeans_parallel_few_points_returns_all(spark):
-    """Fewer distinct points than k: candidate set caps at the corpus
-    and every point comes back (no padding, no crash)."""
-    from mapreduce_kmeans_clustering_spark.plans.kmeans_nd import (
-        init_kmeans_parallel_nd,
-    )
-
-    df = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [1.0, 1.0])], "vec_id LONG, embedding ARRAY<DOUBLE>"
-    )
-    seeds = init_kmeans_parallel_nd(df, k=5, rounds=2)
-    assert len(seeds) <= 2
-
-
 def test_farthest_trace_nd_matches_init_and_is_monotone(spark):
     from mapreduce_kmeans_clustering_spark.plans import init_farthest_nd
     from mapreduce_kmeans_clustering_spark.plans.kmeans_nd import (

@@ -98,66 +98,6 @@ def test_length_buckets_partition_and_waste(spark):
     assert [r["n_docs"] for r in by_bucket] == [5, 5, 5, 5]
 
 
-def test_pack_bins_ffd_respects_capacity_and_beats_next_fit(spark):
-    """FFD invariants: no bin over capacity (except oversize
-    singletons), every doc placed exactly once, deterministic layout;
-    and on a crafted mix FFD uses no more bins than next-fit
-    sequential packing."""
-    from mapreduce_kmeans_clustering_spark.operators.packing import (
-        pack_bins_ffd,
-        packing_efficiency,
-    )
-
-    # token counts: 6,5,4,3,2,2 with cap 8 -> FFD: [6,2],[5,3],[4,2,2]=3 bins... 
-    # next-fit in id order 6,5,4,3,2,2: [6],[5],[4,3],[2,2] = 4 bins
-    docs = spark.createDataFrame(
-        [
-            ("s", 0, "w " * 6),
-            ("s", 1, "w " * 5),
-            ("s", 2, "w " * 4),
-            ("s", 3, "w " * 3),
-            ("s", 4, "w " * 2),
-            ("s", 5, "w " * 2),
-            ("s", 6, "w " * 12),  # oversize vs cap 8
-        ],
-        "source STRING, doc_id LONG, text STRING",
-    )
-    out = pack_bins_ffd(docs, pack_len=8).collect()
-    assert len(out) == 7
-    fills = {}
-    for r in out:
-        if not r["oversize"]:
-            fills.setdefault(r["bin_id"], 0)
-            fills[r["bin_id"]] += r["n_tokens"]
-    assert all(f <= 8 for f in fills.values())
-    oversize = [r for r in out if r["oversize"]]
-    assert len(oversize) == 1 and oversize[0]["doc_id"] == 6
-    # the oversize doc sits alone in its bin
-    ob = oversize[0]["bin_id"]
-    assert sum(1 for r in out if r["bin_id"] == ob) == 1
-    # FFD on the 6 regular docs: 3 bins; next-fit id-order needs 4
-    regular_bins = {r["bin_id"] for r in out if not r["oversize"]}
-    assert len(regular_bins) == 3
-    eff = packing_efficiency(pack_bins_ffd(docs, pack_len=8), pack_len=8).collect()[0]
-    assert eff["n_bins"] == 4
-    assert eff["sum_tokens"] == 6 + 5 + 4 + 3 + 2 + 2 + 12
-    assert 0.0 < eff["utilization"] <= 1.0
-
-
-def test_pack_bins_ffd_groups_pack_independently(spark):
-    from mapreduce_kmeans_clustering_spark.operators.packing import pack_bins_ffd
-
-    docs = spark.createDataFrame(
-        [("a", 0, "w " * 4), ("a", 1, "w " * 4), ("b", 2, "w " * 4)],
-        "source STRING, doc_id LONG, text STRING",
-    )
-    out = pack_bins_ffd(docs, pack_len=8).collect()
-    a = {r["doc_id"]: r["bin_id"] for r in out if r["source"] == "a"}
-    b = {r["doc_id"]: r["bin_id"] for r in out if r["source"] == "b"}
-    assert a[0] == a[1] == 0  # both fit one bin
-    assert b[2] == 0  # group b starts its own bin numbering
-
-
 def test_length_buckets_approx_pins(spark):
     """The scale hatch (percentile_approx cutpoints -> scan-local
     bucket) shares with the exact ntile form: the bucket id set, the

@@ -8,10 +8,7 @@ import glob
 
 from pyspark.sql import functions as F
 
-from mapreduce_kmeans_clustering_spark.sinks.partitioned import (
-    read_partitioned,
-    write_partitioned,
-)
+from mapreduce_kmeans_clustering_spark.sinks.partitioned import upsert_partitions
 
 SF = "/root/testdata/sf0.001"
 
@@ -21,9 +18,9 @@ def test_round_trip_and_single_file_per_value(spark, tmp_path):
         "doc_id", "source", "text"
     )
     out = str(tmp_path / "docs_by_source")
-    write_partitioned(docs, out, ["source"])
+    upsert_partitions(docs, out, ["source"])
 
-    back = read_partitioned(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == docs.count()
     assert {r["source"] for r in back.select("source").distinct().collect()} == {
         r["source"] for r in docs.select("source").distinct().collect()
@@ -37,9 +34,9 @@ def test_read_filter_prunes_partitions(spark, tmp_path):
         "doc_id", "source", "text"
     )
     out = str(tmp_path / "docs_pruned")
-    write_partitioned(docs, out, ["source"])
+    upsert_partitions(docs, out, ["source"])
 
-    one = read_partitioned(spark, out).where(F.col("source") == "src1")
+    one = spark.read.parquet(out).where(F.col("source") == "src1")
     plan = one._jdf.queryExecution().executedPlan().toString()
     # the equality predicate must land in PartitionFilters (planning-time
     # directory pruning), not in the row-level data filters
@@ -50,16 +47,14 @@ def test_read_filter_prunes_partitions(spark, tmp_path):
 
 
 def test_upsert_replaces_only_carried_partitions(spark, tmp_path):
-    from mapreduce_kmeans_clustering_spark.sinks.partitioned import upsert_partitions
-
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         "doc_id", "source", "text"
     )
     out = str(tmp_path / "docs_upsert")
-    write_partitioned(docs, out, ["source"])
+    upsert_partitions(docs, out, ["source"])
     before = {
         r["source"]: r["n"]
-        for r in read_partitioned(spark, out)
+        for r in spark.read.parquet(out)
         .groupBy("source")
         .agg(F.count("*").alias("n"))
         .collect()
@@ -73,7 +68,7 @@ def test_upsert_replaces_only_carried_partitions(spark, tmp_path):
 
     after = {
         r["source"]: r["n"]
-        for r in read_partitioned(spark, out)
+        for r in spark.read.parquet(out)
         .groupBy("source")
         .agg(F.count("*").alias("n"))
         .collect()
@@ -85,7 +80,7 @@ def test_upsert_replaces_only_carried_partitions(spark, tmp_path):
 
     # idempotent on retry
     upsert_partitions(batch, out, ["source"])
-    again = read_partitioned(spark, out).where(F.col("source") == "src1").count()
+    again = spark.read.parquet(out).where(F.col("source") == "src1").count()
     assert again == n_batch
     # session conf restored
     assert (

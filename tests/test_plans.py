@@ -221,46 +221,6 @@ def test_parts_anti_join_is_broadcast(spark):
     assert "LeftAnti" in p
 
 
-def test_bucketed_join_is_shuffle_free(spark):
-    """Pre-bucketing both sides on the join key removes the Exchange
-    from the join (the ingest-time shuffle amortization SCALE.md §3
-    describes)."""
-    from pyspark.sql import functions as F
-
-    from mapreduce_kmeans_clustering_spark.sinks.bucketed import (
-        read_bucketed_table,
-        write_bucketed_table,
-    )
-
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
-        "l_orderkey", "l_extendedprice"
-    )
-    orders = spark.read.parquet(f"{SF}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
-    write_bucketed_table(li, "t_li_bucketed", ["l_orderkey"], buckets=4)
-    write_bucketed_table(orders, "t_ord_bucketed", ["o_orderkey"], buckets=4)
-
-    a = read_bucketed_table(spark, "t_li_bucketed")
-    b = read_bucketed_table(spark, "t_ord_bucketed")
-    # disable broadcast so the join must pick a shuffle-or-bucket plan
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = a.join(b, a["l_orderkey"] == b["o_orderkey"]).groupBy("o_custkey").agg(
-            F.sum("l_extendedprice").alias("s")
-        )
-        p = j._jdf.queryExecution().executedPlan().toString()
-        # no Exchange feeding the join inputs
-        assert "SortMergeJoin" in p
-        assert "Exchange hashpartitioning(l_orderkey" not in p
-        assert "Exchange hashpartitioning(o_orderkey" not in p
-        assert j.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS t_li_bucketed")
-        spark.sql("DROP TABLE IF EXISTS t_ord_bucketed")
-
-
 def test_asof_join_is_single_exchange_no_range_join(spark):
     """The as-of join must plan as one hash exchange on the key plus a
     window — never a BroadcastNestedLoopJoin/CartesianProduct from a

@@ -3,14 +3,22 @@ zero-vector guard."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from mapreduce_kmeans_clustering_spark.operators.quantize import (
     quantization_error,
-    quantize_embeddings,
+    quantize_expr,
 )
 
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+
+
+def _codes(df):
+    """(vec_id, scale, q): the int8 codes per vector."""
+    scale, q = quantize_expr(F.col("embedding"))
+    return df.select("vec_id", scale.alias("scale"), q.alias("q"))
 
 
 def test_codes_in_int8_range_and_bounded_error(spark):
@@ -21,7 +29,7 @@ def test_codes_in_int8_range_and_bounded_error(spark):
             (2, [0.001, 0.002, -0.003, 0.0005]),
         ],
     )
-    out = {r["vec_id"]: r for r in quantize_embeddings(df).collect()}
+    out = {r["vec_id"]: r for r in _codes(df).collect()}
     src = {r["vec_id"]: r["embedding"] for r in df.collect()}
     for vid, r in out.items():
         assert all(-127 <= c <= 127 for c in r["q"])
@@ -31,7 +39,7 @@ def test_codes_in_int8_range_and_bounded_error(spark):
 
 
 def test_zero_vector_guard(spark):
-    out = quantize_embeddings(_df(spark, [(1, [0.0, 0.0, 0.0])])).collect()[0]
+    out = _codes(_df(spark, [(1, [0.0, 0.0, 0.0])])).collect()[0]
     assert out["scale"] == 0.0
     assert out["q"] == [0, 0, 0]
     err = quantization_error(_df(spark, [(1, [0.0, 0.0, 0.0])])).collect()[0]
@@ -39,5 +47,5 @@ def test_zero_vector_guard(spark):
 
 
 def test_max_element_maps_to_127(spark):
-    out = quantize_embeddings(_df(spark, [(1, [10.0, -5.0, 2.0])])).collect()[0]
+    out = _codes(_df(spark, [(1, [10.0, -5.0, 2.0])])).collect()[0]
     assert max(abs(c) for c in out["q"]) == 127

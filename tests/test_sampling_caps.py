@@ -98,8 +98,6 @@ def test_cap_per_key_matches_python(spark, texts, cap):
     assert got == expected
 
 
-
-
 @pytest.mark.slow  # 7-12 s band, sibling fast coverage kept (r13)
 @given(_corpus)
 @_SETTINGS
@@ -195,39 +193,6 @@ def test_column_profile_approx_mode(spark):
     }
     assert abs(got["id"] - 1000) <= 50
     assert abs(got["m"] - 10) <= 1
-
-
-def test_write_shuffled_is_deterministic_and_salt_sensitive(spark, tmp_path):
-    """Deterministic global shuffle: same salt -> identical file order
-    across runs; different salt -> different permutation; all rows
-    survive exactly once."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from mapreduce_kmeans_clustering_spark.operators.sampling import (
-        write_shuffled,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    n = docs.count()
-
-    def order(path):
-        ids = []
-        for f in sorted(glob.glob(f"{path}/part-*.parquet")):
-            ids.extend(pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist())
-        return ids
-
-    a, b, c = (str(tmp_path / x) for x in "abc")
-    write_shuffled(docs, a, num_files=4)
-    write_shuffled(docs, b, num_files=4)
-    write_shuffled(docs, c, num_files=4, salt="epoch2:")
-    oa, ob, oc = order(a), order(b), order(c)
-    assert oa == ob  # reproducible
-    assert sorted(oa) == sorted(oc)  # same rows...
-    assert oa != oc  # ...new permutation per epoch salt
-    assert len(oa) == n
-    assert oa != sorted(oa)  # actually shuffled, not id-ordered
 
 
 def test_temperature_weights_properties(spark):
@@ -368,21 +333,6 @@ def test_parity_copy_counts_partitioning_invariant(spark):
     a = sorted(map(tuple, parity_copy_counts(df).collect()))
     b = sorted(map(tuple, parity_copy_counts(df.repartition(7)).collect()))
     assert a == b
-
-
-@pytest.mark.slow  # 7-12 s band, sibling fast coverage kept (r13)
-def test_oversample_to_parity_materializes_balanced_epoch(spark):
-    from mapreduce_kmeans_clustering_spark.operators.sampling import (
-        oversample_to_parity,
-    )
-
-    rows = [(i, "maj") for i in range(8)] + [(100 + i, "min") for i in range(2)]
-    df = spark.createDataFrame(rows, "vec_id LONG, label STRING")
-    out = oversample_to_parity(df, label_col="label", id_col="vec_id")
-    per = {r["label"]: r["n"] for r in out.groupBy("label").count().withColumnRenamed("count", "n").collect()}
-    assert per == {"maj": 8, "min": 8}
-    # replicas are distinguishable: (vec_id, copy_idx) unique
-    assert out.select("vec_id", "copy_idx").distinct().count() == out.count()
 
 
 def test_epoch_allocation_cap_math_and_shares(spark):

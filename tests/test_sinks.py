@@ -70,34 +70,3 @@ def test_write_labeled_readable(spark, tmp_path):
         (1.0, 2.0, 3.0, 0),
         (4.0, 5.0, 6.0, 1),
     ]
-
-
-def test_members_capped_bounds_array_and_keeps_exact_stats(spark):
-    """members_capped (labeled non-parity, corpus-scale O12): array is
-    the first limit entries of the sorted exact array; cx/cy/cz/n are
-    exact over ALL members, not just the kept representatives."""
-    from mapreduce_kmeans_clustering_spark.operators.aggregate import (
-        members,
-        members_capped,
-    )
-
-    import pytest
-
-    rows = [
-        (i % 3, float(i), float(2 * i % 7), float(3 * i % 11))
-        for i in range(60)
-    ]
-    assigned = spark.createDataFrame(
-        rows, "cluster INT, x DOUBLE, y DOUBLE, z DOUBLE"
-    )
-    exact = {r["cluster"]: r for r in members(assigned).collect()}
-    capped = {r["cluster"]: r for r in members_capped(assigned, 5).collect()}
-    assert set(exact) == set(capped)
-    for c, r in capped.items():
-        e = exact[c]
-        assert (r["cx"], r["cy"], r["cz"]) == (e["cx"], e["cy"], e["cz"])
-        assert r["n"] == len(e["points"]) == 20
-        assert len(r["points"]) == 5
-        assert r["points"] == sorted(e["points"])[:5]
-    with pytest.raises(ValueError, match="limit_per_cluster"):
-        members_capped(assigned, 0)

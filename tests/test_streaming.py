@@ -7,15 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid
-from mapreduce_kmeans_clustering_spark.streaming import (
-    hourly_event_counts,
-    read_events_stream,
-    running_user_totals,
-    sessionized_event_stats,
-    stream_assign,
-    stream_cluster_counts,
-)
+from mapreduce_kmeans_clustering_spark import schemas
 
 
 @pytest.fixture(scope="module")
@@ -31,6 +23,15 @@ def events_dir(spark, tmp_path_factory):
     return out
 
 
+def _docs_stream(spark, path, max_files_per_trigger=4):
+    """JSONL document stream with the canonical schema, bounded batches."""
+    return (
+        spark.readStream.schema(schemas.DOCUMENTS)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .json(path)
+    )
+
+
 def _run_to_memory(df, name):
     q = (
         df.writeStream.outputMode("complete")
@@ -41,285 +42,6 @@ def _run_to_memory(df, name):
     q.processAllAvailable()
     q.stop()
     return name
-
-
-def test_hourly_counts_match_batch(spark, events_dir):
-    stream = read_events_stream(spark, events_dir)
-    _run_to_memory(hourly_event_counts(stream), "hourly_out")
-    got = {
-        (r["window_start"], r["event_type"]): (r["n"], round(r["total_value"], 4))
-        for r in spark.sql("SELECT * FROM hourly_out").collect()
-    }
-    batch = spark.read.parquet(events_dir)
-    expected = {
-        (r["h"], r["event_type"]): (r["n"], round(r["tv"], 4))
-        for r in batch.groupBy(
-            F.date_trunc("hour", "ts").alias("h"), "event_type"
-        )
-        .agg(F.count("*").alias("n"), F.sum("value").alias("tv"))
-        .collect()
-    }
-    assert got == expected
-
-
-def test_sessionized_stats_cover_all_events(spark, events_dir):
-    stream = read_events_stream(spark, events_dir)
-    _run_to_memory(sessionized_event_stats(stream), "sess_out")
-    rows = spark.sql("SELECT * FROM sess_out").collect()
-    assert sum(r["n_events"] for r in rows) == spark.read.parquet(events_dir).count()
-    for r in rows:
-        assert r["session_start"] <= r["session_end"]
-
-
-def test_stream_assign_matches_batch(spark, events_dir):
-    cents = [Centroid(0, 0.0, 0.0, 0.0), Centroid(1, 200.0, 0.0, 0.0)]
-    stream = read_events_stream(spark, events_dir).select(
-        F.col("value").alias("x"), F.lit(0.0).alias("y"), F.lit(0.0).alias("z"),
-        F.col("ts"),
-    )
-    labeled = stream_assign(stream, cents)
-    q = (
-        labeled.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("assign_out")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT cluster, count(*) AS n FROM assign_out GROUP BY cluster")
-    batch = spark.read.parquet(events_dir).select(
-        F.when(F.col("value") < 100.0, 0).otherwise(1).alias("cluster")
-    ).groupBy("cluster").count()
-    assert {(r["cluster"], r["n"]) for r in got.collect()} == {
-        (r["cluster"], r["count"]) for r in batch.collect()
-    }
-
-
-def test_stream_assign_keeps_with_column_layout(spark):
-    """stream_assign keeps the layout of ``withColumn("cluster", …)``:
-    the input columns in order, ``cluster`` appended last, or replaced
-    in place when the input already has one (no duplicate column)."""
-    cents = [Centroid(0, 0.0, 0.0, 0.0), Centroid(1, 200.0, 0.0, 0.0)]
-    df = spark.createDataFrame(
-        [(1, 150.0, 0.0, 0.0), (2, 10.0, 0.0, 0.0)], "rid long, x double, y double, z double"
-    )
-    out = stream_assign(df, cents)
-    assert out.columns == ["rid", "x", "y", "z", "cluster"]
-    relabel = stream_assign(out.select(F.lit(9).alias("cluster"), "rid", "x", "y", "z"), cents)
-    assert relabel.columns == ["cluster", "rid", "x", "y", "z"]
-    assert sorted(map(tuple, relabel.collect())) == [(0, 2, 10.0, 0.0, 0.0), (1, 1, 150.0, 0.0, 0.0)]
-
-
-def test_running_user_totals_final_state_matches_batch(spark, events_dir):
-    """applyInPandasWithState: the last emitted row per user (largest
-    n_events — the count only grows) must equal the batch per-user
-    aggregate, regardless of how the files split into micro-batches."""
-    stream = read_events_stream(spark, events_dir)
-    q = (
-        running_user_totals(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("running_out")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 4))
-        for r in spark.sql(
-            """SELECT user_id, n_events, total_value FROM (
-                 SELECT *, row_number() OVER (
-                   PARTITION BY user_id ORDER BY n_events DESC) AS rn
-                 FROM running_out) WHERE rn = 1"""
-        ).collect()
-    }
-    expected = {
-        r["user_id"]: (r["n"], round(r["tv"], 4))
-        for r in spark.read.parquet(events_dir)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("tv"))
-        .collect()
-    }
-    assert got == expected
-
-
-def test_stream_cluster_counts_runs(spark, events_dir):
-    cents = [Centroid(0, 0.0, 0.0, 0.0), Centroid(1, 200.0, 0.0, 0.0)]
-    stream = read_events_stream(spark, events_dir).select(
-        F.col("value").alias("x"), F.lit(0.0).alias("y"), F.lit(0.0).alias("z"), "ts"
-    )
-    _run_to_memory(stream_cluster_counts(stream, cents), "ccounts_out")
-    rows = spark.sql("SELECT * FROM ccounts_out").collect()
-    assert sum(r["n"] for r in rows) == spark.read.parquet(events_dir).count()
-    assert {r["cluster"] for r in rows} <= {0, 1}
-
-
-@pytest.mark.slow  # >=12 s in the idle full run (r13)
-def test_stream_assign_with_refresh_swaps_model_between_batches(spark, tmp_path):
-    from mapreduce_kmeans_clustering_spark.streaming import stream_assign_with_refresh
-    from pyspark.sql import types as T
-
-    src = str(tmp_path / "pts_stream")
-    schema = T.StructType(
-        [T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType()),
-         T.StructField("z", T.DoubleType())]
-    )
-    spark.createDataFrame([(10.0, 0.0, 0.0)], schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-
-    model = {"cents": [Centroid(0, 0.0, 0.0, 0.0), Centroid(1, 100.0, 0.0, 0.0)]}
-    seen = []
-
-    def write_batch(df, epoch_id):
-        seen.extend((epoch_id, r["x"], r["cluster"]) for r in df.collect())
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = stream_assign_with_refresh(stream, lambda: model["cents"], write_batch).start()
-    q.processAllAvailable()
-    # refit happened: centroid 1 moved next to the data
-    model["cents"] = [Centroid(0, 1000.0, 0.0, 0.0), Centroid(1, 9.0, 0.0, 0.0)]
-    spark.createDataFrame([(10.0, 0.0, 0.0)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    clusters = [c for _, x, c in sorted(seen) if x == 10.0]
-    assert clusters == [0, 1]  # old model -> cluster 0, refreshed model -> cluster 1
-
-
-@pytest.mark.slow  # >=12 s in the idle full run (r13)
-def test_stream_exact_dedup_across_microbatches(spark, tmp_path):
-    from mapreduce_kmeans_clustering_spark.streaming import stream_exact_dedup
-    from pyspark.sql import types as T
-
-    src = str(tmp_path / "docs_stream")
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    # batch 1: two docs; batch 2 file: one duplicate + one new
-    spark.createDataFrame([(1, "alpha"), (2, "beta")], schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream_exact_dedup(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_stream_out")
-        .start()
-    )
-    q.processAllAvailable()
-    spark.createDataFrame([(3, "alpha"), (4, "gamma")], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT doc_id, text FROM dedup_stream_out").collect()
-    by_text = {r["text"]: r["doc_id"] for r in rows}
-    assert set(by_text) == {"alpha", "beta", "gamma"}
-    assert by_text["alpha"] == 1  # first arrival won, cross-batch duplicate dropped
-
-
-@pytest.mark.slow  # >=12 s in the idle full run (r13)
-def test_stream_dedup_with_watermark_bounds_state(spark, tmp_path):
-    """The recommended infinite-stream configuration (ts_col set →
-    dropDuplicatesWithinWatermark): state per content hash lives only
-    until the watermark passes its event time + delay. Pins BOTH sides
-    of the trade: a duplicate inside the watermark window is dropped;
-    one arriving after the state expired is re-admitted (bounded state,
-    at the price of imperfect dedup) — the documented hazard of the
-    unbounded no-ts mode, resolved by configuration."""
-    from mapreduce_kmeans_clustering_spark.streaming import stream_exact_dedup
-    from pyspark.sql import types as T
-
-    src = str(tmp_path / "docs_ts_stream")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    ts = lambda h, m=0: __import__("datetime").datetime(2024, 1, 1, h, m)  # noqa: E731
-
-    def write(rows, mode):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(mode).parquet(src)
-
-    write([(1, "alpha", ts(10)), (2, "beta", ts(10))], "overwrite")
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    q = (
-        stream_exact_dedup(stream, ts_col="ts", watermark="1 hour")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_wm_out")
-        .start()
-    )
-    q.processAllAvailable()
-    # in-watermark duplicate (alpha@10:30, state alive until wm > 11:00)
-    # -> dropped; 14:00 row advances the watermark to 13:00
-    write([(3, "alpha", ts(10, 30)), (4, "gamma", ts(14))], "append")
-    q.processAllAvailable()
-    # watermark 13:00 expired alpha's state -> late re-arrival passes
-    write([(5, "alpha", ts(14, 30))], "append")
-    q.processAllAvailable()
-    q.stop()
-
-    ids = sorted(
-        r["doc_id"] for r in spark.sql("SELECT doc_id FROM dedup_wm_out").collect()
-    )
-    assert ids == [1, 2, 4, 5]
-
-
-def test_stream_view_click_join_matches_batch(spark, events_dir):
-    from mapreduce_kmeans_clustering_spark.streaming import stream_view_click_join
-
-    stream = read_events_stream(spark, events_dir)
-    q = (
-        stream_view_click_join(stream, max_lag="30 minutes")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("vc_join_out")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r["click_id"], r["view_id"])
-        for r in spark.sql("SELECT * FROM vc_join_out").collect()
-    }
-    e = spark.read.parquet(events_dir)
-    views = e.where(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("view_ts"),
-        F.col("event_id").alias("view_id"),
-    )
-    clicks = e.where(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")
-    )
-    expected = {
-        (r["click_id"], r["view_id"])
-        for r in clicks.join(
-            views,
-            F.expr(
-                "user_id = v_user AND view_ts <= click_ts "
-                "AND view_ts >= click_ts - INTERVAL 30 minutes"
-            ),
-        ).collect()
-    }
-    assert expected  # fixture actually exercises the join
-    # a watermarked append-mode join may hold back matches the final
-    # watermark never released, but everything emitted must be a true
-    # match and the bulk of the batch result must have been emitted
-    assert got <= expected
-    assert len(got) >= 0.9 * len(expected)
 
 
 def test_stream_cms_shards_merge_to_batch_sketch(spark, events_dir, tmp_path):
@@ -455,466 +177,6 @@ def test_stream_static_dimension_enrichment(spark, events_dir):
     assert got == want
 
 
-def test_stream_corpus_ingest_dedups_and_shards(spark, tmp_path):
-    """Continuous corpus ingest end-to-end: corpus-hash anti-join,
-    in-batch first-claim, batch-pipeline-identical split/shard tags,
-    per-epoch overwrite layout (replay-safe), JSONL round-trip."""
-    import glob
-    import hashlib
-    import json
-
-    from mapreduce_kmeans_clustering_spark.operators.curation import split_assign
-    from mapreduce_kmeans_clustering_spark.sources.documents import (
-        clean_documents,
-        read_documents_jsonl,
-    )
-    from mapreduce_kmeans_clustering_spark.streaming.ingest import (
-        read_documents_stream,
-        stream_corpus_ingest,
-    )
-
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    # doc 0 duplicates the corpus; docs 3 and 103 duplicate each other
-    rows = [
-        {"doc_id": 0, "text": "already in corpus", "lang": "en", "source": "web", "n_chars": 17},
-        {"doc_id": 3, "text": "fresh duplicate pair", "lang": "en", "source": "web", "n_chars": 20},
-        {"doc_id": 103, "text": "fresh duplicate pair", "lang": "en", "source": "web", "n_chars": 20},
-    ] + [
-        {"doc_id": i, "text": f"unique arrival {i}", "lang": "en", "source": "web", "n_chars": 16}
-        for i in range(10, 40)
-    ]
-    (src / "a.jsonl").write_text("\n".join(json.dumps(r) for r in rows[:10]) + "\n")
-    (src / "b.jsonl").write_text("\n".join(json.dumps(r) for r in rows[10:]) + "\n")
-
-    corpus_hashes = spark.createDataFrame(
-        [(hashlib.md5(b"already in corpus").hexdigest(),)], "h STRING"
-    )
-    out = str(tmp_path / "out")
-    q = stream_corpus_ingest(
-        read_documents_stream(spark, str(src), max_files_per_trigger=1),
-        corpus_hashes,
-        out,
-        str(tmp_path / "ckpt"),
-        n_shards=4,
-    )
-    q.awaitTermination(120)
-
-    back = clean_documents(
-        read_documents_jsonl(
-            spark, f"{out}/ingest_batch=*/split=*/shard=*/*.txt"
-        )
-    )
-    got = {r["doc_id"] for r in back.collect()}
-    # 0 dropped (corpus dup); 103 dropped (3 claimed the hash first,
-    # same micro-batch); everything else kept exactly once
-    assert got == {3} | set(range(10, 40))
-    # split/shard match the batch pipeline's pure-function assignment
-    expected = {
-        (r["doc_id"], r["split"], r["shard"])
-        for r in split_assign(
-            spark.createDataFrame(
-                [(i,) for i in sorted(got)], "doc_id LONG"
-            ),
-            n_shards=4,
-        ).collect()
-    }
-    actual = set()
-    for p in glob.glob(f"{out}/ingest_batch=*/split=*/shard=*/part-*.txt"):
-        parts = dict(
-            kv.split("=") for kv in p.split("/") if "=" in kv
-        )
-        for line in open(p):
-            actual.add(
-                (json.loads(line)["doc_id"], parts["split"], int(parts["shard"]))
-            )
-    assert actual == expected
-
-
-def test_stream_rollup_matches_batch_aggregate(spark, tmp_path):
-    """Continuous rollup maintenance: drain a file stream in 1-file
-    micro-batches, merging each into the versioned state; the final
-    state must equal the batch aggregate over everything — the merge
-    law crossing epoch boundaries. A second drain over newly arrived
-    files folds in only the delta (checkpoint skips the old files)
-    and again matches the full recompute."""
-    import json as _json
-
-    from mapreduce_kmeans_clustering_spark.operators.incremental import (
-        aggregate_batch,
-    )
-    from mapreduce_kmeans_clustering_spark.streaming.rollup import (
-        read_rollup_state,
-        stream_rollup,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_file(name, rows):
-        with open(src / name, "w") as f:
-            for u, v in rows:
-                f.write(_json.dumps({"user_id": u, "value": v}) + "\n")
-
-    write_file("a.json", [(1, "3.50"), (2, "1.25")])
-    write_file("b.json", [(1, "0.50"), (3, "9.00")])
-
-    stream = (
-        spark.readStream.schema("user_id LONG, value STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    spec = {"n": ("count", ""), "total": ("sum", "v")}
-
-    def prep(df):
-        from pyspark.sql import functions as F
-
-        return df.select(
-            "user_id", F.col("value").cast("decimal(18,4)").alias("v")
-        )
-
-    q = stream_rollup(
-        prep(stream), state, ckpt, keys=["user_id"], spec=spec
-    )
-    q.awaitTermination(120)
-
-    def state_dict():
-        st = read_rollup_state(spark, state)
-        return {r["user_id"]: (r["n"], str(r["total"])) for r in st.collect()}
-
-    batch1 = spark.createDataFrame(
-        [(1, "3.50"), (2, "1.25"), (1, "0.50"), (3, "9.00")],
-        "user_id LONG, value STRING",
-    )
-    expect1 = {
-        r["user_id"]: (r["n"], str(r["total"]))
-        for r in aggregate_batch(prep(batch1), ["user_id"], spec).collect()
-    }
-    assert state_dict() == expect1
-
-    # late-arriving delta: only the new file is processed next drain
-    write_file("c.json", [(2, "2.75"), (4, "1.00")])
-    q2 = stream_rollup(
-        prep(
-            spark.readStream.schema("user_id LONG, value STRING")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(src))
-        ),
-        state,
-        ckpt,
-        keys=["user_id"],
-        spec=spec,
-    )
-    q2.awaitTermination(120)
-    batch2 = spark.createDataFrame(
-        [(1, "3.50"), (2, "1.25"), (1, "0.50"), (3, "9.00"), (2, "2.75"), (4, "1.00")],
-        "user_id LONG, value STRING",
-    )
-    expect2 = {
-        r["user_id"]: (r["n"], str(r["total"]))
-        for r in aggregate_batch(prep(batch2), ["user_id"], spec).collect()
-    }
-    assert state_dict() == expect2
-
-
-def test_rollup_ignores_uncommitted_versions(spark, tmp_path):
-    """Marker-commit protocol: a ``v=`` directory without ``_SUCCESS``
-    (crashed or in-flight write) must be invisible to the read path
-    and to fold()'s prior-state resolution — readers always land on
-    the newest COMMITTED version."""
-    import json as _json
-    import os
-
-    from mapreduce_kmeans_clustering_spark.streaming.rollup import (
-        _versions,
-        read_rollup_state,
-        stream_rollup,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    state = str(tmp_path / "state")
-    with open(src / "a.json", "w") as f:
-        f.write(_json.dumps({"user_id": 1, "value": "2.00"}) + "\n")
-
-    from pyspark.sql import functions as F
-
-    stream = spark.readStream.schema("user_id LONG, value STRING").json(str(src))
-    q = stream_rollup(
-        stream.select("user_id", F.col("value").cast("decimal(18,4)").alias("v")),
-        state,
-        str(tmp_path / "ckpt"),
-        keys=["user_id"],
-        spec={"n": ("count", ""), "total": ("sum", "v")},
-    )
-    q.awaitTermination(120)
-    committed = _versions(state)
-    assert committed, "expected at least one committed version"
-
-    # simulate a crash mid-write of a NEWER version: directory exists,
-    # data file present, no _SUCCESS marker
-    fake = os.path.join(state, f"v={committed[-1] + 1000}")
-    os.makedirs(fake)
-    with open(os.path.join(fake, "part-00000.parquet"), "wb") as f:
-        f.write(b"\x00not-a-parquet-footer")
-
-    assert _versions(state) == committed  # marker-less dir invisible
-    st = read_rollup_state(spark, state)
-    assert {r["user_id"]: r["n"] for r in st.collect()} == {1: 1}
-
-
-def test_stream_length_drift_flags_shifted_batch(spark, tmp_path):
-    """Drift monitor end-to-end: freeze a reference length histogram,
-    drain a 2-file stream where file 1 matches the reference and
-    file 2 is shifted to long docs — the matched batch passes, the
-    shifted batch flags, and each stream KS equals the batch
-    operator's KS on a tagged union of the same data (the
-    batch-twin identity)."""
-    import json as _json
-
-    from mapreduce_kmeans_clustering_spark.operators.profile import length_ks_pairs
-    from mapreduce_kmeans_clustering_spark.streaming.drift import (
-        length_histogram,
-        stream_length_drift,
-    )
-
-    ref_rows = [(i, "w " * (5 + i % 3)) for i in range(30)]
-    ref = spark.createDataFrame(ref_rows, "doc_id LONG, text STRING")
-    ref_hist = length_histogram(ref).cache()
-
-    src = tmp_path / "src"
-    src.mkdir()
-    batch_texts = {
-        "a.json": ["w " * (5 + i % 3) for i in range(20)],   # same profile
-        "b.json": ["w " * (60 + i % 4) for i in range(20)],  # shifted
-    }
-    for name, texts in batch_texts.items():
-        with open(src / name, "w") as f:
-            for i, t in enumerate(texts):
-                f.write(_json.dumps({"doc_id": i, "text": t}) + "\n")
-
-    out = str(tmp_path / "out")
-    q = stream_length_drift(
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src)),
-        ref_hist,
-        out,
-        str(tmp_path / "ckpt"),
-        threshold=0.3,
-    )
-    q.awaitTermination(120)
-
-    got = sorted(
-        (r["n_batch"], r["ks"], r["drifted"])
-        for r in spark.read.parquet(out).collect()
-    )
-    assert len(got) == 2
-    matched, shifted = got[0], got[1]
-    if matched[1] > shifted[1]:
-        matched, shifted = shifted, matched
-    assert matched[2] is False and matched[1] < 0.3
-    assert shifted[2] is True and shifted[1] == 1.0  # disjoint supports
-
-    # batch-twin identity: the stream KS multiset equals
-    # length_ks_pairs run on a tagged union of the same two samples
-    twin_ks = []
-    for name, texts in batch_texts.items():
-        tagged = spark.createDataFrame(
-            [(i, "batch", t) for i, t in enumerate(texts)]
-            + [(100 + i, "ref", t) for i, (_, t) in enumerate(ref_rows)],
-            "doc_id LONG, source STRING, text STRING",
-        )
-        [r] = length_ks_pairs(tagged).collect()
-        twin_ks.append(r["ks"])
-    assert sorted(twin_ks) == sorted(g[1] for g in got)
-
-
-@pytest.mark.slow  # 7-12 s band, sibling fast coverage kept (r13)
-def test_stream_cusum_accumulates_and_survives_restart(spark, tmp_path):
-    """Stateful streaming CUSUM: three micro-batches each +30% above
-    the reference mean — no single batch alarms at threshold 2 means,
-    but the CARRIED state crosses it by batch 3 (the whole point of
-    CUSUM over per-batch z-scores). The fold is replayed in pure
-    Python for exact expected values, and a SECOND stream run resumes
-    from the committed state rather than restarting from zero."""
-    import json as _json
-
-    from mapreduce_kmeans_clustering_spark.streaming.drift import stream_cusum
-
-    ref = spark.createDataFrame([("m", 10.0)], "event_type STRING, mu DOUBLE")
-    src = tmp_path / "src"
-    src.mkdir()
-    # each file: 10 events of value 13 -> batch total 130, n=10
-    for f in ("a", "b", "c"):
-        with open(src / f"{f}.json", "w") as fh:
-            for i in range(10):
-                fh.write(_json.dumps({"event_type": "m", "value": 13.0}) + "\n")
-
-    def run():
-        return stream_cusum(
-            spark.readStream.schema("event_type STRING, value DOUBLE")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(src)),
-            ref,
-            str(tmp_path / "out"),
-            str(tmp_path / "ckpt"),
-            str(tmp_path / "state"),
-            rel_slack=0.02,
-            threshold_means=2.0,
-        )
-
-    run().awaitTermination(120)
-    rows = sorted(
-        (r["batch_id"], r["sp"], r["alarm_pos"], r["alarm_neg"])
-        for r in spark.read.parquet(str(tmp_path / "out")).collect()
-    )
-    assert len(rows) == 3
-    # replay: dev_p per batch = 130 - 10*10*1.02 = 28; h = 2*10 = 20
-    sp, exp = 0.0, []
-    for _ in range(3):
-        sp = max(0.0, sp + (130.0 - 10 * 10.0 * 1.02))
-        exp.append(sp)
-    assert [r[1] for r in rows] == [pytest.approx(e, abs=1e-9) for e in exp]
-    assert [r[2] for r in rows] == [(e > 20.0) for e in exp]
-    assert not any(r[3] for r in rows)
-
-    # restart with one MORE file: state resumes at 84, not 0
-    with open(src / "d.json", "w") as fh:
-        for i in range(10):
-            fh.write(_json.dumps({"event_type": "m", "value": 13.0}) + "\n")
-    run().awaitTermination(120)
-    rows2 = sorted(
-        (r["batch_id"], r["sp"])
-        for r in spark.read.parquet(str(tmp_path / "out")).collect()
-    )
-    assert len(rows2) == 4
-    assert rows2[-1][1] == pytest.approx(exp[-1] + 28.0, abs=1e-9)
-
-
-@pytest.mark.slow  # 7-12 s band, sibling fast coverage kept (r13)
-def test_stream_cusum_intermittent_key_carries_state(spark, tmp_path):
-    """A key present in batches 1 and 3 but ABSENT from batch 2 must
-    accumulate S+ across the gap (full-outer state join), not reset:
-    two +28 deviations with a skipped batch between them land at 56,
-    exactly as if the batches were consecutive. The always-present
-    key 'k' keeps each micro-batch non-empty."""
-    import json as _json
-
-    from mapreduce_kmeans_clustering_spark.streaming.drift import stream_cusum
-
-    ref = spark.createDataFrame(
-        [("m", 10.0), ("k", 10.0)], "event_type STRING, mu DOUBLE"
-    )
-    src = tmp_path / "src"
-    src.mkdir()
-    # batch a: m hot (+28 dev) + k on-mean; batch b: ONLY k; batch c:
-    # m hot again + k. File names fix the availableNow batch order.
-    def write(name, rows):
-        with open(src / name, "w") as fh:
-            for et, v in rows:
-                fh.write(_json.dumps({"event_type": et, "value": v}) + "\n")
-
-    write("a.json", [("m", 13.0)] * 10 + [("k", 10.0)] * 5)
-    write("b.json", [("k", 10.0)] * 5)
-    write("c.json", [("m", 13.0)] * 10 + [("k", 10.0)] * 5)
-    q = stream_cusum(
-        spark.readStream.schema("event_type STRING, value DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src)),
-        ref,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        str(tmp_path / "state"),
-        rel_slack=0.02,
-        threshold_means=2.0,
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "out"))
-    m_rows = sorted(
-        (r["batch_id"], r["sp"], r["alarm_pos"])
-        for r in out.filter("key = 'm'").collect()
-    )
-    # m appears in exactly 2 batches; dev per hot batch = 130-102 = 28
-    assert [r[1] for r in m_rows] == [
-        pytest.approx(28.0, abs=1e-9),
-        pytest.approx(56.0, abs=1e-9),
-    ]
-    # 56 > 2*mu = 20: the carried state alarms where a reset (28)
-    # would too — assert the STATE value, which only passes un-reset
-    assert m_rows[-1][2] is True
-    # the state version written by the m-less batch still carries m
-    mid_epoch = sorted(r["batch_id"] for r in out.collect())[1]
-    state_mid = spark.read.parquet(
-        str(tmp_path / "state" / f"v={mid_epoch}")
-    )
-    [m_state] = state_mid.filter("key = 'm'").collect()
-    assert m_state["sp"] == pytest.approx(28.0, abs=1e-9)
-
-
-def test_stream_cusum_unknown_key_flagged_not_null(spark, tmp_path):
-    """A batch key with no reference mean must surface as
-    unknown_key=True with alarms False — never NULL alarm rows."""
-    import json as _json
-
-    from mapreduce_kmeans_clustering_spark.streaming.drift import stream_cusum
-
-    ref = spark.createDataFrame([("m", 10.0)], "event_type STRING, mu DOUBLE")
-    src = tmp_path / "src"
-    src.mkdir()
-    with open(src / "a.json", "w") as fh:
-        for et, v in [("m", 10.0)] * 5 + [("mystery", 99.0)] * 5:
-            fh.write(_json.dumps({"event_type": et, "value": v}) + "\n")
-    q = stream_cusum(
-        spark.readStream.schema("event_type STRING, value DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src)),
-        ref,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        str(tmp_path / "state"),
-    )
-    q.awaitTermination(120)
-    rows = {r["key"]: r for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-    assert rows["mystery"]["unknown_key"] is True
-    assert rows["mystery"]["alarm_pos"] is False
-    assert rows["mystery"]["alarm_neg"] is False
-    assert rows["mystery"]["sp"] == 0.0 and rows["mystery"]["sn"] == 0.0
-    assert rows["m"]["unknown_key"] is False
-    assert rows["m"]["alarm_pos"] is False
-
-
-def test_stream_cusum_stationary_stays_at_zero(spark, tmp_path):
-    import json as _json
-
-    from mapreduce_kmeans_clustering_spark.streaming.drift import stream_cusum
-
-    ref = spark.createDataFrame([("m", 10.0)], "event_type STRING, mu DOUBLE")
-    src = tmp_path / "src"
-    src.mkdir()
-    for f in ("a", "b"):
-        with open(src / f"{f}.json", "w") as fh:
-            for i in range(10):
-                fh.write(_json.dumps({"event_type": "m", "value": 10.0}) + "\n")
-    q = stream_cusum(
-        spark.readStream.schema("event_type STRING, value DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src)),
-        ref,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        str(tmp_path / "state"),
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(str(tmp_path / "out")).collect()
-    assert len(rows) == 2
-    # the slack term absorbs an on-mean stream on both sides
-    assert all(r["sp"] == 0.0 and not r["alarm_pos"] for r in rows)
-    assert all(not r["alarm_neg"] for r in rows)
-
-
 @pytest.mark.slow  # 7-12 s band, sibling fast coverage kept (r13)
 def test_stream_near_dedup_ingest_flags_near_copies(spark, tmp_path):
     """Streaming index-vs-delta near-dedup: arriving docs are screened
@@ -929,7 +191,6 @@ def test_stream_near_dedup_ingest_flags_near_copies(spark, tmp_path):
         incremental_minhash_dedup,
     )
     from mapreduce_kmeans_clustering_spark.streaming.ingest import (
-        read_documents_stream,
         stream_near_dedup_ingest,
     )
 
@@ -959,7 +220,7 @@ def test_stream_near_dedup_ingest_flags_near_copies(spark, tmp_path):
 
     out = str(tmp_path / "verdicts")
     q = stream_near_dedup_ingest(
-        read_documents_stream(spark, str(src), max_files_per_trigger=1),
+        _docs_stream(spark, str(src), max_files_per_trigger=1),
         index_docs,
         out,
         str(tmp_path / "ckpt"),
@@ -1002,7 +263,6 @@ def test_stream_near_dedup_validates_supplied_index_once(
     from mapreduce_kmeans_clustering_spark.operators import dedup as D
     from mapreduce_kmeans_clustering_spark.streaming import ingest as ing
     from mapreduce_kmeans_clustering_spark.streaming.ingest import (
-        read_documents_stream,
         stream_near_dedup_ingest,
     )
 
@@ -1027,7 +287,7 @@ def test_stream_near_dedup_validates_supplied_index_once(
     )
     with _pt.raises(ValueError, match="band_width"):
         stream_near_dedup_ingest(
-            read_documents_stream(spark, str(src), max_files_per_trigger=1),
+            _docs_stream(spark, str(src), max_files_per_trigger=1),
             index_docs,
             str(tmp_path / "v0"),
             str(tmp_path / "c0"),
@@ -1048,7 +308,7 @@ def test_stream_near_dedup_validates_supplied_index_once(
         D.minhash_signatures(index_docs, num_hashes=8), band_width=2
     )
     q = stream_near_dedup_ingest(
-        read_documents_stream(spark, str(src), max_files_per_trigger=1),
+        _docs_stream(spark, str(src), max_files_per_trigger=1),
         index_docs,
         str(tmp_path / "v1"),
         str(tmp_path / "c1"),
@@ -1077,7 +337,6 @@ def test_stream_url_dedup_ingest_verdicts(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mapreduce_kmeans_clustering_spark.streaming.ingest import (
-        read_documents_stream,
         stream_url_dedup_ingest,
     )
 
@@ -1098,7 +357,7 @@ def test_stream_url_dedup_ingest_verdicts(spark, tmp_path):
         .when(F.col("doc_id").isin(2, 3), "http://shared.com/x")
         .otherwise(F.lit(None).cast("string"))
     )
-    stream = read_documents_stream(spark, str(src)).withColumn("url", url)
+    stream = _docs_stream(spark, str(src)).withColumn("url", url)
     index_urls = spark.createDataFrame(
         [("seen.com/p/1",), ("other.com/q",)], "norm_url STRING"
     )
@@ -1139,7 +398,6 @@ def test_stream_boilerplate_ingest_scrubs_and_emits_batch_index(spark, tmp_path)
         flag_boilerplate_index,
     )
     from mapreduce_kmeans_clustering_spark.streaming.ingest import (
-        read_documents_stream,
         stream_boilerplate_ingest,
     )
 
@@ -1157,7 +415,7 @@ def test_stream_boilerplate_ingest_scrubs_and_emits_batch_index(spark, tmp_path)
         F.when(F.col("doc_id").isin(1, 2), F.concat(F.lit("https://old.com/p/"), F.col("doc_id")))
         .otherwise(F.concat(F.lit("https://young.org/p/"), F.col("doc_id")))
     )
-    stream = read_documents_stream(spark, str(src)).withColumn("url", url)
+    stream = _docs_stream(spark, str(src)).withColumn("url", url)
     # stored index: old.com has 10 docs, all carrying 'nav home menu';
     # young.org has never been seen
     stored = spark.createDataFrame(
@@ -1214,7 +472,6 @@ def test_stream_bloom_ingest_screens_and_folds(spark, tmp_path):
         extend_bloom_filter,
     )
     from mapreduce_kmeans_clustering_spark.streaming.ingest import (
-        read_documents_stream,
         stream_bloom_ingest,
     )
 
@@ -1235,7 +492,7 @@ def test_stream_bloom_ingest_screens_and_folds(spark, tmp_path):
     (src / "a.jsonl").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
     out = str(tmp_path / "out")
     q = stream_bloom_ingest(
-        read_documents_stream(spark, str(src)), stored, out,
+        _docs_stream(spark, str(src)), stored, out,
         str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
@@ -1321,7 +578,6 @@ def test_stream_dsir_ingest_scores_and_folds(spark, tmp_path):
         merge_dsir_profiles,
     )
     from mapreduce_kmeans_clustering_spark.streaming.ingest import (
-        read_documents_stream,
         stream_dsir_ingest,
     )
 
@@ -1347,7 +603,7 @@ def test_stream_dsir_ingest_scores_and_folds(spark, tmp_path):
     (src / "a.jsonl").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
     out = str(tmp_path / "out")
     q = stream_dsir_ingest(
-        read_documents_stream(spark, str(src)), prof, out,
+        _docs_stream(spark, str(src)), prof, out,
         str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
@@ -1399,7 +655,6 @@ def test_stream_passage_ingest_scrubs_and_folds(spark, tmp_path):
         passage_scrub_delta,
     )
     from mapreduce_kmeans_clustering_spark.streaming.ingest import (
-        read_documents_stream,
         stream_passage_ingest,
     )
 
@@ -1421,7 +676,7 @@ def test_stream_passage_ingest_scrubs_and_folds(spark, tmp_path):
     (src / "a.jsonl").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
     out = str(tmp_path / "out")
     q = stream_passage_ingest(
-        read_documents_stream(spark, str(src)), idx, out,
+        _docs_stream(spark, str(src)), idx, out,
         str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from mapreduce_kmeans_clustering_spark.operators.web import (
     domain_quality_caps,
-    domain_stats,
     host_expr,
     registrable_domain_expr,
     url_dedup,
@@ -91,22 +90,6 @@ def test_domain_quality_caps_budget(spark):
     assert set(kept) == {0, 1, 10}
     assert kept[0] == ("big.com", 1) and kept[1] == ("big.com", 2)
     assert kept[10] == ("small.org", 1)  # under cap: untouched
-
-
-def test_domain_stats_hosts_and_avg(spark):
-    rows = [
-        (1, "https://a.x.com/1", 10),
-        (2, "https://b.x.com/2", 20),
-        (3, "https://a.x.com/3", 33),
-        (4, "https://y.org/1", 5),
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id LONG, url STRING, n_chars LONG"
-    )
-    got = {r["domain"]: r for r in domain_stats(docs).collect()}
-    assert got["x.com"]["n_docs"] == 3 and got["x.com"]["n_hosts"] == 2
-    assert got["x.com"]["avg_score"] == 21.0
-    assert got["y.org"]["n_docs"] == 1 and got["y.org"]["n_hosts"] == 1
 
 
 def test_multi_semantic_decontam_names_and_best_match(spark):
@@ -211,10 +194,6 @@ def test_null_url_docs_are_kept_not_dropped(spark):
     for i in (3, 4):
         assert wc[i]["status"] == "keep"
         assert wc[i]["domain"] is None and wc[i]["domain_rank"] is None
-
-    # domain_stats: one NULL-domain dashboard row, n_hosts 0
-    st = {r["domain"]: r for r in domain_stats(docs).collect()}
-    assert st[None]["n_docs"] == 2 and st[None]["n_hosts"] == 0
 
 
 def test_url_normalize_idempotent_and_domain_stable(spark):

@@ -1,7 +1,6 @@
 """VP8L (WebP lossless) codec pins: every decoder path is exercised
 through spec-valid streams from the module's own encoder, with the
-decoded RGBA raster compared byte-exact to the known source pixels —
-the same self-encoder strategy as tests/test_jpeg.py.
+decoded RGBA raster compared byte-exact to the known source pixels.
 
 Plus (ADVICE r7) encoder-INDEPENDENT fixtures at the bottom: streams
 hand-assembled bit-by-bit from the published VP8L spec with a local
@@ -169,17 +168,6 @@ def test_garbage_rejected():
     good = encode_webp_lossless(_raster(5, 5, 9), 5, 5)
     with pytest.raises(ValueError):
         decode_webp(good[:-6])  # truncated bitstream
-
-
-def test_decode_media_dispatches_webp():
-    from mapreduce_kmeans_clustering_spark.operators.multimodal import (
-        decode_media,
-    )
-
-    px = _raster(11, 5, 10)
-    got = decode_media(encode_webp_lossless(px, 11, 5), "image")
-    assert (got["width"], got["height"], got["channels"]) == (11, 5, 4)
-    assert got["pixels"] == px
 
 
 # ---------------------------------------------------------------------------
