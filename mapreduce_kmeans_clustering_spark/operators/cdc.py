@@ -14,9 +14,6 @@ Scale shapes:
   WindowGroupLimit plan as the keep-last-version compaction read
   (queries q_latest_event_per_user): partitions discard non-latest
   rows before the sort, shuffle carries the change rows once.
-- `merge_snapshot` adds one left-anti join of the (large) base against
-  the (small) latest-change set — broadcast when the batch is small,
-  AQE-sized otherwise; the base is never window-sorted.
 - `state_periods` is the gaps-and-islands pattern: lag to mark run
   starts, running count to number runs, one aggregate per run, lead
   for the closing bound — two windows and one aggregate, all
@@ -26,7 +23,7 @@ Scale shapes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -52,29 +49,6 @@ def changelog_state(
     if op_col is not None:
         latest = latest.where(F.col(op_col) != delete_op)
     return latest
-
-
-def merge_snapshot(
-    base: DataFrame,
-    changes: DataFrame,
-    key_cols: list[str],
-    seq_cols: list[str],
-    op_col: str | None = None,
-    delete_op: str = "delete",
-) -> DataFrame:
-    """SCD1 merge: apply a change batch to a base snapshot. Rows of
-    ``base`` whose key appears in ``changes`` are superseded (replaced
-    by the latest upsert, or dropped on a delete tombstone); unchanged
-    base rows pass through via one left-anti join (broadcast the
-    change keys when the batch is small — Catalyst/AQE decides).
-    Schemas must match on the selected columns (changes may carry
-    ``op_col`` extra; it is dropped from the result)."""
-    state = changelog_state(changes, key_cols, seq_cols, op_col, delete_op)
-    if op_col is not None:
-        state = state.drop(op_col)
-    touched = changes.select(*key_cols).distinct()
-    untouched = base.join(touched, on=key_cols, how="left_anti")
-    return untouched.unionByName(state.select(*base.columns))
 
 
 def state_periods(

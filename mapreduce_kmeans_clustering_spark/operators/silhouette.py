@@ -24,10 +24,10 @@ session's default parallelism, each row meets a broadcast copy of the
 evaluation set, and the per-cluster sums, the same-cluster pair count
 (hence n_C) and, over the K result rows, k all come out of that one
 pass. The work is inherently O(n^2) — that is the reference's defined
-semantics, not an implementation accident — so for large inputs pass
-``limit_rids`` to evaluate on a deterministic subset, or use
-``silhouette_standard`` (MLlib, O(n*k)) when reference parity is not
-required.
+semantics, not an implementation accident — so for large inputs filter
+``assigned`` by ``rid`` before the call to evaluate on a deterministic
+subset, or use ``silhouette_standard`` (MLlib, O(n*k)) when reference
+parity is not required.
 """
 
 from __future__ import annotations
@@ -65,9 +65,9 @@ def _pair_sums(assigned: DataFrame) -> DataFrame:
     all n^2 pairs as ONE task. Shuffling n rows is free next to n^2
     pairs, and the sort Spark runs before a round-robin exchange keeps
     row placement deterministic. The evaluation set is bounded by
-    construction (silhouette_ref's O(n^2) contract + the limit_rids
-    hatch), so the broadcast side is always the bounded subset, never
-    an unbounded corpus."""
+    construction (silhouette_ref's O(n^2) contract; a caller filters by
+    rid first for a subset), so the broadcast side is always the
+    bounded subset, never an unbounded corpus."""
     cols = ("cluster", "x", "y", "z")
     parallelism = assigned.sparkSession.sparkContext.defaultParallelism
     a = assigned.select(*cols).repartition(parallelism).alias("a")
@@ -95,21 +95,18 @@ def _pair_sums(assigned: DataFrame) -> DataFrame:
 def silhouette_ref(
     assigned: DataFrame,
     singleton: str = "nan",
-    limit_rids: int | None = None,
 ) -> DataFrame:
     """assigned(rid, cluster, x, y, z) -> (cluster, avg_intra,
     avg_inter, silhouette), reference formulas.
 
     ``singleton``: "nan" (variant 1) or "skip" (variants 2/3).
-    ``limit_rids``: evaluate only rows with rid < limit_rids — the
-    deterministic scale hatch for the O(n^2) semantics.
+    The deterministic scale hatch for the O(n^2) semantics is a filter
+    the caller writes first, e.g. ``assigned.where(F.col("rid") < n)``.
     """
     if singleton not in ("nan", "skip"):
         raise ValueError("singleton must be 'nan' or 'skip'")
     if "rid" not in assigned.columns:
         raise ValueError("silhouette_ref requires a rid column (use with_rid)")
-    if limit_rids is not None:
-        assigned = assigned.where(F.col("rid") < limit_rids)
 
     # n_C = sqrt(n_C**2) is exact while n_C**2 < 2**53, far past any
     # evaluation set an O(n^2) pass can hold. k is the number of

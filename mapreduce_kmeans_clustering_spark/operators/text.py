@@ -63,21 +63,6 @@ def bpe_token_count(col: Column | str) -> Column:
     return F.size(bpe_pretokens(col))
 
 
-def word_shingles(tokens_col: Column, n: int = 3) -> Column:
-    """n-word shingles of a token array; empty array when the doc has
-    fewer than n tokens (guards Spark's descending-sequence surprise
-    for sequence(1, 0))."""
-    make = F.transform(
-        F.sequence(F.lit(1), F.size(tokens_col) - (n - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(tokens_col, i + j) for j in range(n)]
-        ),
-    )
-    return F.when(F.size(tokens_col) >= n, make).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def _padded(col: Column) -> Column:
     return F.concat(F.lit(" "), F.lower(F.coalesce(col, F.lit(""))), F.lit(" "))
 
@@ -296,41 +281,6 @@ def hash_dim(tok_col: Column, n_features: int) -> Column:
         F.conv(F.substring(F.md5(tok_col), 1, 8), 16, 10).cast("long")
         % n_features
     ).cast("int")
-
-
-def hashed_tf(
-    docs,
-    n_features: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Hashing-trick term-frequency features: each document becomes a
-    dense ``n_features``-dim double array (bucketed token counts) —
-    the text→vector bridge into the embedding stack (``fit_nd``,
-    quantization, ANN) with no vocabulary table and no RNG.
-
-    Plan: explode (scan-local) → one groupBy(doc) with ``n_features``
-    conditional sums (codegen; no pivot, no second shuffle). Documents
-    with zero tokens drop out (no rows to group), mirroring
-    ``bigram_lm_scores``'s contract. Dense-vs-exploded consistency is
-    pinned by test against the (doc, dim, weight) form the registered
-    query uses.
-    """
-    t = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
-    ).select(F.col(id_col), hash_dim(F.col("tok"), n_features).alias("dim"))
-    sums = [
-        F.sum(F.when(F.col("dim") == i, 1).otherwise(0)).cast("double").alias(f"f{i}")
-        for i in range(n_features)
-    ]
-    return (
-        t.groupBy(id_col)
-        .agg(*sums)
-        .select(
-            F.col(id_col),
-            F.array(*[F.col(f"f{i}") for i in range(n_features)]).alias("features"),
-        )
-    )
 
 
 def gopher_quality(

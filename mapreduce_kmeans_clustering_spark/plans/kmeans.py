@@ -90,7 +90,6 @@ def fit(
     max_iter: int = DEFAULT_MAX_ITER,
     threshold: float | None = DEFAULT_THRESHOLD,
     strict_size: bool = True,
-    keep_history: bool = False,
 ) -> FitResult:
     """Run Lloyd iterations until the summed displacement drops below
     ``threshold`` or ``max_iter`` is hit.
@@ -103,14 +102,16 @@ def fit(
     i, compare to iteration i-1's centroids, stop AFTER the iteration
     whose displacement is below threshold (the converged centroids are
     included).
+
+    ``history`` is always recorded: the centroids after every step, K
+    centroids per step.
     """
     curr = list(seeds)
     result = FitResult(centroids=curr, iterations=0, converged=False)
     for _ in range(max_iter):
         prev, curr = curr, lloyd_iteration(points, curr)
         result.iterations += 1
-        if keep_history:
-            result.history.append(curr)
+        result.history.append(curr)
         if threshold is not None:
             d = displacement(prev, curr, strict=strict_size)
             result.displacements.append(d)

@@ -149,8 +149,6 @@ def write_zordered(
     a small hyper-rectangle in every z-ordered dimension, so min/max
     row-group stats prune scans filtering on ANY of them — where the
     1-D range sort only serves its leading column."""
-    from pyspark.sql import functions as F
-
     keyed = df.withColumn("__zkey", zorder_key(col_specs, bits))
     (
         keyed.repartitionByRange(num_files, "__zkey")

@@ -1,5 +1,5 @@
-"""CDC operators (operators/cdc.py): changelog replay semantics,
-snapshot merge (upsert/delete/untouched), and SCD2 period intervals."""
+"""CDC operators (operators/cdc.py): changelog replay semantics and
+SCD2 period intervals."""
 
 from __future__ import annotations
 
@@ -23,27 +23,6 @@ def test_changelog_state_last_wins_and_tombstones(spark):
         for r in cdc.changelog_state(ch, ["k"], ["seq"], op_col="op").collect()
     }
     assert got == {1: "b", 3: "z"}
-
-
-def test_merge_snapshot_applies_batch(spark):
-    base = spark.createDataFrame(
-        [(1, "old1"), (2, "old2"), (4, "old4")], "k LONG, v STRING"
-    )
-    ch = spark.createDataFrame(
-        [
-            (1, 1, "upsert", "new1"),  # replaces base
-            (2, 1, "delete", None),    # removes base
-            (3, 1, "upsert", "new3"),  # inserts
-        ],
-        "k LONG, seq LONG, op STRING, v STRING",
-    )
-    got = {
-        r["k"]: r["v"]
-        for r in cdc.merge_snapshot(
-            base, ch.select("k", "seq", "op", "v"), ["k"], ["seq"], op_col="op"
-        ).collect()
-    }
-    assert got == {1: "new1", 3: "new3", 4: "old4"}
 
 
 def test_state_periods_gaps_and_islands(spark):
@@ -81,18 +60,3 @@ def test_state_periods_tie_breaks_on_id(spark):
         key=lambda r: r["version"],
     )
     assert [r["s"] for r in rows] == ["A", "B", "A"]
-
-
-def test_merge_snapshot_is_idempotent(spark):
-    """Applying the same batch twice equals applying it once — the
-    replay-safety a changelog consumer needs after a retry."""
-    base = spark.createDataFrame(
-        [(1, "old1"), (2, "old2"), (4, "old4")], "k LONG, v STRING"
-    )
-    ch = spark.createDataFrame(
-        [(1, 1, "upsert", "new1"), (2, 1, "delete", None), (3, 1, "upsert", "new3")],
-        "k LONG, seq LONG, op STRING, v STRING",
-    )
-    once = cdc.merge_snapshot(base, ch, ["k"], ["seq"], op_col="op")
-    twice = cdc.merge_snapshot(once, ch, ["k"], ["seq"], op_col="op")
-    assert {tuple(r) for r in once.collect()} == {tuple(r) for r in twice.collect()}

@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_kmeans_clustering_spark.operators.curation import (
-    SPLITS,
     bigram_lm_scores,
     contamination_report,
     doc_bigrams,

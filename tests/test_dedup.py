@@ -1194,3 +1194,19 @@ def test_passage_index_guards_id_type_and_multi_sentinel(spark):
     # not to a rebuild
     with pytest.raises(ValueError, match="merge_passage_indexes"):
         passage_index_geometry(idx.unionByName(idx))
+
+
+def test_jaccard_max_df_is_subset_and_inert_when_large(spark):
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    full = {(r["a"], r["b"]) for r in jaccard_pairs(docs, threshold=0.2).collect()}
+    inert = {
+        (r["a"], r["b"])
+        for r in jaccard_pairs(docs, threshold=0.2, max_df=10**9).collect()
+    }
+    assert inert == full
+    filtered = {
+        (r["a"], r["b"])
+        for r in jaccard_pairs(docs, threshold=0.2, max_df=2).collect()
+    }
+    # recall trade: never invents pairs
+    assert filtered <= full

@@ -8,7 +8,6 @@ for points/seeds in sources/)."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 

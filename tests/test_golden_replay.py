@@ -16,7 +16,7 @@ import pytest
 
 from mapreduce_kmeans_clustering_spark.operators.assign import assign
 from mapreduce_kmeans_clustering_spark.operators.silhouette import silhouette_ref
-from mapreduce_kmeans_clustering_spark.plans.kmeans import displacement, fit, lloyd_iteration
+from mapreduce_kmeans_clustering_spark.plans.kmeans import fit, lloyd_iteration
 from mapreduce_kmeans_clustering_spark.sinks.text_kv import read_centroids_kv
 from mapreduce_kmeans_clustering_spark.sources.points import with_rid
 
@@ -54,7 +54,7 @@ def test_task2_chain_r5(ref_points, ref_seeds):
 
 @pytest.mark.slow  # 7-12 s band, sibling fast coverage kept (r13)
 def test_converged_chain_task5a(ref_points, ref_seeds):
-    res = fit(ref_points, ref_seeds, max_iter=30, threshold=5.0, keep_history=True)
+    res = fit(ref_points, ref_seeds, max_iter=30, threshold=5.0)
     assert res.converged
     assert res.iterations == 28  # iteration_0 .. iteration_27
     assert_centroids_close(res.centroids, golden("task5a", 27))
@@ -116,7 +116,7 @@ def test_task5a_chain_byte_exact_java_format(ref_points, ref_seeds):
     tolerance."""
     from mapreduce_kmeans_clustering_spark.sinks.text_kv import format_centroids_kv
 
-    res = fit(ref_points, ref_seeds, max_iter=30, threshold=5.0, keep_history=True)
+    res = fit(ref_points, ref_seeds, max_iter=30, threshold=5.0)
     assert res.iterations == 28
     for i, cents in enumerate(res.history):
         golden_lines = [

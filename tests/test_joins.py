@@ -142,8 +142,6 @@ def test_fuzzy_self_join_ed1_cases(spark):
     """Deletion-neighborhood fuzzy join: catches substitution, insert,
     delete, and identical names; rejects shared-deletion distance-2
     pairs ('ab' vs 'ba' share deletions but ed=2)."""
-    from pyspark.sql import functions as F
-
     from mapreduce_kmeans_clustering_spark.operators.joins import fuzzy_self_join_ed1
 
     df = spark.createDataFrame(

@@ -650,7 +650,6 @@ def test_round5_extension_query_plans(spark):
     )
     from mapreduce_kmeans_clustering_spark.queries.relational import (
         q_basket_rules,
-        q_basket_triples,
         q_copurchase_triangles,
         q_linkage_scores,
         q_zorder_locality,

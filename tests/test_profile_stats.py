@@ -528,8 +528,6 @@ def test_survival_km_hand_curve(spark, tmp_path):
 def test_woe_iv_hand_check(spark):
     import math
 
-    from pyspark.sql import functions as F
-
     from mapreduce_kmeans_clustering_spark.operators.profile import woe_iv
 
     # bin 0: 3 good / 1 bad; bin 1: 1 good / 3 bad  (totals 4/4)

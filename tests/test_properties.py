@@ -312,7 +312,7 @@ def test_bpe_merge_conserves_mass(spark, texts):
     one, never more than the overlapping count (found falsifier:
     'aaa' counts (a,a) twice but merges once; that is textbook BPE,
     the original property statement was wrong)."""
-    from mapreduce_kmeans_clustering_spark.operators.text import bpe_train, tokens
+    from mapreduce_kmeans_clustering_spark.operators.text import bpe_train
 
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id LONG, text STRING"

@@ -11,6 +11,7 @@ import math
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 from mapreduce_kmeans_clustering_spark.operators.silhouette import silhouette_ref
@@ -99,7 +100,8 @@ def test_silhouette_ref_limit_rids(spark):
     keep = np.arange(len(lab)) < limit
     want = _replay(xyz[keep], lab[keep], "nan")
     for parts in (1, 3):
-        got = silhouette_ref(_frame(spark, xyz, lab, parts), limit_rids=limit).collect()
+        subset = _frame(spark, xyz, lab, parts).where(F.col("rid") < limit)
+        got = silhouette_ref(subset).collect()
         _assert_matches(got, want)
 
 

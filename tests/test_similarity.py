@@ -181,8 +181,6 @@ def test_knn_graph_properties(spark):
     company gets 1..k neighbors ranked by descending cosine with
     deterministic ties; src never equals dst; the rank-1 neighbor of a
     duplicated vector is its exact copy (cos 1)."""
-    from pyspark.sql import functions as F
-
     from mapreduce_kmeans_clustering_spark.operators.similarity import knn_graph
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -461,8 +459,6 @@ def test_inf_vector_never_ranks_in_knn_or_hard_negatives(spark):
     quotient-guarded safe_cosine an Inf vector's similarities are
     NULL (sort last, fail thresholds) so it never outranks a real
     neighbor."""
-    from pyspark.sql import functions as F
-
     from mapreduce_kmeans_clustering_spark.operators.similarity import (
         hard_negatives,
         knn_graph,
@@ -606,8 +602,6 @@ def test_ivf_extend_index_appends_against_stored_quantizer(spark, tmp_path):
     since the quantizer is fixed by construction), existing rows are
     untouched, probes see old + new, and the hidden _centroids dir
     never leaks into the index read."""
-    from pyspark.sql import functions as F
-
     from mapreduce_kmeans_clustering_spark.operators.similarity import (
         ivf_assign,
         ivf_extend_index,

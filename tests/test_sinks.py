@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
 from mapreduce_kmeans_clustering_spark.operators.aggregate import members
 from mapreduce_kmeans_clustering_spark.sinks.text_kv import (
     format_centroids_kv,

@@ -41,8 +41,6 @@ def test_duplicates_and_order_do_not_change_estimate(spark):
 
 
 def test_salted_two_phase_equals_single_sort(spark):
-    from pyspark.sql import functions as F
-
     df = spark.createDataFrame(
         [(f"g{i % 3}", f"value-{i}") for i in range(3000)], "g STRING, v STRING"
     ).repartition(8)
@@ -287,8 +285,6 @@ def test_hll_small_range_linear_counting(spark):
 
 
 def test_kmv_set_ops_exact_branch_small_sets(spark):
-    from pyspark.sql import functions as F
-
     from mapreduce_kmeans_clustering_spark.functions.sketch import kmv_set_ops
 
     a = spark.createDataFrame([(i,) for i in range(30)], "v long")

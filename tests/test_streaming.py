@@ -84,10 +84,6 @@ def test_stream_histogram_counts_match_batch(spark, events_dir):
     """Streaming histogram: bucket counts aggregated in complete mode
     equal the batch bucketing — the counts table IS the quantile
     sketch state, so a stream can serve p50/p95 continuously."""
-    from mapreduce_kmeans_clustering_spark.functions.sketch import (
-        histogram_quantiles,
-    )
-
     bucket = F.least(
         F.lit(99), F.greatest(F.lit(0), F.floor(F.col("value") / 5.0))
     ).cast("int")
@@ -261,7 +257,6 @@ def test_stream_near_dedup_validates_supplied_index_once(
     import pytest as _pt
 
     from mapreduce_kmeans_clustering_spark.operators import dedup as D
-    from mapreduce_kmeans_clustering_spark.streaming import ingest as ing
     from mapreduce_kmeans_clustering_spark.streaming.ingest import (
         stream_near_dedup_ingest,
     )

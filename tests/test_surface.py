@@ -15,9 +15,7 @@ it through name references in the code:
 
 Names reachable from tests alone fall outside the surface, except the
 short list of test-oracle twins below. The walk is by name, not by
-module, so a shared name keeps every def that carries it. The names in
-``PENDING_DELETION`` are outside the surface and wait for their own
-deletion (ROADMAP item 5).
+module, so a shared name keeps every def that carries it.
 """
 
 from __future__ import annotations
@@ -57,24 +55,6 @@ TEST_ORACLE_TWINS = {
     "extend_passage_index",  # merge_passage_indexes' folded index
     "bloom_screen_from_filter",  # merge_bloom_filters' folded filter
 }
-
-
-# Outside the surface, but deleted in a later change: the surface's
-# deletion is split in two so that no one change drops more than 80
-# tests. (module, names or None for the whole module), as in PAPER_PATH.
-PENDING_DELETION = {
-    "operators/webp.py": None,
-    "operators/pca.py": None,
-    "functions/skew.py": None,
-    "operators/cdc.py": {"merge_snapshot"},
-    "operators/text.py": {"hashed_tf", "word_shingles"},
-}
-
-
-def _pending(mod: str, name: str) -> bool:
-    return mod in PENDING_DELETION and (
-        PENDING_DELETION[mod] is None or name in PENDING_DELETION[mod]
-    )
 
 
 def _refs(node: ast.AST, strings: bool = False) -> set[str]:
@@ -169,14 +149,5 @@ def test_every_package_name_is_reachable_from_a_root():
         for (mod, name) in defs
         if name not in seen and not mod.endswith("__init__.py")
         and not (name.startswith("__") and name.endswith("__"))
-        and not _pending(mod, name)
     )
     assert outside == [], f"{len(outside)} names outside the surface: {outside}"
-    # a pending name that a root reaches again belongs in the surface,
-    # not on the list
-    reached = sorted(
-        f"{mod}::{name}"
-        for (mod, name) in defs
-        if _pending(mod, name) and not name.startswith("_") and name in seen
-    )
-    assert reached == [], f"pending names inside the surface: {reached}"

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from mapreduce_kmeans_clustering_spark.operators.text import (
     fingerprint,
@@ -11,7 +10,6 @@ from mapreduce_kmeans_clustering_spark.operators.text import (
     quality_score,
     token_count,
     tokens,
-    word_shingles,
 )
 
 
@@ -35,13 +33,6 @@ def test_tokens_and_count(spark):
     ).collect()
     assert row["t"] == ["a", "b", "c", "42", "x"]
     assert row["n"] == 5
-
-
-def test_shingles_short_doc_empty(spark):
-    df = spark.createDataFrame([("one two",), ("one two three four",)], "text STRING")
-    rows = df.select(word_shingles(tokens("text"), 3).alias("s")).collect()
-    assert rows[0]["s"] == []
-    assert rows[1]["s"] == ["one two three", "two three four"]
 
 
 def test_lang_id(tdf):
@@ -125,8 +116,6 @@ def test_stratified_sampling_rates_and_determinism(spark):
 
 
 def test_bpe_pretokens_vs_word_tokens(spark):
-    from pyspark.sql import functions as F
-
     from mapreduce_kmeans_clustering_spark.operators.text import (
         bpe_token_count,
         token_count,
@@ -170,49 +159,9 @@ def test_repetition_stats_flags_boilerplate(spark):
     assert got[3] == (0.0, 0.0)
 
 
-def test_hashed_tf_dense_matches_exploded(spark):
-    from mapreduce_kmeans_clustering_spark.operators.text import hash_dim, hashed_tf
-
-    rows = [(0, "aa bb aa cc"), (1, "bb"), (2, ""), (3, None)]
-    df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    dense = {r["doc_id"]: r["features"] for r in hashed_tf(df, 8).collect()}
-    assert set(dense) == {0, 1}  # token-less docs drop out
-    assert sum(dense[0]) == 4.0 and sum(dense[1]) == 1.0
-    exploded = (
-        df.select("doc_id", F.explode(tokens("text")).alias("tok"))
-        .select("doc_id", hash_dim(F.col("tok"), 8).alias("dim"))
-        .groupBy("doc_id", "dim")
-        .count()
-        .collect()
-    )
-    from collections import defaultdict
-
-    exp = defaultdict(lambda: [0.0] * 8)
-    for r in exploded:
-        exp[r["doc_id"]][r["dim"]] = float(r["count"])
-    assert dense == dict(exp)
-
-
-def test_hashed_tf_feeds_fit_nd(spark):
-    from mapreduce_kmeans_clustering_spark.operators.text import hashed_tf
-    from mapreduce_kmeans_clustering_spark.plans import fit_nd
-
-    df = spark.createDataFrame(
-        [(i, ("alpha beta " * (i % 3 + 1)).strip()) for i in range(12)],
-        "doc_id LONG, text STRING",
-    )
-    feats = hashed_tf(df, 8).select(
-        F.col("doc_id").alias("vec_id"), F.col("features").alias("embedding")
-    )
-    res = fit_nd(feats, k=2, max_iter=3)
-    assert len(res.centroids) <= 2 and res.iterations >= 1
-
-
 def test_gopher_quality_rule_attribution(spark):
     """Each Gopher rule fires independently and the keep verdict is
     their conjunction — crafted docs hit exactly one rule each."""
-    from pyspark.sql import functions as F
-
     from mapreduce_kmeans_clustering_spark.operators.text import gopher_quality
 
     good = "the quick brown fox jumps over a lazy dog and then runs " * 3

@@ -259,8 +259,6 @@ def test_extend_url_index_closes_the_ingest_loop(spark):
     """Index maintenance: kept norm_urls from one batch's verdicts join
     the stored relation (NULLs dropped, duplicates collapsed), so the
     same URL arriving in the NEXT batch is a corpus dup."""
-    from pyspark.sql import functions as F
-
     from mapreduce_kmeans_clustering_spark.operators.web import (
         extend_url_index,
         url_dedup,
@@ -285,8 +283,6 @@ def test_domain_caps_salted_two_stage_is_exact(spark):
     top-cap, so stage 2 reproduces identical (id, domain, rank) rows —
     checked over a skewed corpus (one domain with 60 docs, several
     small domains, NULL urls) for several salts including S > n."""
-    from pyspark.sql import functions as F
-
     rows = [
         (i, "https://big.com/p/%d" % i, (i * 37) % 100) for i in range(60)
     ] + [

@@ -4,7 +4,6 @@ file footers (per-file min/max spans under Z vs linear clustering)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_kmeans_clustering_spark.functions.zorder import (
