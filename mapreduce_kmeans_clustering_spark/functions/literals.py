@@ -13,31 +13,46 @@ into plan text.
 
 Two reads of the row. ``operators/assign.assign`` (the 3-D Lloyd step)
 cross-joins it under a broadcast hint: a condition-free
-BroadcastNestedLoopJoin, one 1-task broadcast job per use. Every other
-channel goes through ``with_consts``, which projects each constant as
-an uncorrelated scalar subquery of the row: no join and no job (the
-driver reads the local row), and the data side's size estimate is
-kept. Without CBO Spark estimates a cross join as the product of its
-sides' sizes, and the row is at least 16 bytes, so a cross-joined
-channel's output is estimated at least 16 times its data; the
-semantic-dedup and IVF assignments are checkpointed and joined later,
-and at sf0.1 that estimate turned four of those joins from broadcast
-into sort-merge.
+BroadcastNestedLoopJoin, one 1-task broadcast job per use. It keeps
+that join because the alternative was measured slower where the data
+is large. Given its 3K coordinates as one ``array<double>`` column
+through ``with_consts`` (same argmin text, coordinates read as
+``_c[3i+a]``), a step runs 2 jobs instead of 3 and still compiles
+nothing after a fit's first step, but each row reads the array. On
+``update_centroids(assign(...)).collect()`` (local[4] on a 4-core
+host, fresh centroids each step, 7 interleaved pairs, identical
+centroids in every pair) the array form took 1,105 ms against 925 ms
+median at 2M points and K=16 and won no pair (a second run: 1,039
+against 882 ms, one pair won); at 2M points and K=5, and at 5,000
+points, the two were within about 10% either way. A ``named_struct`` constant was
+about twice as slow. Every other channel goes through
+``with_consts``, which projects each constant as an uncorrelated
+scalar subquery of the row: no join and no job (the driver reads the
+local row), and the data side's size estimate is kept. Without CBO
+Spark estimates a cross join as the product of its sides' sizes, and
+the row is at least 16 bytes, so a cross-joined channel's output is
+estimated at least 16 times its data; the semantic-dedup and IVF
+assignments are checkpointed and joined later, and at sf0.1 that
+estimate turned four of those joins from broadcast into sort-merge.
 
 IEEE ``-0.0``: Spark 4.1.2's whole-stage codegen, under
 common-subexpression elimination across sibling distance expressions,
 miscomputes ``(col - (-0.0))^2``-style terms: a plan embedding a
 ``-0.0`` constant can return 0.0 for a distance that is exactly 1.0.
-Reproduction (pinned in tests/test_assign.py::
-test_negative_zero_seed_regression): a seed with the coordinate
-``-0.0`` misroutes the point (0,0,1) that sits exactly ON another
-seed. With ``spark.sql.codegen.wholeStage=false`` the same plan is
-correct — an upstream codegen/CSE defect, not an arithmetic one.
-Since ``-0.0 == 0.0`` and Euclidean geometry cannot tell them apart,
+Reproduction: a seed with the coordinate ``-0.0`` misroutes the point
+(0,0,1) that sits exactly ON another seed. With
+``spark.sql.codegen.wholeStage=false`` the same plan is correct — an
+upstream codegen/CSE defect, not an arithmetic one. Since
+``-0.0 == 0.0`` and Euclidean geometry cannot tell them apart,
 ``sql_double`` renders every constant as ``v + 0.0``: IEEE 754
 guarantees ``-0.0 + 0.0 == +0.0`` while every other double (NaN and
 the infinities included) is unchanged. No result can change; only the
 codegen trigger is removed. Documented in SCALE.md §7.
+``tests/test_assign.py::test_negative_zero_nd_channels`` pins the
+normalization by the sign of a rendered ``-0.0``;
+``test_negative_zero_seed_regression`` checks the 3-D result, which no
+longer depends on it, since ``assign`` reads its centroids from the
+broadcast row rather than from plan literals.
 """
 
 from __future__ import annotations

@@ -36,20 +36,19 @@ def update_centroids(assigned: DataFrame) -> DataFrame:
     )
 
 
-def members(assigned: DataFrame, sort_members: bool = True) -> DataFrame:
+def members(assigned: DataFrame) -> DataFrame:
     """assigned -> (cluster, cx, cy, cz, points array) in one pass —
     mean + collect_list in the same hash aggregate, exactly the fused
     reducer of SilhouetteEvaluation2.java:99-133.
 
-    ``sort_members`` orders the array for deterministic comparison;
-    the reference's list order is mapper arrival order (not stable),
-    so golden tests compare as sets.
+    The array is sorted for deterministic comparison; the reference's
+    list order is mapper arrival order (not stable), so golden tests
+    compare as sets.
     """
-    pts = F.collect_list(F.struct("x", "y", "z"))
     out = assigned.groupBy("cluster").agg(
         F.avg("x").alias("cx"),
         F.avg("y").alias("cy"),
         F.avg("z").alias("cz"),
-        (F.array_sort(pts) if sort_members else pts).alias("points"),
+        F.array_sort(F.collect_list(F.struct("x", "y", "z"))).alias("points"),
     )
     return out.orderBy("cluster")

@@ -42,6 +42,8 @@ from pyspark.sql.window import Window
 
 from mapreduce_kmeans_clustering_spark.functions.rounding import half_up6
 from mapreduce_kmeans_clustering_spark.operators.dedup import (
+    _fold,
+    _geometry,
     exact_dup_drops,
     excise_spans,
     exploded_shingles,
@@ -1254,15 +1256,17 @@ def dsir_logweights(
     exact and summation-order-free on both engines, unlike a double
     sum (SCALE.md §5's .5-tie class).
 
-    Scale shape (100 TB): one token/bigram explode (scan-local), ONE
-    bucket-keyed conditional-count aggregate carrying both sides
-    (map-side partial; at most ``n_buckets`` rows survive — the
-    two-frame per-side form cost a second full tokenize+md5 pass),
-    one broadcast of the ≤ ``n_buckets``-row ratio table back onto
-    the exploded stream, one id-keyed sum. Zipf skew on hot buckets
-    lives entirely inside the partial aggregates; nothing
-    driver-side. The ratio table is the RAW-occupied buckets (a raw
-    doc's features always hit one) with target counts attached.
+    Scale shape (100 TB): the model is ``_dsir_counts`` — one
+    scan-local token/bigram explode and ONE bucket-keyed
+    conditional-count aggregate carrying both sides (map-side partial;
+    at most ``n_buckets`` rows survive) — and the raw docs are scored
+    against it by ``_dsir_score_from_profile``, the stored-profile
+    scorer: one broadcast of the ≤ ``n_buckets``-row ratio table back
+    onto the exploded raw stream, one id-keyed sum. A raw doc's
+    features always hit a raw-occupied bucket, so that scorer's
+    default for unseen buckets never applies here. Zipf skew on hot
+    buckets lives entirely inside the partial aggregates; nothing
+    driver-side.
 
     Edge contract (code-review r11): a NULL ``target_pred`` row is
     RAW (three-valued logic would otherwise drop it from both models
@@ -1270,77 +1274,33 @@ def dsir_logweights(
     text) still emits its row as (id, 0, 0.0) — nothing vanishes."""
     if int(n_buckets) < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    tgt = F.coalesce(target_pred, F.lit(False))
-    fb = _dsir_features(
+    counts = _dsir_counts(
         docs, target_pred, n_buckets, bigrams, text_col, id_col
     )
-    # BOTH sides' bucket counts in ONE aggregate over one explode —
-    # the two-frame form (separate cr/ct groupBys) tokenized and
-    # md5-hashed the corpus once per side; conditional sums read the
-    # stream once and still combine map-side. Ratio rows are the
-    # raw-occupied buckets exactly as before (_cr > 0), with the
-    # target count already attached (0 when absent — same value the
-    # old left join's coalesce produced), so the output is
-    # bit-identical.
-    counts = fb.groupBy("_bkt").agg(
-        F.sum(F.when(~F.col("_tgt"), 1).otherwise(0))
-        .cast("long")
-        .alias("_cr"),
-        F.sum(F.when(F.col("_tgt"), 1).otherwise(0))
-        .cast("long")
-        .alias("_ct"),
-    )
-    totals = counts.agg(
-        F.sum("_cr").cast("long").alias("_r"),
-        F.sum("_ct").cast("long").alias("_t"),
-    )
-    B = int(n_buckets)
-    lr = F.log((F.col("_ct") + 1) / (F.col("_t") + B)) - F.log(
-        (F.col("_cr") + 1) / (F.col("_r") + B)
-    )
-    from mapreduce_kmeans_clustering_spark.functions.rounding import (
-        half_up6_micro,
-    )
-
-    ratio = (
-        counts.where(F.col("_cr") > 0)
-        .crossJoin(F.broadcast(totals))
-        .select("_bkt", half_up6_micro(lr).alias("_micro"))
-    )
-    scored = (
-        fb.where(~F.col("_tgt"))
-        .join(F.broadcast(ratio), "_bkt")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").cast("long").alias("n_feats"),
-            (F.sum("_micro") / F.lit(1e6)).alias("logweight"),
-        )
-    )
-    # one row per raw doc even with zero features (the remove_
-    # boilerplate pass-through posture): the left join rides the raw
-    # doc ids, coalescing absentees to the neutral weight
-    raw_ids = docs.where(~tgt).select(F.col(id_col))
-    return raw_ids.join(scored, id_col, "left").select(
-        id_col,
-        F.coalesce("n_feats", F.lit(0)).cast("long").alias("n_feats"),
-        F.coalesce("logweight", F.lit(0.0)).alias("logweight"),
+    raw = docs.where(~F.coalesce(target_pred, F.lit(False)))
+    return _dsir_score_from_profile(
+        counts, raw, n_buckets, bigrams, text_col, id_col
     )
 
 
-# Geometry sentinel for stored DSIR profiles: bucket -1 never occurs
-# (hash_dim yields 0..n_buckets-1), n_raw carries n_buckets, n_target
-# carries the bigrams flag — the bloom-filter precedent: a profile
-# merged or probed under the WRONG geometry would silently score
-# garbage, so geometry travels inside the state and mismatches are
-# refused loudly.
-_DSIR_SENTINEL_BUCKET = -1
+# DSIR profile sentinel (the dedup index-state convention): bucket = -1
+# (hash_dim yields 0..n_buckets-1), n_raw = n_buckets, n_target = the
+# bigrams flag.
+_DSIR_STATE = (
+    "bucket", ("n_raw", "n_target"), "DSIR profile", "dsir_profile",
+    "merge_dsir_profiles",
+)
 
 
 def _dsir_sentinel(like: DataFrame, n_buckets: int, bigrams: bool) -> DataFrame:
     return like.sparkSession.createDataFrame(
-        [(_DSIR_SENTINEL_BUCKET, int(n_buckets), 1 if bigrams else 0)],
+        [(-1, int(n_buckets), 1 if bigrams else 0)],
         "bucket INT, n_raw LONG, n_target LONG",
     )
+
+
+def _dsir_sums() -> list[Column]:
+    return [F.sum(c).cast("long").alias(c) for c in ("n_raw", "n_target")]
 
 
 def dsir_profile(
@@ -1364,8 +1324,8 @@ def dsir_profile(
 
     One scan-local feature explode + ONE bucket-keyed conditional
     aggregate (map-side partial; at most n_buckets + 1 rows survive) —
-    exactly ``dsir_logweights``' count stage via the shared
-    ``_dsir_features``, so the stored model can never drift from the
+    exactly ``dsir_logweights``' model via the shared
+    ``_dsir_counts``, so the stored model can never drift from the
     batch scorer's."""
     if int(n_buckets) < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
@@ -1383,7 +1343,8 @@ def _dsir_counts(
     text_col: str,
     id_col: str,
 ) -> DataFrame:
-    """Sentinel-less bucket counts — the data half of ``dsir_profile``;
+    """Sentinel-less bucket counts — the data half of ``dsir_profile``
+    and the model ``dsir_logweights`` scores against;
     ``extend_dsir_profile`` folds these directly so a daily fold never
     constructs (and re-reads the geometry of) an intermediate
     sentinel-carrying profile."""
@@ -1403,24 +1364,8 @@ def dsir_profile_geometry(profile: DataFrame) -> tuple[int, bool]:
     sentinel-less relation is refused loudly (it is not a profile this
     module wrote, or it was built before the sentinel existed —
     rebuild with ``dsir_profile``)."""
-    row = (
-        profile.where(F.col("bucket") == _DSIR_SENTINEL_BUCKET)
-        .select("n_raw", "n_target")
-        .collect()
-    )
-    if len(row) == 0:
-        raise ValueError(
-            "stored DSIR profile has no geometry sentinel (bucket = -1); "
-            "rebuild it with dsir_profile"
-        )
-    if len(row) > 1:
-        raise ValueError(
-            f"stored DSIR profile carries {len(row)} geometry sentinels — "
-            "this is several profiles read wholesale (e.g. the whole "
-            "_batch_profile directory); fold them pairwise with "
-            "merge_dsir_profiles instead"
-        )
-    return int(row[0]["n_raw"]), bool(row[0]["n_target"])
+    n_buckets, bigrams = _geometry((profile,), *_DSIR_STATE)
+    return int(n_buckets), bool(bigrams)
 
 
 def extend_dsir_profile(
@@ -1432,35 +1377,23 @@ def extend_dsir_profile(
 ) -> DataFrame:
     """Fold a batch of arriving RAW documents into a stored DSIR
     profile — O(batch features) + O(n_buckets), never a history
-    rescan. Geometry (n_buckets, bigrams) is read from the stored
-    sentinel, so a wrong-modulus fold is impossible by construction.
-    Arrivals extend the RAW side only: the target partition is the
-    fixed reference set the model was built against (re-run
-    ``dsir_profile`` to change it).
+    rescan. Geometry (n_buckets, bigrams) is read ONCE from the stored
+    sentinel, so a wrong-modulus fold is impossible by construction,
+    and the batch's counts fold in sentinel-less through
+    ``dedup._fold``. Arrivals extend the RAW side only: the target
+    partition is the fixed reference set the model was built against
+    (re-run ``dsir_profile`` to change it).
 
     Honest limit (the additive-index class, unlike the idempotent
     Bloom fold): folding the same batch twice double-counts it —
     the caller's epoch bookkeeping (the ``_batch_profile`` side
     outputs are per-epoch directories) is what prevents replay."""
-    # geometry read ONCE; the batch's counts fold in sentinel-less
-    # (code-review r12 continuation: going through merge_dsir_profiles
-    # re-collected the geometry of BOTH sides, forcing an extra
-    # feature-explode pass over the batch just to read the sentinel
-    # this function had itself chosen)
     n_buckets, bigrams = dsir_profile_geometry(stored)
     batch = _dsir_counts(
         batch_docs, F.lit(False), n_buckets, bigrams, text_col, id_col
     )
-    data = (
-        stored.where(F.col("bucket") != _DSIR_SENTINEL_BUCKET)
-        .unionByName(batch)
-        .groupBy("bucket")
-        .agg(
-            F.sum("n_raw").cast("long").alias("n_raw"),
-            F.sum("n_target").cast("long").alias("n_target"),
-        )
-    )
-    return data.unionByName(_dsir_sentinel(stored, n_buckets, bigrams))
+    sentinel = _dsir_sentinel(stored, n_buckets, bigrams)
+    return _fold([stored, batch], "bucket", _dsir_sums(), sentinel)
 
 
 def merge_dsir_profiles(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -1469,23 +1402,9 @@ def merge_dsir_profiles(a: DataFrame, b: DataFrame) -> DataFrame:
     bucket counts sum, the sentinel is validated equal on both sides
     and carried through exactly once. Counts are additive, so the
     merge is exact for profiles built over disjoint document sets."""
-    ga, gb = dsir_profile_geometry(a), dsir_profile_geometry(b)
-    if ga != gb:
-        raise ValueError(
-            f"DSIR profile geometry mismatch: {ga} vs {gb} — profiles "
-            "built under different n_buckets/bigrams cannot be merged; "
-            "rebuild one side"
-        )
-    data = (
-        a.unionByName(b)
-        .where(F.col("bucket") != _DSIR_SENTINEL_BUCKET)
-        .groupBy("bucket")
-        .agg(
-            F.sum("n_raw").cast("long").alias("n_raw"),
-            F.sum("n_target").cast("long").alias("n_target"),
-        )
-    )
-    return data.unionByName(_dsir_sentinel(a, ga[0], ga[1]))
+    n_buckets, bigrams = _geometry((a, b), *_DSIR_STATE)
+    sentinel = _dsir_sentinel(a, n_buckets, bigrams)
+    return _fold([a, b], "bucket", _dsir_sums(), sentinel)
 
 
 def dsir_logweights_from_profile(
@@ -1503,11 +1422,11 @@ def dsir_logweights_from_profile(
 
     Scoring a doc whose features all land in raw-occupied buckets is
     BIT-IDENTICAL to the batch scorer on the profile's own corpus
-    (pinned by test): the per-bucket micro-unit log-ratios are the
-    same expressions over the same counts. The from-profile form
-    additionally defines buckets the profile never saw on the raw
-    side (impossible in the batch form, where a raw doc's features
-    are in the raw model by construction): they score the SAME
+    (pinned by test): the batch scorer is this scorer over the
+    corpus's own counts. The from-profile form also defines buckets
+    the profile never saw on the raw side (impossible in the batch
+    form, where a raw doc's features are in the raw model by
+    construction): they score the SAME
     add-one-smoothed formula with n_raw = 0 (and n_target = 0 when
     fully unseen — a constant ln((R+B)/(T+B)) default attached via
     one coalesce), so novel text is handled, not dropped.
@@ -1532,12 +1451,14 @@ def _dsir_score_from_profile(
     """Scoring core of ``dsir_logweights_from_profile`` with the
     geometry already in hand — the streaming leg reads the sentinel
     ONCE per run and calls this per epoch instead of re-collecting it
-    every micro-batch (the bloom-stream code-review precedent)."""
+    every micro-batch, and ``dsir_logweights`` calls it on the
+    corpus's sentinel-less counts. The one home of the log-ratio
+    math."""
     from mapreduce_kmeans_clustering_spark.functions.rounding import (
         half_up6_micro,
     )
 
-    data = profile.where(F.col("bucket") != _DSIR_SENTINEL_BUCKET)
+    data = profile.where(F.col("bucket") != -1)
     totals = data.agg(
         F.sum("n_raw").cast("long").alias("_r"),
         F.sum("n_target").cast("long").alias("_t"),

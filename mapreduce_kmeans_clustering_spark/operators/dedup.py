@@ -24,6 +24,8 @@ so each operator has a bit-matching DuckDB oracle in queries.py.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1263,22 +1265,85 @@ def passage_scrub(
     return excise_spans(docs, spans, text_col, id_col)
 
 
-# Geometry sentinel for stored passage-gram indexes: gh = -1 never
-# occurs as a data key (_passage_gram_hash is non-negative by
-# construction for both hash functions), n_docs carries the gram
-# length n, keeper carries the hash function (0 = md5, 1 = xxhash64)
-# — the bloom/DSIR precedent: a wrong-n or wrong-hash probe would
-# silently scrub nothing (or the wrong spans), so geometry travels
-# inside the state and mismatches are refused loudly.
-_PASSAGE_SENTINEL_GH = -1
+# -- self-describing index states -------------------------------------------
+# The passage-gram index, the Bloom filter and curation's DSIR profile
+# each carry, besides their data rows, ONE sentinel row whose key is
+# -1 (a value no data key takes) and whose other columns hold the
+# geometry the state was built under. A state probed or folded under
+# the wrong geometry would answer silently wrong (a remapped Bloom
+# position breaks the no-false-negative guarantee; a wrong n or hash
+# scrubs nothing), so the geometry travels inside the state: read
+# back by ``_geometry``, carried through every fold by ``_fold``.
+
+
+def _geometry(
+    states: tuple[DataFrame, ...],
+    key: str,
+    cols: tuple[str, ...],
+    what: str,
+    build: str,
+    merge: str,
+) -> tuple:
+    """The ``cols`` values of the sentinel row (``key`` = -1) shared by
+    ``states``. Refused loudly: a state with no sentinel (not one
+    ``build`` wrote), a state with several (several states read
+    wholesale), and states whose geometries differ."""
+    found = []
+    for state in states:
+        rows = state.where(F.col(key) == -1).select(*cols).collect()
+        if not rows:
+            raise ValueError(
+                f"stored {what} has no geometry sentinel ({key} = -1); "
+                f"rebuild it with {build}"
+            )
+        if len(rows) > 1:
+            raise ValueError(
+                f"stored {what} carries {len(rows)} geometry sentinels — "
+                "this is several states read wholesale (e.g. a whole "
+                f"per-epoch side-output directory); fold them pairwise "
+                f"with {merge} instead"
+            )
+        found.append(tuple(rows[0]))
+    if len(set(found)) > 1:
+        raise ValueError(
+            f"{what} geometry mismatch: {found[0]} vs {found[1]} — states "
+            "built under different geometry cannot be merged; rebuild one side"
+        )
+    return found[0]
+
+
+def _fold(
+    parts: list[DataFrame], key: str, aggs: list[Column], sentinel: DataFrame
+) -> DataFrame:
+    """The one fold of a self-describing state: union ``parts``
+    (stored states and sentinel-less batch rows), aggregate the data
+    rows by ``key`` with ``aggs``, and carry the geometry through as
+    the single ``sentinel`` row."""
+    data = reduce(DataFrame.unionByName, parts).where(F.col(key) != -1)
+    return data.groupBy(key).agg(*aggs).unionByName(sentinel)
+
+
+# Passage-gram index sentinel: gh = -1 (_passage_gram_hash is
+# non-negative for both hash functions), n_docs = the gram length n,
+# keeper = the hash function's code.
 _PASSAGE_HASH_CODES = {"md5": 0, "xxhash64": 1}
+_PASSAGE_STATE = (
+    "gh", ("n_docs", "keeper"), "passage-gram index", "passage_gram_index",
+    "merge_passage_indexes",
+)
 
 
-def _passage_sentinel(like: DataFrame, n: int, hash_fn: str) -> DataFrame:
+def _passage_sentinel(like: DataFrame, n: int, code: int) -> DataFrame:
     return like.sparkSession.createDataFrame(
-        [(_PASSAGE_SENTINEL_GH, int(n), _PASSAGE_HASH_CODES[hash_fn])],
-        "gh LONG, n_docs LONG, keeper LONG",
+        [(-1, int(n), int(code))], "gh LONG, n_docs LONG, keeper LONG"
     )
+
+
+def _passage_sums() -> list[Column]:
+    return [
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.min("keeper").cast("long").alias("keeper"),
+    ]
 
 
 def passage_gram_index(
@@ -1310,7 +1375,9 @@ def passage_gram_index(
     if hash_fn not in _PASSAGE_HASH_CODES:
         raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
     counts = _passage_gram_counts(docs, n, text_col, id_col, hash_fn)
-    return counts.unionByName(_passage_sentinel(docs, n, hash_fn))
+    return counts.unionByName(
+        _passage_sentinel(docs, n, _PASSAGE_HASH_CODES[hash_fn])
+    )
 
 
 _INTEGRAL_DTYPES = {"tinyint", "smallint", "int", "bigint"}
@@ -1346,28 +1413,11 @@ def passage_index_geometry(index: DataFrame) -> tuple[int, str]:
     """(n, hash_fn) from a stored gram index's sentinel row; a
     sentinel-less relation is refused loudly (not an index this
     module wrote — rebuild with ``passage_gram_index``)."""
-    rows = (
-        index.where(F.col("gh") == _PASSAGE_SENTINEL_GH)
-        .select("n_docs", "keeper")
-        .collect()
-    )
-    if len(rows) == 0:
-        raise ValueError(
-            "stored passage-gram index has no geometry sentinel (gh = -1); "
-            "rebuild it with passage_gram_index"
-        )
-    if len(rows) > 1:
-        raise ValueError(
-            f"stored passage-gram index carries {len(rows)} geometry "
-            "sentinels — this is several indexes read wholesale (e.g. "
-            "the whole _batch_index directory); fold them pairwise with "
-            "merge_passage_indexes instead"
-        )
-    code = int(rows[0]["keeper"])
+    n, code = _geometry((index,), *_PASSAGE_STATE)
     names = {v: k for k, v in _PASSAGE_HASH_CODES.items()}
     if code not in names:
         raise ValueError(f"unknown hash-function code {code} in sentinel")
-    return int(rows[0]["n_docs"]), names[code]
+    return int(n), names[code]
 
 
 def extend_passage_index(
@@ -1379,46 +1429,24 @@ def extend_passage_index(
     """Fold a batch of arriving documents into a stored gram index —
     O(batch grams) + one merge over the touched keys, never a history
     rescan. Geometry (n, hash_fn) is read ONCE from the sentinel, and
-    the batch's counts fold in sentinel-less (the DSIR-extend
-    pattern). Additive counts + min-combining keepers are exact for
+    the batch's counts fold in sentinel-less through the shared
+    ``_fold``. Additive counts + min-combining keepers are exact for
     batches holding disjoint documents; like the other count indexes
     (and unlike the idempotent Bloom fold) a replayed batch
     double-counts — the per-epoch side-output directories are the
     replay bookkeeping."""
     n, hash_fn = passage_index_geometry(stored)
     batch = _passage_gram_counts(batch_docs, n, text_col, id_col, hash_fn)
-    data = (
-        stored.where(F.col("gh") != _PASSAGE_SENTINEL_GH)
-        .unionByName(batch)
-        .groupBy("gh")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.min("keeper").cast("long").alias("keeper"),
-        )
-    )
-    return data.unionByName(_passage_sentinel(stored, n, hash_fn))
+    sentinel = _passage_sentinel(stored, n, _PASSAGE_HASH_CODES[hash_fn])
+    return _fold([stored, batch], "gh", _passage_sums(), sentinel)
 
 
 def merge_passage_indexes(a: DataFrame, b: DataFrame) -> DataFrame:
     """Fold two stored gram indexes (e.g. per-epoch ``_batch_index``
     side outputs): counts sum, keepers min-combine, sentinels
     validated equal and carried through exactly once."""
-    ga, gb = passage_index_geometry(a), passage_index_geometry(b)
-    if ga != gb:
-        raise ValueError(
-            f"passage-gram index geometry mismatch: {ga} vs {gb} — indexes "
-            "built under different n/hash_fn cannot be merged; rebuild one side"
-        )
-    data = (
-        a.unionByName(b)
-        .where(F.col("gh") != _PASSAGE_SENTINEL_GH)
-        .groupBy("gh")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.min("keeper").cast("long").alias("keeper"),
-        )
-    )
-    return data.unionByName(_passage_sentinel(a, ga[0], ga[1]))
+    n, code = _geometry((a, b), *_PASSAGE_STATE)
+    return _fold([a, b], "gh", _passage_sums(), _passage_sentinel(a, n, code))
 
 
 def passage_scrub_delta(
@@ -1467,7 +1495,7 @@ def _passage_scrub_delta_core(
     leg reads the sentinel ONCE per run and calls this per epoch
     instead of re-collecting it every micro-batch (the
     ``_dsir_score_from_profile`` precedent)."""
-    keys = index.where(F.col("gh") != _PASSAGE_SENTINEL_GH).select("gh")
+    keys = index.where(F.col("gh") != -1).select("gh")
     ps = positioned_shingles(batch_docs, n, text_col, id_col)
     pos_h = ps.select(
         F.col(id_col), "pos", _passage_gram_hash(hash_fn).alias("gh")
@@ -1922,26 +1950,26 @@ def bloom_filter_words(
         m_bits = 1 << max(6, (x - 1).bit_length())
     elif m_bits < 64 or (m_bits & (m_bits - 1)) != 0:
         raise ValueError(f"m_bits must be a power of two >= 64, got {m_bits}")
-    filt = _bloom_word_bits(corpus, k, m_bits, text_col)
-    # self-describing state: a (word = -1, bits = m_bits) sentinel
-    # rides the filter (no real word is negative; no probe position
-    # is, so joins never see it). Extension and probe replay read m
-    # from it — a mismatched m would remap every position and
-    # silently break the NO-FALSE-NEGATIVE guarantee, the one failure
-    # a screen must never have, so the state carries its own geometry
-    # (the ivf_write_index _centroids precedent).
-    return filt.unionByName(_bloom_sentinel(corpus, m_bits)), m_bits
+    return _bloom_state(corpus, k, m_bits, text_col), m_bits
 
 
-def _bloom_word_bits(
+# Bloom filter sentinel: word = -1 (no real word is negative and no
+# probe position is, so joins never see it), bits = m_bits.
+_BLOOM_STATE = (
+    "word", ("bits",), "Bloom filter", "bloom_filter_words", "merge_bloom_filters"
+)
+
+
+def _bloom_state(
     docs: DataFrame, k: int, m_bits: int, text_col: str
 ) -> DataFrame:
-    """The ONE home of the persisted state's binary format: k
-    md5-derived positions per key packed into (word, bits) rows at 63
-    payload bits per word — the sign bit is never shifted into (Spark
-    wraps a bit-63 shift negative, DuckDB raises Out of Range). Build,
-    extension, and the streaming side output all call this, so the
-    layout can never silently fork between them (code-review r12)."""
+    """The Bloom state of ``docs`` at a known m — the ONE home of its
+    binary format: k md5-derived positions per key packed into
+    (word, bits) rows at 63 payload bits per word (the sign bit is
+    never shifted into: Spark wraps a bit-63 shift negative, DuckDB
+    raises Out of Range), plus the geometry sentinel. The build, the
+    extension and the streaming side output all go through it, so the
+    layout cannot fork between them."""
     pos = _bloom_positions(F.col(text_col), k, m_bits)
     return (
         docs.select(F.explode(pos).alias("_pos"))
@@ -1952,6 +1980,7 @@ def _bloom_word_bits(
         )
         .groupBy("word")
         .agg(F.bit_or("bits").alias("bits"))
+        .unionByName(_bloom_sentinel(docs, m_bits))
     )
 
 
@@ -1967,14 +1996,8 @@ def bloom_filter_m_bits(filter_df: DataFrame) -> int:
     extending or probing those at the wrong modulus silently breaks
     the no-false-negative guarantee, so refusal is the only safe
     answer)."""
-    rows = filter_df.where(F.col("word") == -1).select("bits").collect()
-    if len(rows) != 1:
-        raise ValueError(
-            "stored Bloom filter carries no (word = -1, bits = m) "
-            "geometry sentinel — rebuild it with bloom_filter_words "
-            "before extending or probing"
-        )
-    return int(rows[0]["bits"])
+    (m_bits,) = _geometry((filter_df,), *_BLOOM_STATE)
+    return int(m_bits)
 
 
 def extend_bloom_filter(
@@ -1988,19 +2011,20 @@ def extend_bloom_filter(
     member of the streaming index-maintenance family
     (``extend_band_index``, ``web.extend_url_index``,
     ``web.extend_boilerplate_index``): the batch's bits OR into the
-    stored words. bit_or is associative, commutative, AND idempotent,
-    so the merge is exact under any batch order and even under batch
-    REPLAY (strictly stronger than the additive count indexes, whose
-    correctness needs disjoint batches). m is read from the filter's
-    own geometry sentinel, so a caller can never extend at the wrong
-    modulus; the sentinel survives the merge (bit_or(m, m) = m).
-    Daily cost is O(batch keys + touched words)."""
+    stored words through the shared ``_fold``, the one fold of the
+    passage, Bloom and DSIR states. bit_or is associative,
+    commutative, AND idempotent, so the merge is exact under any batch
+    order and even under batch REPLAY (strictly stronger than the
+    additive count indexes, whose correctness needs disjoint batches).
+    m is read from the filter's own geometry sentinel, so a caller can
+    never extend at the wrong modulus. Daily cost is O(batch keys +
+    touched words)."""
     m_bits = bloom_filter_m_bits(filter_df)
-    return (
-        filter_df.select("word", "bits")
-        .unionByName(_bloom_word_bits(batch, k, m_bits, text_col))
-        .groupBy("word")
-        .agg(F.bit_or("bits").alias("bits"))
+    return _fold(
+        [filter_df, _bloom_state(batch, k, m_bits, text_col)],
+        "word",
+        [F.bit_or("bits").alias("bits")],
+        _bloom_sentinel(filter_df, m_bits),
     )
 
 
@@ -2009,20 +2033,10 @@ def merge_bloom_filters(a: DataFrame, b: DataFrame) -> DataFrame:
     ``_batch_filter`` side outputs into the main filter): word-keyed
     bit_or. Both inputs must carry the SAME geometry sentinel — bits
     set at different moduli are meaningless together, so a mismatch
-    raises instead of silently corrupting the screen. The sentinels
-    themselves merge as bit_or(m, m) = m."""
-    ma, mb = bloom_filter_m_bits(a), bloom_filter_m_bits(b)
-    if ma != mb:
-        raise ValueError(
-            f"Bloom filter geometry mismatch: m_bits {ma} vs {mb} — "
-            "filters built at different moduli cannot be merged; "
-            "rebuild one side"
-        )
-    return (
-        a.select("word", "bits")
-        .unionByName(b.select("word", "bits"))
-        .groupBy("word")
-        .agg(F.bit_or("bits").alias("bits"))
+    raises instead of silently corrupting the screen."""
+    (m_bits,) = _geometry((a, b), *_BLOOM_STATE)
+    return _fold(
+        [a, b], "word", [F.bit_or("bits").alias("bits")], _bloom_sentinel(a, m_bits)
     )
 
 

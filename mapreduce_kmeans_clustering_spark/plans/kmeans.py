@@ -39,27 +39,22 @@ DEFAULT_MAX_ITER = 30  # Task3.java:192
 DEFAULT_THRESHOLD = 5.0  # Task3.java:193
 
 
-def displacement(prev: list[Centroid], curr: list[Centroid], strict: bool = True) -> float:
+def displacement(prev: list[Centroid], curr: list[Centroid]) -> float:
     """Convergence metric (Task3.java:116-128): SUM over clusters of
     Euclidean displacement between consecutive centroid lists —
     positional zip over id-sorted lists, valid because ids are stable
     line indices (SURVEY §1.3.5).
 
-    ``strict`` reproduces Task5A.java:138-140: a size mismatch (a
-    cluster emptied out and K shrank) raises instead of comparing.
+    A size mismatch (a cluster emptied out and K shrank) raises
+    instead of comparing, as Task5A.java:138-140 does.
     """
     if len(prev) != len(curr):
-        if strict:
-            raise ValueError(
-                f"Centroid count mismatch between iterations: {len(prev)} vs {len(curr)}"
-            )
-        prev_by_id = {c.id: c for c in prev}
-        pairs = [(prev_by_id[c.id], c) for c in curr if c.id in prev_by_id]
-    else:
-        pairs = list(zip(sorted(prev), sorted(curr)))
+        raise ValueError(
+            f"Centroid count mismatch between iterations: {len(prev)} vs {len(curr)}"
+        )
     return sum(
         math.sqrt((a.x - b.x) ** 2 + (a.y - b.y) ** 2 + (a.z - b.z) ** 2)
-        for a, b in pairs
+        for a, b in zip(sorted(prev), sorted(curr))
     )
 
 
@@ -89,7 +84,6 @@ def fit(
     seeds: list[Centroid],
     max_iter: int = DEFAULT_MAX_ITER,
     threshold: float | None = DEFAULT_THRESHOLD,
-    strict_size: bool = True,
 ) -> FitResult:
     """Run Lloyd iterations until the summed displacement drops below
     ``threshold`` or ``max_iter`` is hit.
@@ -113,7 +107,7 @@ def fit(
         result.iterations += 1
         result.history.append(curr)
         if threshold is not None:
-            d = displacement(prev, curr, strict=strict_size)
+            d = displacement(prev, curr)
             result.displacements.append(d)
             if d < threshold:
                 result.converged = True
@@ -122,15 +116,11 @@ def fit(
     return result
 
 
-def init_farthest(
-    points: DataFrame,
-    k: int,
-    start: tuple[float, float, float] | None = None,
-) -> list[Centroid]:
+def init_farthest(points: DataFrame, k: int) -> list[Centroid]:
     """Deterministic farthest-point seeding (the RNG-free cousin of
-    k-means++ — Gonzalez's 2-approximation for k-center): start from a
-    fixed point and repeatedly add the point farthest from its nearest
-    chosen centroid, ties to the smallest (x, y, z).
+    k-means++ — Gonzalez's 2-approximation for k-center): start from
+    the minimum (x, y, z) row and repeatedly add the point farthest
+    from its nearest chosen centroid, ties to the smallest (x, y, z).
 
     The reference only reads seeds from a file (SURVEY §2.1 O2); this
     is the library's answer for when no seed file exists. Deterministic
@@ -141,24 +131,11 @@ def init_farthest(
     a 1-row max aggregate (the same shuffle-free shape as ``assign``;
     O(k·n) total work, O(k) driver state). For the 100 TB corpus cache
     the points relation first, exactly like ``fit``.
-
-    ``start`` defaults to the minimum (x, y, z) row — any fixed rule
-    works; this one needs no extra pass.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    first = (
-        points.select("x", "y", "z")
-        .orderBy("x", "y", "z")
-        .limit(1)
-        .collect()[0]
-        if start is None
-        else None
-    )
-    sx, sy, sz = (
-        (first["x"], first["y"], first["z"]) if start is None else start
-    )
-    chosen: list[Centroid] = [Centroid(0, float(sx), float(sy), float(sz))]
+    first = points.select("x", "y", "z").orderBy("x", "y", "z").limit(1).collect()[0]
+    chosen = [Centroid(0, float(first["x"]), float(first["y"]), float(first["z"]))]
     for i in range(1, k):
         far = _farthest_round(points, chosen).collect()[0]
         chosen.append(Centroid(i, far["x"], far["y"], far["z"]))

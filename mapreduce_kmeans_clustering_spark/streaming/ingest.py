@@ -4,13 +4,17 @@ against a STORED index (MinHash bands, normalized URLs, boilerplate
 lines, a Bloom filter, a DSIR profile, a passage gram index) and
 writes one verdict row per batch doc; the legs that maintain an index
 also write the batch's own index under an underscore-hidden side
-path, folded in between runs by the batch operator's merge.
+directory (invisible to parquet reads of the output), folded in
+between runs by the batch operator's merge.
 
-Exactly-once contract: every micro-batch writes to its own
-``ingest_batch=<epoch>`` directory with mode=overwrite, so a replayed
-epoch (checkpoint recovery) overwrites its own output instead of
-duplicating it — the standard idempotent file-sink pattern when the
-target isn't a transactional table.
+Exactly-once contract, one home (``_ingest``): every micro-batch
+writes its verdicts to ``<out>/ingest_batch=<epoch>`` and its side
+index to ``<out>/<side_dir>/ingest_batch=<epoch>``, both with
+mode=overwrite, so a replayed epoch (checkpoint recovery) overwrites
+its own output instead of duplicating it — the standard idempotent
+file-sink pattern when the target isn't a transactional table. The
+per-epoch side directories are also the fold's replay bookkeeping for
+the additive count indexes.
 
 Scale notes: the stored index is materialized once and reused by
 every micro-batch, so per-batch cost is O(batch) plus one equi-join
@@ -22,10 +26,48 @@ bound "ever seen before" semantics).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
+
+
+def _ingest(
+    docs_stream: DataFrame,
+    out_path: str,
+    checkpoint_dir: str,
+    verdicts: Callable[[DataFrame], DataFrame],
+    index_fn: Callable[[DataFrame], DataFrame] | None = None,
+    side_dir: str | None = None,
+) -> StreamingQuery:
+    """Start the ``availableNow`` stream that writes ``verdicts(batch)``
+    and, when the leg keeps an index, ``index_fn(batch)`` under the
+    per-epoch layout. A two-write batch is persisted across the writes
+    so both share one source read; what each write derives from it
+    (tokenize, explode) still runs once per write, since caching an
+    exploded table costs more than the second codegen'd pass."""
+
+    def process(batch_df: DataFrame, epoch_id: int) -> None:
+        part = f"ingest_batch={epoch_id}"
+        if index_fn is not None:
+            batch_df.persist()
+        try:
+            verdicts(batch_df).write.mode("overwrite").parquet(f"{out_path}/{part}")
+            if index_fn is not None:
+                index_fn(batch_df).write.mode("overwrite").parquet(
+                    f"{out_path}/{side_dir}/{part}"
+                )
+        finally:
+            batch_df.unpersist()
+
+    return (
+        docs_stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_near_dedup_ingest(
@@ -43,10 +85,8 @@ def stream_near_dedup_ingest(
     ingested corpus — the streaming composition of
     ``operators/dedup.incremental_minhash_dedup`` (VERDICT r8 item 6):
     this query flags arriving docs that are near-COPIES of ingested
-    ones, writing one verdict row per batch doc (doc_id, status
-    'near_dup' | 'new', dup_of, jaccard) as parquet under
-    ``ingest_batch=<epoch>`` (idempotent overwrite — the module's
-    replay-safe per-epoch layout).
+    ones, one verdict row per batch doc (doc_id, status
+    'near_dup' | 'new', dup_of, jaccard).
 
     Scale shape: the corpus participates only through its banded
     MinHash table, materialized ONCE here (eager localCheckpoint) and
@@ -81,9 +121,12 @@ def stream_near_dedup_ingest(
         )
     idx = index_band_table.localCheckpoint(eager=True)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        verdicts = incremental_minhash_dedup(
-            batch_df,
+    return _ingest(
+        docs_stream,
+        out_path,
+        checkpoint_dir,
+        lambda batch: incremental_minhash_dedup(
+            batch,
             index_docs,
             num_hashes=num_hashes,
             band_width=band_width,
@@ -91,16 +134,7 @@ def stream_near_dedup_ingest(
             verify_threshold=verify_threshold,
             index_band_table=idx,
             validate_index=False,
-        )
-        verdicts.write.mode("overwrite").parquet(
-            f"{out_path}/ingest_batch={epoch_id}"
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -120,9 +154,7 @@ def stream_url_dedup_ingest(
     (id, norm_url, status, dup_of) with status
     'url_dup_corpus' (its normalized URL is already ingested) |
     'url_dup_batch' (a lower-id doc in the SAME micro-batch claimed
-    the URL first; dup_of points at it) | 'keep', written as parquet
-    under ``ingest_batch=<epoch>`` (idempotent per-epoch overwrite —
-    replay-safe like the other ingest sinks).
+    the URL first; dup_of points at it) | 'keep'.
 
     NULL-handling matches the batch operator: a NULL URL has no URL
     identity — always 'keep', never claimed, never a claimant.
@@ -148,7 +180,7 @@ def stream_url_dedup_ingest(
         .localCheckpoint(eager=True)
     )
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def verdicts(batch_df: DataFrame) -> DataFrame:
         nu = url_normalize_expr(F.col(url_col))
         base = batch_df.select(
             F.col(id_col),
@@ -170,7 +202,7 @@ def stream_url_dedup_ingest(
             idx, base["__k"] == idx["__inu"], "left"
         ).withColumn("__corpus", F.col("__inu").isNotNull())
         w = Window.partitionBy("__k").orderBy(id_col)
-        verdicts = flagged.withColumn(
+        return flagged.withColumn(
             "__first", F.min(id_col).over(w)
         ).select(
             id_col,
@@ -184,16 +216,8 @@ def stream_url_dedup_ingest(
                 F.col("__first"),
             ).alias("dup_of"),
         )
-        verdicts.write.mode("overwrite").parquet(
-            f"{out_path}/ingest_batch={epoch_id}"
-        )
 
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _ingest(docs_stream, out_path, checkpoint_dir, verdicts)
 
 
 def stream_boilerplate_ingest(
@@ -213,23 +237,19 @@ def stream_boilerplate_ingest(
     """Boilerplate scrubbing of an arriving crawl stream against the
     STORED detector state — the streaming leg of the web family's
     third index (``web.boilerplate_index``), same contract as
-    ``stream_url_dedup_ingest`` and the MinHash band path. Per
-    micro-batch:
+    ``stream_url_dedup_ingest`` and the MinHash band path:
 
     - every arriving doc is scrubbed with the flags REPLAYED from the
       caller's stored index (``flag_boilerplate_index`` — computed
       once here, eager localCheckpoint; the per-batch cost is one
-      broadcast join + one doc-keyed aggregate over the batch), and
-      written as (id, clean_text, n_lines, n_removed) parquet under
-      ``ingest_batch=<epoch>`` (idempotent per-epoch overwrite,
-      replay-safe like the other ingest sinks);
-    - the batch's OWN mergeable index is written under
-      ``out_path/_batch_index/ingest_batch=<epoch>`` (the underscore
-      keeps it invisible to parquet reads of ``out_path``). The
-      caller folds each epoch's batch index into the stored relation
-      between runs via ``extend_boilerplate_index`` — detector state
-      is maintained outside the stream, the right place at 100 TB,
-      exactly the extend_band_index / extend_url_index contract.
+      broadcast join + one doc-keyed aggregate over the batch), one
+      (id, clean_text, n_lines, n_removed) row each;
+    - the batch's OWN mergeable index goes to the ``_batch_index``
+      side directory. The caller folds each epoch's batch index into
+      the stored relation between runs via
+      ``extend_boilerplate_index`` — detector state is maintained
+      outside the stream, the right place at 100 TB, exactly the
+      extend_band_index / extend_url_index contract.
 
     Honest limit (also in DEPLOY.md): flags reflect history as of the
     stored index, so a NEW domain's chrome is not flagged until its
@@ -247,46 +267,29 @@ def stream_boilerplate_ingest(
         boiler_index, min_frac=min_frac, min_df=min_df
     ).select("domain", "line").localCheckpoint(eager=True)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        # two actions share one source read via persist (code-review
-        # r11 — the stream_url_dedup_ingest doubled-probe lesson); the
-        # tokenize/explode itself deliberately runs once per action,
-        # NOT materialized: the exploded line table is larger than the
-        # batch, so caching it costs more than the second codegen'd
-        # regexp pass (the decontam-scrub trade, QUERIES.md §3)
-        batch_df.persist()
-        try:
-            scrubbed = remove_boilerplate(
-                batch_df,
-                url_col,
-                text_col=text_col,
-                id_col=id_col,
-                tokens_per_line=tokens_per_line,
-                line_regex=line_regex,
-                joiner=joiner,
-                flagged=flags,
-            )
-            scrubbed.write.mode("overwrite").parquet(
-                f"{out_path}/ingest_batch={epoch_id}"
-            )
-            boilerplate_index(
-                batch_df,
-                url_col,
-                text_col=text_col,
-                id_col=id_col,
-                tokens_per_line=tokens_per_line,
-                line_regex=line_regex,
-            ).write.mode("overwrite").parquet(
-                f"{out_path}/_batch_index/ingest_batch={epoch_id}"
-            )
-        finally:
-            batch_df.unpersist()
-
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _ingest(
+        docs_stream,
+        out_path,
+        checkpoint_dir,
+        lambda batch: remove_boilerplate(
+            batch,
+            url_col,
+            text_col=text_col,
+            id_col=id_col,
+            tokens_per_line=tokens_per_line,
+            line_regex=line_regex,
+            joiner=joiner,
+            flagged=flags,
+        ),
+        lambda batch: boilerplate_index(
+            batch,
+            url_col,
+            text_col=text_col,
+            id_col=id_col,
+            tokens_per_line=tokens_per_line,
+            line_regex=line_regex,
+        ),
+        "_batch_index",
     )
 
 
@@ -302,67 +305,42 @@ def stream_bloom_ingest(
     """Bloom-screen an arriving document stream against the STORED
     filter — the streaming leg of the memory-bounded exact-dup screen
     (``dedup.bloom_screen_from_filter``), fourth member of the ingest
-    index family (band index, URL index, boilerplate index). Per
-    micro-batch:
+    index family (band index, URL index, boilerplate index):
 
-    - every arriving doc gets its verdict against the stored filter
-      ('new' is GUARANTEED absent from everything the filter has
-      absorbed; 'maybe_dup' pays the exact-verification lookup), and
-      (id, verdict) lands as parquet under ``ingest_batch=<epoch>``
-      (idempotent per-epoch overwrite, replay-safe);
-    - the batch's OWN filter words are written under
-      ``out_path/_batch_filter/ingest_batch=<epoch>`` (underscore =
-      hidden from data reads, the family convention). The caller
-      folds epochs into the stored filter between runs via
-      ``dedup.merge_bloom_filters`` (word tables merge by bit_or;
-      ``extend_bloom_filter`` is the twin that takes raw docs) — and
-      because bit_or is IDEMPOTENT, folding a replayed epoch twice is
-      harmless, a strictly stronger replay story than the additive
-      count indexes.
+    - every arriving doc gets its (id, verdict) against the stored
+      filter ('new' is GUARANTEED absent from everything the filter
+      has absorbed; 'maybe_dup' pays the exact-verification lookup);
+    - the batch's OWN filter, in the build's format (``_bloom_state``),
+      goes to the ``_batch_filter`` side directory. The caller folds
+      epochs into the stored filter between runs via
+      ``dedup.merge_bloom_filters`` (``extend_bloom_filter`` is the
+      twin that takes raw docs; both go through the shared
+      ``dedup._fold``) — and because bit_or is IDEMPOTENT, folding a
+      replayed epoch twice is harmless, a strictly stronger replay
+      story than the additive count indexes.
 
     Honest limit (the family's): verdicts reflect the filter as the
     caller last folded it — two copies arriving in the SAME epoch are
     both 'new' (neither is in the stored state yet); the fold makes
-    the second copy's next appearance 'maybe_dup'. m is read from the
-    stored filter's geometry sentinel, so a wrong-modulus probe is
+    the second copy's next appearance 'maybe_dup'. m is read ONCE from
+    the stored filter's geometry sentinel, so a wrong-modulus probe is
     impossible by construction."""
     from mapreduce_kmeans_clustering_spark.operators.dedup import (
         _bloom_probe,
-        _bloom_sentinel,
-        _bloom_word_bits,
+        _bloom_state,
         bloom_filter_m_bits,
     )
 
-    # m is read from the sentinel ONCE here — the filter is immutable
-    # for the stream's lifetime, so the per-batch probe goes through
-    # _bloom_probe directly instead of re-collecting the sentinel
-    # every epoch (code-review r12); the packing itself lives in the
-    # shared _bloom_word_bits so the side output's binary format can
-    # never fork from the build's
     m_bits = bloom_filter_m_bits(bloom_filter)
     filt = bloom_filter.localCheckpoint(eager=True)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
-        try:
-            _bloom_probe(
-                filt, batch_df, m_bits, k, text_col, id_col
-            ).write.mode("overwrite").parquet(
-                f"{out_path}/ingest_batch={epoch_id}"
-            )
-            _bloom_word_bits(batch_df, k, m_bits, text_col).unionByName(
-                _bloom_sentinel(batch_df, m_bits)
-            ).write.mode("overwrite").parquet(
-                f"{out_path}/_batch_filter/ingest_batch={epoch_id}"
-            )
-        finally:
-            batch_df.unpersist()
-
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _ingest(
+        docs_stream,
+        out_path,
+        checkpoint_dir,
+        lambda batch: _bloom_probe(filt, batch, m_bits, k, text_col, id_col),
+        lambda batch: _bloom_state(batch, k, m_bits, text_col),
+        "_batch_filter",
     )
 
 
@@ -378,62 +356,48 @@ def stream_dsir_ingest(
     profile — the streaming leg of the importance-resampling data
     selector (``curation.dsir_logweights_from_profile``), fifth member
     of the ingest index family (band index, URL index, boilerplate
-    index, Bloom filter). Per micro-batch:
+    index, Bloom filter):
 
-    - every arriving doc gets its (n_feats, logweight) as-of the
-      stored profile, landed as parquet under ``ingest_batch=<epoch>``
-      (idempotent per-epoch overwrite, replay-safe);
-    - the batch's OWN raw-side bucket counts are written under
-      ``out_path/_batch_profile/ingest_batch=<epoch>`` (underscore =
-      hidden from data reads, the family convention). The caller folds
-      epochs into the stored profile between runs via
-      ``curation.merge_dsir_profiles`` (``extend_dsir_profile`` is the
-      raw-docs twin). Counts are ADDITIVE — exact for disjoint epochs,
-      but NOT idempotent (the count-index class, unlike the Bloom
-      fold): the per-epoch directories are the replay bookkeeping.
+    - every arriving doc gets its (id, n_feats, logweight) as-of the
+      stored profile;
+    - the batch's OWN raw-side profile goes to the ``_batch_profile``
+      side directory. The caller folds epochs into the stored profile
+      between runs via ``curation.merge_dsir_profiles``
+      (``extend_dsir_profile`` is the raw-docs twin; both go through
+      the shared ``dedup._fold``). Counts are ADDITIVE — exact for
+      disjoint epochs, but NOT idempotent (the count-index class,
+      unlike the Bloom fold).
 
     Honest limit (the family's): weights reflect the profile as the
     caller last folded it — arrivals do not shift the raw model
     mid-run; the fold makes them count from the next run on. Geometry
-    (n_buckets, bigrams) is read from the profile's sentinel, so a
-    wrong-modulus score is impossible by construction."""
+    (n_buckets, bigrams) is read ONCE from the profile's sentinel, so
+    a wrong-modulus score is impossible by construction."""
     from mapreduce_kmeans_clustering_spark.operators.curation import (
         _dsir_score_from_profile,
         dsir_profile,
         dsir_profile_geometry,
     )
 
-    # geometry read ONCE; the profile is immutable for the stream's
-    # lifetime (the bloom-stream precedent)
     n_buckets, bigrams = dsir_profile_geometry(profile)
     prof = profile.localCheckpoint(eager=True)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
-        try:
-            _dsir_score_from_profile(
-                prof, batch_df, n_buckets, bigrams, text_col, id_col
-            ).write.mode("overwrite").parquet(
-                f"{out_path}/ingest_batch={epoch_id}"
-            )
-            dsir_profile(
-                batch_df,
-                F.lit(False),
-                n_buckets=n_buckets,
-                bigrams=bigrams,
-                text_col=text_col,
-                id_col=id_col,
-            ).write.mode("overwrite").parquet(
-                f"{out_path}/_batch_profile/ingest_batch={epoch_id}"
-            )
-        finally:
-            batch_df.unpersist()
-
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _ingest(
+        docs_stream,
+        out_path,
+        checkpoint_dir,
+        lambda batch: _dsir_score_from_profile(
+            prof, batch, n_buckets, bigrams, text_col, id_col
+        ),
+        lambda batch: dsir_profile(
+            batch,
+            F.lit(False),
+            n_buckets=n_buckets,
+            bigrams=bigrams,
+            text_col=text_col,
+            id_col=id_col,
+        ),
+        "_batch_profile",
     )
 
 
@@ -448,18 +412,17 @@ def stream_passage_ingest(
     """Scrub an arriving document stream against the STORED passage
     gram index — the streaming leg of cross-document repeated-passage
     removal (``dedup.passage_scrub_delta``), sixth member of the
-    ingest index family. Per micro-batch:
+    ingest index family:
 
     - every arriving doc is re-emitted with the spans the corpus
-      already contains excised, landed as parquet under
-      ``ingest_batch=<epoch>`` (idempotent per-epoch overwrite);
-    - the batch's OWN gram counts (computed over the ORIGINAL arrival
-      text — the scrubbed text's seam grams are derived data) land
-      under ``out_path/_batch_index/ingest_batch=<epoch>``; the
-      caller folds epochs via ``dedup.merge_passage_indexes``
-      (``extend_passage_index`` is the raw-docs twin). Additive
-      counts + min keepers: exact for disjoint epochs, NOT
-      replay-idempotent — per-epoch directories are the bookkeeping.
+      already contains excised;
+    - the batch's OWN gram index (computed over the ORIGINAL arrival
+      text — the scrubbed text's seam grams are derived data) goes to
+      the ``_batch_index`` side directory; the caller folds epochs via
+      ``dedup.merge_passage_indexes`` (``extend_passage_index`` is the
+      raw-docs twin; both go through the shared ``dedup._fold``).
+      Additive counts + min keepers: exact for disjoint epochs, NOT
+      replay-idempotent.
 
     Honest limit (the family's): scrub verdicts reflect the index as
     last folded — two copies of a NOVEL passage arriving in the same
@@ -474,25 +437,13 @@ def stream_passage_ingest(
     n, hash_fn = passage_index_geometry(gram_index)
     idx = gram_index.localCheckpoint(eager=True)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
-        try:
-            _passage_scrub_delta_core(
-                idx, batch_df, n, hash_fn, text_col, id_col
-            ).write.mode("overwrite").parquet(
-                f"{out_path}/ingest_batch={epoch_id}"
-            )
-            passage_gram_index(
-                batch_df, n, text_col, id_col, hash_fn
-            ).write.mode("overwrite").parquet(
-                f"{out_path}/_batch_index/ingest_batch={epoch_id}"
-            )
-        finally:
-            batch_df.unpersist()
-
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _ingest(
+        docs_stream,
+        out_path,
+        checkpoint_dir,
+        lambda batch: _passage_scrub_delta_core(
+            idx, batch, n, hash_fn, text_col, id_col
+        ),
+        lambda batch: passage_gram_index(batch, n, text_col, id_col, hash_fn),
+        "_batch_index",
     )

@@ -70,40 +70,3 @@ def ref_seeds():
     from mapreduce_kmeans_clustering_spark.sources.seeds import load_seeds
 
     return load_seeds(REF_SEEDS_CSV)
-
-
-def _plan_depth(line: str) -> int:
-    return (len(line) - len(line.lstrip(" :+-"))) // 3
-
-
-def strip_const_rows(plan: str) -> tuple[str, int]:
-    """Cut every constant-row join out of an executed-plan string.
-
-    A constant-row join is a BroadcastNestedLoopJoin whose build side is
-    a BroadcastExchange over a lone LocalTableScan: the 1-row relation
-    ``functions/literals.const_row`` ships data-derived constants in.
-    Each one loses its join line and its build side; its data side
-    stays. Returns the remaining plan and how many joins were cut, so a
-    test can assert the data side's shape — no Exchange, no other Join —
-    as if the constants were plan literals."""
-    lines = plan.splitlines()
-    drop: set[int] = set()
-    cut = 0
-    for i, ln in enumerate(lines):
-        if "BroadcastNestedLoopJoin" not in ln:
-            continue
-        d = _plan_depth(ln)
-        end = next((j for j in range(i + 1, len(lines)) if _plan_depth(lines[j]) <= d), len(lines))
-        build = [
-            j
-            for j in range(i + 1, end)
-            if _plan_depth(lines[j]) == d + 1 and "BroadcastExchange" in lines[j]
-        ]
-        if len(build) != 1:
-            continue
-        b = build[0]
-        b_end = next((j for j in range(b + 1, end) if _plan_depth(lines[j]) <= d + 1), end)
-        if b_end == b + 2 and "LocalTableScan" in lines[b + 1]:
-            drop.update((i, b, b + 1))
-            cut += 1
-    return "\n".join(ln for j, ln in enumerate(lines) if j not in drop), cut

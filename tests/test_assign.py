@@ -76,11 +76,9 @@ def test_empty_cluster_drops(spark):
     pts = make_points(spark, [(0.0, 0.0, 0.0), (1.0, 0.0, 0.0), (10.0, 1.0, 0.0)])
     out = lloyd_iteration(pts, seeds)
     assert [c.id for c in out] == [0, 1]
-    # and the strict displacement check then raises (Task5A.java:138-140)
+    # and the displacement check then raises (Task5A.java:138-140)
     with pytest.raises(ValueError, match="mismatch"):
-        displacement(seeds, out, strict=True)
-    # non-strict mode compares the surviving ids
-    assert displacement(seeds, out, strict=False) > 0
+        displacement(seeds, out)
 
 
 def test_cluster_ids_stable_and_sorted(spark, blobs):
@@ -150,14 +148,18 @@ def test_assign_matches_numpy_argmin_bit_for_bit(spark, tmp_path):
 
 
 def test_negative_zero_seed_regression(spark):
-    """Pinned falsifier (round-4 judge find): a seed containing the
-    IEEE -0.0 coordinate triggered a Spark 4.1.2 whole-stage-codegen
-    CSE miscompute in the literal-distance projection — the point
-    (0,0,1), which sits exactly ON seed 2, computed distance 0.0 to
-    seed 0 (true distance 1.0) and was misassigned to cluster 0.
-    functions/literals.sql_double normalizes every data-derived constant
-    to +0.0 as it renders it; this test must fail again if any constant
-    channel bypasses it."""
+    """Pinned falsifier (round-4 judge find), kept as a result check:
+    a seed containing the IEEE -0.0 coordinate triggered a Spark 4.1.2
+    whole-stage-codegen CSE miscompute in the literal-distance
+    projection — the point (0,0,1), which sits exactly ON seed 2,
+    computed distance 0.0 to seed 0 (true distance 1.0) and was
+    misassigned to cluster 0. This test guards the outcome on the 3-D
+    ``assign`` path: every point lands on its own seed and a Lloyd
+    step keeps all three clusters. It does not guard
+    functions/literals.sql_double's +0.0 normalization: ``assign``
+    reads the centroids from the broadcast constant row, not from plan
+    literals, so it passes with the normalization removed.
+    ``test_negative_zero_nd_channels`` guards that."""
     seeds = [
         Centroid(0, 0.0, 0.0, -0.0),
         Centroid(1, 0.0, 1.0, 0.0),
@@ -192,7 +194,11 @@ def test_negative_zero_seed_regression(spark):
 def test_negative_zero_nd_channels(spark):
     """The n-dim constant channels share the same -0.0 exposure: the
     falsifier point (0,0,1) against constants that contain -0.0, run
-    through const_row itself and through each n-dim channel."""
+    through const_row itself and through each n-dim channel. The sign
+    assertion on the rendered constant is what guards
+    functions/literals.sql_double's +0.0 normalization (it fails if a
+    constant reaches the plan as -0.0); the distance and cluster
+    assertions check each channel's result."""
     import math
 
     from pyspark.sql import functions as F

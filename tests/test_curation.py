@@ -800,6 +800,11 @@ def test_dsir_profile_geometry_guards(spark):
     p64 = dsir_profile(docs, F.col("tgt"), n_buckets=64)
     p32 = dsir_profile(docs, F.col("tgt"), n_buckets=32)
     assert dsir_profile_geometry(p64) == (64, True)
+    # the stored sentinel row, literally: bucket = -1, n_raw = B, n_target = bigrams
+    assert (p64.dtypes, p64.where(F.col("bucket") == -1).collect()) == (
+        [("bucket", "int"), ("n_raw", "bigint"), ("n_target", "bigint")],
+        [(-1, 64, 1)],
+    )
     with pytest.raises(ValueError, match="geometry mismatch"):
         merge_dsir_profiles(p64, p32)
     with pytest.raises(ValueError, match="sentinel"):

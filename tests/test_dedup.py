@@ -1110,6 +1110,11 @@ def test_passage_index_additive_and_geometry(spark):
     b = spark.createDataFrame(rows_b, "doc_id LONG, text STRING")
     idx_a = passage_gram_index(a, n=5)
     assert passage_index_geometry(idx_a) == (5, "md5")
+    # the stored sentinel row, literally: gh = -1, n_docs = n, keeper = hash code
+    assert (idx_a.dtypes, idx_a.where(F.col("gh") == -1).collect()) == (
+        [("gh", "bigint"), ("n_docs", "bigint"), ("keeper", "bigint")],
+        [(-1, 5, 0)],
+    )
     # extend(index(A), B) == index(A ∪ B), exactly
     ext = sorted(map(tuple, extend_passage_index(idx_a, b).collect()))
     full = sorted(map(tuple, passage_gram_index(a.unionByName(b), n=5).collect()))

@@ -12,7 +12,6 @@ import pytest
 
 from mapreduce_kmeans_clustering_spark.operators.assign import assign
 from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid
-from tests.conftest import strip_const_rows
 
 SF = "/root/testdata/sf0.001"
 
@@ -31,14 +30,18 @@ def test_assign_is_scan_local_no_shuffle(spark):
     )
     cents = [Centroid(0, 0.0, 0.0, 0.0), Centroid(1, 1.0, 1.0, 1.0)]
     labeled = assign(pts, cents, keep_cols=["x", "y", "z"])
-    # centroids are one broadcast local row: no shuffle, and the points
-    # meet it in a condition-free nested-loop join
+    # centroids are one broadcast local row: the points meet it in the
+    # plan's only join, a condition-free nested-loop join whose build
+    # side (BuildRight: the last two lines) is a BroadcastExchange over
+    # a lone LocalTableScan, and that broadcast is the only Exchange
     p = _plan(labeled)
-    rest, joins = strip_const_rows(p)
-    assert joins == 1
-    assert "Exchange" not in rest and "Join" not in rest, rest
-    [bnlj] = [ln for ln in p.splitlines() if "BroadcastNestedLoopJoin" in ln]
-    assert bnlj.strip().endswith(("Cross", "Inner")), bnlj
+    lines = [ln.lstrip(" :+-") for ln in p.splitlines()]
+    [bnlj] = [ln for ln in lines if "Join" in ln]
+    assert bnlj.startswith("BroadcastNestedLoopJoin"), bnlj
+    assert bnlj.endswith(("Cross", "Inner")), bnlj
+    assert lines[-2].startswith("BroadcastExchange"), p
+    assert lines[-1].startswith("LocalTableScan"), p
+    assert p.count("Exchange") == 1, p
 
 
 def _const_channel(spark, channel: str, k: int):
@@ -456,7 +459,7 @@ def test_semantic_dedup_assignment_is_scan_local(spark):
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     out = semantic_dedup(emb, k=8, threshold=0.5, dim=64)
-    p, _ = strip_const_rows(_plan(out))
+    p = _plan(out)
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
     # the assignment subtree alone (what feeds the localCheckpoint) is
@@ -464,8 +467,8 @@ def test_semantic_dedup_assignment_is_scan_local(spark):
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     base = emb.select(F.col("vec_id").alias("_id"), v.alias("_v"))
     cvecs = [list(r["_v"]) for r in base.orderBy("_id").limit(8).collect()]
-    pa, joins = strip_const_rows(_plan(semantic_assign(base, cvecs)))
-    assert joins == 0 and "Subquery" in pa
+    pa = _plan(semantic_assign(base, cvecs))
+    assert "Subquery" in pa
     assert "Exchange" not in pa
     assert "Join" not in pa
     assert "Aggregate" not in pa
@@ -523,7 +526,7 @@ def test_pq_adc_and_round4_query_plans(spark):
     from mapreduce_kmeans_clustering_spark.queries.text import q_length_buckets
     from mapreduce_kmeans_clustering_spark.queries.vector import q_pq_adc
 
-    p, _ = strip_const_rows(_plan(q_pq_adc(spark, SF)))
+    p = _plan(q_pq_adc(spark, SF))
     assert p.count("BroadcastNestedLoopJoin") == 1  # 10-row query side
     assert "CartesianProduct" not in p
     assert "BatchEvalPython" not in p
@@ -946,8 +949,8 @@ def test_kcenter_round_is_scan_local_one_row_agg(spark):
     spark.catalog.clearCache()
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     seeds = [[0.0] * 64, [1.0] * 64]
-    p, joins = strip_const_rows(_plan(_farthest_round_df(emb, seeds, "vec_id", "embedding")))
-    assert joins == 0 and "Subquery" in p
+    p = _plan(_farthest_round_df(emb, seeds, "vec_id", "embedding"))
+    assert "Subquery" in p
     assert "Join" not in p, p
     assert "BatchEvalPython" not in p and "MapInPandas" not in p
     assert "Exchange" not in p, p
@@ -1086,8 +1089,8 @@ def test_ivf_assign_is_scan_local_literal_argmin(spark):
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    p, joins = strip_const_rows(_plan(ivf_assign(emb, nlist=4)))
-    assert joins == 0 and "Subquery" in p
+    p = _plan(ivf_assign(emb, nlist=4))
+    assert "Subquery" in p
     assert "Join" not in p, p
     assert "Exchange" not in p, p
     assert "SortAggregate" not in p and "HashAggregate" not in p, p

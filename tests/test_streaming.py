@@ -510,6 +510,11 @@ def test_stream_bloom_ingest_screens_and_folds(spark, tmp_path):
     batch_filter = spark.read.parquet(
         glob.glob(f"{out}/_batch_filter/ingest_batch=*")[0]
     )
+    # the side output's sentinel row, literally: word = -1, bits = m
+    assert (batch_filter.dtypes, batch_filter.where(F.col("word") == -1).collect()) == (
+        [("word", "bigint"), ("bits", "bigint")],
+        [(-1, _m)],
+    )
     merged = merge_bloom_filters(stored, batch_filter)
     replay = spark.createDataFrame(
         [(200, "a brand new arrival"), (201, "still unseen text")],
