@@ -11,14 +11,18 @@ for any k, and whole-stage codegen compiles once however often the
 values change. This module is the only place a data double is turned
 into plan text.
 
-Two reads of the row. ``operators/assign.assign`` (the 3-D Lloyd step)
-cross-joins it under a broadcast hint: a condition-free
-BroadcastNestedLoopJoin, one 1-task broadcast job per use. It keeps
-that join because the alternative was measured slower where the data
-is large. Given its 3K coordinates as one ``array<double>`` column
+Two reads of the row. ``operators/assign.assign`` cross-joins it under
+a broadcast hint: a condition-free BroadcastNestedLoopJoin, one 1-task
+broadcast job per use. ``assign`` serves ``label``, the registered
+K-Means queries and the stream path; the 3-D Lloyd step does not use
+it (``plans/kmeans.lloyd_iteration`` is one ``mapInArrow`` job that
+carries its centroids in the kernel's closure). ``assign`` keeps the
+join because the alternative was measured slower where the data is
+large. Given its 3K coordinates as one ``array<double>`` column
 through ``with_consts`` (same argmin text, coordinates read as
-``_c[3i+a]``), a step runs 2 jobs instead of 3 and still compiles
-nothing after a fit's first step, but each row reads the array. On
+``_c[3i+a]``), the old assign-then-aggregate step ran 2 jobs instead
+of 3 and still compiled nothing after a fit's first step, but each row
+read the array. On
 ``update_centroids(assign(...)).collect()`` (local[4] on a 4-core
 host, fresh centroids each step, 7 interleaved pairs, identical
 centroids in every pair) the array form took 1,105 ms against 925 ms

@@ -19,13 +19,20 @@ the SQL oracles.
 ``functions/literals.const_row`` holding all K×(x, y, z) values,
 cross-joined to the points under a broadcast hint
 (BroadcastNestedLoopJoin with no condition, no shuffle). Only the K
-centroid ids are plan literals, so the generated code of a Lloyd step
-depends on K and the ids alone and whole-stage codegen compiles once
-per fit instead of once per step. The per-step broadcast is one 1-task
-job of a few hundred bytes. This replaces the reference's
-side-file-in-mapper-setup channel (Task1.java:20-23): at 100 TB the
-assignment stage stays an embarrassingly-parallel scan. A streaming
-relation takes the same path as a stream-static cross join.
+centroid ids are plan literals, so the generated code depends on K and
+the ids alone, and a new set of centroid values with the same ids
+compiles nothing. Each use broadcasts the row: one 1-task job of a few
+hundred bytes. This replaces the reference's side-file-in-mapper-setup
+channel (Task1.java:20-23): at 100 TB the assignment stage stays an
+embarrassingly-parallel scan. A streaming relation takes the same path
+as a stream-static cross join.
+
+``assign`` serves what needs every row: ``plans/kmeans.label``, the
+registered K-Means queries and the stream path. The Lloyd step
+(``plans/kmeans.lloyd_iteration``) needs only K rows, so it assigns
+with the same arithmetic and tie rule inside one ``mapInArrow`` job
+that also pre-sums per cluster: 1 job where ``assign`` feeding
+``update_centroids`` takes 3.
 """
 
 from __future__ import annotations

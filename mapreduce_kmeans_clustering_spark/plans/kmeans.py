@@ -2,21 +2,27 @@
 
 The reference chains one Hadoop job per iteration, crossing the
 filesystem twice per step (seed file read by every map task, output
-read back by the driver — Task5A.java:154-209). Here an iteration is
-``assign`` (the points cross-joined with a broadcast 1-row centroid
-relation) + ``update_centroids`` (partial-agg groupBy) + a K-row
-``collect``, sorted by id on the driver: a 1-task broadcast job plus
-the two jobs of the aggregate (map stage, then the K-row result).
-State between iterations is the K-row centroid list on the driver; no
-filesystem round-trip. Since the centroid values travel as data, a
-step's generated code depends only on K and the centroid ids, so every
-step after a fit's first is a codegen-cache hit until K shrinks.
+read back by the driver — Task5A.java:154-209), and pre-sums each
+cluster in a combiner (Task4.java:117-134). Here an iteration is one
+``mapInArrow`` job over the (x, y, z) columns (``lloyd_iteration``):
+each partition assigns its points and pre-sums per cluster, and the
+driver adds the partial rows and divides. The K×3 centroid matrix
+rides the kernel's closure, so a step makes no broadcast, and its plan
+does not depend on K or the centroid values: after a fit's first step,
+codegen compiles nothing. It is the 3-D twin of the n-dim
+``lloyd_partials_nd``, with ``assign``'s exact distance in place of the
+BLAS expansion. ``assign`` (the points cross-joined with a broadcast
+1-row centroid relation) serves ``label``, which must return every
+row; fed to ``update_centroids`` it takes 3 jobs to produce K rows (the
+row's broadcast, then the aggregate's map and result stages) against
+the step's 1. State between iterations is the K-row centroid list on the
+driver; no filesystem round-trip.
 
 Scale notes (100 TB target):
-- per iteration the points relation is scanned once; the only shuffle
-  moves K rows per upstream partition (partial aggregation), so the
-  network cost per iteration is O(K * partitions), independent of data
-  size;
+- per iteration the points relation is scanned once, with no
+  shuffle; the driver collects K rows per upstream partition at most,
+  so the network cost per iteration is O(K * partitions), independent
+  of data size;
 - ``points.persist()`` (caller's choice) keeps the scan in memory/disk
   cache across iterations;
 - the centroid state is O(K) on the driver — no driver materialization
@@ -34,6 +40,11 @@ from mapreduce_kmeans_clustering_spark.functions.literals import with_consts
 from mapreduce_kmeans_clustering_spark.operators.aggregate import update_centroids
 from mapreduce_kmeans_clustering_spark.operators.assign import assign
 from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid
+
+# Re-exported, not called here: perfbench/run.py wraps
+# ``kmeans.update_centroids`` by name, so it stays an attribute of this
+# module (tests/test_bench_contract.py pins the wrapped names).
+_WRAPPED_BY_NAME = (update_centroids,)
 
 DEFAULT_MAX_ITER = 30  # Task3.java:192
 DEFAULT_THRESHOLD = 5.0  # Task3.java:193
@@ -59,15 +70,75 @@ def displacement(prev: list[Centroid], curr: list[Centroid]) -> float:
 
 
 def lloyd_iteration(points: DataFrame, centroids: list[Centroid]) -> list[Centroid]:
-    """One Lloyd step: assign + per-cluster mean, K rows collected and
-    returned sorted by id.
+    """One Lloyd step as one ``mapInArrow`` job with no shuffle: each
+    partition assigns its points and keeps per-cluster (sum, count)
+    across all its batches (the O8 combiner, in the mapper); the driver
+    adds the <= P*K partial rows (P = input partitions) in collect order
+    and divides. Returns the centroids sorted by id.
 
-    Empty clusters drop out (no groupBy key), shrinking K exactly like
-    the reference (SURVEY §1.3.4).
+    The assignment is ``assign``'s: the exact distance
+    ``sqrt(((dx*dx + dy*dy) + dz*dz))`` in float64, centroids scanned in
+    ascending id order with a strict ``<`` (a tie goes to the lowest
+    id), and a NaN distance larger than any number. A point with a null
+    coordinate has no distance and goes to the lowest id, and each
+    axis' mean skips its nulls, as Spark's ``avg`` does. Equal to
+    ``update_centroids(assign(...))`` up to summation order (bit for bit
+    on integer-valued points). Empty clusters drop out, shrinking K
+    exactly like the reference (SURVEY §1.3.4); the ids stay the
+    centroids' own.
     """
-    assigned = assign(points, centroids, keep_cols=["x", "y", "z"])
-    rows = update_centroids(assigned).collect()
-    return sorted(Centroid(int(r["id"]), r["x"], r["y"], r["z"]) for r in rows)
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from mapreduce_kmeans_clustering_spark.functions.arrow import _batch
+
+    if not centroids:
+        raise ValueError("empty centroid list")
+    cents = sorted(centroids, key=lambda c: c.id)
+    C = np.array([[c.x, c.y, c.z] for c in cents], dtype=np.float64)  # rides the closure
+    k = len(cents)
+
+    def gen(batches):
+        n = np.zeros(k, dtype=np.int64)
+        sums = np.zeros((k, 3))
+        counts = np.zeros((k, 3), dtype=np.int64)
+        for batch in batches:
+            cols = batch.columns
+            # a null reads as NaN, so a null point's distances are all NaN
+            x, y, z = (c.to_numpy(zero_copy_only=False) for c in cols)
+            best = np.full(len(x), np.nan)
+            lab = np.zeros(len(x), dtype=np.int64)
+            with np.errstate(invalid="ignore"):  # inf - inf is NaN, as in Spark
+                for i, (cx, cy, cz) in enumerate(C):
+                    dx, dy, dz = x - cx, y - cy, z - cz
+                    d = np.sqrt((dx * dx + dy * dy) + dz * dz)
+                    win = (d < best) | (np.isnan(best) & ~np.isnan(d))
+                    np.copyto(best, d, where=win)
+                    np.copyto(lab, i, where=win)
+            n += np.bincount(lab, minlength=k)
+            for a, (col, v) in enumerate(zip(cols, (x, y, z))):
+                ok = col.is_valid().to_numpy(zero_copy_only=False) if col.null_count else slice(None)
+                sums[:, a] += np.bincount(lab[ok], weights=v[ok], minlength=k)
+                counts[:, a] += np.bincount(lab[ok], minlength=k)
+        p = np.flatnonzero(n)
+        yield _batch(i=p.astype(np.int32), n=n[p], s=sums[p], c=counts[p])
+
+    rows = (
+        points.select(*(F.col(a).cast("double") for a in "xyz"))
+        .mapInArrow(gen, "i int, n long, s array<double>, c array<long>")
+        .collect()
+    )
+    n = np.zeros(k, dtype=np.int64)
+    sums = np.zeros((k, 3))
+    counts = np.zeros((k, 3), dtype=np.int64)
+    for r in rows:
+        n[r["i"]] += r["n"]
+        sums[r["i"]] += r["s"]
+        counts[r["i"]] += r["c"]
+    return [
+        Centroid(cents[i].id, *(float(s / c) if c else None for s, c in zip(sums[i], counts[i])))
+        for i in np.flatnonzero(n)
+    ]
 
 
 @dataclass

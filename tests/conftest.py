@@ -49,6 +49,21 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def broadcasts(spark, monkeypatch):
+    """Every broadcast the test makes through the session's context."""
+    sc = spark.sparkContext
+    made = []
+    real = sc.broadcast
+
+    def recording(value):
+        made.append(real(value))
+        return made[-1]
+
+    monkeypatch.setattr(sc, "broadcast", recording)
+    return made
+
+
 def require_reference() -> None:
     """Skip the calling test or fixture when the reference's committed
     inputs and outputs are not on this host."""

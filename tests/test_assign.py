@@ -5,6 +5,8 @@ constant channel."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -40,6 +42,34 @@ def _numpy_assign(pts: np.ndarray, cents) -> np.ndarray:
         win = d < best
         best[win], lab[win] = d[win], cid
     return lab
+
+
+def _hard_points():
+    """``(lattice, fine, diagonal, centroids)``, seeded: 1,500 integer
+    lattice points (exact ties between the lattice centroids), 1,500
+    full 17-significant-digit doubles, both with ``-0.0`` sprinkled in,
+    and 1,000 diagonal points (t, t, t) equidistant from three
+    coordinate-rotated centroids, whose float distances differ only in
+    summation order. The centroid ids are listed out of order."""
+    rng = np.random.default_rng(33)
+    lattice = rng.integers(-3, 4, size=(1500, 3)).astype(float)
+    fine = rng.uniform(-4.0, 4.0, size=(1500, 3))
+    diagonal = np.repeat(rng.uniform(9.0, 11.0, size=(1000, 1)), 3, axis=1)
+    pts = np.vstack([lattice, fine])
+    pts[rng.random(pts.shape) < 0.05] = -0.0
+    p, q, r = map(float, rng.uniform(9.0, 11.0, size=3))
+    cents = [
+        Centroid(3, 1.0, 0.0, 0.0),
+        Centroid(0, -1.0, -0.0, 0.0),
+        Centroid(4, 0.0, 1.0, -0.0),
+        Centroid(1, -0.0, -1.0, 0.0),
+        Centroid(2, *map(float, rng.uniform(-4.0, 4.0, size=3))),
+        Centroid(5, 0.1 + 0.2, -1.0 / 3.0, 2.0 ** 0.5),
+        Centroid(8, p, q, r),
+        Centroid(6, q, r, p),
+        Centroid(7, r, p, q),
+    ]
+    return pts[:1500], pts[1500:], diagonal, cents
 
 
 def test_tie_breaks_to_lowest_index(spark):
@@ -81,6 +111,44 @@ def test_empty_cluster_drops(spark):
         displacement(seeds, out)
 
 
+def test_lloyd_step_null_nan_inf_and_sparse_ids(spark, tmp_path):
+    """``lloyd_iteration``'s edge semantics, read through the CSV source
+    (``createDataFrame`` refuses None for the points schema):
+    - a point with a null coordinate goes to the lowest id, and each
+      axis' mean skips its nulls, as Spark's ``avg`` does;
+    - a NaN distance loses to any number, so a NaN centroid attracts
+      nothing while a finite one exists, and a point whose distances
+      are all NaN or all inf goes to the lowest id;
+    - the ids are the centroids' own (non-contiguous after a K-shrink),
+      ties go to the lowest id whatever the list order, the output is
+      sorted by id and empty clusters are absent."""
+    from mapreduce_kmeans_clustering_spark.sources import read_points_csv
+
+    nan, inf = float("nan"), float("inf")
+    cases = [
+        (
+            "1,,3\n0,0,0\n10,0,0\nNaN,1,1\n9,0,0\nInfinity,0,0\n",
+            [Centroid(1, 0.0, 0.0, 0.0), Centroid(0, 10.0, 0.0, 0.0), Centroid(2, 5.0, 5.0, 5.0)],
+            [Centroid(0, nan, 0.25, 0.8), Centroid(1, 0.0, 0.0, 0.0)],
+        ),
+        (  # the inf point: NaN to centroid 0, inf to 1 and 2 -> 1
+            "0,0,0\n1,0,0\n9,0,0\nInfinity,0,0\n",
+            [Centroid(0, nan, 0.0, 0.0), Centroid(1, 0.0, 0.0, 0.0), Centroid(2, 10.0, 0.0, 0.0)],
+            [Centroid(1, inf, 0.0, 0.0), Centroid(2, 9.0, 0.0, 0.0)],
+        ),
+        (  # (5,0,0) is equidistant from ids 7 and 3 -> 3
+            "1,0,0\n0,1,0\n9,0,0\n11,0,0\n5,0,0\n",
+            [Centroid(7, 0.0, 0.0, 0.0), Centroid(12, 1e3, 1e3, 1e3), Centroid(3, 10.0, 0.0, 0.0)],
+            [Centroid(3, 25.0 / 3.0, 0.0, 0.0), Centroid(7, 0.5, 0.5, 0.0)],
+        ),
+    ]
+    for i, (csv, seeds, want) in enumerate(cases):
+        path = tmp_path / f"case{i}.csv"
+        path.write_text(csv)
+        got = lloyd_iteration(read_points_csv(spark, str(path)), seeds)
+        assert repr(got) == repr(want), i
+
+
 def test_cluster_ids_stable_and_sorted(spark, blobs):
     """The id order is ``lloyd_iteration``'s contract:
     ``update_centroids`` returns its K rows unordered."""
@@ -100,25 +168,8 @@ def test_assign_matches_numpy_argmin_bit_for_bit(spark, tmp_path):
     centroids, whose float distances differ only in summation order.
     A change in the tie rule or in the ((dx*dx + dy*dy) + dz*dz) order
     flips labels."""
-    rng = np.random.default_rng(33)
-    lattice = rng.integers(-3, 4, size=(1500, 3)).astype(float)
-    fine = rng.uniform(-4.0, 4.0, size=(1500, 3))
-    diagonal = np.repeat(rng.uniform(9.0, 11.0, size=(1000, 1)), 3, axis=1)
-    pts = np.vstack([lattice, fine])
-    pts[rng.random(pts.shape) < 0.05] = -0.0
-    pts = np.vstack([pts, diagonal])
-    p, q, r = map(float, rng.uniform(9.0, 11.0, size=3))
-    cents = [
-        Centroid(3, 1.0, 0.0, 0.0),
-        Centroid(0, -1.0, -0.0, 0.0),
-        Centroid(4, 0.0, 1.0, -0.0),
-        Centroid(1, -0.0, -1.0, 0.0),
-        Centroid(2, *map(float, rng.uniform(-4.0, 4.0, size=3))),
-        Centroid(5, 0.1 + 0.2, -1.0 / 3.0, 2.0 ** 0.5),
-        Centroid(8, p, q, r),
-        Centroid(6, q, r, p),
-        Centroid(7, r, p, q),
-    ]
+    lattice, fine, diagonal, cents = _hard_points()
+    pts = np.vstack([lattice, fine, diagonal])
     want = _numpy_assign(pts, cents)
     d = np.stack(
         [np.sqrt(((pts - c[1:]) ** 2).sum(axis=1)) for c in sorted(cents)], axis=1
@@ -145,6 +196,54 @@ def test_assign_matches_numpy_argmin_bit_for_bit(spark, tmp_path):
         q.stop()
     streamed = {r["rid"]: r["cluster"] for r in spark.sql("SELECT rid, cluster FROM assign_lattice").collect()}
     assert streamed == got
+
+
+def _three_parts(spark, pts):
+    """``pts`` as an (x, y, z) frame over 3 partitions, the middle one
+    empty."""
+    rows = [tuple(map(float, p)) for p in pts]
+    half = len(rows) // 2
+    rdd = spark.sparkContext.parallelize([rows[:half], [], rows[half:]], 3)
+    return spark.createDataFrame(rdd.flatMap(lambda part: part), schemas.POINTS)
+
+
+def test_lloyd_step_is_one_job_and_assign_then_update(spark, broadcasts):
+    """The 3-D step over 3 partitions (one empty) is one Spark job with
+    AQE on, and equals ``update_centroids(assign(...))`` sorted by id:
+    bit for bit on integer-valued points, within 1e-9 on full doubles.
+    Centroids 6-8 attract no lattice point, so K shrinks to
+    non-contiguous ids. A repeated call is bit-identical, and no
+    broadcast file is left."""
+    from mapreduce_kmeans_clustering_spark.operators.aggregate import update_centroids
+
+    lattice, fine, diagonal, cents = _hard_points()
+    sc = spark.sparkContext
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    for group, pts, exact in (
+        ("3d-step-lattice", lattice, True),
+        ("3d-step-fine", np.vstack([fine, diagonal]), False),
+    ):
+        df = _three_parts(spark, pts)
+        sizes = df.rdd.glom().map(len).collect()
+        assert sizes[1] == 0 and sum(sizes) == len(pts)
+        sc.setJobGroup(group, group)
+        try:
+            got = lloyd_iteration(df, cents)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        rows = update_centroids(assign(df, cents, keep_cols=["x", "y", "z"])).collect()
+        want = sorted(Centroid(r["id"], r["x"], r["y"], r["z"]) for r in rows)
+        assert [c.id for c in got] == [c.id for c in want]
+        if exact:
+            assert [c.id for c in got] == [0, 1, 2, 3, 4, 5]
+            assert repr(got) == repr(want)
+        else:
+            np.testing.assert_allclose(
+                [c[1:] for c in got], [c[1:] for c in want], rtol=1e-9, atol=1e-9
+            )
+        assert repr(lloyd_iteration(df, cents)) == repr(got)
+    assert [b._path for b in broadcasts if os.path.exists(b._path)] == []
 
 
 def test_negative_zero_seed_regression(spark):

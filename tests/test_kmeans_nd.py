@@ -208,21 +208,6 @@ def test_lloyd_step_is_one_job_and_a_numpy_step(spark, three_parts, X):
     assert lloyd_partials_nd(three_parts, cents) == got
 
 
-@pytest.fixture
-def broadcasts(spark, monkeypatch):
-    """Every broadcast the test makes through the session's context."""
-    sc = spark.sparkContext
-    made = []
-    real = sc.broadcast
-
-    def recording(value):
-        made.append(real(value))
-        return made[-1]
-
-    monkeypatch.setattr(sc, "broadcast", recording)
-    return made
-
-
 def test_lloyd_step_destroys_its_broadcast(three_parts, X, broadcasts):
     lloyd_partials_nd(three_parts, [list(map(float, X[0])), list(map(float, X[1]))])
     assert broadcasts

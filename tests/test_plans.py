@@ -104,8 +104,8 @@ def test_const_channel_plan_is_k_independent(spark, channel):
 
 
 def test_lloyd_step_compiles_once_per_fit(spark):
-    """Centroid values travel as data, so a second step with new values
-    generates the same code: zero new codegen compiles."""
+    """The centroids ride the step kernel's closure, so a second step
+    with new values plans the same scan: zero new codegen compiles."""
     from pyspark.sql import functions as F
 
     from mapreduce_kmeans_clustering_spark.plans.kmeans import lloyd_iteration
